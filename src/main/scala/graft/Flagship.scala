@@ -192,9 +192,10 @@ object Flagship {
     * consumer (Explain) skips the checkpoint executions; the lineage
     * cut itself is identical (both forms truncate the logical plan at
     * an RDD-scan stub at construction). Not fully free at construction
-    * even when lazy: the SemDeDup dispatch and trainGate's bounded GD
-    * rounds read driver scalars while the frame is being BUILT — lazy
-    * seams remove the checkpoint jobs, which dominate.
+    * even when lazy: the SemDeDup dispatch reads driver scalars and
+    * trainGate runs its GD rounds (one Spark job each) while the frame
+    * is being BUILT — lazy seams remove the checkpoint jobs, which
+    * dominate.
     *
     * `probe`: stage-seam attribution hook, identity by default (see
     * [[graft.text.Pipelines.StageProbe]]) — `LegBench flagship` passes
@@ -238,9 +239,10 @@ object Flagship {
       dim = 64, iters = 20, lr = 16.0)
     val keepIds = graft.text.Distill.scoreGate(corpus, w, dim = 64)
       .filter(col("predicted") === 1L).select(col("doc_id"))
-    // s9's probe delta also carries trainGate's driver-side GD rounds
-    // (everything since the s8 seam) — deliberate: the distilled gate's
-    // cost IS train + score, and the two never recur separately
+    // s9's probe delta also carries trainGate's feature-cache build and
+    // GD round jobs (everything since the s8 seam) — deliberate: the
+    // distilled gate's cost IS train + score, and the two never recur
+    // separately
     val gated = probe("s9_distill_gate",
       corpus.join(keepIds, Seq("doc_id"), "left_semi"))
     graft.text.Curation.packSequencesScalable(gated, seqLen = 128)

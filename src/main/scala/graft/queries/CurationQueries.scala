@@ -991,7 +991,7 @@ object CurationQueries {
     *
     * Timing note: `curationPipeline` does most of its work EAGERLY at
     * DataFrame-construction time (the localCheckpoint seams run
-    * stages 1–5; trainGate runs 20 bounded collect rounds), so any
+    * stages 1–5; trainGate runs 20 GD rounds, one Spark job each), so any
     * harness timing this query must wrap construction + action in one
     * window. Bench/LegBench both time `fn(spark, dir).count()`, which
     * does exactly that. Plan-only consumers must NOT construct through
