@@ -101,7 +101,7 @@ object GenScale {
 
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("/root/repo/target/sf1x")
+    val out = args.lift(1).getOrElse("target/sf1x")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val want: String => Boolean = args.lift(3) match {
       case Some(list) => list.split(",").map(_.trim).toSet

@@ -26,6 +26,18 @@ import org.apache.spark.sql.SparkSession
   * `local[n]` the 200-partition default just multiplies task overhead;
   * a real cluster deployment overrides this to ~2-3× its executor-core
   * total.
+  *
+  * Tests build their session from [[builder]] too, so they run under
+  * exactly these keys. [[local]] and [[envCpus]] read the only four env
+  * knobs: `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SHUFFLE_PARTITIONS`,
+  * `SPARK_GRAFT_EVENTLOG_DIR` (deployment and measurement settings) and
+  * `SPARK_GRAFT_VERIFY_BROADCAST_BYTES` (the verify-dispatch A/B fence).
+  * Any other setting a host needs goes on the session as Spark's own
+  * key, for example `spark.sql.streaming.stateStore.providerClass`
+  * (RocksDB state for every stateful query),
+  * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
+  * or `spark.sql.streaming.checkpoint.fileChecksum.enabled` (durable
+  * checkpoints).
   */
 object GraftSession {
 
@@ -85,26 +97,14 @@ object GraftSession {
       // wall at ~50 ms CPU in ChecksumCancellableFSDataOutputStream
       // .close (thread-dump witness, r18 plans/). The engine's
       // checkpoints are per-invocation scratch (fresh dir every run), so
-      // integrity re-verification buys nothing here; deployments with
-      // durable checkpoints can re-enable via SPARK_GRAFT_CKPT_CHECKSUM.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
-      // r19: RocksDB commits write a FULL snapshot (zip + upload of the
-      // store directory) per store per micro-batch; changelog
-      // checkpointing appends the batch's puts to a small changelog
-      // instead and snapshots asynchronously in maintenance — the
-      // production-recommended setting once state outgrows the trivial
-      // (commit latency stops scaling with store size). Measured HERE
-      // (same-boot A/B, 6-rep legs): at this bench's near-empty stores
-      // it is ~5% SLOWER (the snapshot zip is cheap; the changelog adds
-      // version-replay lineage the offline statestore reader must walk),
-      // so the LOCAL default stays off and the driver's bench stays
-      // comparable; large-state deployments enable via
-      // SPARK_GRAFT_ROCKSDB_CHANGELOG=true. Results are unchanged either
-      // way — reconstruction replays changelog over the last snapshot.
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "false"))
+      // integrity re-verification buys nothing here; a host with durable
+      // checkpoints sets this key back to true on its session.
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // RocksDB changelog checkpointing is left at Spark's default (off):
+      // a same-boot A/B (r19) measured it ~5% slower at this engine's
+      // near-empty stores. Large-state hosts set
+      // spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
+      // .enabled=true; results are identical either way.
       .config("spark.sql.extensions", "graft.GraftExtensions")
 
   /** Local session sized to `cpus` threads — the mains' form.
@@ -137,15 +137,6 @@ object GraftSession {
           .config("spark.eventLog.dir", abs.getPath)
       }
     val s = b.getOrCreate()
-    // Streaming state-store provider A/B knob (BENCH_STREAM harness):
-    // the default HDFS-backed provider keeps every version of state on
-    // the executor heap, which is the bottleneck the moment state
-    // outgrows memory; RocksDB keeps state off-heap with incremental
-    // checkpoints. Set to the provider FQCN to pin the whole family
-    // (transformWithState already forces RocksDB for itself — Spark 4
-    // requires it there).
-    stateProviderFrom(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")).foreach(
-      p => s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
     // Verify-side dispatch knob (A/B harness): the byte budget under
     // which Dedup.verifiedCommon broadcasts; 0 forces the bucketed
     // path. Unset/empty/'none'/'off' keep the library default (1.5e9).
@@ -162,14 +153,6 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** Provider-class resolution for the state-store knob: an unset,
-    * empty, or whitespace-only env var means "use Spark's default" —
-    * round 13 passed "" straight to `classForName("")`, which killed
-    * 6/10 streaming queries in the A/B's default legs. Factored out
-    * so the empty-value contract is unit-testable. */
-  private[graft] def stateProviderFrom(env: Option[String]): Option[String] =
-    env.map(_.trim).filter(_.nonEmpty)
 
   /** Core-count from the driver contract env, default 4. */
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt

@@ -36,9 +36,10 @@ import org.apache.spark.sql.functions._
   * minima are always printed because the pair family's adjudication
   * protocol reads per-rep MINIMA (PERF.md).
   *
-  * Env knobs: `SPARK_GRAFT_REPS` (default 5, cc 3), `SPARK_GRAFT_CPUS`,
-  * `SPARK_GRAFT_EVENTLOG_DIR`, `SPARK_GRAFT_VERIFY_BROADCAST_BYTES`,
-  * and per family:
+  * Env knobs: `SPARK_GRAFT_REPS` (default 5, cc 3); the four session
+  * knobs `GraftSession.local` reads (`SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_SHUFFLE_PARTITIONS`, `SPARK_GRAFT_EVENTLOG_DIR`,
+  * `SPARK_GRAFT_VERIFY_BROADCAST_BYTES`); and per family:
   *  - query: `SPARK_GRAFT_ONLY` (required) — comma list of registered
   *    query names, each timed as `SparkEntry.queries(q)(spark, dir)
   *    .count()`.
@@ -344,8 +345,7 @@ object LegBench {
     val bucketIdx = scala.collection.mutable.Map.empty[String, DataFrame]
     val buildSecs = scala.collection.mutable.Map.empty[(String, String), Double]
     for (dir <- dirs) {
-      val out = "/root/repo/target/stage/inc_index/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val out = sources.Stage.forInput("inc_index", dir)
       def corpusIndex = text.Dedup.bandIndex(text.Dedup.minhashSignatures(
         text.Dedup.shingles(sources.Tables.load(spark, dir, "documents")
           .where(col("doc_id") % 4 =!= 0))))

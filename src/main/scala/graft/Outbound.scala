@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Delta
-import graft.sources.Sinks
+import graft.sources.{Sinks, Stage}
 
 /** EP2 — the outbound datalake → document-store job (`PUSH`, SURVEY.md §3):
   * read the structured output, select only-new documents via the
@@ -33,17 +33,14 @@ object Outbound {
 
   /** The sanitized dir name alone is lossy ('target/sf1x' and
     * 'target_sf1x' collide); an md5 suffix of the RAW dir makes the
-    * stage path injective so two sources can never share one stage, and
-    * the owning pid keeps two PROCESSES on the same dir (campaign clone
-    * + working tree) from clobbering one stage mid-read — the
-    * computeIfAbsent build-once cache is JVM-local, so the path must
-    * be too. */
+    * stage path injective so two sources can never share one stage.
+    * The computeIfAbsent build-once cache is JVM-local, so the path is
+    * too: a [[Stage.work]] dir, owned by this process and removed when
+    * it exits. */
   private[graft] def sharedStagePath(dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    "/root/repo/target/stage/outbound_shared/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" + digest +
-      s"_p${ProcessHandle.current().pid()}"
+    Stage.work("outbound_shared", s"${dir}_$digest")
   }
 
   def shared(spark: SparkSession, dir: String): PushResult = {
@@ -54,7 +51,7 @@ object Outbound {
   }
 
   def push(spark: SparkSession, dir: String,
-      stagePath: String = "/root/repo/target/stage/outbound"): PushResult = {
+      stagePath: String = s"${Stage.root}/outbound"): PushResult = {
     // the pipeline output feeds the delta's both sides + validation:
     // persist instead of re-running the whole build per consumer
     val prospects = CacheScope.persist(Flagship.prospectPipeline(spark, dir))

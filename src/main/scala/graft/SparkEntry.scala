@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   * All queries live in `graft.queries.Registry`, each paired with its
   * DuckDB oracle so the two can't drift apart.
   */

@@ -430,7 +430,8 @@ object SourceQueries {
     * its /root/testdata/sf0.01 Verify run. A Verify at any other dir
     * still stages and dumps correctly; only the DuckDB twin is bound to
     * the driver's gate dir — same single-sf contract as before, now
-    * clobber-proof. */
+    * clobber-proof. The pinned path sits under this JVM's `Stage.root`,
+    * so it follows the working directory Verify runs in. */
   private val binaryIngest = Q("q_s13_binary_ingest",
     (s, dir) => {
       val path = Stage.forInput("q_s13_binary_ingest", dir)
@@ -446,12 +447,12 @@ object SourceQueries {
             "part-([0-9]+)", 1).cast("long").as("file_idx"),
           col("length"))
     },
-    Some("""
+    Some(s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         CAST(size AS BIGINT) AS length
       FROM read_blob(
-        '/root/repo/target/stage/q_s13_binary_ingest/_root_testdata_sf0.01/part-*.parquet')"""))
+        '${Stage.forInput("q_s13_binary_ingest", "/root/testdata/sf0.01")}/part-*.parquet')"""))
 
   /** S14: file-provenance columns (`_metadata.file_name`) — per-file row
     * counts and key ranges over a range-partitioned layout: the
@@ -473,13 +474,13 @@ object SourceQueries {
         .agg(count(lit(1)).as("n_rows"),
           min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
     },
-    Some("""
+    Some(s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         count(*) AS n_rows,
         min(doc_id) AS min_id, max(doc_id) AS max_id
       FROM read_parquet(
-        '/root/repo/target/stage/q_s14_file_provenance/_root_testdata_sf0.01/part-*.parquet',
+        '${Stage.forInput("q_s14_file_provenance", "/root/testdata/sf0.01")}/part-*.parquet',
         filename = true)
       GROUP BY 1"""))
 

@@ -60,11 +60,7 @@ object Bucketing {
     val safeTag = tag.replaceAll("[^A-Za-z0-9_]", "_")
     val id = s"${safeTag}_p${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}"
     val table = s"graft_stage_$id"
-    // cwd-relative (resolved absolute): the close scripts run benches
-    // from cloned camps — an absolute repo path would silently stage
-    // outside them (the same hazard r15's ADVICE flagged for
-    // the diag main's event-log dir)
-    val path = new java.io.File(s"target/stage/bucketed/$id").getAbsolutePath
+    val path = s"${Stage.root}/bucketed/$id"
     df.repartition(buckets, keys.map(col): _*)
       .write.mode("overwrite")
       .option("path", path)
@@ -85,7 +81,7 @@ object Bucketing {
     * sort-merge join consumes bucket-local sorted data directly (no
     * Exchange on either side — asserted in BucketingSpec). */
   def coLocatedOrderJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = "/root/repo/target/stage/bucketed"
+    val base = s"${Stage.root}/bucketed"
     writeBucketed(spark,
       Tables.load(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice"),

@@ -109,8 +109,7 @@ object DocCollection {
     * rename loser's build wrote the same content from the same
     * source. */
   def stageFixture(spark: SparkSession, dir: String): String = synchronized {
-    val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val base = s"/root/repo/target/stage/doc_collection/$tag"
+    val base = Stage.forInput("doc_collection", dir)
     val coll = s"$base/coll"
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,27 +1,62 @@
 package graft.sources
 
-/** Staging-path scheme for queries that write-then-read under
-  * `target/stage` (the r13/r14 fixed-path hazard): a fixed literal path
-  * lets two sessions running the same query — against DIFFERENT scale
-  * factors (driver Verify at sf0.01 vs a bench campaign at sf0.1), or
-  * the same dir from two processes (working tree + campaign clone) —
-  * overwrite each other's stage mid-read.
+import java.io.{File, IOException, UncheckedIOException}
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.util.Using
+
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
+
+/** The one staging-path scheme. Every path the engine stages to (registry
+  * queries that write-then-read, `Outbound`, `Bucketing`,
+  * `DocCollection`, LegBench, tests) is built under [[root]]:
+  * `target/stage` under the working directory, resolved once per JVM, so
+  * a checkout or a copy of it stages inside itself and never in another.
   *
   * [[forInput]] keys the path on the input dir: one stage per
-  * (query, corpus), stable across runs — the form for stages an ORACLE
-  * reads back by path (the DuckDB twin's SQL is a fixed string, so its
-  * path cannot vary per process; see q_s13/q_s14's registration notes).
+  * (query, corpus), stable across runs, so two sessions at DIFFERENT
+  * scale factors never overwrite each other's stage mid-read (the r13
+  * fixed-path hazard). It is the form for stages an ORACLE reads back by
+  * path after the JVM ends (q_s13/q_s14's DuckDB twins), so it is kept.
+  *
   * [[work]] additionally suffixes the owning process id: unique per
-  * (query, corpus, process) — the form for write-then-reread scratch
-  * space nothing outside this process ever reads.
+  * (query, corpus, process), the form for write-then-reread scratch that
+  * nothing outside this process reads. Each work dir handed out is
+  * deleted when the JVM exits: lazy frames over it (registry queries
+  * that Verify, Bench or a host writes later) stay readable for the
+  * whole run, so no scope can own its lifetime.
   */
 object Stage {
+  val root: String = new File("target/stage").getAbsolutePath
+
   private def tag(dir: String): String =
     dir.stripSuffix("/").replaceAll("[^A-Za-z0-9._-]", "_")
 
   def forInput(name: String, dir: String): String =
-    s"/root/repo/target/stage/$name/${tag(dir)}"
+    s"$root/$name/${tag(dir)}"
 
-  def work(name: String, dir: String): String =
-    s"${forInput(name, dir)}_p${ProcessHandle.current().pid()}"
+  private val workDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  def work(name: String, dir: String): String = {
+    val path = s"${forInput(name, dir)}_p${ProcessHandle.current().pid()}"
+    workDirs.add(path)
+    path
+  }
+
+  /** Deletes every work dir handed out so far. Runs once at JVM exit,
+    * after Spark's own hook has stopped the context (Hadoop runs higher
+    * priorities first; Spark's hook sits at FileSystem's + 30), so no
+    * running query still writes into a dir being removed. A dir that
+    * cannot be removed is left as it is; the others are still removed. */
+  private[graft] def removeWorkDirs(): Unit =
+    workDirs.forEach { p =>
+      try Using.resource(Files.walk(Paths.get(p))) { tree =>
+        tree.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      } catch { case _: IOException | _: UncheckedIOException => () }
+    }
+
+  ShutdownHookManager.get().addShutdownHook(() => removeWorkDirs(),
+    FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
 }

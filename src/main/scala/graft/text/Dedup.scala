@@ -589,7 +589,19 @@ object Dedup {
     val sh = graft.CacheScope.persist(sh0)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val dfreq = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val shn = graft.CacheScope.persist(sh.join(sizes, "doc_id"))
+    // The sized posting cache is pinned hash(doc_id) at the session
+    // partition count (the simhash-band/CC-edge pattern). AQE size-
+    // coalesces a cached plan's final stage, and a posting frame smaller
+    // than the advisory size collapses to one partition. The probe join
+    // below then reads the hot shingle's postings from ONE map task, and
+    // AQE can only split a skewed partition along map boundaries, so the
+    // hot key's quadratic pair emission runs unsplit in one task. Above
+    // the broadcast threshold the pin costs no shuffle: the shuffled join
+    // already hashes on doc_id, so Spark drops the repartition and keeps
+    // the join's partition count instead.
+    val parts = sh.sparkSession.sessionState.conf.numShufflePartitions
+    val shn = graft.CacheScope.persist(
+      sh.join(sizes, "doc_id").repartition(parts, col("doc_id")))
     val byRarity = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
     val prefix = shn.join(dfreq, "s")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators._
+import graft.sources.Stage
 
 class OperatorsSpec extends SparkSuite {
   import spark.implicits._
@@ -125,7 +126,7 @@ class OperatorsSpec extends SparkSuite {
     assert(g.except(sc).count() == 0 && sc.except(g).count() == 0)
     // survive a write path (regression: inconsistent __pid spaces under
     // AQE dropped rows between count and write)
-    val out = "/root/repo/target/stage/surrogate_roundtrip"
+    val out = s"${Stage.root}/surrogate_roundtrip"
     sc.coalesce(1).write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out)
     assert(back.count() == df.count())

@@ -150,11 +150,4 @@ class Round14Spec extends SparkSuite {
         "a doc dropped against the smaller index kept against the larger")
     }
   }
-
-  test("state-store knob: unset/empty/whitespace mean Spark's default") {
-    assert(GraftSession.stateProviderFrom(None).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some("")).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some("  ")).isEmpty)
-    assert(GraftSession.stateProviderFrom(Some(" x.Y ")) == Some("x.Y"))
-  }
 }

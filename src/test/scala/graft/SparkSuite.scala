@@ -4,18 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (lazy; one JVM-wide session is reused across
-  * suites via getOrCreate). */
+  * suites via getOrCreate). Built by [[GraftSession.builder]], so tests
+  * run under exactly the keys the mains run under. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // match GraftSession: single-file-per-bucket stages expose their
-    // per-bucket sort order (see the builder scaladoc there)
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   lazy val sf: String = "/root/testdata/sf0.001"
 }

@@ -30,18 +30,19 @@
 # medians over SPARK_GRAFT_REPS rep-major interleaved passes; fences /
 # modes / budgets are LegBench env knobs, not flags here.
 set -u
-cd /root/repo || exit 1
+ROOT=$(cd "$(dirname "$0")/.." && pwd) || exit 1
+cd "$ROOT" || exit 1
 log(){ echo "=== $(date +%T) $*"; }
 export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
-CAMP=${CAMP_DIR:-/root/repo/target/camp}
+CAMP=${CAMP_DIR:-$ROOT/target/camp}
 MEM=${SPARK_DRIVER_MEM:-64g}
 
 ensure_clone(){
   if [ ! -d "$CAMP" ]; then
     log "clone HEAD -> $CAMP + compile"
-    git clone -q /root/repo "$CAMP"
-    (cd "$CAMP" && sbt -batch compile > /root/repo/target/camp_compile.log 2>&1) \
-      || { echo "FAIL camp compile"; tail -5 /root/repo/target/camp_compile.log; exit 1; }
+    git clone -q "$ROOT" "$CAMP"
+    (cd "$CAMP" && sbt -batch compile > "$ROOT/target/camp_compile.log" 2>&1) \
+      || { echo "FAIL camp compile"; tail -5 "$ROOT/target/camp_compile.log"; exit 1; }
   fi
 }
 
@@ -56,8 +57,8 @@ gen)
   ensure_clone
   (cd "$CAMP" && SPARK_DRIVER_MEM=48g sbt -batch \
     "runMain graft.GenScale $src $out $copies $tables $widen" \
-    >> /root/repo/target/campaign_gen.log 2>&1) \
-    || { echo "FAIL gen $out"; tail -5 /root/repo/target/campaign_gen.log; exit 1; }
+    >> "$ROOT/target/campaign_gen.log" 2>&1) \
+    || { echo "FAIL gen $out"; tail -5 "$ROOT/target/campaign_gen.log"; exit 1; }
   du -sh "$out"
   ;;
 
@@ -68,60 +69,60 @@ leg)
   log "leg $name: LegBench $*"
   (cd "$CAMP" && SPARK_DRIVER_MEM=$MEM SPARK_GRAFT_EVENTLOG_DIR=target/eventlog \
     sbt -batch "runMain graft.LegBench $*" \
-    > "/root/repo/target/$name.log" 2>&1)
+    > "$ROOT/target/$name.log" 2>&1)
   rc=$?
   df -h / | tail -1
-  [ $rc -ne 0 ] && { echo "leg $name exited $rc:"; tail -10 "/root/repo/target/$name.log"; }
-  grep -oE '\{"metric":"[a-z_]+medians".*' "/root/repo/target/$name.log" \
-    | tail -1 > "/root/repo/target/$name.json"
+  [ $rc -ne 0 ] && { echo "leg $name exited $rc:"; tail -10 "$ROOT/target/$name.log"; }
+  grep -oE '\{"metric":"[a-z_]+medians".*' "$ROOT/target/$name.log" \
+    | tail -1 > "$ROOT/target/$name.json"
   if [ -n "${SPARK_GRAFT_ATTR_SIZES:-}" ]; then
-    python3 tools/attr_reps.py "/root/repo/target/$name.log" "$CAMP/target/eventlog" \
-      --json "/root/repo/target/${name}_attr.json" --sizes "$SPARK_GRAFT_ATTR_SIZES"
+    python3 tools/attr_reps.py "$ROOT/target/$name.log" "$CAMP/target/eventlog" \
+      --json "$ROOT/target/${name}_attr.json" --sizes "$SPARK_GRAFT_ATTR_SIZES"
   else
-    python3 tools/attr_reps.py "/root/repo/target/$name.log" "$CAMP/target/eventlog" \
-      --json "/root/repo/target/${name}_attr.json"
+    python3 tools/attr_reps.py "$ROOT/target/$name.log" "$CAMP/target/eventlog" \
+      --json "$ROOT/target/${name}_attr.json"
   fi
-  head -c 300 "/root/repo/target/$name.json"; echo
+  head -c 300 "$ROOT/target/$name.json"; echo
   exit $rc
   ;;
 
 close)
   N=$1; PRE=${2:?close needs the previous rounds close commit}
-  NEWC=/root/repo/target/r${N}close
-  OLDC=/root/repo/target/r${N}preclose
+  NEWC="$ROOT/target/r${N}close"
+  OLDC="$ROOT/target/r${N}preclose"
   log "clone HEAD -> $NEWC ; clone $PRE -> $OLDC"
   rm -rf "$NEWC" "$OLDC"
-  git clone -q /root/repo "$NEWC"
-  git clone -q /root/repo "$OLDC" && git -C "$OLDC" checkout -q "$PRE"
-  (cd "$NEWC" && sbt -batch compile > /root/repo/target/r${N}close_compile.log 2>&1) \
+  git clone -q "$ROOT" "$NEWC"
+  git clone -q "$ROOT" "$OLDC" && git -C "$OLDC" checkout -q "$PRE"
+  (cd "$NEWC" && sbt -batch compile > "$ROOT/target/r${N}close_compile.log" 2>&1) \
     || { echo "FAIL head compile"; exit 1; }
-  (cd "$OLDC" && sbt -batch compile > /root/repo/target/r${N}pre_compile.log 2>&1) \
+  (cd "$OLDC" && sbt -batch compile > "$ROOT/target/r${N}pre_compile.log" 2>&1) \
     || { echo "FAIL pre compile"; exit 1; }
 
   log "(a1) anchor bench: PRE ($PRE) full surface, 3 reps, sf0.1"
   (cd "$OLDC" && SPARK_GRAFT_REPS=3 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     SPARK_DRIVER_MEM=$MEM sbt -batch "runMain graft.Bench" \
-    > /root/repo/target/r${N}_close_bench_pre.log 2>&1) \
-    || { echo "FAIL pre bench"; tail -5 /root/repo/target/r${N}_close_bench_pre.log; exit 1; }
+    > "$ROOT/target/r${N}_close_bench_pre.log" 2>&1) \
+    || { echo "FAIL pre bench"; tail -5 "$ROOT/target/r${N}_close_bench_pre.log"; exit 1; }
 
   log "(a2) anchor bench: HEAD full surface, 3 reps, sf0.1"
   (cd "$NEWC" && SPARK_GRAFT_REPS=3 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     SPARK_DRIVER_MEM=$MEM sbt -batch "runMain graft.Bench" \
-    > /root/repo/target/r${N}_close_bench_head.log 2>&1) \
-    || { echo "FAIL head bench"; tail -5 /root/repo/target/r${N}_close_bench_head.log; exit 1; }
+    > "$ROOT/target/r${N}_close_bench_head.log" 2>&1) \
+    || { echo "FAIL head bench"; tail -5 "$ROOT/target/r${N}_close_bench_head.log"; exit 1; }
 
-  cp "$NEWC/target/bench.json" /root/repo/BENCH_MEDIANS_sf0.1.json
+  cp "$NEWC/target/bench.json" "$ROOT/BENCH_MEDIANS_sf0.1.json"
   python3 tools/close_anchor.py "$N" "$PRE" \
     "$NEWC/target/bench.json" "$OLDC/target/bench.json" || exit 1
 
   log "(b) determinism: two Verify runs at sf0.01 + byte diff"
-  (cd "$NEWC" && sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /root/repo/target/det_a" \
-    > /root/repo/target/r${N}_det_a.log 2>&1) || { echo "FAIL det A"; exit 1; }
-  (cd "$NEWC" && sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /root/repo/target/det_b" \
-    > /root/repo/target/r${N}_det_b.log 2>&1) || { echo "FAIL det B"; exit 1; }
-  python3 /root/repo/tools/determinism.py /root/repo/target/det_a /root/repo/target/det_b \
-    > /root/repo/DETERMINISM_r${N}.txt 2>&1
-  tail -3 /root/repo/DETERMINISM_r${N}.txt
+  (cd "$NEWC" && sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $ROOT/target/det_a" \
+    > "$ROOT/target/r${N}_det_a.log" 2>&1) || { echo "FAIL det A"; exit 1; }
+  (cd "$NEWC" && sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $ROOT/target/det_b" \
+    > "$ROOT/target/r${N}_det_b.log" 2>&1) || { echo "FAIL det B"; exit 1; }
+  python3 tools/determinism.py "$ROOT/target/det_a" "$ROOT/target/det_b" \
+    > "$ROOT/DETERMINISM_r${N}.txt" 2>&1
+  tail -3 "$ROOT/DETERMINISM_r${N}.txt"
   log "CLOSE DONE"
   ;;
 

@@ -15,7 +15,9 @@ Exit 1 if any contract row breaches, so a regression fails the close.
 
 Usage: close_anchor.py <round> <pre_commit> <head_bench.json> <pre_bench.json>
 """
-import json, re, statistics, subprocess, sys
+import json, os, re, statistics, subprocess, sys
+
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 
 
 def contract_rows(current, frozen, label):
@@ -40,10 +42,10 @@ def main():
 
     r01 = dict((m.group(1), float(m.group(2))) for m in re.finditer(
         r'"(q_\w+)":([0-9.]+)',
-        json.load(open("/root/repo/BENCH_r01.json"))["tail"]))
+        json.load(open(os.path.join(ROOT, "BENCH_r01.json")))["tail"]))
     r01_table, r01_common = contract_rows(hq, r01, "r01")
 
-    frozen = json.load(open("/root/repo/BASELINE_r17.json"))["queries"]
+    frozen = json.load(open(os.path.join(ROOT, "BASELINE_r17.json")))["queries"]
     full_table, full_common = contract_rows(
         hq, {k: v["secs"] for k, v in frozen.items()}, "frozen")
     for k in full_common:
@@ -65,7 +67,7 @@ def main():
             "rule (breach = ratio > 2 AND absolute excess > 0.5 s)."),
         "pre_commit": pre_commit,
         "head_commit": subprocess.check_output(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"]
+            ["git", "-C", ROOT, "rev-parse", "--short", "HEAD"]
         ).decode().strip(),
         "pre_total_s": round(pre["value"], 1),
         "head_total_s": round(head["value"], 1),
@@ -98,7 +100,7 @@ def main():
             "per_query": full_table,
         },
     }
-    json.dump(out, open(f"/root/repo/BENCH_ANCHOR_r{n}.json", "w"), indent=1)
+    json.dump(out, open(os.path.join(ROOT, f"BENCH_ANCHOR_r{n}.json"), "w"), indent=1)
     worst = sorted(ratios.items(), key=lambda kv: -kv[1])[:5]
     print(json.dumps({
         "pre_total": out["pre_total_s"], "head_total": out["head_total_s"],
