@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
   * load-variable box has ±2× per-query variance, which made earlier
   * rounds' regressions unadjudicable. Reps are rep-major (a full pass
   * over all queries per rep) so drifting box load spreads across queries
-  * instead of concentrating in one query's reps.
+  * instead of concentrating in one query's reps ([[BenchStats.runReps]]).
   *
   * Output: the driver's one-line JSON on stdout (total = sum of medians)
   * plus the complete artifact — per-rep times included — at
@@ -33,49 +33,28 @@ object Bench {
       .getOrElse(Set.empty[String])
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skip(n) }
+    val cells = names.map { case (name, fn) =>
+      BenchStats.Cell(sfDir, name, _ => fn(spark, sfDir).count())
+    }
     // Streaming queries pay a first-run cost that is pure warm-up —
     // micro-batch engine classloading, state-store provider init,
     // RocksDB JNI — which made their cold reps bimodal (r6 artifact:
     // per-rep max 3-5x the median; every other family sits inside
     // ±15%). One untimed pass over the q_stream_* family pins all
     // TIMED reps to warm-path behavior; failures surface in the timed
-    // reps, so they're ignored here.
-    names.filter(_._1.startsWith("q_stream_")).foreach { case (name, fn) =>
-      try { fn(spark, sfDir).count(); () } catch {
-        // logged, not rethrown: a broken warm-up must stay visible when
-        // adjudicating timed-rep variance (a half-initialized state dir
-        // can skew the reps) but failures are the TIMED reps' to report
-        case e: Throwable => System.err.println(
-          s"[bench] warm-up of $name failed: " +
-            s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-      System.gc() // see LegBench scaladoc: frees shuffle files via ContextCleaner
+    // reps, so they're only logged here — a broken warm-up must stay
+    // visible when adjudicating timed-rep variance (a half-initialized
+    // state dir can skew the reps).
+    BenchStats.runReps(spark, 1, cells.filter(_.leg.startsWith("q_stream_"))) {
+      r => r.error.foreach(m =>
+        System.err.println(s"[bench] warm-up of ${r.cell.leg} failed: $m"))
     }
     // name -> (per-rep seconds for successful reps, first error if any)
-    val runs: Seq[(String, Seq[Double], Option[String])] = {
-      val raw = (1 to reps).map { _ =>
-        names.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          val err = try { fn(spark, sfDir).count(); None } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(120))
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // drop caches so one query's persisted lineage can't subsidize
-          // the next query's timing
-          spark.catalog.clearCache()
-          System.gc() // see LegBench scaladoc: frees shuffle files via ContextCleaner
-          (name, dt, err)
-        }
-      }
-      names.map { case (name, _) =>
-        val mine = raw.map(_.find(_._1 == name).get)
-        (name, mine.collect { case (_, dt, None) => dt },
-          mine.collectFirst { case (_, _, Some(m)) => m })
-      }
-    }
+    val runs: Seq[(String, Seq[Double], Option[String])] =
+      BenchStats.series(BenchStats.runReps(spark, reps, cells) { r =>
+        r.error.foreach(m =>
+          System.err.println(s"[bench] ${r.cell.leg} failed: $m"))
+      }).map(s => (s.leg, s.secs, s.error.map(_.take(120))))
     // a broken query must never subsidize the total: no successful rep →
     // null in `queries` plus an entry in `errors`
     val qs = runs.map { case (k, ts, _) =>

@@ -172,10 +172,9 @@ object Flagship {
     *       — candidate mass ≤ 128·n_docs by construction;
     * (5)   SemDeDup on the survivors' embeddings — the assignment
     *       dispatches the exact two-level path once flat n·k work
-    *       crosses the measured budget (`forceTwoLevel` pins it for
-    *       plan inspection; output is provably identical, Round12Spec);
-    *       documents without an embedding pass through, like the
-    *       modality-agreement audit;
+    *       crosses the measured budget (output is provably identical,
+    *       Round12Spec); documents without an embedding pass through,
+    *       like the modality-agreement audit;
     * (6)   the DISTILLED quality gate in its production shape: the
     *       Gopher teacher labels a bounded sample (doc_id % 4 — the
     *       student trains on O(sample), not O(corpus)), and the learned
@@ -185,25 +184,20 @@ object Flagship {
     * Full/exact modes remain the oracle-gated twins
     * (`q_pretrain_full`, `q_quality_distilled`).
     *
-    * `lazyCheckpoints`: with the default (false, eager — the bench
-    * contract: construction + one action is the whole cost) the two
-    * seam checkpoints EXECUTE stages 1–5 at construction. `true` defers
-    * each seam's materialization to the first action, so a plan-only
-    * consumer (Explain) skips the checkpoint executions; the lineage
-    * cut itself is identical (both forms truncate the logical plan at
-    * an RDD-scan stub at construction). Not fully free at construction
-    * even when lazy: the SemDeDup dispatch reads driver scalars and
-    * trainGate runs its GD rounds (one Spark job each) while the frame
-    * is being BUILT — lazy seams remove the checkpoint jobs, which
-    * dominate.
+    * Construction is eager (the bench contract: construction + one
+    * action is the whole cost): the two seam checkpoints EXECUTE stages
+    * 1–5, the SemDeDup dispatch reads driver scalars and trainGate runs
+    * its GD rounds (one Spark job each) while the frame is being BUILT.
+    * Eagerness does not change the plan: an eager or a deferred seam
+    * truncates the logical plan at the same RDD-scan stub, so a
+    * plan-only consumer (graft.Explain) prints that stub plan, after
+    * paying the seams — a few seconds at sf0.01.
     *
     * `probe`: stage-seam attribution hook, identity by default (see
     * [[graft.text.Pipelines.StageProbe]]) — `LegBench flagship` passes
     * a materializing probe to read per-stage walls off the production
     * composition. */
   def curationPipeline(spark: SparkSession, dir: String,
-      forceTwoLevel: Boolean = false,
-      lazyCheckpoints: Boolean = false,
       probe: graft.text.Pipelines.StageProbe =
         graft.text.Pipelines.noProbe): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
@@ -218,18 +212,17 @@ object Flagship {
     // reference's stage-out-and-re-read lineage cut, `PUSH:227-229`).
     val clean = probe("s6_checkpoint_clean",
       graft.text.Pipelines.lexicalClean(docs, capped = true, probe)
-        .localCheckpoint(eager = !lazyCheckpoints))
+        .localCheckpoint())
     // stage 5: semantic near-dup drop on the survivors' embeddings
     val emb = Tables.load(spark, dir, "embeddings")
     val embSurv = emb.join(clean.select(col("doc_id").as("vec_id")),
       Seq("vec_id"), "left_semi")
-    val (fb, wb) = if (forceTwoLevel) (0L, 0.0) else (64L, 4e8)
     val semDrop = probe("s7_semdedup_drops", graft.similarity.SemDedup
-      .semDedup(embSurv, k = 8, iters = 2, tau = 0.35, fb, wb)
+      .semDedup(embSurv, k = 8, iters = 2, tau = 0.35)
       .filter(!col("keep")).select(col("vec_id").as("doc_id")))
     val corpus = probe("s8_checkpoint_corpus",
       clean.join(semDrop, Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = !lazyCheckpoints))
+        .localCheckpoint())
     // stage 6: distilled gate — train on the teacher-labeled sample,
     // score the survivors (the probed hyperparameters: 20 rounds, lr 16)
     val w = graft.text.Distill.trainGate(

@@ -139,7 +139,8 @@ object GraftSession {
     val s = b.getOrCreate()
     // Verify-side dispatch knob (A/B harness): the byte budget under
     // which Dedup.verifiedCommon broadcasts; 0 forces the bucketed
-    // path. Unset/empty/'none'/'off' keep the library default (1.5e9).
+    // path. Unset/empty/'none'/'off' keep the library default
+    // (Dedup.DefaultVerifyBroadcastBytes).
     sys.env.get("SPARK_GRAFT_VERIFY_BROADCAST_BYTES")
       .map(_.trim.toLowerCase).filter(v => v.nonEmpty && v != "none" && v != "off")
       .foreach { v =>

@@ -176,8 +176,8 @@ object CurationQueries {
     * regression on 64-bucket hashed unigram PRESENCE + 4 cheap scalar
     * metric features against the Gopher gate as teacher, then one
     * linear score per document. Hyper-parameters were probed, not
-    * guessed (LegBench distill): tf-weighted bags alone stay at the 0.904
-    * majority base rate at ANY learning rate; presence + metrics at
+    * guessed: tf-weighted bags alone stay at the 0.904 majority base
+    * rate at ANY learning rate; presence + metrics at
     * (iters 20, lr 16) measures 0.952 accuracy at sf0.01. The oracle
     * unrolls the identical trajectory — md5 buckets, DECIMAL per-term
     * sums, 6 dp sigmoids, 8 dp weight steps — so a diverged gradient
@@ -994,13 +994,10 @@ object CurationQueries {
     * stages 1–5; trainGate runs 20 GD rounds, one Spark job each), so any
     * harness timing this query must wrap construction + action in one
     * window. Bench/LegBench both time `fn(spark, dir).count()`, which
-    * does exactly that. Plan-only consumers must NOT construct through
-    * this registration: pass `lazyCheckpoints = true` to
-    * `Flagship.curationPipeline` instead (graft.Explain does), which
-    * defers the seam executions to the first action while cutting
-    * lineage identically. The registered form stays eager on purpose —
-    * it keeps the bench contract (construction + one action = total
-    * cost) and the committed decade artifacts comparable. */
+    * does exactly that. A plan-only consumer (graft.Explain) pays the
+    * same seams before it can print the plan. The form stays eager on
+    * purpose — it keeps the bench contract (construction + one action
+    * = total cost) and the committed decade artifacts comparable. */
   private val flagshipCuration = Q("q_flagship_curation",
     (s, dir) => graft.Flagship.curationPipeline(s, dir),
     Some(flagshipSql))

@@ -603,8 +603,8 @@ object TextQueries {
     * (drops 5/31 tokens at sf0.001, 1/31 at sf0.01 — measured) while
     * the banded+capped pair set stays non-empty (120 rows at every
     * test sf), so the hash now pins the band+cap INTERPLAY, not an
-    * empty set. Scale-path bands stay caller-chosen (LegBench pmi
-    * sweeps them against the Zipf corpus). */
+    * empty set. Scale-path bands stay caller-chosen (`maxDfFrac`; the
+    * Zipf-corpus sweep is committed as BENCH_PMI_CAPPED_ZIPF.json). */
   private val pmiCapped = Q("q_text_pmi_capped",
     (s, dir) => TextAnalysis.pmi(Tables.load(s, dir, "documents"),
       topV = Some(16L), maxDfFrac = Some(0.8)),

@@ -47,6 +47,14 @@ object Kmeans {
       .agg(min(struct(col("__d"), col("cid"))).as("__m"))
       .select(col("vec_id"), col("__m.cid").as("cid"))
 
+  /** [[assignTwoLevel]]'s shipped dispatch: at most this many
+    * centroids always take the flat pass, with no corpus count. */
+  val DefaultFlatBelow: Long = 64L
+
+  /** [[assignTwoLevel]]'s shipped dispatch: the flat pass runs while
+    * its work product n·k stays at or below this many evaluations. */
+  val DefaultWorkBudget: Double = 4e8
+
   /** Two-level nearest-centroid assignment — EXACT, for large k.
     *
     * Flat [[assign]] is n·k work; in the SemDeDup constant-cluster-size
@@ -88,7 +96,8 @@ object Kmeans {
     * g-row super frame and the k-row centroid frame (both broadcast);
     * the n×g super-distance frame carries three scalars per row. */
   def assignTwoLevel(prepared: DataFrame, centroids: DataFrame,
-      flatBelow: Long = 64L, workBudget: Double = 4e8): DataFrame = {
+      flatBelow: Long = DefaultFlatBelow,
+      workBudget: Double = DefaultWorkBudget): DataFrame = {
     // localCheckpoint, not persist: every small frame below is rebuilt
     // from `cents` along MANY plan branches (sup feeds c2g, radii, and
     // supR; vg is read twice; the caller may then self-join the

@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * exact triangle-inequality group pruning over ⌈√k⌉ super-clusters,
   * so the n·k term the constant-cluster-size regime (k ∝ n) would
   * make superlinear drops to ~n·√k, with output provably identical to
-  * the flat pass (below 64 centroids the flat pass itself is
-  * dispatched, which keeps the k = 8 oracle fixture byte-identical);
+  * the flat pass (at most [[Kmeans.DefaultFlatBelow]] centroids take
+  * the flat pass itself, which keeps the k = 8 oracle fixture
+  * byte-identical);
   * the pair stage is a self-equi-join on cid — quadratic only within a
   * cluster, never across; the keep verdict is one groupBy on the
   * dominated id. Nothing is all-pairs.
@@ -36,16 +37,14 @@ object SemDedup {
   /** Per-vector dedup verdict: (vec_id, cid, kept_for, n_dominators,
     * keep) — `kept_for` is the smallest same-cluster id within `tau`
     * cosine (NULL for keepers), `n_dominators` counts them. */
-  def semDedup(emb: DataFrame, k: Int, iters: Int, tau: Double,
-      flatBelow: Long = 64L, workBudget: Double = 4e8): DataFrame = {
+  def semDedup(emb: DataFrame, k: Int, iters: Int, tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, "tau in (0, 1]")
     val cents = Kmeans.fit(emb, k, iters).select(col("cid"), col("cv"))
     // persisted: the two-level path reads the prepared frame three times
     // (super distances, survivors, final arg-min) plus the asg join here
     val p = graft.CacheScope.persist(Knn.prepared(emb))
     val asg = graft.CacheScope.persist(
-      Kmeans.assignTwoLevel(p, cents, flatBelow, workBudget)
-        .join(p, "vec_id"))
+      Kmeans.assignTwoLevel(p, cents).join(p, "vec_id"))
     val a = asg.select(col("cid"), col("vec_id").as("va"),
       col("e").as("qe"), col("nrm").as("qn"))
     val b = asg.select(col("cid"), col("vec_id").as("vb"),

@@ -11,7 +11,7 @@ import org.apache.hadoop.util.ShutdownHookManager
 
 /** The one staging-path scheme. Every path the engine stages to (registry
   * queries that write-then-read, `Outbound`, `Bucketing`,
-  * `DocCollection`, LegBench, tests) is built under [[root]]:
+  * `DocCollection`, tests) is built under [[root]]:
   * `target/stage` under the working directory, resolved once per JVM, so
   * a checkout or a copy of it stages inside itself and never in another.
   *

@@ -83,8 +83,11 @@ object Dedup {
     * bucketed path, mapped from SPARK_GRAFT_VERIFY_BROADCAST_BYTES by
     * GraftSession). */
   private[graft] val VerifyBroadcastBytesKey = "spark.graft.verifyBroadcastBytes"
+  /** The verify fence when [[VerifyBroadcastBytesKey]] is unset. */
+  private[graft] val DefaultVerifyBroadcastBytes: Double = 1.5e9
   private def broadcastVerifyBytes(sh: DataFrame): Double =
-    sh.sparkSession.conf.get(VerifyBroadcastBytesKey, "1.5e9").toDouble
+    sh.sparkSession.conf.getOption(VerifyBroadcastBytesKey)
+      .fold(DefaultVerifyBroadcastBytes)(_.toDouble)
 
   /** The pair family's verify stage: exact per-pair intersection sizes
     * for (da, db) candidates — `(da, db, na, nb, n_common)` with
@@ -94,7 +97,7 @@ object Dedup {
     * BELOW the broadcast budget (64-bit estimate) the per-doc frame
     * broadcasts and both verify joins are map-only hash joins, so the
     * wide (da, db, set) intermediate is never sorted or shuffled.
-    * Measured (round 12, PairStageProbe): at 1M docs the sort-merge
+    * Measured (round 12): at 1M docs the sort-merge
     * form's external sort writes ~36 GB of spill and pins the verify
     * stage at the box's write bandwidth — 137 s vs 85 s broadcast; at
     * 500k docs 19 s vs 10 s; outputs hash-identical. The size estimate
@@ -493,8 +496,8 @@ object Dedup {
     * mode on vocabulary-saturating corpora, where the exact filter's
     * posting mass grows quadratically (measured: the sf100x leg
     * exceeds single-box spill disk uncapped). Recall under the cap is
-    * a measured quantity (LegBench pair reports it against the exact
-    * twin), not a silent loss.
+    * a measured quantity (`q_dedup_prefix_capped_recall` reports it
+    * against the exact twin), not a silent loss.
     */
   def prefixJaccardPairs(sh0: DataFrame, threshold: Double,
       pairBudgetPerDoc: Option[Long] = None): DataFrame = {
@@ -662,32 +665,21 @@ object Dedup {
     * surviving candidates, so emitted values are exact; only candidate
     * RECALL is bounded, and `q_dedup_containment_recall` gates it
     * against the guaranteed-complete prefix-filtered twin (measured
-    * 1.0 at sf0.001/0.01/0.1, caps 10/10/11; floor 0.95). */
-  /** The capped candidate dataflow shared by [[containmentPairsCapped]]
-    * and the stage-attribution probe (LegBench pairstage): returns
-    * (hp, dfreq, cap, cands) so the probe times the PRODUCTION stages
-    * instead of an inlined copy that can drift (the r15
-    * docHashSetsProbe lesson).
+    * 1.0 at sf0.001/0.01/0.1, caps 10/10/11; floor 0.95).
     *
-    * hp: HASHED postings, shuffled by h exactly ONCE — the cached
-    * repartition's HashPartitioning satisfies the df groupBy and BOTH
-    * sides of the candidate self-join (InMemoryRelation preserves the
-    * cached plan's partitioning), so the corpus-sized frame crosses
+    * The postings are HASHED and shuffled by h exactly ONCE — the
+    * cached repartition's HashPartitioning satisfies the df groupBy and
+    * BOTH sides of the candidate self-join (InMemoryRelation preserves
+    * the cached plan's partitioning), so the corpus-sized frame crosses
     * the network once as 16 B rows instead of three times as ~50 B
     * string rows — at 2.5M docs the difference between in-flight
     * shuffle files that exceed local disk and ones that fit with
     * margin (PERF.md round 15). df/candidates on h equal df/candidates
     * on s up to the 64-bit collision bound [[hashedPostings]] states;
-    * the string shingles are never cached or shuffled at all.
-    *
-    * cap: the MINIMUM of the recall knob (df quantile) and the cost
-    * knob (largest df with cumulative pair mass ≤ budget × n_docs),
-    * both computed EXACTLY from the df histogram — the only global
-    * windows order that histogram (≤ max(df) rows), never the corpus;
-    * the one-row result broadcasts into the candidate filter. */
-  private[graft] def cappedCandidateStages(sh0: DataFrame,
-      dfQuantile: Double, minCap: Long, pairBudgetPerDoc: Long)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    * the string shingles are never cached or shuffled at all. */
+  def containmentPairsCapped(sh0: DataFrame, threshold: Double,
+      dfQuantile: Double = 0.99, minCap: Long = 10L,
+      pairBudgetPerDoc: Long = 128L, withSizes: Boolean = false): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val hp = graft.CacheScope.persist(
       hashedPostings(sh0).repartition(col("h")))
@@ -716,14 +708,6 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    (hp, dfreq, cap, cands)
-  }
-
-  def containmentPairsCapped(sh0: DataFrame, threshold: Double,
-      dfQuantile: Double = 0.99, minCap: Long = 10L,
-      pairBudgetPerDoc: Long = 128L, withSizes: Boolean = false): DataFrame = {
-    val (hp, _, _, cands) =
-      cappedCandidateStages(sh0, dfQuantile, minCap, pairBudgetPerDoc)
     verifiedCommon(hp, cands, containmentGate(threshold))
       .withColumn("containment", col("n_common").cast("double") /
         least(col("na"), col("nb")))
@@ -873,6 +857,10 @@ object Dedup {
       .join(corpusFp, Seq("fp"), "left_anti")
   }
 
+  /** [[connectedComponents]]' shipped edge bound: graphs with at most
+    * this many directed edges take the driver-side union-find. */
+  private[graft] val DefaultSmallGraphMaxEdges: Long = 1L << 22
+
   /** Connected components over an undirected candidate-pair edge list
     * `(da, db)` → `(doc_id, component)` with component = min doc_id
     * reachable. This is the step that turns LSH/SimHash candidate PAIRS
@@ -916,7 +904,7 @@ object Dedup {
     * the distributed path runs — at 100 TB that is always the case.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      smallGraphMaxEdges: Long = 1L << 22): DataFrame = {
+      smallGraphMaxEdges: Long = DefaultSmallGraphMaxEdges): DataFrame = {
     // The symmetrized edge frame is cached hash-partitioned AND sorted on
     // `dst` — the key of BOTH the init aggregation and every round's
     // neighbor-min join — with a PINNED count (REPARTITION_BY_NUM, the

@@ -203,17 +203,6 @@ class Round15Spec extends SparkSuite {
     }
   }
 
-  test("curation flagship: lazy seam checkpoints produce the eager output") {
-    // the Explain path (lazyCheckpoints = true) must be a pure WHEN
-    // change — same lineage cut, same rows once an action runs
-    val eager = Flagship.curationPipeline(spark, sf)
-      .collect().map(_.toString).sorted
-    val lazyD = Flagship.curationPipeline(spark, sf, lazyCheckpoints = true)
-      .collect().map(_.toString).sorted
-    assert(lazyD.sameElements(eager))
-    assert(eager.nonEmpty)
-  }
-
   test("intersect_count_i64 equals size(array_intersect) on sorted distinct arrays") {
     graft.functions.SetExpressions.register(spark)
     // deterministic pseudo-random sorted distinct arrays, plus the edge

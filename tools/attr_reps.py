@@ -8,9 +8,9 @@ shuffle bytes match the others is ENVIRONMENTAL (scheduler stall,
 page-cache state, device contention); one whose task time or spill
 moves with the wall is DATAFLOW.
 
-Accepts both the consolidated rep-line schema (any LegBench family:
-{"leg_rep":N,...,"t0_ms":...,"t1_ms":...}) and the pre-r17
-PairLegBench schema ({"pair_leg_rep":N,...}).
+Reads LegBench's rep lines (every family, and every named part of a
+cell: {"leg_rep":N,"dir":...,"leg":...,"secs":...,"t0_ms":...,
+"t1_ms":...}).
 
 With --sizes (comma list of <dir-basename>=<row-count>), also emits a
 per-leg exponent table for every adjacent dir pair: the WALL exponent
@@ -35,24 +35,15 @@ from eventlog_stages import newest_log, event_lines, stage_record
 def rep_windows(stdout_log):
     reps = []
     for line in open(stdout_log, errors="replace"):
-        m = re.search(r'\{"(?:\w+_)?leg_rep":.*\}', line)
+        m = re.search(r'\{"leg_rep":.*\}', line)
         if not m:
             continue
         try:
             d = json.loads(m.group(0))
         except json.JSONDecodeError:
             continue
-        if "t0_ms" not in d:
-            continue
-        rep = d.get("leg_rep", d.get("pair_leg_rep"))
-        leg = d.get("leg") or d.get("query") or d.get("mode") \
-            or d.get("form") or d.get("family", "?")
-        # the sem family's rep line carries per-component *_secs fields
-        # and no total "secs" — derive the wall from the epoch bounds so
-        # "any LegBench family" in the docstring is actually true
-        secs = d.get("secs", (d["t1_ms"] - d["t0_ms"]) / 1000.0)
-        reps.append({"rep": rep, "dir": d["dir"], "leg": leg,
-                     "secs": secs, "t0_ms": d["t0_ms"],
+        reps.append({"rep": d["leg_rep"], "dir": d["dir"], "leg": d["leg"],
+                     "secs": d["secs"], "t0_ms": d["t0_ms"],
                      "t1_ms": d["t1_ms"]})
     return reps
 

@@ -10,7 +10,8 @@
 #   campaign.sh gen <src> <out> <copies> <tables> [widen]
 #       GenScale a fixture (skips if <out> exists). Absolute paths.
 #   campaign.sh leg <name> <family-and-args...>
-#       One LegBench run in the campaign clone, event-logged:
+#       One LegBench run in the campaign clone, event-logged; the
+#       family is one of query, pair, cc, sem, flagship:
 #       stdout -> target/<name>.log, last medians line ->
 #       target/<name>.json, per-rep attribution ->
 #       target/<name>_attr.json. All SPARK_GRAFT_* env knobs pass

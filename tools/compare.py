@@ -7,7 +7,8 @@ import duckdb
 import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify"
+out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.normpath(os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "target", "verify"))
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
