@@ -21,6 +21,14 @@ import scala.collection.mutable.ListBuffer
   * the scope — after the scope exits, re-evaluating a plan that contained
   * a correctness-critical persist (surrogateKeyScalable) may recompute
   * nondeterministically.
+  *
+  * Persist or cut: `persist` a frame that is read within one action.
+  * [[cut]] a frame that later seams re-reference: every cached
+  * `InMemoryRelation` carries (and prints) its whole cached plan, so
+  * persists nested seam over seam make each downstream plan — and AQE's
+  * "Initial"/"Final" copies of it at every nesting level — grow with the
+  * composition's depth. A cut frame's plan is a one-line scan of its
+  * checkpointed rows.
   */
 object CacheScope {
 
@@ -54,6 +62,27 @@ object CacheScope {
       if (!scope.closed) scope.frames += df
     }
     df
+  }
+
+  /** Eager local checkpoint of `df` repartitioned `hash(key)` at the
+    * session's shuffle-partition count, with that layout kept visible to
+    * the planner ([[org.apache.spark.sql.LayoutCheckpoint]]): joins and
+    * aggregations on `key` read the cut without an Exchange. The
+    * dataflow twin of the reference's stage-out-and-re-read lineage cut
+    * (`PUSH:227-229`). Runs the frame's jobs now.
+    *
+    * Not registered with the scope: registry queries return lazy frames
+    * that are written after any scope ends, so the checkpoint blocks must
+    * outlive it. The `ContextCleaner` reclaims them once the frame is
+    * unreachable, as it does for `Dataset.localCheckpoint`.
+    *
+    * The cut's SQL execution and jobs are described `cut at <caller's
+    * file:line>`, so the UI and event logs name the seam. */
+  def cut(df: DataFrame, key: String): DataFrame = {
+    val caller = Thread.currentThread.getStackTrace()(2)
+    org.apache.spark.sql.LayoutCheckpoint.hashCut(df, key,
+      df.sparkSession.sessionState.conf.numShufflePartitions,
+      s"cut at ${caller.getFileName}:${caller.getLineNumber}")
   }
 
   /** Register a cleanup with the innermost scope — the non-cache twin of

@@ -185,13 +185,13 @@ object Flagship {
     * (`q_pretrain_full`, `q_quality_distilled`).
     *
     * Construction is eager (the bench contract: construction + one
-    * action is the whole cost): the two seam checkpoints EXECUTE stages
-    * 1–5, the SemDeDup dispatch reads driver scalars and trainGate runs
-    * its GD rounds (one Spark job each) while the frame is being BUILT.
-    * Eagerness does not change the plan: an eager or a deferred seam
-    * truncates the logical plan at the same RDD-scan stub, so a
-    * plan-only consumer (graft.Explain) prints that stub plan, after
-    * paying the seams — a few seconds at sf0.01.
+    * action is the whole cost): the ladder's four cuts and the two seam
+    * cuts EXECUTE stages 1–5, the SemDeDup dispatch reads driver scalars
+    * and trainGate runs its GD rounds (one Spark job each) while the
+    * frame is being BUILT. Each cut truncates the logical plan at a scan
+    * of its checkpointed rows, so a plan-only consumer (graft.Explain)
+    * prints that short plan, after paying the cuts — a few seconds at
+    * sf0.01.
     *
     * `probe`: stage-seam attribution hook, identity by default (see
     * [[graft.text.Pipelines.StageProbe]]) — `LegBench flagship` passes
@@ -201,18 +201,19 @@ object Flagship {
       probe: graft.text.Pipelines.StageProbe =
         graft.text.Pipelines.noProbe): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    // localCheckpoint, not persist, at the two composition seams: the
-    // downstream stages re-reference these frames along MANY branches
-    // (clean feeds the semantic filter, the anti join, and — through
-    // corpus — scoring, gating, and packing), so carrying full lineage
-    // duplicates the whole upstream subtree per branch — measured as a
-    // 2 GB plan STRING and driver-heap death at sf0.01 before the cut.
-    // The checkpoint truncates each branch at an RDD-scan stub (the
-    // same fix as assignTwoLevel's, and the dataflow twin of the
-    // reference's stage-out-and-re-read lineage cut, `PUSH:227-229`).
-    val clean = probe("s6_checkpoint_clean",
-      graft.text.Pipelines.lexicalClean(docs, capped = true, probe)
-        .localCheckpoint())
+    // cut (CacheScope.cut), not persist, at the two composition seams:
+    // the downstream stages re-reference these frames along MANY
+    // branches (clean feeds the semantic filter, the anti join, and —
+    // through corpus — scoring, gating, and packing), so carrying full
+    // lineage duplicates the whole upstream subtree per branch — measured
+    // as a 2 GB plan STRING and driver-heap death at sf0.01 before the
+    // first cut. Each seam truncates its branches at a one-line scan of
+    // the checkpointed rows that keeps the hash(doc_id) layout, so the
+    // doc_id joins below read it with no Exchange (the dataflow twin of
+    // the reference's stage-out-and-re-read lineage cut, `PUSH:227-229`).
+    val clean = probe("s6_checkpoint_clean", graft.CacheScope.cut(
+      graft.text.Pipelines.lexicalClean(docs, capped = true, probe),
+      "doc_id"))
     // stage 5: semantic near-dup drop on the survivors' embeddings
     val emb = Tables.load(spark, dir, "embeddings")
     val embSurv = emb.join(clean.select(col("doc_id").as("vec_id")),
@@ -220,9 +221,8 @@ object Flagship {
     val semDrop = probe("s7_semdedup_drops", graft.similarity.SemDedup
       .semDedup(embSurv, k = 8, iters = 2, tau = 0.35)
       .filter(!col("keep")).select(col("vec_id").as("doc_id")))
-    val corpus = probe("s8_checkpoint_corpus",
-      clean.join(semDrop, Seq("doc_id"), "left_anti")
-        .localCheckpoint())
+    val corpus = probe("s8_checkpoint_corpus", graft.CacheScope.cut(
+      clean.join(semDrop, Seq("doc_id"), "left_anti"), "doc_id"))
     // stage 6: distilled gate — train on the teacher-labeled sample,
     // score the survivors (the probed hyperparameters: 20 rounds, lr 16)
     val w = graft.text.Distill.trainGate(

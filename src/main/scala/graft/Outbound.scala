@@ -52,9 +52,13 @@ object Outbound {
 
   def push(spark: SparkSession, dir: String,
       stagePath: String = s"${Stage.root}/outbound"): PushResult = {
-    // the pipeline output feeds the delta's both sides + validation:
-    // persist instead of re-running the whole build per consumer
-    val prospects = CacheScope.persist(Flagship.prospectPipeline(spark, dir))
+    // the pipeline output feeds the delta's both sides + validation: cut
+    // it (eager checkpoint, pinned hash(leadid)) instead of re-running
+    // the whole build per consumer. A persist here nests the prospect
+    // build's cached plan under every consumer, and the reconcile
+    // action re-rendered it all (plus AQE's copies) as plan text
+    val prospects = CacheScope.cut(Flagship.prospectPipeline(spark, dir),
+      "leadid")
 
     // runtime schema introspection before trusting the target collection
     // (`if 'leadid' in df_docdb.columns`, PUSH:206)
@@ -64,11 +68,13 @@ object Outbound {
     require(docdb.columns.contains("leadid"), "target collection lacks leadid")
 
     // only-new delta (PUSH:207-224) + stage-out lineage cut (PUSH:227-229).
-    // persist: the delta is consumed four times (stage write, reconcile's
-    // src count, and both MINUS directions) — uncached, each re-runs the
-    // anti-join over the full prospect frame
-    val delta = CacheScope.persist(
-      Delta.newKeysOnly(prospects, docdb, "leadid", "leadid", lit("")))
+    // cut: the delta is consumed by the stage write and by reconcile's
+    // one-shuffle diff — uncut, each re-runs the anti join over the full
+    // prospect frame. The anti join reads the prospects cut on leadid
+    // with no Exchange on that side
+    val delta = CacheScope.cut(
+      Delta.newKeysOnly(prospects, docdb, "leadid", "leadid", lit("")),
+      "leadid")
     val staged = Sinks.stageOut(spark, delta, stagePath)
 
     // validation block (PUSH:369-457): staged must equal the delta

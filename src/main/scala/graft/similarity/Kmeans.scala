@@ -19,7 +19,7 @@ import graft.CacheScope
   * centroids) + a top-1 window on vec_id (one shuffle); recenter is a
   * posexplode to (cluster, dim) — corpus × dims rows, the same width a
   * feature matrix already has — aggregated in one shuffle on
-  * (cluster, dim). Centroid frames are k rows: persisted, broadcast,
+  * (cluster, dim). Centroid frames are k rows: checkpointed, broadcast,
   * never a bottleneck. Empty clusters drop out (standard Lloyd); k can
   * only shrink.
   */
@@ -177,19 +177,23 @@ object Kmeans {
         lit(1L).as("n_members"))
     for (_ <- 1 to iters) {
       val asg = assign(p, cents.select(col("cid"), col("cv")))
-      cents = CacheScope.persist(
-        asg.join(p, "vec_id")
-          .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
-          .groupBy(col("cid"), col("pos"))
-          .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
-            count(lit(1))).as("m"),
-            count(lit(1)).as("n"))
-          .groupBy(col("cid"))
-          .agg(expr(
-            "transform(sort_array(collect_list(struct(pos, m))), s -> s.m)")
-            .as("cv"),
-            max(col("n")).as("n_members"))) // n identical across dims
-      cents.count() // materialize inside the loop: bounded lineage per round
+      // localCheckpoint (eager), not persist: the next round reads this
+      // frame in a later action, and persisted rounds nest — each round's
+      // cache prints every earlier round's cached plan (the persist-or-cut
+      // rule in CacheScope). k rows, so a plain checkpoint; the checkpoint
+      // RDDs are reclaimed by the ContextCleaner
+      cents = asg.join(p, "vec_id")
+        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
+        .groupBy(col("cid"), col("pos"))
+        .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
+          count(lit(1))).as("m"),
+          count(lit(1)).as("n"))
+        .groupBy(col("cid"))
+        .agg(expr(
+          "transform(sort_array(collect_list(struct(pos, m))), s -> s.m)")
+          .as("cv"),
+          max(col("n")).as("n_members")) // n identical across dims
+        .localCheckpoint()
     }
     cents
   }

@@ -919,7 +919,10 @@ object Dedup {
     if (longKeyed) {
       // src<=dst keeps each pair once (both orientations are present)
       // while still carrying both endpoints and self-loop nodes
-      val maxPairs = (smallGraphMaxEdges / 2).toInt
+      // clamped: a fence ≥ 2^32 must mean "always union-find", not wrap
+      // through Int to a negative bound that silently takes the loop
+      val maxPairs =
+        math.max(0L, math.min(smallGraphMaxEdges / 2, Int.MaxValue - 1L)).toInt
       val probe = edges.where(col("src") <= col("dst"))
         .limit(maxPairs + 1).collect()
       if (probe.length <= maxPairs)

@@ -47,24 +47,25 @@ object Pipelines {
     * flagship queries. */
   def lexicalClean(docs: DataFrame, capped: Boolean,
       probe: StageProbe = noProbe): DataFrame = {
-    // Both text-carrying caches are pinned hash(doc_id) at the session
-    // partition count (REPARTITION_BY_NUM — the simhash-band/CC-edge
-    // shape: tiny COMPRESSED bytes, heavy per-row CPU). Unpinned, the
-    // corpus cache materializes at the scan's split count (one split for
-    // a small parquet file) or gets AQE size-coalesced to ~1 partition,
-    // and every tokenize-heavy consumer (shingles, repeatedSpanProfile,
-    // canonicalPerCluster's quality score) then runs on ONE core — the
-    // r19 event log showed a 10.4 s single-task stage doing exactly
-    // that. The pin is shuffle-neutral at scale: the stage-1/3 anti and
-    // equi joins need hash(doc_id) anyway and reuse the cached layout
-    // with no further Exchange.
-    val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val corpus0 = graft.CacheScope.persist(
-      docs.where(col("source") =!= "src0").repartition(parts, col("doc_id")))
+    // The four frames later stages re-reference (corpus0, shC, corpus1,
+    // keepers) are CUT, not persisted: each is an eager local checkpoint
+    // pinned hash(doc_id) at the session partition count, with the layout
+    // kept visible to the planner (CacheScope.cut). Persisted instead,
+    // each cache nests the previous one and prints its whole plan, so the
+    // plan text rendered per action (and by AQE per re-plan) grew with
+    // the ladder's depth. The pin matters for two reasons. Unpinned, the
+    // corpus materializes at the scan's split count (one split for a
+    // small parquet file) and every tokenize-heavy consumer (shingles,
+    // repeatedSpanProfile, canonicalPerCluster's quality score) runs on
+    // ONE core — the r19 event log showed a 10.4 s single-task stage
+    // doing exactly that. And the stage-1/3/4 anti, semi and equi joins
+    // on doc_id read the cut side with no further Exchange.
+    val corpus0 = graft.CacheScope.cut(
+      docs.where(col("source") =!= "src0"), "doc_id")
     // signal 1: containment pairs → drop the smaller side
     // (withSizes: the pair frame already carries the exact set sizes,
     // so no re-aggregation of the shingle frame is needed here)
-    val shC = graft.CacheScope.persist(Dedup.shingles(corpus0))
+    val shC = graft.CacheScope.cut(Dedup.shingles(corpus0), "doc_id")
     val cpairs =
       if (capped) Dedup.containmentPairsCapped(shC, 0.9, withSizes = true)
       else Dedup.prefixContainmentPairs(shC, 0.9, withSizes = true)
@@ -76,27 +77,26 @@ object Pipelines {
     val spanDrops = probe("s2_span_drops",
       Dedup.repeatedSpanProfile(corpus0, k = 8)
         .filter(col("mostly_dup")).select(col("doc_id")))
-    val corpus1 = probe("s3_lexical_survivors", graft.CacheScope.persist(
+    val corpus1 = probe("s3_lexical_survivors", graft.CacheScope.cut(
       corpus0.join(cdrops.unionByName(spanDrops).distinct(),
-          Seq("doc_id"), "left_anti")
-        .repartition(parts, col("doc_id"))))
+          Seq("doc_id"), "left_anti"), "doc_id"))
     // stage 3: cluster-level near-dup on the survivors. Shingling is
     // per-document, so shingles(corpus1) ≡ the stage-1 frame filtered
-    // to the survivors — one semi join on the CACHED shC instead of a
+    // to the survivors — one semi join on the CUT shC instead of a
     // second tokenize + explode + distinct over the corpus
     val sh1 = shC.join(corpus1.select(col("doc_id")), Seq("doc_id"),
       "left_semi")
     val cc = Dedup.connectedComponents(Dedup.lshCandidates(
       Dedup.minhashSignatures(sh1))
       .select(col("da"), col("db")))
-    // keepers persisted: consumed by corpus2 twice (decontamination
-    // profile + final anti join) and by the stage-4 shingle filter
-    val keepers = probe("s4_cc_keepers", graft.CacheScope.persist(
+    // keepers cut: consumed by corpus2 twice (decontamination profile +
+    // final anti join) and by the stage-4 shingle filter
+    val keepers = probe("s4_cc_keepers", graft.CacheScope.cut(
       Dedup.canonicalPerCluster(corpus1, cc, TextAnalysis.qualityScore)
-        .select(col("keep_id").as("doc_id"))))
+        .select(col("keep_id").as("doc_id")), "doc_id"))
     val corpus2 = corpus1.join(keepers, "doc_id")
     val bench = docs.where(col("source") === "src0")
-    // stage 4: decontamination probes the SAME cached shingle frame
+    // stage 4: decontamination probes the SAME cut shingle frame
     // (keepers ⊆ corpus1 ⊆ corpus0, so the semi join is exactly
     // shingles(corpus2)); removal is the same anti join as
     // Decontaminate.removeContaminated

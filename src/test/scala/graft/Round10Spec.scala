@@ -77,6 +77,24 @@ class Round10Spec extends SparkSuite {
     }
   }
 
+  test("connected components: a Long.MaxValue fence always takes union-find") {
+    // the fence halves to a pair bound; unclamped, any fence ≥ 2^32
+    // wrapped through Int (Long.MaxValue → −1) and ran the distributed
+    // loop, whose rounds each localCheckpoint their label frame
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
+    graft.CacheScope.scoped {
+      var labels = Seq.empty[(Long, Long)]
+      val execs = SqlEvents.during(spark.sparkContext) {
+        labels = Dedup.connectedComponents(pairs, smallGraphMaxEdges = Long.MaxValue)
+          .as[(Long, Long)].collect().sorted.toSeq
+      }
+      assert(labels === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
+      val loop = execs.map(_.description).filter(_.startsWith("localCheckpoint"))
+      assert(loop.isEmpty, s"the CC loop ran: $loop")
+    }
+  }
+
   test("sessionizer micros conversion is exact on both sides of the epoch") {
     import graft.streaming.Sessionize.{fromMicros, micros}
     // -0.5 s: truncating division would yield +500000 µs

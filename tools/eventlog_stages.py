@@ -10,11 +10,17 @@ Spark 4 event logs are V2 rolling-log DIRECTORIES
 internal.metrics.* accumulables; per-stage totals are read from each
 SparkListenerStageCompleted's accumulable Values.
 
-Usage: eventlog_stages.py <eventlog-file-or-dir> [--json OUT] [--top N]
+Usage: eventlog_stages.py <eventlog-file-or-dir> [--json OUT] [--top N] [--sql]
 
 With a plain directory, picks the most recent application log inside.
 Prints a per-stage table (top N by wall) and a totals line; --json dumps
 the full per-stage list for committing into a BENCH_* artifact.
+
+--sql prints per SQL execution instead (top N by plan text): the
+description, the plan-description bytes it started with, its AQE update
+count and bytes, its job count, and how much of its wall its jobs cover
+(job-covered ms) versus driver-only ms (planning, plan rendering, driver
+loops). A totals line follows; --json dumps every execution.
 """
 import sys, json, os, glob, io, subprocess
 
@@ -94,6 +100,91 @@ def parse(path):
     return sorted(stages, key=lambda s: -(s["wall_s"] or 0))
 
 
+SQL = "org.apache.spark.sql.execution.ui."
+
+
+def covered_ms(spans):
+    """Total length of the union of (start, end) spans."""
+    total, end = 0, None
+    for a, b in sorted(spans):
+        if end is None or a > end:
+            total += b - a
+            end = b
+        elif b > end:
+            total += b - end
+            end = b
+    return total
+
+
+def parse_sql(path):
+    """Per-SQL-execution plan text, AQE updates and job coverage."""
+    execs, job_exec, job_start, job_spans = {}, {}, {}, {}
+    for line in event_lines(path):
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        kind = ev.get("Event", "")
+        if kind == SQL + "SparkListenerSQLExecutionStart":
+            execs[ev["executionId"]] = {
+                "id": ev["executionId"],
+                "description": ev.get("description", "")[:80],
+                "start_ms": ev.get("time"), "end_ms": None,
+                "plan_bytes": len(ev.get("physicalPlanDescription", "").encode()),
+                "aqe_updates": 0, "aqe_bytes": 0}
+        elif kind == SQL + "SparkListenerSQLAdaptiveExecutionUpdate":
+            e = execs.get(ev["executionId"])
+            if e:
+                e["aqe_updates"] += 1
+                e["aqe_bytes"] += len(ev.get("physicalPlanDescription", "").encode())
+        elif kind == SQL + "SparkListenerSQLExecutionEnd":
+            e = execs.get(ev["executionId"])
+            if e:
+                e["end_ms"] = ev.get("time")
+        elif kind == "SparkListenerJobStart":
+            eid = (ev.get("Properties") or {}).get("spark.sql.execution.id")
+            if eid is not None:
+                job_exec[ev["Job ID"]] = int(eid)
+                job_start[ev["Job ID"]] = ev.get("Submission Time")
+        elif kind == "SparkListenerJobEnd":
+            jid = ev["Job ID"]
+            if jid in job_exec and job_start.get(jid) is not None:
+                job_spans.setdefault(job_exec[jid], []).append(
+                    (job_start[jid], ev.get("Completion Time")))
+    for eid, e in execs.items():
+        spans = [s for s in job_spans.get(eid, []) if s[1] is not None]
+        e["jobs"] = len(spans)
+        e["job_ms"] = covered_ms(spans)
+        wall = (e["end_ms"] - e["start_ms"]) if e["end_ms"] and e["start_ms"] else None
+        e["wall_ms"] = wall
+        e["driver_ms"] = wall - e["job_ms"] if wall is not None else None
+    return sorted(execs.values(), key=lambda e: e["id"])
+
+
+def main_sql(path, top, out_json):
+    execs = parse_sql(path)
+    kb = 1024
+    print(f"# {path} — {len(execs)} SQL executions")
+    print(f"{'exec':>5} {'wall_ms':>8} {'plan_KB':>8} {'aqe_n':>5} "
+          f"{'aqe_KB':>8} {'jobs':>4} {'job_ms':>7} {'drv_ms':>7}  description")
+    for e in sorted(execs, key=lambda e: -(e["plan_bytes"] + e["aqe_bytes"]))[:top]:
+        print(f"{e['id']:>5} {e['wall_ms'] or 0:>8} {e['plan_bytes']/kb:>8.1f} "
+              f"{e['aqe_updates']:>5} {e['aqe_bytes']/kb:>8.1f} {e['jobs']:>4} "
+              f"{e['job_ms']:>7} {e['driver_ms'] or 0:>7}  {e['description']}")
+    print(json.dumps({"log": os.path.basename(path),
+                      "n_executions": len(execs),
+                      "max_start_plan_bytes": max((e["plan_bytes"] for e in execs), default=0),
+                      "start_plan_bytes": sum(e["plan_bytes"] for e in execs),
+                      "aqe_updates": sum(e["aqe_updates"] for e in execs),
+                      "aqe_update_bytes": sum(e["aqe_bytes"] for e in execs),
+                      "jobs": sum(e["jobs"] for e in execs),
+                      "job_covered_ms": sum(e["job_ms"] for e in execs),
+                      "driver_only_ms": sum(e["driver_ms"] or 0 for e in execs)}))
+    if out_json:
+        json.dump({"log": os.path.basename(path), "executions": execs},
+                  open(out_json, "w"), indent=1)
+
+
 def main():
     args = [a for a in sys.argv[1:]]
     out_json = None
@@ -102,7 +193,12 @@ def main():
         i = args.index("--json"); out_json = args[i + 1]; del args[i:i + 2]
     if "--top" in args:
         i = args.index("--top"); top = int(args[i + 1]); del args[i:i + 2]
+    sql = "--sql" in args
+    if sql:
+        args.remove("--sql")
     path = newest_log(args[0] if args else "target/eventlog")
+    if sql:
+        return main_sql(path, top, out_json)
     stages = parse(path)
     gb = 1 << 30
     tot = {k: sum(s[k] for s in stages) for k in
