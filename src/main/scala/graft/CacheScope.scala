@@ -1,34 +1,48 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable.ListBuffer
 
-/** Cache lifecycle for library-internal persists.
+/** The one owner of materialization in the library: every persist and
+  * every checkpoint goes through this object (a source scan in
+  * `MaterializationSpec` holds the rest of `src/main` to that).
   *
-  * Several operators persist intermediates whose lineage is consumed more
-  * than once (RepairJoin round frames, Knn.prepared, the MinHash/SimHash
-  * signature frames, surrogate-key partition frames — the last is
-  * correctness-critical, see TopK.surrogateKeyScalable). A library must
-  * not leak those cached partitions into a long-lived embedding session,
-  * so persists route through `CacheScope.persist`, which registers the
-  * frame with the innermost active `scoped` block; the block unpersists
-  * everything it registered when it exits. With no scope active the
-  * behavior is a plain `persist()` (caller manages, e.g. via
-  * `spark.catalog.clearCache()`).
+  * Three verbs, one rule — pick by who re-reads the frame:
   *
-  * Contract: materialize every consumer of the returned DataFrame INSIDE
-  * the scope — after the scope exits, re-evaluating a plan that contained
-  * a correctness-critical persist (surrogateKeyScalable) may recompute
-  * nondeterministically.
-  *
-  * Persist or cut: `persist` a frame that is read within one action.
-  * [[cut]] a frame that later seams re-reference: every cached
-  * `InMemoryRelation` carries (and prints) its whole cached plan, so
-  * persists nested seam over seam make each downstream plan — and AQE's
-  * "Initial"/"Final" copies of it at every nesting level — grow with the
-  * composition's depth. A cut frame's plan is a one-line scan of its
-  * checkpointed rows.
+  *  - [[persist]] a frame that is read more than once within ONE action
+  *    (both sides of a self join, both branches of a union, a frame a
+  *    fenced driver scalar reads and the consumer's plan reads again).
+  *    The frame registers with the innermost active [[scoped]] block,
+  *    which unpersists it on exit; with no scope active it is a plain
+  *    `persist()` the caller manages (e.g. `spark.catalog.clearCache()`).
+  *    Contract: materialize every consumer INSIDE the scope — after it
+  *    exits, re-evaluating a plan that contained a correctness-critical
+  *    persist (`TopK.surrogateKeyScalable`) may recompute
+  *    nondeterministically.
+  *  - [[cut]] a frame that later actions re-read: a seam the rest of a
+  *    composition builds on, or each round of an iterative loop. Every
+  *    cached `InMemoryRelation` carries (and prints) its whole cached
+  *    plan, so persists nested seam over seam or round over round make
+  *    each downstream plan — and AQE's "Initial"/"Final" copies of it at
+  *    every nesting level — grow with the depth; an iterative
+  *    self-referencing dataflow even doubles its logical plan per round.
+  *    A cut is an eager local checkpoint (the dataflow twin of the
+  *    reference's stage-out-and-re-read lineage cut, `PUSH:227-229`):
+  *    downstream plans start at a one-line scan of its rows. `cut(df,
+  *    key)` also pins `hash(key)` and keeps that layout visible to the
+  *    planner, for seams that key-joins re-read; `cut(df)` is the plain
+  *    checkpoint, for small frames (k-row centroid sets, a round's
+  *    labels) whose consumers broadcast or re-shuffle them anyway.
+  *    Cuts are not registered with the scope: registry queries return
+  *    lazy frames that are written after any scope ends, so checkpoint
+  *    blocks must outlive it. The `ContextCleaner` reclaims them once the
+  *    frame is unreachable. Each cut's SQL execution and jobs are
+  *    described `cut at <caller's file:line>`, so the UI and event logs
+  *    name the seam.
+  *  - Delete the persist of a frame read once: the cache only adds a
+  *    nested plan and a block manager copy.
   */
 object CacheScope {
 
@@ -39,7 +53,7 @@ object CacheScope {
   // synchronized on the scope — concurrent persists from Futures forked
   // inside the block are the endorsed use case.
   private final class Scope {
-    val frames = ListBuffer.empty[DataFrame]
+    val unpersists = ListBuffer.empty[() => Unit]
     val cleanups = ListBuffer.empty[() => Unit]
     var closed = false
   }
@@ -52,37 +66,50 @@ object CacheScope {
   // or one it forked.
   private val current = new InheritableThreadLocal[Scope]
 
-  /** Persist `df` and register it with the innermost scope, if any.
-    * A closed scope (inherited by a pool thread that outlived the block)
-    * behaves like no scope: plain persist, caller manages. */
-  def persist(df: DataFrame): DataFrame = {
-    df.persist()
+  // A closed scope (inherited by a pool thread that outlived the block)
+  // behaves like no scope: nothing registers, the caller manages.
+  private def register(list: Scope => ListBuffer[() => Unit],
+      release: () => Unit): Unit = {
     val scope = current.get()
     if (scope != null) scope.synchronized {
-      if (!scope.closed) scope.frames += df
+      if (!scope.closed) list(scope) += release
     }
+  }
+
+  /** Persist `df` and register it with the innermost scope, if any. */
+  def persist(df: DataFrame): DataFrame = {
+    df.persist()
+    register(_.unpersists, () => df.unpersist(blocking = false))
     df
+  }
+
+  /** The RDD twin of `persist(df)`, for a library-built RDD cache (the
+    * primitive-array blocks of `Distill`'s GD loop). */
+  def persist[T](rdd: RDD[T]): RDD[T] = {
+    rdd.persist()
+    register(_.unpersists, () => rdd.unpersist(blocking = false))
+    rdd
   }
 
   /** Eager local checkpoint of `df` repartitioned `hash(key)` at the
     * session's shuffle-partition count, with that layout kept visible to
     * the planner ([[org.apache.spark.sql.LayoutCheckpoint]]): joins and
-    * aggregations on `key` read the cut without an Exchange. The
-    * dataflow twin of the reference's stage-out-and-re-read lineage cut
-    * (`PUSH:227-229`). Runs the frame's jobs now.
-    *
-    * Not registered with the scope: registry queries return lazy frames
-    * that are written after any scope ends, so the checkpoint blocks must
-    * outlive it. The `ContextCleaner` reclaims them once the frame is
-    * unreachable, as it does for `Dataset.localCheckpoint`.
-    *
-    * The cut's SQL execution and jobs are described `cut at <caller's
-    * file:line>`, so the UI and event logs name the seam. */
-  def cut(df: DataFrame, key: String): DataFrame = {
-    val caller = Thread.currentThread.getStackTrace()(2)
+    * aggregations on `key` read the cut without an Exchange. */
+  def cut(df: DataFrame, key: String): DataFrame =
     org.apache.spark.sql.LayoutCheckpoint.hashCut(df, key,
-      df.sparkSession.sessionState.conf.numShufflePartitions,
-      s"cut at ${caller.getFileName}:${caller.getLineNumber}")
+      df.sparkSession.sessionState.conf.numShufflePartitions, site())
+
+  /** Eager local checkpoint of `df` as it is partitioned, no layout
+    * declared — the plain cut. */
+  def cut(df: DataFrame): DataFrame =
+    org.apache.spark.sql.LayoutCheckpoint.checkpoint(df, site())
+
+  // the first frame outside this object names the cut's caller, for
+  // either `cut` entry point
+  private def site(): String = {
+    val caller = Thread.currentThread.getStackTrace.iterator.drop(1)
+      .find(!_.getClassName.startsWith("graft.CacheScope")).get
+    s"cut at ${caller.getFileName}:${caller.getLineNumber}"
   }
 
   /** Register a cleanup with the innermost scope — the non-cache twin of
@@ -94,15 +121,11 @@ object CacheScope {
     * it, mirroring `persist`'s no-scope contract. Cleanups run AFTER the
     * scope's unpersists, each isolated (one failing cleanup never blocks
     * the rest). */
-  def defer(cleanup: () => Unit): Unit = {
-    val scope = current.get()
-    if (scope != null) scope.synchronized {
-      if (!scope.closed) scope.cleanups += cleanup
-    }
-  }
+  def defer(cleanup: () => Unit): Unit = register(_.cleanups, cleanup)
 
-  /** Run `body`; on exit unpersist every frame the library persisted
-    * within (scopes nest — an inner scope only releases its own). */
+  /** Run `body`; on exit unpersist every frame and RDD the library
+    * persisted within (scopes nest — an inner scope only releases its
+    * own). */
   def scoped[T](body: => T): T = {
     val outer = current.get()
     val mine = new Scope
@@ -110,11 +133,11 @@ object CacheScope {
     try body
     finally {
       if (outer == null) current.remove() else current.set(outer)
-      val (registered, cleanups) = mine.synchronized {
+      val (unpersists, cleanups) = mine.synchronized {
         mine.closed = true
-        (mine.frames.toList, mine.cleanups.toList)
+        (mine.unpersists.toList, mine.cleanups.toList)
       }
-      registered.foreach(_.unpersist(blocking = false))
+      unpersists.foreach(_())
       cleanups.foreach(c => try c() catch { case _: Exception => () })
     }
   }

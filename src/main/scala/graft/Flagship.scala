@@ -201,16 +201,11 @@ object Flagship {
       probe: graft.text.Pipelines.StageProbe =
         graft.text.Pipelines.noProbe): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    // cut (CacheScope.cut), not persist, at the two composition seams:
-    // the downstream stages re-reference these frames along MANY
-    // branches (clean feeds the semantic filter, the anti join, and —
-    // through corpus — scoring, gating, and packing), so carrying full
-    // lineage duplicates the whole upstream subtree per branch — measured
-    // as a 2 GB plan STRING and driver-heap death at sf0.01 before the
-    // first cut. Each seam truncates its branches at a one-line scan of
-    // the checkpointed rows that keeps the hash(doc_id) layout, so the
-    // doc_id joins below read it with no Exchange (the dataflow twin of
-    // the reference's stage-out-and-re-read lineage cut, `PUSH:227-229`).
+    // the two composition seams are cut on doc_id (CacheScope): later
+    // stages re-read them along MANY branches (clean feeds the semantic
+    // filter, the anti join, and — through corpus — scoring, gating and
+    // packing; uncut, a 2 GB plan string at sf0.01), and the doc_id
+    // joins below read the kept layout with no Exchange
     val clean = probe("s6_checkpoint_clean", graft.CacheScope.cut(
       graft.text.Pipelines.lexicalClean(docs, capped = true, probe),
       "doc_id"))

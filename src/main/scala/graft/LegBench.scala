@@ -288,9 +288,9 @@ object LegBench {
       // fewer centroids than the leg reports once n > 2.56M
       val fitSample = math.max(4096, k)
       val t0 = System.nanoTime()
-      val cents = similarity.Kmeans
+      val cents = CacheScope.cut(similarity.Kmeans
         .fit(emb.filter(col("vec_id") < fitSample), k, iters = 2)
-        .select(col("cid"), col("cv")).localCheckpoint()
+        .select(col("cid"), col("cv")))
       val kTrained = cents.count()
       val tFit = (System.nanoTime() - t0) / 1e9
       rep.part("fit", tFit, kTrained)
@@ -341,7 +341,7 @@ object LegBench {
     * `Flagship.curationPipeline` — the same object the registered
     * `q_flagship_curation` runs, on the shipped adaptive dispatch —
     * with a materializing [[graft.text.Pipelines.StageProbe]]: each
-    * composition seam is persisted + counted, and a delta clock
+    * composition seam is cut (`CacheScope.cut`) + counted, and a delta clock
     * charges everything since the previous seam (driver-side segments
     * like `Distill.trainGate`'s GD rounds included) to a part named
     * after the seam. The terminal packing count is the part `s10_pack`
@@ -363,7 +363,7 @@ object LegBench {
         lastNs = System.nanoTime()
       }
       val probe: graft.text.Pipelines.StageProbe = (name, df) => {
-        val p = CacheScope.persist(df)
+        val p = CacheScope.cut(df)
         record(name, p.count())
         p
       }

@@ -30,25 +30,24 @@ object Graph {
   def pageRank(nodes: DataFrame, edges: DataFrame, damping: Double,
       iters: Int): DataFrame = {
     require(iters > 0, "pageRank needs iters > 0")
-    // persisted: the node universe is re-joined every iteration (and
-    // counted once up front) — without it each round re-runs the
-    // distinct shuffle over the node source.
-    val n = graft.CacheScope.persist(nodes.select(col("node")).distinct())
+    // the node universe and the degree-carrying edges below are
+    // re-read by every round: cut (CacheScope)
+    val n = graft.CacheScope.cut(nodes.select(col("node")).distinct())
     val e = edges.select(col("src"), col("dst"))
     // degree rides each edge row, joined ONCE at build (r18): the
     // iteration body then needs a single rank⋈edge join per round
     // instead of rank⋈degree⋈edge — one join and one pass over the
     // edge frame fewer per round, identical per-edge arithmetic.
-    // Deliberately NOT pinned REPARTITION_BY_NUM (r19 audit of the
+    // Deliberately a plain cut, NOT pinned (r19 audit of the
     // coalesce-hostile cache shapes, ADVICE #4): unlike the simhash
-    // band / CC edge caches, this cache's per-round consumer join
+    // band / CC edge caches, this frame's per-round consumer join
     // BROADCASTS the rank side at every scale the bench reaches, so a
     // pinned hash(src) layout removes no Exchange — it only adds one
     // at build and fixes every iteration's cached-side read at the
     // session partition count where AQE would have coalesced it.
     // Measured (same-boot A/B, target/r19_ab_*): the pin cost 26% on
     // q_graph_pagerank and 40% on q_graph_triangles at sf0.1.
-    val edeg = graft.CacheScope.persist(
+    val edeg = graft.CacheScope.cut(
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
     val nCount = n.count().toDouble
     var ranks = n.withColumn("rank", lit(1.0 / nCount))
@@ -58,14 +57,13 @@ object Graph {
         .select(col("dst").as("node"),
           (col("rank") / col("deg") * damping)
             .cast("decimal(24,12)").as("c"))
-      ranks = graft.CacheScope.persist(
+      ranks = graft.CacheScope.cut(
         n.join(contrib.groupBy(col("node"))
             .agg(sum(col("c")).cast("double").as("inflow")),
           Seq("node"), "left")
           .select(col("node"),
             (lit((1.0 - damping) / nCount) +
               coalesce(col("inflow"), lit(0.0))).as("rank")))
-      ranks.count() // materialize: bounded lineage per round
     }
     ranks
   }

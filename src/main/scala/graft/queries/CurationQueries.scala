@@ -990,7 +990,7 @@ object CurationQueries {
     * composition (audit-stamped onto the prospect build).
     *
     * Timing note: `curationPipeline` does most of its work EAGERLY at
-    * DataFrame-construction time (the localCheckpoint seams run
+    * DataFrame-construction time (the cut seams run
     * stages 1–5; trainGate runs 20 GD rounds, one Spark job each), so any
     * harness timing this query must wrap construction + action in one
     * window. Bench/LegBench both time `fn(spark, dir).count()`, which

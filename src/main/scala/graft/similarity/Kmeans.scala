@@ -19,7 +19,7 @@ import graft.CacheScope
   * centroids) + a top-1 window on vec_id (one shuffle); recenter is a
   * posexplode to (cluster, dim) — corpus × dims rows, the same width a
   * feature matrix already has — aggregated in one shuffle on
-  * (cluster, dim). Centroid frames are k rows: checkpointed, broadcast,
+  * (cluster, dim). Centroid frames are k rows: cut, broadcast,
   * never a bottleneck. Empty clusters drop out (standard Lloyd); k can
   * only shrink.
   */
@@ -83,7 +83,7 @@ object Kmeans {
     * measured-boundary pattern as `Dedup.jaccardPairs`' pair budget and
     * `Dedup.connectedComponents`' edge bound): the two-level path
     * carries ~15 extra jobs of fixed latency (two small Lloyd fits,
-    * checkpoints, the bound joins — measured ~17 s on this box), so
+    * cuts, the bound joins — measured ~17 s on this box), so
     * below `workBudget` candidate evaluations the flat broadcast pass
     * is strictly cheaper (measured at n = 200k, k = 320: flat 4 s vs
     * two-level 21 s — n·k = 6.4e7 is 'free' for codegen; the n·k term
@@ -98,18 +98,9 @@ object Kmeans {
   def assignTwoLevel(prepared: DataFrame, centroids: DataFrame,
       flatBelow: Long = DefaultFlatBelow,
       workBudget: Double = DefaultWorkBudget): DataFrame = {
-    // localCheckpoint, not persist: every small frame below is rebuilt
-    // from `cents` along MANY plan branches (sup feeds c2g, radii, and
-    // supR; vg is read twice; the caller may then self-join the
-    // result), so carrying full lineage duplicates the super-fit
-    // subtree exponentially — the JOB is fine but the driver burns
-    // minutes in generateTreeString on the blown-up tree (measured:
-    // LegBench sem at sf10x_de hung >5 min single-core in plan
-    // stringification). Checkpointing the k-row frames cuts every
-    // branch at a LocalTableScan-sized stub; the checkpoint RDDs are
-    // reclaimed by the ContextCleaner (same pattern as
-    // Dedup.connectedComponents' doubling loop).
-    val cents = centroids.select(col("cid"), col("cv")).localCheckpoint()
+    // the k-row frames below feed many later branches: cut, not
+    // persisted (the rule in CacheScope)
+    val cents = CacheScope.cut(centroids.select(col("cid"), col("cv")))
     val k = cents.count() // fenced driver scalar on a k-row frame
     // fenced driver scalars only: k rows + one corpus count — never row
     // data. The count is skipped entirely below flatBelow.
@@ -119,24 +110,22 @@ object Kmeans {
       val g = math.ceil(math.sqrt(k.toDouble)).toInt
       // contiguous rank so the super-fit can seed from vec_id < g; the
       // window orders the k-row centroid frame, never the corpus
-      val ranked = cents.withColumn("rk",
-        row_number().over(Window.orderBy(col("cid"))).cast("long") - 1)
-        .localCheckpoint()
-      val sup = fit(ranked.select(col("rk").as("vec_id"),
+      val ranked = CacheScope.cut(cents.withColumn("rk",
+        row_number().over(Window.orderBy(col("cid"))).cast("long") - 1))
+      val sup = CacheScope.cut(fit(ranked.select(col("rk").as("vec_id"),
           col("cv").as("embedding")), g, iters = 2)
-        .select(col("cid").as("gid"), col("cv").as("sv"))
-        .localCheckpoint()
+        .select(col("cid").as("gid"), col("cv").as("sv")))
       val c2g = assign(
         ranked.select(col("rk").as("vec_id"), col("cv").as("e")),
         sup.select(col("gid").as("cid"), col("sv").as("cv")))
         .select(col("vec_id").as("rk"), col("cid").as("gid"))
-      val cg = ranked.join(c2g, "rk")
-        .select(col("gid"), col("cid"), col("cv")).localCheckpoint()
+      val cg = CacheScope.cut(ranked.join(c2g, "rk")
+        .select(col("gid"), col("cid"), col("cv")))
       val radii = cg.join(broadcast(sup), "gid")
         .select(col("gid"),
           sqrt(greatest(l2sq("cv", "sv"), lit(0.0))).as("dcs"))
         .groupBy(col("gid")).agg(max(col("dcs")).as("rg"))
-      val supR = sup.join(radii, "gid").localCheckpoint()
+      val supR = CacheScope.cut(sup.join(radii, "gid"))
       val vg = CacheScope.persist(
         prepared.crossJoin(broadcast(supR))
           .select(col("vec_id"), col("gid"),
@@ -177,12 +166,8 @@ object Kmeans {
         lit(1L).as("n_members"))
     for (_ <- 1 to iters) {
       val asg = assign(p, cents.select(col("cid"), col("cv")))
-      // localCheckpoint (eager), not persist: the next round reads this
-      // frame in a later action, and persisted rounds nest — each round's
-      // cache prints every earlier round's cached plan (the persist-or-cut
-      // rule in CacheScope). k rows, so a plain checkpoint; the checkpoint
-      // RDDs are reclaimed by the ContextCleaner
-      cents = asg.join(p, "vec_id")
+      // the next round re-reads this k-row frame: cut (CacheScope)
+      cents = CacheScope.cut(asg.join(p, "vec_id")
         .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
         .groupBy(col("cid"), col("pos"))
         .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
@@ -192,8 +177,7 @@ object Kmeans {
         .agg(expr(
           "transform(sort_array(collect_list(struct(pos, m))), s -> s.m)")
           .as("cv"),
-          max(col("n")).as("n_members")) // n identical across dims
-        .localCheckpoint()
+          max(col("n")).as("n_members"))) // n identical across dims
     }
     cents
   }
@@ -227,7 +211,8 @@ object Kmeans {
         .groupBy(col("g"), col("vec_id"))
         .agg(min(struct(col("__d"), col("cid"), col("v"))).as("__m"))
         .select(col("g"), col("__m.cid").as("cid"), col("__m.v").as("v"))
-      cents = CacheScope.persist(
+      // the next round re-reads this frame: cut (CacheScope)
+      cents = CacheScope.cut(
         asg.select(col("g"), col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy(col("g"), col("cid"), col("pos"))
           .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
@@ -236,7 +221,6 @@ object Kmeans {
           .agg(expr(
             "transform(sort_array(collect_list(struct(pos, m))), t -> t.m)")
             .as("cv")))
-      cents.count() // materialize inside the loop: bounded lineage per round
     }
     cents
   }

@@ -877,17 +877,13 @@ object Dedup {
     * rides the pinned cached hash(dst) layout (no Exchange, no Sort —
     * see the body comment), so only node-sized frames shuffle.
     *
-    * Each round's frame is `localCheckpoint`ed, not just persisted: an
-    * iterative self-referencing dataflow doubles its LOGICAL plan every
-    * round even when the data is cached, and by ~10 rounds plan analysis
-    * alone OOMs the driver — checkpointing truncates lineage to the
-    * materialized result (the same reason GraphFrames checkpoints its CC
-    * loop). The driver loop reads one scalar emptiness probe per round
+    * Each round's frame is cut (the rule in [[graft.CacheScope]]); the
+    * driver loop reads one scalar emptiness probe per round
     * (convergence), never row data.
     *
     * Size-adaptive dispatch (same shape as `jaccardPairs`' pair-mass
     * dispatch): the iterative loop costs ~10 fixed job latencies (init
-    * checkpoint + 3 checkpoints and a convergence probe per round) no
+    * cut + 2 cuts and a convergence probe per round) no
     * matter how small the graph is, which dominates end-to-end time on
     * post-LSH candidate graphs — banding emits FAR fewer pairs than
     * documents. Below `smallGraphMaxEdges` directed edges the component
@@ -929,47 +925,43 @@ object Dedup {
         return unionFindComponents(pairs.sparkSession, probe)
     }
     // initialization folds the first neighbor-min round in for free: one
-    // groupBy instead of a join + checkpoint round. Star-shaped clusters
+    // groupBy instead of a join + cut round. Star-shaped clusters
     // (the common LSH case) converge one full round earlier. Keyed on
     // `dst` (identical by symmetry: the edge frame carries both
     // orientations, so dst's src-neighbors ARE the node's neighbor set)
     // to reuse the cached hash(dst) layout — zero Exchange at init.
-    var labels = edges.groupBy(col("dst"))
+    var labels = graft.CacheScope.cut(edges.groupBy(col("dst"))
       .agg(min(col("src")).as("nb0"))
       .select(col("dst").as("node"),
-        least(col("dst"), col("nb0")).as("component"))
-      .localCheckpoint(true)
+        least(col("dst"), col("nb0")).as("component")))
     var iter = 0
     var converged = labels.isEmpty
     while (!converged && iter < maxIter) {
       val nbMin = ccNeighborMin(edges, labels)
-      // checkpointed: the doubling self-join hashes its two sides on
-      // DIFFERENT keys (x.component vs y.node), so exchange reuse can
-      // never kick in and an un-materialized `stepped` — two joins deep —
-      // would be computed twice per round
-      val stepped = labels.join(nbMin, labels("node") === nbMin("src"))
+      // cut: the doubling self-join hashes its two sides on DIFFERENT
+      // keys (x.component vs y.node), so exchange reuse can never kick
+      // in and an un-materialized `stepped` — two joins deep — would be
+      // computed twice per round
+      val stepped = graft.CacheScope.cut(labels
+        .join(nbMin, labels("node") === nbMin("src"))
         .select(labels("node"),
           least(labels("component"), col("nb_min")).as("component"),
-          (col("nb_min") < labels("component")).as("__chg"))
-        .localCheckpoint(true)
+          (col("nb_min") < labels("component")).as("__chg")))
       // pointer doubling: component values are themselves nodes, so one
       // extra self-join jumps each label to its label's label
       val x = stepped.alias("x")
       val y = stepped.alias("y")
-      val next = x.join(y, col("x.component") === col("y.node"))
+      val next = graft.CacheScope.cut(x
+        .join(y, col("x.component") === col("y.node"))
         .select(col("x.node").as("node"),
           col("y.component").as("component"),
           (col("x.__chg") || col("y.component") < col("x.component"))
-            .as("__chg"))
-        .localCheckpoint(true)
+            .as("__chg")))
       converged = next.filter(col("__chg")).isEmpty
       labels = next.drop("__chg")
       iter += 1
     }
-    // register the final assignment with the enclosing CacheScope (the
-    // checkpoint RDDs themselves are reclaimed by the ContextCleaner)
-    graft.CacheScope.persist(
-      labels.select(col("node").as("doc_id"), col("component")))
+    labels.select(col("node").as("doc_id"), col("component"))
   }
 
   /** The CC loop's pinned co-partitioned edge cache (see the
@@ -1027,8 +1019,7 @@ object Dedup {
     var j = 0
     while (it.hasNext) { val n = it.next(); out(j) = (n, find(n)); j += 1 }
     import spark.implicits._
-    graft.CacheScope.persist(
-      spark.createDataset(out.toSeq).toDF("doc_id", "component"))
+    spark.createDataset(out.toSeq).toDF("doc_id", "component")
   }
 
   /** Canonical-keeper selection: one surviving document per duplicate

@@ -175,13 +175,14 @@ object Distill {
 
   /** The labeled feature frame as a persisted RDD of one [[Block]] per
     * partition — primitive arrays, no per-row objects, and no SQL plan
-    * left to analyse in the GD loop. Built once per training call; the
-    * caller unpersists it. */
+    * left to analyse in the GD loop. Built once per training call and
+    * registered with the enclosing [[graft.CacheScope]]. */
   private def featureCache(docs: DataFrame, label: Column, dim: Int,
       ndocs: Long): RDD[Block] =
-    labeledFeatures(docs, label, dim, ndocs).queryExecution.toRdd
+    graft.CacheScope.persist(labeledFeatures(docs, label, dim, ndocs)
+      .queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(block(rows)))
-      .setName("distill features").persist()
+      .setName("distill features"))
 
   // Spark's scalar semantics, reproduced exactly so the kernel walks the
   // trajectory of the SQL form bit for bit (and the oracle's with it).
@@ -297,9 +298,9 @@ object Distill {
       iters: Int = 3, lr: Double = 1.0): Map[Int, Double] = {
     require(dim > 0 && iters > 0 && lr > 0, "trainGate needs dim, iters, lr > 0")
     val ndocs = docs.count()
-    val cache = featureCache(docs, label, dim, ndocs)
-    try gdTrain(cache, dim, ndocs.toDouble, iters, lr)
-    finally cache.unpersist(blocking = false)
+    graft.CacheScope.scoped {
+      gdTrain(featureCache(docs, label, dim, ndocs), dim, ndocs.toDouble, iters, lr)
+    }
   }
 
   /** Score `docs` with a trained weight vector: one map-literal lookup +
@@ -333,7 +334,6 @@ object Distill {
     // inside every round's gradient job
     val ndocs = docs.count()
     val cache = featureCache(docs, label, dim, ndocs)
-    graft.CacheScope.defer(() => cache.unpersist(blocking = false))
     val w = new Array[Double](dim + nMetric)
     gdTrain(cache, dim, ndocs.toDouble, iters, lr)
       .foreach { case (b, v) => w(b + nMetric) = v }

@@ -19,7 +19,7 @@ object Pipelines {
     * stage seam with a stable stage name and the seam's frame; the
     * default is the identity, so production plans are untouched.
     * `LegBench`'s `flagship` family passes a materializing probe
-    * (persist + count + delta clock) so all work since the previous
+    * (cut + count + delta clock) so all work since the previous
     * seam — including driver-side segments like `Distill.trainGate`'s
     * GD rounds — lands in the named stage's wall. Attribution mode
     * therefore materializes each seam; its per-stage walls sum to an
@@ -48,18 +48,15 @@ object Pipelines {
   def lexicalClean(docs: DataFrame, capped: Boolean,
       probe: StageProbe = noProbe): DataFrame = {
     // The four frames later stages re-reference (corpus0, shC, corpus1,
-    // keepers) are CUT, not persisted: each is an eager local checkpoint
-    // pinned hash(doc_id) at the session partition count, with the layout
-    // kept visible to the planner (CacheScope.cut). Persisted instead,
-    // each cache nests the previous one and prints its whole plan, so the
-    // plan text rendered per action (and by AQE per re-plan) grew with
-    // the ladder's depth. The pin matters for two reasons. Unpinned, the
-    // corpus materializes at the scan's split count (one split for a
-    // small parquet file) and every tokenize-heavy consumer (shingles,
-    // repeatedSpanProfile, canonicalPerCluster's quality score) runs on
-    // ONE core — the r19 event log showed a 10.4 s single-task stage
-    // doing exactly that. And the stage-1/3/4 anti, semi and equi joins
-    // on doc_id read the cut side with no further Exchange.
+    // keepers) are cut on doc_id (the rule in CacheScope), pinned
+    // hash(doc_id) at the session partition count. The pin matters for
+    // two reasons. Unpinned, the corpus materializes at the scan's split
+    // count (one split for a small parquet file) and every tokenize-heavy
+    // consumer (shingles, repeatedSpanProfile, canonicalPerCluster's
+    // quality score) runs on ONE core — the r19 event log showed a 10.4 s
+    // single-task stage doing exactly that. And the stage-1/3/4 anti,
+    // semi and equi joins on doc_id read the cut side with no further
+    // Exchange.
     val corpus0 = graft.CacheScope.cut(
       docs.where(col("source") =!= "src0"), "doc_id")
     // signal 1: containment pairs → drop the smaller side

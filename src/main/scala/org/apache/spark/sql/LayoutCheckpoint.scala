@@ -30,15 +30,21 @@ import org.apache.spark.util.CallSite
   */
 object LayoutCheckpoint {
 
+  /** Eager `localCheckpoint` of `df`, its SQL execution and jobs
+    * described `site` — the plain cut, and [[hashCut]]'s fallback. */
+  def checkpoint(df: DataFrame, site: String): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val prevSite = sc.getLocalProperty(CallSite.SHORT_FORM)
+    sc.setLocalProperty(CallSite.SHORT_FORM, site)
+    try df.localCheckpoint(eager = true)
+    finally sc.setLocalProperty(CallSite.SHORT_FORM, prevSite)
+  }
+
   def hashCut(df: DataFrame, key: String, parts: Int,
       site: String): DataFrame = {
     val pinned = df.repartition(parts, col(key)).asInstanceOf[classic.Dataset[Row]]
     val session = pinned.sparkSession
-    val sc = session.sparkContext
-    val prevSite = sc.getLocalProperty(CallSite.SHORT_FORM)
-    sc.setLocalProperty(CallSite.SHORT_FORM, site)
-    val cut = try pinned.localCheckpoint(eager = true)
-      finally sc.setLocalProperty(CallSite.SHORT_FORM, prevSite)
+    val cut = checkpoint(pinned, site).asInstanceOf[classic.Dataset[Row]]
     val stub = cut.logicalPlan.asInstanceOf[LogicalRDD]
     val keyAt = stub.output.indexWhere(a => session.sessionState.conf.resolver(a.name, key))
     val ran = pinned.queryExecution.executedPlan match {

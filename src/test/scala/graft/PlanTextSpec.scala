@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.sources.Stage
+import graft.text.Dedup
 
 /** Plan-text guard for the two compositions that cut lineage at seams.
   * Every cached `InMemoryRelation` prints its whole cached plan, and AQE
@@ -16,7 +17,10 @@ import graft.sources.Stage
   * checkpointed, each downstream plan starts at a one-line scan of the
   * cut (40,702 and 69,160 chars at most; 2.9 M and 1.0 M of updates);
   * this spec holds every execution of either composition under a fixed
-  * ceiling.
+  * ceiling. The same ceiling holds the pretrain twins, two-level
+  * k-means, the distributed CC loop and PageRank, whose persisted rounds
+  * nested each other (796,021 chars at the third round on sf0.001; cut,
+  * 29,265).
   */
 class PlanTextSpec extends SparkSuite {
 
@@ -50,6 +54,43 @@ class PlanTextSpec extends SparkSuite {
     }
     assertUnderCeiling("curationPipeline", FlagshipCeiling, execs)
     assert(spark.read.parquet(out).count() > 0)
+  }
+
+  /** Write `df` inside a scope and return the executions it ran. */
+  private def written(name: String)(df: => org.apache.spark.sql.DataFrame): Seq[SqlExecution] = {
+    spark.catalog.clearCache()
+    SqlEvents.during(spark.sparkContext) {
+      CacheScope.scoped {
+        df.write.mode("overwrite").parquet(s"${Stage.root}/test_plan_text_$name")
+      }
+    }
+  }
+
+  for (q <- Seq("q_pretrain_full", "q_pretrain_capped", "q_graph_pagerank"))
+    test(s"$q: every execution starts with a plan under 64 KiB") {
+      assertUnderCeiling(q, FlagshipCeiling,
+        written(q)(SparkEntry.queries(q)(spark, sf)))
+    }
+
+  test("SemDeDup k-means, two-level assignment forced: every plan under 64 KiB") {
+    // k = 100 clears Kmeans.DefaultFlatBelow and workBudget = 0 forces the
+    // pruned path, so the super-fit and its cuts run on sf0.001
+    assertUnderCeiling("assignTwoLevel", FlagshipCeiling, written("two_level") {
+      val emb = sources.Tables.load(spark, sf, "embeddings")
+      val cents = similarity.Kmeans.fit(emb, k = 100, iters = 2)
+        .select(col("cid"), col("cv"))
+      similarity.Kmeans.assignTwoLevel(
+        CacheScope.persist(similarity.Knn.prepared(emb)), cents, workBudget = 0.0)
+    })
+  }
+
+  test("distributed connected components: every plan under 64 KiB") {
+    assertUnderCeiling("connectedComponents", FlagshipCeiling, written("cc_loop") {
+      val docs = sources.Tables.load(spark, sf, "documents")
+      Dedup.connectedComponents(Dedup.lshCandidates(Dedup.minhashSignatures(
+          Dedup.shingles(docs))).select(col("da"), col("db")),
+        smallGraphMaxEdges = 0L)
+    })
   }
 
   test("outbound push: every execution starts with a plan under 96 KiB") {

@@ -80,7 +80,7 @@ class Round10Spec extends SparkSuite {
   test("connected components: a Long.MaxValue fence always takes union-find") {
     // the fence halves to a pair bound; unclamped, any fence ≥ 2^32
     // wrapped through Int (Long.MaxValue → −1) and ran the distributed
-    // loop, whose rounds each localCheckpoint their label frame
+    // loop, whose rounds each cut their label frame (`cut at Dedup.scala`)
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
     graft.CacheScope.scoped {
@@ -90,7 +90,7 @@ class Round10Spec extends SparkSuite {
           .as[(Long, Long)].collect().sorted.toSeq
       }
       assert(labels === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
-      val loop = execs.map(_.description).filter(_.startsWith("localCheckpoint"))
+      val loop = execs.map(_.description).filter(_.startsWith("cut at Dedup.scala"))
       assert(loop.isEmpty, s"the CC loop ran: $loop")
     }
   }
