@@ -12,7 +12,10 @@ import java.nio.file.{Files, Paths}
   * Output: the driver's one-line JSON on stdout (total = sum of medians)
   * plus the complete artifact — per-rep times included — at
   * target/bench.json (the driver's line capture truncates the head of
-  * long lines, which cost rounds 1-3 their first ~19 queries).
+  * long lines, which cost rounds 1-3 their first ~19 queries). The
+  * artifact also carries each query's per-rep count of generated
+  * classes compiled (`compiles`) and their timed-rep sum
+  * (`compiles_total`, repeated in the compact last line).
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = BenchStats.median(xs)
@@ -49,12 +52,20 @@ object Bench {
       r => r.error.foreach(m =>
         System.err.println(s"[bench] warm-up of ${r.cell.leg} failed: $m"))
     }
+    val timed = BenchStats.runReps(spark, reps, cells) { r =>
+      r.error.foreach(m =>
+        System.err.println(s"[bench] ${r.cell.leg} failed: $m"))
+    }
     // name -> (per-rep seconds for successful reps, first error if any)
     val runs: Seq[(String, Seq[Double], Option[String])] =
-      BenchStats.series(BenchStats.runReps(spark, reps, cells) { r =>
-        r.error.foreach(m =>
-          System.err.println(s"[bench] ${r.cell.leg} failed: $m"))
-      }).map(s => (s.leg, s.secs, s.error.map(_.take(120))))
+      BenchStats.series(timed).map(s => (s.leg, s.secs, s.error.map(_.take(120))))
+    // generated classes compiled per query per rep, failed reps included:
+    // rep 1 pays each query's new classes, later reps only cache misses
+    val compiles = timed.groupBy(_.cell.leg).toSeq.sortBy(_._1)
+      .map { case (k, rs) => Verify.jsonString(k) + ":" +
+        rs.sortBy(_.rep).map(_.compiles).mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    val compilesTotal = timed.map(_.compiles).sum
     // a broken query must never subsidize the total: no successful rep →
     // null in `queries` plus an entry in `errors`
     val qs = runs.map { case (k, ts, _) =>
@@ -77,14 +88,16 @@ object Bench {
     }.mkString("{", ",", "}")
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"),
-      line.dropRight(1) + s""","per_rep":$perRep}""")
+      line.dropRight(1) + s""","per_rep":$perRep,"compiles":$compiles,""" +
+        s""""compiles_total":$compilesTotal}""")
     println(line)
     // compact summary printed LAST: the round snapshot keeps a truncated
     // TAIL of the output, which in r1-r7 lost the headline totals at the
     // head of the long line — the final line always survives intact
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
-      s""""n_queries":${names.size},"n_errors":$nErrors,"sf":"$sfDir",""" +
+      s""""n_queries":${names.size},"n_errors":$nErrors,"compiles":$compilesTotal,""" +
+      s""""sf":"$sfDir",""" +
       s""""summary_of":"full line above","full_artifact":"target/bench.json"}""")
     spark.stop()
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** The measurement mains' shared protocol: the one rep-major timing
@@ -20,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   * accumulate until DISK, not any single query, is the limit (the r15
   * sf50x rep died ENOSPC under ~60 GB of PRIOR legs' shuffle files
   * while one leg's own peak fit with margin).
+  *
+  * Each run also counts the classes Spark's code generator compiled
+  * while it ran ([[compiles]]): a class already in the JVM's
+  * generated-class cache is reused, not compiled, so a warm rep's count
+  * shows what the cache did not hold (see `GraftSession.builder`).
   */
 object BenchStats {
 
@@ -58,10 +64,17 @@ object BenchStats {
     private[BenchStats] def parts: Seq[Part] = recorded.result()
   }
 
-  /** One rep of one cell: wall seconds, epoch bounds, the parts it
-    * reported, and the error message if it threw (rows are then 0). */
+  /** One rep of one cell: wall seconds, epoch bounds, the classes the
+    * code generator compiled meanwhile, the parts it reported, and the
+    * error message if it threw (rows are then 0). */
   final case class Run(rep: Int, cell: Cell, rows: Long, secs: Double,
-      t0Ms: Long, t1Ms: Long, parts: Seq[Part], error: Option[String])
+      t0Ms: Long, t1Ms: Long, compiles: Long, parts: Seq[Part],
+      error: Option[String])
+
+  /** Classes the code generator has compiled in this JVM so far: every
+    * generated-class cache miss compiles once and records its time in
+    * this histogram, whatever thread or session asked. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Time every cell in order within each of `reps` reps, handing each
     * run to `report` as it completes. */
@@ -69,6 +82,7 @@ object BenchStats {
       report: Run => Unit): Seq[Run] =
     for (rep <- 1 to reps; cell <- cells) yield {
       val r = new Rep(rep)
+      val c0 = compiles()
       val e0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val (rows, error) = try (cell.run(r), None) catch {
@@ -77,11 +91,12 @@ object BenchStats {
       }
       val secs = (System.nanoTime() - t0) / 1e9
       val e1 = System.currentTimeMillis()
+      val c1 = compiles()
       // drop caches so one cell's persisted lineage can't subsidize the
       // next cell's timing; the GC frees shuffle files (see above)
       spark.catalog.clearCache()
       System.gc()
-      val run = Run(rep, cell, rows, secs, e0, e1,
+      val run = Run(rep, cell, rows, secs, e0, e1, c1 - c0,
         if (error.isEmpty) r.parts else Nil, error)
       report(run)
       run

@@ -21,6 +21,19 @@ import org.apache.spark.sql.SparkSession
   *    document (and PlanSpec asserts) assume runtime re-planning.
   *  - `spark.sql.extensions=graft.GraftExtensions` — registers the
   *    codegen-native functions (`dot_f64`) without host code changes.
+  *  - `spark.sql.codegen.cache.maxEntries=4096` — Spark keeps compiled
+  *    generated classes in one JVM-wide cache of 100 entries by
+  *    default, fewer than one pass of the engine's plans uses, so every
+  *    repeated pass compiled its plans again. Measured with an unbounded
+  *    cache: one `q_flagship_curation` run at sf0.001 compiles 272
+  *    distinct classes, one pass over all 204 registered queries at
+  *    sf0.01 (`graft.Verify`) 2,184. 4096 holds the whole surface with
+  *    ~1.9× headroom. It is a STATIC conf: `CodeGenerator` reads it once
+  *    per JVM, when it is first used, from the session active then — a
+  *    host that built its session some other way keeps Spark's 100.
+  *    `spark.sql.codegen.useIdInClassName=false` goes with it (see the
+  *    builder): stage-numbered class names made the same plan miss the
+  *    cache when AQE numbered its stages differently.
   *
   * Shuffle partitions default to the core count: on a laptop-sized
   * `local[n]` the 200-partition default just multiplies task overhead;
@@ -106,6 +119,17 @@ object GraftSession {
       // spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing
       // .enabled=true; results are identical either way.
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // generated-class cache sized to the registered surface's measured
+      // 2,184 classes (scaladoc above; static, read once per JVM)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The cache keys on the class source, and a whole-stage class is
+      // named after its codegen stage id, which AQE hands out in the
+      // order stages get planned: the same plan can number its stages
+      // differently from run to run, and each renumbered stage compiles
+      // again (16 of a flagship run's 292 classes at sf0.001, measured).
+      // Unnumbered names make identical code one class; the id stays in
+      // the plan (`*(n)`) and in the generated source's comment.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Local session sized to `cpus` threads — the mains' form.
     * `SPARK_GRAFT_SHUFFLE_PARTITIONS` decouples the partition count

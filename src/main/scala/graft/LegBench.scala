@@ -26,9 +26,11 @@ import graft.BenchStats.{Cell, Run}
   * one per named part of the cell, each with `leg_rep`, `leg`, `rows`,
   * `secs` and the epoch bounds `t0_ms`/`t1_ms` that `tools/attr_reps.py`
   * slices a Spark event log by (enable it with the session's event-log
-  * knob, see `GraftSession.local`). The last line holds the medians,
-  * the per-rep minima (the pair family's adjudication protocol reads
-  * per-rep MINIMA, PERF.md) and the per-rep vectors, keyed `dir#leg`.
+  * knob, see `GraftSession.local`); the cell's own line also has
+  * `compiles`, the generated classes compiled during the run. The last
+  * line holds the medians, the per-rep minima (the pair family's
+  * adjudication protocol reads per-rep MINIMA, PERF.md) and the per-rep
+  * vectors, keyed `dir#leg`.
   *
   * Env knobs: `SPARK_GRAFT_REPS` (default 5; cc and flagship 3), the
   * session knobs `GraftSession.local` reads, and per family:
@@ -71,14 +73,16 @@ object LegBench {
   private def envReps(default: Int): Int =
     sys.env.getOrElse("SPARK_GRAFT_REPS", default.toString).toInt
 
-  /** The rep lines of one run: one per part, then the cell's own. */
+  /** The rep lines of one run: one per part, then the cell's own, which
+    * also carries the run's generated-class `compiles`. */
   private def repLines(family: String, extraFields: String = "")(r: Run): Unit = {
     def line(leg: String, rows: Long, secs: Double, t0: Long, t1: Long,
-        error: Option[String]): Unit =
-      println(f"""{"leg_rep":${r.rep},"family":"$family","dir":"${r.cell.dir}","leg":"$leg"$extraFields,"rows":$rows,"secs":$secs%.3f,"t0_ms":$t0,"t1_ms":$t1""" +
+        error: Option[String], more: String = ""): Unit =
+      println(f"""{"leg_rep":${r.rep},"family":"$family","dir":"${r.cell.dir}","leg":"$leg"$extraFields,"rows":$rows,"secs":$secs%.3f,"t0_ms":$t0,"t1_ms":$t1$more""" +
         error.fold("")(m => ",\"error\":" + Verify.jsonString(m)) + "}")
     r.parts.foreach(p => line(p.name, p.rows, p.secs, p.t0Ms, p.t1Ms, None))
-    line(r.cell.leg, r.rows, r.secs, r.t0Ms, r.t1Ms, r.error)
+    line(r.cell.leg, r.rows, r.secs, r.t0Ms, r.t1Ms, r.error,
+      s""","compiles":${r.compiles}""")
   }
 
   /** The shared medians tail line (`Bench`'s consumption pattern plus

@@ -62,14 +62,14 @@ object Pq {
     * the same two shuffles per round), replacing the first-N seeding —
     * this is what ADC quality on real data depends on. Deterministic
     * (seeds, iteration count, tiebreaks all fixed), so the oracle can
-    * replay the identical centroid trajectory. */
+    * replay the identical centroid trajectory. The last round is
+    * already a cut, so the rename reads its checkpoint blocks as they
+    * are (a persist here would only copy them). */
   private def trainedCodebook(sub: DataFrame, nCentroids: Int,
       iters: Int): DataFrame =
-    CacheScope.persist(
-      Kmeans.fitGrouped(
-          sub.select(col("s").as("g"), col("vec_id"), col("v")),
-          nCentroids, iters)
-        .select(col("cid"), col("g").as("s"), col("cv")))
+    Kmeans.fitGrouped(sub.select(col("s").as("g"), col("vec_id"), col("v")),
+        nCentroids, iters)
+      .select(col("cid"), col("g").as("s"), col("cv"))
 
   /** First-N seed codebook when `trainIters` = 0 (the oracle-simplest
     * fixture), k-means-trained codebook otherwise. */

@@ -80,4 +80,18 @@ class BenchStatsSpec extends SparkSuite {
     assert(broken.median.isEmpty && broken.min.isEmpty)
     assert(broken.error.contains("always"))
   }
+
+  test("each run records the generated classes compiled while it ran") {
+    // a literal no earlier plan used is inlined into a new class; a cell
+    // that plans nothing compiles nothing
+    val fresh = System.nanoTime() % 1000000 + 1000003
+    val cells = Seq(
+      Cell("d", "new_class", _ =>
+        spark.range(0, 10).selectExpr(s"id * $fresh AS x").collect().length.toLong),
+      Cell("d", "no_plan", _ => 0L))
+    val (runs, _) = runReported(1, cells)
+    assert(runs.map(_.cell.leg) == Seq("new_class", "no_plan"))
+    assert(runs.head.compiles > 0)
+    assert(runs(1).compiles == 0)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Pq
@@ -52,6 +53,20 @@ class PqSpec extends SparkSuite {
       assert(sorted.map(_._3).toSeq == (1L to 5L)) // dense ranks
       assert(sorted.map(_._4).toSeq == sorted.map(_._4).sorted.toSeq) // monotone
       assert(!sorted.exists(r => r._2 == r._1)) // self excluded
+    }
+  }
+
+  test("IVF-PQ rerank reads the trained codebook from its cut, not a cache") {
+    CacheScope.scoped {
+      val out = Pq.ivfPqRerankTopK(Tables.load(spark, sf, "embeddings"),
+        spark, queryPred = col("vec_id") < 3, k = 5)
+      val cached = out.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.output.map(_.name)
+      }
+      // the sub-vector and full-vector frames stay persisted (each is
+      // read by several joins); the codebook (cid, s, cv) is not
+      assert(cached.nonEmpty)
+      assert(!cached.exists(_.contains("cv")), cached)
     }
   }
 }
