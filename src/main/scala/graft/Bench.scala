@@ -15,7 +15,9 @@ import java.nio.file.{Files, Paths}
   * long lines, which cost rounds 1-3 their first ~19 queries). The
   * artifact also carries each query's per-rep count of generated
   * classes compiled (`compiles`) and their timed-rep sum
-  * (`compiles_total`, repeated in the compact last line).
+  * (`compiles_total`, repeated in the compact last line), and its
+  * per-rep collections (`gc_count`) and collection milliseconds
+  * (`gc_ms`).
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = BenchStats.median(xs)
@@ -59,12 +61,15 @@ object Bench {
     // name -> (per-rep seconds for successful reps, first error if any)
     val runs: Seq[(String, Seq[Double], Option[String])] =
       BenchStats.series(timed).map(s => (s.leg, s.secs, s.error.map(_.take(120))))
-    // generated classes compiled per query per rep, failed reps included:
-    // rep 1 pays each query's new classes, later reps only cache misses
-    val compiles = timed.groupBy(_.cell.leg).toSeq.sortBy(_._1)
-      .map { case (k, rs) => Verify.jsonString(k) + ":" +
-        rs.sortBy(_.rep).map(_.compiles).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    // per query, one value per rep, failed reps included
+    def perQueryRep(v: BenchStats.Run => Long): String =
+      timed.groupBy(_.cell.leg).toSeq.sortBy(_._1)
+        .map { case (k, rs) => Verify.jsonString(k) + ":" +
+          rs.sortBy(_.rep).map(v).mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
+    // generated classes compiled: rep 1 pays each query's new classes,
+    // later reps only cache misses
+    val compiles = perQueryRep(_.compiles)
     val compilesTotal = timed.map(_.compiles).sum
     // a broken query must never subsidize the total: no successful rep →
     // null in `queries` plus an entry in `errors`
@@ -89,7 +94,8 @@ object Bench {
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"),
       line.dropRight(1) + s""","per_rep":$perRep,"compiles":$compiles,""" +
-        s""""compiles_total":$compilesTotal}""")
+        s""""compiles_total":$compilesTotal,"gc_count":${perQueryRep(_.gcCount)},""" +
+        s""""gc_ms":${perQueryRep(_.gcMs)}}""")
     println(line)
     // compact summary printed LAST: the round snapshot keeps a truncated
     // TAIL of the output, which in r1-r7 lost the headline totals at the

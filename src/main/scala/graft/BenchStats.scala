@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
@@ -26,6 +30,10 @@ import org.apache.spark.sql.SparkSession
   * while it ran ([[compiles]]): a class already in the JVM's
   * generated-class cache is reused, not compiled, so a warm rep's count
   * shows what the cache did not hold (see `GraftSession.builder`).
+  * It also counts the collections the JVM's collectors ran meanwhile
+  * and their summed time ([[gcs]]), so a peak-memory delta can be read
+  * with the GC count that goes with it; the between-cell `System.gc()`
+  * falls outside every run.
   */
 object BenchStats {
 
@@ -65,16 +73,26 @@ object BenchStats {
   }
 
   /** One rep of one cell: wall seconds, epoch bounds, the classes the
-    * code generator compiled meanwhile, the parts it reported, and the
-    * error message if it threw (rows are then 0). */
+    * code generator compiled meanwhile, the collections run meanwhile
+    * and their milliseconds, the parts it reported, and the error
+    * message if it threw (rows are then 0). */
   final case class Run(rep: Int, cell: Cell, rows: Long, secs: Double,
-      t0Ms: Long, t1Ms: Long, compiles: Long, parts: Seq[Part],
-      error: Option[String])
+      t0Ms: Long, t1Ms: Long, compiles: Long, gcCount: Long, gcMs: Long,
+      parts: Seq[Part], error: Option[String])
 
   /** Classes the code generator has compiled in this JVM so far: every
     * generated-class cache miss compiles once and records its time in
     * this histogram, whatever thread or session asked. */
   def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Collections every collector of this JVM has run so far, and their
+    * summed milliseconds (a collector that cannot tell reads -1, and
+    * counts as 0). */
+  def gcs(): (Long, Long) = {
+    val beans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    (beans.map(_.getCollectionCount.max(0L)).sum,
+      beans.map(_.getCollectionTime.max(0L)).sum)
+  }
 
   /** Time every cell in order within each of `reps` reps, handing each
     * run to `report` as it completes. */
@@ -83,6 +101,7 @@ object BenchStats {
     for (rep <- 1 to reps; cell <- cells) yield {
       val r = new Rep(rep)
       val c0 = compiles()
+      val (g0, gMs0) = gcs()
       val e0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val (rows, error) = try (cell.run(r), None) catch {
@@ -92,12 +111,13 @@ object BenchStats {
       val secs = (System.nanoTime() - t0) / 1e9
       val e1 = System.currentTimeMillis()
       val c1 = compiles()
+      val (g1, gMs1) = gcs()
       // drop caches so one cell's persisted lineage can't subsidize the
       // next cell's timing; the GC frees shuffle files (see above)
       spark.catalog.clearCache()
       System.gc()
-      val run = Run(rep, cell, rows, secs, e0, e1, c1 - c0,
-        if (error.isEmpty) r.parts else Nil, error)
+      val run = Run(rep, cell, rows, secs, e0, e1, c1 - c0, g1 - g0,
+        gMs1 - gMs0, if (error.isEmpty) r.parts else Nil, error)
       report(run)
       run
     }

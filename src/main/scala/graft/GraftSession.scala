@@ -34,6 +34,34 @@ import org.apache.spark.sql.SparkSession
   *    `spark.sql.codegen.useIdInClassName=false` goes with it (see the
   *    builder): stage-numbered class names made the same plan miss the
   *    cache when AQE numbered its stages differently.
+  *  - `spark.buffer.pageSize` and `spark.broadcast.blockSize`, sized by
+  *    [[bufferSizes]] from the heap and the G1 region size of the JVM
+  *    the builder runs in (a `local[n]` master only: there the driver
+  *    JVM runs the tasks). Spark's defaults are tuned for large cluster
+  *    heaps: a 4 MB broadcast chunk, and a page of
+  *    `nextPow2(execution pool / cores / 16)` clamped to [1 MB, 64 MB],
+  *    32 MB on a 4 GB heap with 4 cores. G1 allocates any object of half
+  *    a region or more (2 MB regions on a 4 GB heap) as a humongous
+  *    object in regions of its own, which only a collection frees. A
+  *    JFR recording of one curation benchmark run (4 GB heap, warm-up
+  *    plus two passes) found 4,122 MB of allocations of 1 MB or more:
+  *    every stage broadcasts its task binary, and each broadcast
+  *    allocated one whole 4 MB chunk (`TorrentBroadcast.blockifyObject`,
+  *    381 × 4 MB); every hash aggregate's fast map took a whole page
+  *    even for ten rows (`RowBasedKeyValueBatch`, 28 × 32 MB), and so
+  *    did each hash map (`BytesToBytesMap.acquireNewPage`, 26 × 32 MB).
+  *    Before each young GC 1.0–1.2 GB of the heap was humongous regions.
+  *    With both keys at 512 KB the run's peak resident set fell from
+  *    2,786 MB to 1,779 MB (medians of 10 runs). The rule: (a) 8192
+  *    pages (the `TaskMemoryManager` page table; one more throws "Have
+  *    already allocated a maximum of 8192 pages") must cover the heap,
+  *    since a lone task may take the whole unified memory region; (b)
+  *    where (a) allows it, each buffer plus its 16-byte array header
+  *    stays under half a region. On a non-local master, or off G1, the
+  *    executors' heaps are unknown here and neither key is set: size
+  *    `spark.buffer.pageSize` (heap / 8192, rounded up) or
+  *    `-XX:G1HeapRegionSize` (at least 4 × the page) on the executors.
+  *    `HumongousSpec` holds the rule on a flagship run.
   *
   * Shuffle partitions default to the core count: on a laptop-sized
   * `local[n]` the 200-partition default just multiplies task overhead;
@@ -53,6 +81,56 @@ import org.apache.spark.sql.SparkSession
   * checkpoints).
   */
 object GraftSession {
+
+  /** Spark's page (`spark.buffer.pageSize`) and broadcast chunk
+    * (`spark.broadcast.blockSize`) for a JVM with `heapBytes` of heap in
+    * G1 regions of `regionBytes`.
+    *
+    * Each buffer is a `byte[]`, and a `byte[]` whose size plus its
+    * 16-byte header reaches half a region is humongous. The broadcast
+    * chunk is the largest power of two under that threshold, and never
+    * above Spark's 4 MB default. The page is the same power of two
+    * unless 8192 of them (the page table's size) would not cover the
+    * heap; then it is the smallest 8-byte multiple that does, humongous
+    * or not, because a task that runs out of page table fails. */
+  def bufferSizes(heapBytes: Long, regionBytes: Long): BufferSizes = {
+    require(heapBytes > 0 && regionBytes > 0,
+      s"heap $heapBytes and region $regionBytes must be positive")
+    val underHumongous =
+      java.lang.Long.highestOneBit(regionBytes / 2 - ArrayHeaderBytes - 1)
+    val pageFloor = ((heapBytes + PageTableSize - 1) / PageTableSize + 7) / 8 * 8
+    BufferSizes(math.max(underHumongous, pageFloor),
+      math.min(underHumongous, SparkBroadcastBlockBytes))
+  }
+
+  final case class BufferSizes(pageBytes: Long, blockBytes: Long)
+
+  /** `TaskMemoryManager`'s page table: a task holds at most this many pages. */
+  private[graft] val PageTableSize = 8192L
+  /** Bytes a `byte[]` takes beyond its elements on a 64-bit HotSpot JVM. */
+  private[graft] val ArrayHeaderBytes = 16L
+  private val SparkBroadcastBlockBytes = 4L << 20
+
+  /** The buffer sizes for a session whose tasks run in this JVM: its max
+    * heap and its G1 region size. None off G1, or where HotSpot's
+    * diagnostic bean is missing. */
+  private def thisJvmBufferSizes: Option[BufferSizes] = scala.util.Try {
+    val hs = java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    if (hs.getVMOption("UseG1GC").getValue != "true") None
+    else Some(bufferSizes(Runtime.getRuntime.maxMemory,
+      hs.getVMOption("G1HeapRegionSize").getValue.toLong))
+  }.toOption.flatten
+
+  private val LocalMaster = """local(\[[^\]]*\])?""".r
+
+  /** The two buffer keys the builder sets for `master`: both for a
+    * `local[n]` master on a G1 JVM, none otherwise. */
+  private[graft] def bufferConf(master: String): Map[String, String] =
+    (if (LocalMaster.matches(master)) thisJvmBufferSizes else None)
+      .fold(Map.empty[String, String])(s => Map(
+        "spark.buffer.pageSize" -> s"${s.pageBytes}b",
+        "spark.broadcast.blockSize" -> s"${s.blockBytes}b"))
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -130,6 +208,9 @@ object GraftSession {
       // Unnumbered names make identical code one class; the id stays in
       // the plan (`*(n)`) and in the generated source's comment.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // pages and broadcast chunks below G1's humongous threshold
+      // (scaladoc above), where this JVM runs the tasks
+      .config(bufferConf(master))
 
   /** Local session sized to `cpus` threads — the mains' form.
     * `SPARK_GRAFT_SHUFFLE_PARTITIONS` decouples the partition count

@@ -27,7 +27,8 @@ import graft.BenchStats.{Cell, Run}
   * `secs` and the epoch bounds `t0_ms`/`t1_ms` that `tools/attr_reps.py`
   * slices a Spark event log by (enable it with the session's event-log
   * knob, see `GraftSession.local`); the cell's own line also has
-  * `compiles`, the generated classes compiled during the run. The last
+  * `compiles`, the generated classes compiled during the run, and
+  * `gc_count`/`gc_ms`, the collections run during it. The last
   * line holds the medians, the per-rep minima (the pair family's
   * adjudication protocol reads per-rep MINIMA, PERF.md) and the per-rep
   * vectors, keyed `dir#leg`.
@@ -74,7 +75,8 @@ object LegBench {
     sys.env.getOrElse("SPARK_GRAFT_REPS", default.toString).toInt
 
   /** The rep lines of one run: one per part, then the cell's own, which
-    * also carries the run's generated-class `compiles`. */
+    * also carries the run's generated-class `compiles` and its
+    * collections, `gc_count` and `gc_ms`. */
   private def repLines(family: String, extraFields: String = "")(r: Run): Unit = {
     def line(leg: String, rows: Long, secs: Double, t0: Long, t1: Long,
         error: Option[String], more: String = ""): Unit =
@@ -82,7 +84,7 @@ object LegBench {
         error.fold("")(m => ",\"error\":" + Verify.jsonString(m)) + "}")
     r.parts.foreach(p => line(p.name, p.rows, p.secs, p.t0Ms, p.t1Ms, None))
     line(r.cell.leg, r.rows, r.secs, r.t0Ms, r.t1Ms, r.error,
-      s""","compiles":${r.compiles}""")
+      s""","compiles":${r.compiles},"gc_count":${r.gcCount},"gc_ms":${r.gcMs}""")
   }
 
   /** The shared medians tail line (`Bench`'s consumption pattern plus

@@ -94,4 +94,11 @@ class BenchStatsSpec extends SparkSuite {
     assert(runs.head.compiles > 0)
     assert(runs(1).compiles == 0)
   }
+
+  test("each run records the collections run while it ran") {
+    val cells = Seq(Cell("d", "collects", _ => { System.gc(); 1L }))
+    val (runs, _) = runReported(1, cells)
+    assert(runs.head.gcCount >= 1)
+    assert(runs.head.gcMs >= 0)
+  }
 }

@@ -1,11 +1,5 @@
 package graft
 
-import java.io.File
-import java.lang.management.ManagementFactory
-import java.nio.file.Paths
-
-import scala.jdk.CollectionConverters._
-
 /** Runs `q_flagship_curation` twice in one session and prints the
   * generated classes each run compiled, as `compiles <first> <second>`.
   * [[CodegenCacheSpec]] starts it in a fresh JVM, so the first run
@@ -32,17 +26,7 @@ object CodegenCacheProbe {
 class CodegenCacheSpec extends SparkSuite {
 
   test("a second q_flagship_curation run reuses the first run's classes") {
-    // the test JVM's flags (module opens, spark.* properties), a smaller heap
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filterNot(_.startsWith("-Xmx"))
-    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val cmd = Seq(java) ++ jvmArgs ++ Seq("-Xmx2g",
-      "-cp", System.getProperty("java.class.path"), "graft.CodegenCacheProbe", sf)
-    val proc = new ProcessBuilder(cmd.asJava)
-      .directory(new File(".").getAbsoluteFile)
-      .redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    assert(proc.waitFor() == 0, out.takeRight(40).mkString("\n"))
+    val out = ChildJvm.run("graft.CodegenCacheProbe", Seq("-Xmx2g"), sf)
     val Seq(first, second) = out.collectFirst {
       case l if l.startsWith("compiles ") => l.split(" ").toSeq.tail.map(_.toLong)
     }.getOrElse(fail(out.takeRight(40).mkString("\n")))
