@@ -69,13 +69,14 @@ import org.apache.spark.sql.SparkSession
   * total.
   *
   * Tests build their session from [[builder]] too, so they run under
-  * exactly these keys. [[local]] and [[envCpus]] read the only four env
-  * knobs: `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_SHUFFLE_PARTITIONS`,
-  * `SPARK_GRAFT_EVENTLOG_DIR` (deployment and measurement settings) and
-  * `SPARK_GRAFT_VERIFY_BROADCAST_BYTES` (the verify-dispatch A/B fence).
-  * Any other setting a host needs goes on the session as Spark's own
-  * key, for example `spark.sql.streaming.stateStore.providerClass`
-  * (RocksDB state for every stateful query),
+  * exactly these keys. [[local]] and [[envCpus]] read the only three env
+  * knobs, all deployment and measurement settings: `SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_SHUFFLE_PARTITIONS` and `SPARK_GRAFT_EVENTLOG_DIR`.
+  * Any other setting a host needs goes on the session as a key, for
+  * example `spark.graft.verifyBroadcastBytes` (the byte budget under
+  * which `Dedup`'s verify stage broadcasts) or Spark's own
+  * `spark.sql.streaming.stateStore.providerClass` (RocksDB state for
+  * every stateful query),
   * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
   * or `spark.sql.streaming.checkpoint.fileChecksum.enabled` (durable
   * checkpoints).
@@ -242,20 +243,6 @@ object GraftSession {
           .config("spark.eventLog.dir", abs.getPath)
       }
     val s = b.getOrCreate()
-    // Verify-side dispatch knob (A/B harness): the byte budget under
-    // which Dedup.verifiedCommon broadcasts; 0 forces the bucketed
-    // path. Unset/empty/'none'/'off' keep the library default
-    // (Dedup.DefaultVerifyBroadcastBytes).
-    sys.env.get("SPARK_GRAFT_VERIFY_BROADCAST_BYTES")
-      .map(_.trim.toLowerCase).filter(v => v.nonEmpty && v != "none" && v != "off")
-      .foreach { v =>
-        val b = try v.toDouble catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_VERIFY_BROADCAST_BYTES must be a number, got '$v'")
-        }
-        require(b >= 0, s"SPARK_GRAFT_VERIFY_BROADCAST_BYTES must be >= 0, got $b")
-        s.conf.set(text.Dedup.VerifyBroadcastBytesKey, b.toString)
-      }
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -40,5 +40,5 @@ object SparkEntry {
     * and streaming outputs are materialized and flattened/reduced to a
     * hashable projection inside the query itself. */
   def oracleSql: Map[String, String] =
-    Registry.all.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
+    Registry.all.map(q => q.name -> q.oracle.trim).toMap
 }

@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, hex, to_json}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** No-oracle (rows-only) queries may return nested struct/array columns;
-    * the driver's pandas `sort_values` over such columns raises
-    * "unhashable type: dict" and the query logs an error instead of a
-    * rows-only pass. Canonicalize: JSON-encode complex columns and
-    * hex-encode binary so every dumped column is a sortable scalar.
-    * Oracle-checked queries are dumped as-is (their shape is part of the
-    * hash contract). */
-  private[graft] def canonicalizable(df: DataFrame): DataFrame = {
-    // df(f.name), not col(f.name): a top-level name containing a dot
-    // would misresolve as a nested path under the unqualified resolver
-    val cols = df.schema.fields.map { f =>
-      f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType =>
-          to_json(df(f.name)).as(f.name)
-        case _: BinaryType => hex(df(f.name)).as(f.name)
-        case _ => df(f.name)
-      }
-    }
-    df.select(cols.toSeq: _*)
-  }
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL (or an exception message with
     * \b/\f/\u0000, in Bench's case) would otherwise make the driver's
@@ -52,10 +29,7 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try CacheScope.scoped {
-        val df = fn(spark, sfDir)
-        val out = if (SparkEntry.oracleSql.contains(name)) df
-                  else canonicalizable(df)
-        out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -17,9 +17,8 @@ object Scalars {
   def istShift(ts: Column): Column =
     from_unixtime(unix_timestamp(ts) + 19800).cast("timestamp")
 
-  /** F14: `date_format` with the reference's two formats (`FULL:1346-1347`). */
+  /** F14: `date_format` with the reference's day format (`FULL:1346-1347`). */
   def ddMMyyyy(ts: Column): Column = date_format(ts, "dd/MM/yyyy")
-  def ddMMyyyyHms(ts: Column): Column = date_format(ts, "dd/MM/yyyy HH:mm:ss")
 
   /** F8: token extraction from 'a-b-c-d' codes via substring_index
     * (`FULL:720,725-726,735`). */
@@ -49,10 +48,6 @@ object Scalars {
   def renameAll(df: DataFrame, renames: Map[String, String]): DataFrame =
     df.select(df.columns.toIndexedSeq.map(c =>
       col(c).as(renames.getOrElse(c, c))): _*)
-
-  /** P3: bulk drop (`FULL:510-593` drops ~200 columns). */
-  def dropAll(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.drop(cols: _*)
 
   /** Event-time → epoch microseconds, the engine's ONE canonical
     * timestamp-to-integer conversion. Every operator that does time

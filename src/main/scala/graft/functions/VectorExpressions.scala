@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -72,11 +72,4 @@ object VectorExpressions {
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_f64", exprs => DotProductF64(exprs(0), exprs(1)), "built-in")
-
-  /** Column form, via the registry to stay version-proof across Spark's
-    * Column internals: callers must have invoked [[register]] first. */
-  def dotF64(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"dot_f64($a, $b)")
-  }
 }

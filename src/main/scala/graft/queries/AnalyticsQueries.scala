@@ -18,7 +18,7 @@ object AnalyticsQueries {
   /** Sessionization (batch): 30-min-gap sessions per user. */
   private val sessionize = Q("q_events_sessionize",
     (s, dir) => Sessionize.batch(Tables.load(s, dir, "events")),
-    Some("""
+    """
       WITH l AS (
         SELECT user_id, ts, event_id,
           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -36,7 +36,7 @@ object AnalyticsQueries {
         FROM f)
       SELECT user_id, session_id, count(*) AS n_events,
         min(ts) AS session_start, max(ts) AS session_end
-      FROM se GROUP BY user_id, session_id"""))
+      FROM se GROUP BY user_id, session_id""")
 
   /** Window analytics: rank / lag-diff / running count / ntile over a
     * totally ordered per-customer frame. */
@@ -52,7 +52,7 @@ object AnalyticsQueries {
         .withColumn("prev_price", lag(col("o_totalprice"), 1).over(byCust))
         .withColumn("quartile", ntile(4).over(byCust).cast("long"))
     },
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice,
         CAST(rank() OVER w AS BIGINT) AS rnk,
         count(*) OVER (PARTITION BY o_custkey
@@ -61,7 +61,7 @@ object AnalyticsQueries {
         lag(o_totalprice) OVER w AS prev_price,
         CAST(ntile(4) OVER w AS BIGINT) AS quartile
       FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)"""))
+      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)""")
 
   /** Rollup with exact decimal sums (subtotal + grand-total rows). */
   private val rollup = Q("q_agg_rollup",
@@ -72,11 +72,11 @@ object AnalyticsQueries {
           sum(col("l_quantity")).as("sum_qty"),
           sum(col("l_extendedprice").cast(DecimalType(12, 2)))
             .cast("double").as("sum_base")),
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus, count(*) AS n,
         sum(l_quantity) AS sum_qty,
         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base
-      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"""))
+      FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")
 
   /** Exact distinct counts (the expensive-but-precise form; the approx
     * HLL variant has no cross-engine oracle). */
@@ -87,12 +87,12 @@ object AnalyticsQueries {
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_supps"),
           count(lit(1)).as("n_rows")),
-    Some("""
+    """
       SELECT l_returnflag,
         count(DISTINCT l_partkey) AS n_parts,
         count(DISTINCT l_suppkey) AS n_supps,
         count(*) AS n_rows
-      FROM lineitem GROUP BY l_returnflag"""))
+      FROM lineitem GROUP BY l_returnflag""")
 
   /** Salted two-phase aggregation ≡ direct aggregation (the skew-safe
     * plan shape, verified by the direct-form oracle). */
@@ -102,9 +102,9 @@ object AnalyticsQueries {
       key = col("l_suppkey"), sumCol = col("l_quantity"), salts = 16,
       spreader = col("l_orderkey"),
       keyName = "l_suppkey", countName = "n", sumName = "sum_qty"),
-    Some("""
+    """
       SELECT l_suppkey, count(*) AS n, sum(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY l_suppkey"""))
+      FROM lineitem GROUP BY l_suppkey""")
 
   /** Typed top-k Aggregator (bounded map-side combine) ≡ window top-k:
     * shuffle volume O(groups·k) instead of all rows — the skew/scale-safe
@@ -120,13 +120,13 @@ object AnalyticsQueries {
         .select(col("l_orderkey"), (col("pos") + 1).cast("long").as("rank"),
           col("col").as("price"))
     },
-    Some("""
+    """
       SELECT l_orderkey, CAST(rn AS BIGINT) AS rank, l_extendedprice AS price
       FROM (SELECT l_orderkey, l_extendedprice,
               row_number() OVER (PARTITION BY l_orderkey
                 ORDER BY l_extendedprice DESC) AS rn
             FROM lineitem)
-      WHERE rn <= 3"""))
+      WHERE rn <= 3""")
 
   /** Exact percentiles (R-7 linear interpolation in both engines);
     * quantity is integer-valued so interpolants stay exact. */
@@ -138,13 +138,13 @@ object AnalyticsQueries {
           expr("percentile(l_quantity, 0.9)").as("p90_qty"),
           min(col("l_quantity")).as("min_qty"),
           max(col("l_quantity")).as("max_qty")),
-    Some("""
+    """
       SELECT l_returnflag,
         quantile_cont(l_quantity, 0.5) AS median_qty,
         quantile_cont(l_quantity, 0.9) AS p90_qty,
         min(l_quantity) AS min_qty,
         max(l_quantity) AS max_qty
-      FROM lineitem GROUP BY l_returnflag"""))
+      FROM lineitem GROUP BY l_returnflag""")
 
   /** CUBE over two dims (rollup's superset: all grouping combinations). */
   private val cube = Q("q_agg_cube",
@@ -154,10 +154,10 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast(DecimalType(12, 2)))
             .cast("double").as("sum_price")),
-    Some("""
+    """
       SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price
-      FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)"""))
+      FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""")
 
   /** Pivot: one column per l_returnflag value (the conditional-aggregation
     * reshape; oracle expresses it as CASE sums). */
@@ -168,12 +168,12 @@ object AnalyticsQueries {
         .pivot("l_returnflag", Seq("A", "N", "R"))
         .agg(sum(col("l_quantity")))
         .withColumnsRenamed(Map("A" -> "qty_a", "N" -> "qty_n", "R" -> "qty_r")),
-    Some("""
+    """
       SELECT l_linestatus,
         sum(CASE WHEN l_returnflag = 'A' THEN l_quantity END) AS qty_a,
         sum(CASE WHEN l_returnflag = 'N' THEN l_quantity END) AS qty_n,
         sum(CASE WHEN l_returnflag = 'R' THEN l_quantity END) AS qty_r
-      FROM lineitem GROUP BY l_linestatus"""))
+      FROM lineitem GROUP BY l_linestatus""")
 
   /** As-of join: each click enriched with the user's latest prior signup
     * — Spark lacks the operator; composed via union + carry-forward
@@ -195,7 +195,7 @@ object AnalyticsQueries {
           col("asof_signup_id").as("signup_id"),
           col("asof_signup_value").as("signup_value"))
     },
-    Some("""
+    """
       WITH clicks AS (SELECT event_id, user_id, ts FROM events
                       WHERE event_type = 'click'),
            signups AS (SELECT event_id AS signup_id, user_id, ts,
@@ -203,7 +203,7 @@ object AnalyticsQueries {
                        FROM events WHERE event_type = 'signup')
       SELECT c.event_id, c.user_id, s.signup_id, s.signup_value
       FROM clicks c ASOF LEFT JOIN signups s
-        ON c.user_id = s.user_id AND s.ts <= c.ts"""))
+        ON c.user_id = s.user_id AND s.ts <= c.ts""")
 
   /** Salted skew-safe join ≡ plain join (same oracle): the hot-key
     * mitigation for joins that can't broadcast. */
@@ -217,10 +217,10 @@ object AnalyticsQueries {
       joined.groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sum_qty"))
     },
-    Some("""
+    """
       SELECT s_nationkey, count(*) AS n, sum(l_quantity) AS sum_qty
       FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
-      GROUP BY s_nationkey"""))
+      GROUP BY s_nationkey""")
 
   /** Approximate sketches (HLL distinct, approx quantiles). The raw
     * approximations can never hash-match a different engine's sketches,
@@ -246,11 +246,11 @@ object AnalyticsQueries {
             col("exact_parts") * 0.15).as("distinct_ok"),
           (col("__amed") >= col("__p45") && col("__amed") <= col("__p55"))
             .as("median_ok")),
-    Some("""
+    """
       SELECT l_returnflag,
         count(DISTINCT l_partkey) AS exact_parts,
         true AS distinct_ok, true AS median_ok
-      FROM lineitem GROUP BY l_returnflag"""))
+      FROM lineitem GROUP BY l_returnflag""")
 
   /** Keyed range join: every event lands in exactly one of its user's
     * sessions (intervals from the sessionizer) — equi-join on user with
@@ -265,7 +265,7 @@ object AnalyticsQueries {
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_joined"))
     },
-    Some("""
+    """
       WITH l AS (
         SELECT user_id, ts, event_id,
           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -288,7 +288,7 @@ object AnalyticsQueries {
       FROM events e JOIN sessions s
         ON e.user_id = s.user_id
        AND e.ts >= s.session_start AND e.ts <= s.session_end
-      GROUP BY e.user_id, s.session_id"""))
+      GROUP BY e.user_id, s.session_id""")
 
   /** Unkeyed interval join: clicks landed into one-hour signup windows
     * with NO shared key — the bucketing rewrite (explode intervals over
@@ -310,7 +310,7 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_clicks"),
           min(col("click_id")).as("first_click"))
     },
-    Some("""
+    """
       WITH clicks AS (SELECT event_id AS click_id, ts FROM events
                       WHERE event_type = 'click'),
            w AS (SELECT event_id AS signup_id, ts AS w_start,
@@ -319,7 +319,7 @@ object AnalyticsQueries {
       SELECT w.signup_id, count(*) AS n_clicks,
         min(c.click_id) AS first_click
       FROM w JOIN clicks c ON c.ts >= w.w_start AND c.ts <= w.w_end
-      GROUP BY w.signup_id"""))
+      GROUP BY w.signup_id""")
 
   /** SCD2 history build: collapse the per-customer order log into
     * versioned priority intervals (see `operators/Scd`). Version numbers,
@@ -330,7 +330,7 @@ object AnalyticsQueries {
       key = col("o_custkey"),
       orderCols = Seq(col("o_orderdate"), col("o_orderkey")),
       tracked = Seq(col("o_orderpriority"))),
-    Some("""
+    """
       WITH m AS (
         SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
           CASE WHEN row_number() OVER win = 1
@@ -355,7 +355,7 @@ object AnalyticsQueries {
         lead(valid_from) OVER w2 AS valid_to,
         lead(valid_from) OVER w2 IS NULL AS is_current
       FROM runs
-      WINDOW w2 AS (PARTITION BY o_custkey ORDER BY version)"""))
+      WINDOW w2 AS (PARTITION BY o_custkey ORDER BY version)""")
 
   /** Dense-grid resample with carry-forward (see `operators/Resample`):
     * per-user hourly buckets, gaps filled with the last observed value. */
@@ -364,7 +364,7 @@ object AnalyticsQueries {
         Tables.load(s, dir, "events"),
         key = col("user_id"), ts = col("ts"), value = col("value"))
       .withColumnRenamed("k", "user_id"),
-    Some("""
+    """
       WITH hourly AS (
         SELECT user_id, date_trunc('hour', ts) AS hour,
           CAST(sum(CAST(value AS DECIMAL(14,4))) AS DOUBLE) AS v,
@@ -382,7 +382,7 @@ object AnalyticsQueries {
         v IS NULL AS is_gap,
         last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY hour
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
-      FROM j"""))
+      FROM j""")
 
   /** Unpivot/melt: wide per-flag metrics to long (metric, value) rows —
     * the inverse of `q_agg_pivot`, via the native `Dataset.unpivot`
@@ -401,7 +401,7 @@ object AnalyticsQueries {
           Array(col("l_returnflag")),
           Array(col("sum_qty"), col("sum_price"), col("n_rows")),
           "metric", "value"),
-    Some("""
+    """
       WITH w AS (
         SELECT l_returnflag,
           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
@@ -413,7 +413,7 @@ object AnalyticsQueries {
       UNION ALL
       SELECT l_returnflag, 'sum_price', sum_price FROM w
       UNION ALL
-      SELECT l_returnflag, 'n_rows', n_rows FROM w"""))
+      SELECT l_returnflag, 'n_rows', n_rows FROM w""")
 
   /** Explicit GROUPING SETS (the general form under rollup/cube) with
     * per-column grouping flags — one shuffle computes all three
@@ -429,14 +429,14 @@ object AnalyticsQueries {
           sum(col("l_quantity")).as("sum_qty"),
           grouping(col("l_returnflag")).cast("long").as("g_flag"),
           grouping(col("l_linestatus")).cast("long").as("g_status")),
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus, count(*) AS n,
         sum(l_quantity) AS sum_qty,
         CAST(grouping(l_returnflag) AS BIGINT) AS g_flag,
         CAST(grouping(l_linestatus) AS BIGINT) AS g_status
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        (l_returnflag), ())"""))
+        (l_returnflag), ())""")
 
   /** Morton/Z-order clustering key over the two hottest lineitem filter
     * columns (see `functions/ZOrder`) — the write-path layout that keeps
@@ -451,7 +451,7 @@ object AnalyticsQueries {
         graft.functions.ZOrder.interleave16(
           col("l_partkey"), col("l_suppkey")).as("zkey"))
     },
-    Some("""
+    """
       WITH b AS (
         SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
           l_partkey & 65535 AS x0, l_suppkey & 65535 AS y0
@@ -466,7 +466,7 @@ object AnalyticsQueries {
                        (y3 | (y3 << 1)) & 1431655765 AS y4 FROM s3)
       SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         x4 | (y4 << 1) AS zkey
-      FROM s4"""))
+      FROM s4""")
 
   /** MERGE/upsert (see `operators/Merge`): updates touch every third
     * order, inserts land under fresh keys, the rest of the target
@@ -483,7 +483,7 @@ object AnalyticsQueries {
         .withColumn("o_orderkey", col("o_orderkey") + 20000000L)
       graft.operators.Merge.upsert(t, upd.unionByName(ins), Seq("o_orderkey"))
     },
-    Some("""
+    """
       WITH t AS (SELECT o_orderkey, o_totalprice, o_orderpriority
                  FROM orders),
       u AS (
@@ -499,7 +499,7 @@ object AnalyticsQueries {
         CASE WHEN u.o_orderkey IS NOT NULL
              THEN u.o_orderpriority ELSE t.o_orderpriority END
           AS o_orderpriority
-      FROM t FULL OUTER JOIN u ON t.o_orderkey = u.o_orderkey"""))
+      FROM t FULL OUTER JOIN u ON t.o_orderkey = u.o_orderkey""")
 
   /** CDC apply (see `operators/Merge.applyChanges`): one change feed
     * carrying updates, inserts AND delete tombstones, applied in a
@@ -522,7 +522,7 @@ object AnalyticsQueries {
         upd.unionByName(ins).unionByName(del),
         Seq("o_orderkey"), "is_deleted")
     },
-    Some("""
+    """
       WITH t AS (SELECT o_orderkey, o_totalprice, o_orderpriority
                  FROM orders),
       u AS (
@@ -542,7 +542,7 @@ object AnalyticsQueries {
           AS o_orderpriority
       FROM t FULL OUTER JOIN u ON t.o_orderkey = u.o_orderkey
       WHERE coalesce(u.o_orderkey, t.o_orderkey) NOT IN
-        (SELECT o_orderkey FROM d)"""))
+        (SELECT o_orderkey FROM d)""")
 
   /** Statistical aggregate surface: correlation, covariance, sample
     * stddev/variance per group. Computed over the small-magnitude
@@ -560,14 +560,14 @@ object AnalyticsQueries {
           round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
           round(var_samp(col("l_discount")), 6).as("var_disc"),
           round(avg(col("l_quantity")), 6).as("avg_qty")),
-    Some("""
+    """
       SELECT l_returnflag,
         round(corr(l_quantity, l_discount), 6) AS corr_qd,
         round(covar_samp(l_quantity, l_discount), 6) AS cov_qd,
         round(stddev_samp(l_quantity), 6) AS sd_qty,
         round(var_samp(l_discount), 6) AS var_disc,
         round(avg(l_quantity), 6) AS avg_qty
-      FROM lineitem GROUP BY l_returnflag"""))
+      FROM lineitem GROUP BY l_returnflag""")
 
   /** Event-time RANGE window: trailing-hour rolling count/sum per user —
     * the range frame peers on seconds-since-epoch, not row position, so
@@ -585,7 +585,7 @@ object AnalyticsQueries {
           sum(col("value").cast(DecimalType(14, 4))).over(w)
             .cast("double").as("sum_trailing_hr"))
     },
-    Some("""
+    """
       SELECT event_id, user_id, ts,
         count(*) OVER w AS n_trailing_hr,
         CAST(sum(CAST(value AS DECIMAL(14,4))) OVER w AS DOUBLE)
@@ -593,7 +593,7 @@ object AnalyticsQueries {
       FROM events
       WINDOW w AS (PARTITION BY user_id
         ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-        RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)"""))
+        RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)""")
 
   /** Incremental view maintenance: per-user totals kept fresh by merging
     * yesterday's aggregate STATE with a partial aggregate of only the new
@@ -616,10 +616,10 @@ object AnalyticsQueries {
         .agg(sum(col("n")).as("n_events"),
           sum(col("sv")).cast("double").as("sum_value"))
     },
-    Some("""
+    """
       SELECT user_id, count(*) AS n_events,
         CAST(sum(CAST(value AS DECIMAL(14,4))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY user_id"""))
+      FROM events GROUP BY user_id""")
 
   /** Two-step funnel (see `operators/Funnel`): first signup per user,
     * earliest click inside the following hour, conversion flag +
@@ -634,7 +634,7 @@ object AnalyticsQueries {
       .withColumnRenamed("k", "user_id")
       .withColumnRenamed("a_ts", "signup_ts")
       .withColumnRenamed("b_first", "first_click_ts"),
-    Some("""
+    """
       WITH a AS (SELECT user_id, min(ts) AS signup_ts FROM events
                  WHERE event_type = 'signup' GROUP BY user_id),
       b AS (SELECT e.user_id, min(e.ts) AS first_click_ts
@@ -647,7 +647,7 @@ object AnalyticsQueries {
         b.first_click_ts IS NOT NULL AS converted,
         CAST(floor(epoch(b.first_click_ts)) - floor(epoch(a.signup_ts))
           AS BIGINT) AS secs_to_convert
-      FROM a LEFT JOIN b USING (user_id)"""))
+      FROM a LEFT JOIN b USING (user_id)""")
 
   /** Cohort retention (see `operators/Funnel.cohortRetention`): distinct
     * active users per (first-seen day, day offset). */
@@ -655,7 +655,7 @@ object AnalyticsQueries {
     (s, dir) => Funnel.cohortRetention(
       Tables.load(s, dir, "events"),
       key = col("user_id"), ts = col("ts")),
-    Some("""
+    """
       WITH act AS (SELECT user_id, date_trunc('day', ts) AS day
                    FROM events),
       first AS (SELECT user_id, min(day) AS cohort_day FROM act
@@ -665,7 +665,7 @@ object AnalyticsQueries {
           - CAST(floor(epoch(cohort_day)) AS BIGINT)) // 86400 AS day_offset,
         count(DISTINCT act.user_id) AS n_active
       FROM act JOIN first USING (user_id)
-      GROUP BY 1, 2"""))
+      GROUP BY 1, 2""")
 
   /** Sliding event-time windows (1 h window, 30 min slide): every event
     * lands in exactly two overlapping windows — the `window()` function
@@ -679,7 +679,7 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("event_type"),
           col("n")),
-    Some("""
+    """
       WITH c AS (SELECT event_type,
           date_trunc('hour', ts)
             + CASE WHEN extract(minute FROM ts) >= 30
@@ -690,7 +690,7 @@ object AnalyticsQueries {
             UNION ALL
             SELECT event_type, t30 FROM c)
       SELECT w_start, event_type, count(*) AS n
-      FROM w GROUP BY 1, 2"""))
+      FROM w GROUP BY 1, 2""")
 
   /** Native `session_window` (30-min gap) — Spark's built-in session
     * operator; must agree with the hand-rolled lag/cumsum sessionizer
@@ -707,7 +707,7 @@ object AnalyticsQueries {
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events")),
-    Some("""
+    """
       WITH l AS (
         SELECT user_id, ts, event_id,
           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -727,7 +727,7 @@ object AnalyticsQueries {
       SELECT user_id, min(ts) AS session_start,
         max(ts) + INTERVAL 30 MINUTE AS session_end,
         count(*) AS n_events
-      FROM se GROUP BY user_id, session_id"""))
+      FROM se GROUP BY user_id, session_id""")
 
   /** Free-riding audit metrics via `observe`: the reference re-runs a
     * count() action per checkpoint (SURVEY A1/A5 — each one a full
@@ -752,11 +752,11 @@ object AnalyticsQueries {
         m("n_returned").asInstanceOf[Long]))
         .toDF("n_rows", "sum_qty", "n_returned")
     },
-    Some("""
+    """
       SELECT count(*) AS n_rows,
         CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         count(*) FILTER (WHERE l_returnflag = 'R') AS n_returned
-      FROM lineitem"""))
+      FROM lineitem""")
 
   /** Outlier detection: z-score per event against its event_type's
     * mean/stddev. Two-phase: one map-side-combined aggregate down to
@@ -781,14 +781,14 @@ object AnalyticsQueries {
         .select(col("event_id"), col("event_type"), col("value"),
           round(z, 6).as("z"))
     },
-    Some("""
+    """
       WITH st AS (SELECT event_type, avg(value) AS mu,
           stddev_samp(value) AS sigma
         FROM events GROUP BY event_type)
       SELECT event_id, e.event_type, value,
         round((value - mu) / nullif(sigma, 0), 6) AS z
       FROM events e JOIN st USING (event_type)
-      WHERE abs((value - mu) / nullif(sigma, 0)) > 2.5"""))
+      WHERE abs((value - mu) / nullif(sigma, 0)) > 2.5""")
 
   /** Winsorization: clip `value` to its event_type's exact [p05, p95]
     * band (R-7 interpolation in both engines). Same two-phase shape as
@@ -808,7 +808,7 @@ object AnalyticsQueries {
           (col("value") < col("p05") || col("value") > col("p95"))
             .as("was_clipped"))
     },
-    Some("""
+    """
       WITH b AS (SELECT event_type,
           quantile_cont(value, 0.05) AS p05,
           quantile_cont(value, 0.95) AS p95
@@ -816,7 +816,7 @@ object AnalyticsQueries {
       SELECT event_id, e.event_type, value,
         round(greatest(p05, least(p95, value)), 6) AS clipped,
         (value < p05 OR value > p95) AS was_clipped
-      FROM events e JOIN b USING (event_type)"""))
+      FROM events e JOIN b USING (event_type)""")
 
   /** Exponential time-decay engagement score per user: each event
     * contributes value·2^(−age_days), halving per day of age. All
@@ -850,7 +850,7 @@ object AnalyticsQueries {
           round(sum(col("term")).cast("double") /
             (lit(100.0) * pow(lit(2.0), 40)), 6).as("decay_score"))
     },
-    Some("""
+    """
       WITH m AS (SELECT max(epoch_us(ts)) AS max_us FROM events),
       t AS (SELECT user_id,
           CAST(round(value * 100) AS HUGEINT) *
@@ -861,7 +861,7 @@ object AnalyticsQueries {
       SELECT user_id, count(*) AS n_events,
         round(CAST(sum(term) AS DOUBLE) / (100.0 * 1099511627776.0), 6)
           AS decay_score
-      FROM t GROUP BY user_id"""))
+      FROM t GROUP BY user_id""")
 
   /** Mergeable-sketch distinct counting: build an HLL sketch PER
     * PARTITION of the data (4 disjoint halves by key hash), then union
@@ -892,10 +892,10 @@ object AnalyticsQueries {
         // many residue classes), so the sum strictly exceeds the union
         (col("sum_part_exact") >= col("exact_users")).as("parts_cover"))
     },
-    Some("""
+    """
       SELECT count(DISTINCT user_id) AS exact_users,
         4 AS n_parts, true AS merged_ok, true AS parts_cover
-      FROM events"""))
+      FROM events""")
 
   /** Value-positional window functions: first/last/nth over an explicit
     * FULL frame (the default running frame makes last_value = current
@@ -915,7 +915,7 @@ object AnalyticsQueries {
         .withColumn("second_key", nth_value(col("o_orderkey"), 2).over(full))
         .withColumn("next_price", lead(col("o_totalprice"), 1).over(w))
     },
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice,
         first_value(o_totalprice) OVER wf AS top_price,
         last_value(o_totalprice) OVER wf AS bottom_price,
@@ -927,7 +927,7 @@ object AnalyticsQueries {
               ORDER BY o_totalprice DESC, o_orderkey),
         wf AS (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"""))
+               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""")
 
   /** Robust scaling: (value − median) / IQR per event_type — the
     * outlier-immune normalization next to the z-score (mean/σ are
@@ -949,14 +949,14 @@ object AnalyticsQueries {
           round((col("value") - col("med")) /
             when(col("iqr") =!= 0, col("iqr")), 6).as("robust_z"))
     },
-    Some("""
+    """
       WITH st AS (SELECT event_type,
           quantile_cont(value, 0.5) AS med,
           quantile_cont(value, 0.75) - quantile_cont(value, 0.25) AS iqr
         FROM events GROUP BY event_type)
       SELECT event_id, e.event_type, value,
         round((value - med) / nullif(iqr, 0), 6) AS robust_z
-      FROM events e JOIN st USING (event_type)"""))
+      FROM events e JOIN st USING (event_type)""")
 
   val all: Seq[Q] = Seq(sessionize, windowAnalytics, rollup, cube, pivot,
     distinctCount, salted, saltedJoin, sketches, topkAgg, percentiles, asof,

@@ -33,7 +33,7 @@ object CurationQueries {
     (s, dir) => Dedup.connectedComponents(Dedup.lshCandidates(
       Dedup.minhashSignatures(Dedup.shingles(
         Tables.load(s, dir, "documents")))).select(col("da"), col("db"))),
-    Some(componentsCte + "\n      SELECT doc_id, component FROM comp"))
+    componentsCte + "\n      SELECT doc_id, component FROM comp")
 
   /** Same 0.6·distinct_ratio + 0.4·(1−stop_ratio) score the
     * oracle-proven `q_text_quality` uses (shared via TextAnalysis so
@@ -52,7 +52,7 @@ object CurationQueries {
         .select(col("da"), col("db")))
       Dedup.canonicalPerCluster(docs, cc, qualityCol)
     },
-    Some(componentsCte + raw""",
+    componentsCte + raw""",
       ql AS (SELECT doc_id, $qualitySqlExpr AS q FROM toks),
       lab AS (SELECT ql.doc_id,
                 coalesce(comp.component, ql.doc_id) AS component, ql.q
@@ -63,7 +63,7 @@ object CurationQueries {
                 count(*) OVER (PARTITION BY component) AS n_docs
               FROM lab)
       SELECT component, doc_id AS keep_id, q AS keep_quality, n_docs
-      FROM win WHERE rn = 1"""))
+      FROM win WHERE rn = 1""")
 
   private val bucketSql =
     "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100"
@@ -73,20 +73,20 @@ object CurationQueries {
         Tables.load(s, dir, "documents"), col("doc_id"),
         Seq(("train", 90), ("val", 5), ("test", 5)))
       .select(col("doc_id"), col("bucket"), col("split")),
-    Some(raw"""
+    raw"""
       WITH b AS (SELECT doc_id, $bucketSql AS bucket FROM documents)
       SELECT doc_id, bucket,
         CASE WHEN bucket < 90 THEN 'train'
              WHEN bucket < 95 THEN 'val'
              ELSE 'test' END AS split
-      FROM b"""))
+      FROM b""")
 
   private val band = Q("q_quality_band",
     (s, dir) => Curation.quantileBand(
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), qualityCol.as("quality_score")),
       col("quality_score"), col("doc_id"), lo = 0.05, hi = 0.95),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
                     FROM documents),
       ql AS (SELECT doc_id, $qualitySqlExpr AS quality_score FROM toks),
@@ -94,30 +94,30 @@ object CurationQueries {
               percent_rank() OVER (ORDER BY quality_score, doc_id) AS q_rank
             FROM ql)
       SELECT doc_id, quality_score, q_rank
-      FROM w WHERE q_rank >= 0.05 AND q_rank <= 0.95"""))
+      FROM w WHERE q_rank >= 0.05 AND q_rank <= 0.95""")
 
   private val chunks = Q("q_chunk_text",
     (s, dir) => Curation.chunkText(
       Tables.load(s, dir, "documents"), chunkChars = 200, stride = 150),
-    Some(raw"""
+    raw"""
       SELECT doc_id, i // 150 AS chunk_idx, i AS chunk_start,
         substr(text, CAST(i + 1 AS INT), 200) AS chunk_text,
         CAST(len(substr(text, CAST(i + 1 AS INT), 200)) AS BIGINT) AS chunk_chars
       FROM documents,
         unnest(CASE WHEN n_chars > 0 THEN range(0, n_chars, 150)
-                    ELSE [] END) AS u(i)"""))
+                    ELSE [] END) AS u(i)""")
 
   private val stratified = Q("q_sample_stratified",
     (s, dir) => Curation.stratifiedSample(
         Tables.load(s, dir, "documents"),
         col("source"), col("doc_id"), perGroup = 20)
       .select(col("source"), col("doc_id"), col("lang"), col("n_chars")),
-    Some(raw"""
+    raw"""
       WITH w AS (SELECT source, doc_id, lang, n_chars,
           row_number() OVER (PARTITION BY source
             ORDER BY $bucketSqlFull, doc_id) AS rn
         FROM documents)
-      SELECT source, doc_id, lang, n_chars FROM w WHERE rn <= 20"""))
+      SELECT source, doc_id, lang, n_chars FROM w WHERE rn <= 20""")
 
   private def bucketSqlFull =
     "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
@@ -128,7 +128,7 @@ object CurationQueries {
         minWords = 10, maxWords = 1000,
         minMeanLen = 2.0, maxMeanLen = 10.0,
         minDistinctRatio = 0.2, maxTopTokenFrac = 0.2): _*),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
                     FROM documents),
       m AS (SELECT doc_id,
@@ -148,7 +148,7 @@ object CurationQueries {
          AND mean_word_len >= 2.0 AND mean_word_len <= 10.0
          AND distinct_ratio >= 0.2 AND top_token_frac <= 0.2
          AND stop_hits >= 1) AS keep
-      FROM m"""))
+      FROM m""")
 
   /** One GD iteration of the distilled-gate oracle: scores from the
     * previous weight CTE (per-term 8 dp DECIMAL sums), 6 dp sigmoid
@@ -187,7 +187,7 @@ object CurationQueries {
       Tables.load(s, dir, "documents"),
       TextAnalysis.gopherMetrics(10, 1000, 2.0, 10.0, 0.2, 0.2).last,
       dim = 64, iters = 20, lr = 16.0),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
                     FROM documents),
       m AS (SELECT doc_id,
@@ -249,14 +249,14 @@ object CurationQueries {
           THEN 1 ELSE 0 END AS BIGINT) AS predicted,
         CAST(CASE WHEN (CASE WHEN round(1.0 / (1.0 + exp(-s)), 6) >= 0.5
             THEN 1 ELSE 0 END) = y THEN 1 ELSE 0 END AS BIGINT) AS correct
-      FROM lab JOIN sf USING (doc_id)"""))
+      FROM lab JOIN sf USING (doc_id)""")
 
   private val denyList = Seq("customer", "vector", "spark")
 
   private val scrub = Q("q_text_scrub",
     (s, dir) => Tables.load(s, dir, "documents").select(
       col("doc_id") +: TextAnalysis.scrub(col("text"), denyList): _*),
-    Some {
+    {
       val email = raw"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
       val phone = raw"[0-9]{3}-[0-9]{3}-[0-9]{4}"
       val dict = raw"\b(" + denyList.mkString("|") + raw")\b"
@@ -279,7 +279,7 @@ object CurationQueries {
         corpus = docs.filter(col("doc_id") % 2 === 0),
         batch = docs.filter(col("doc_id") % 2 === 1))
     },
-    Some(raw"""
+    raw"""
       WITH fp AS (SELECT doc_id,
           md5(list_aggr(list_sort(list_distinct(
             string_split_regex(lower(trim(text)), '\s+'))), 'string_agg', ' ')) AS fp
@@ -288,7 +288,7 @@ object CurationQueries {
       batch AS (SELECT fp, min(doc_id) AS keep_id, count(*) AS n_in_batch
                 FROM fp WHERE doc_id % 2 = 1 GROUP BY fp)
       SELECT fp, keep_id, n_in_batch FROM batch b
-      WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.fp = b.fp)"""))
+      WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.fp = b.fp)""")
 
   private val rebalance = Q("q_mix_rebalance",
     (s, dir) => Curation.rebalance(
@@ -296,7 +296,7 @@ object CurationQueries {
         col("source"), col("doc_id"),
         Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.0))
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars")),
-    Some(raw"""
+    raw"""
       WITH b AS (SELECT doc_id, source, lang, n_chars,
           CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
             % 10000 AS fine
@@ -305,12 +305,12 @@ object CurationQueries {
       WHERE fine < CASE source WHEN 'src0' THEN 5000
                                WHEN 'src1' THEN 2500
                                WHEN 'src2' THEN 0
-                               ELSE 10000 END"""))
+                               ELSE 10000 END""")
 
   private val tfidf = Q("q_text_tfidf_top",
     (s, dir) => TextAnalysis.tfidfTopTerms(
       Tables.load(s, dir, "documents"), k = 5),
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
                  FROM documents),
       tf AS (SELECT doc_id, tok, count(*) AS tf FROM t GROUP BY 1, 2),
@@ -321,7 +321,7 @@ object CurationQueries {
              FROM tf JOIN df USING (tok), n),
       rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
                ORDER BY tfidf DESC, tok ASC) AS rn FROM sc)
-      SELECT doc_id, tok, tf, df, tfidf FROM rk WHERE rn <= 5"""))
+      SELECT doc_id, tok, tf, df, tfidf FROM rk WHERE rn <= 5""")
 
   /** End-to-end dedup: the corpus that SURVIVES near-dup clustering —
     * docs → shingles → MinHash → LSH pairs → connected components →
@@ -340,7 +340,7 @@ object CurationQueries {
       docs.join(keepers, col("doc_id") === col("keep_id"))
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     },
-    Some(componentsCte + raw""",
+    componentsCte + raw""",
       ql AS (SELECT doc_id, $qualitySqlExpr AS q FROM toks),
       lab AS (SELECT ql.doc_id,
                 coalesce(comp.component, ql.doc_id) AS component, ql.q
@@ -349,7 +349,7 @@ object CurationQueries {
                 ORDER BY q DESC, doc_id ASC) AS rn FROM lab)
       SELECT d.doc_id, d.source, d.lang, d.n_chars
       FROM documents d JOIN win ON d.doc_id = win.doc_id
-      WHERE win.rn = 1"""))
+      WHERE win.rn = 1""")
 
   /** End-to-end curation: quality-gate → scrub → deterministic split →
     * chunk the train split — the standard prep path from raw corpus to
@@ -371,7 +371,7 @@ object CurationQueries {
           .filter(col("split") === "train"),
         chunkChars = 200, stride = 150)
     },
-    Some {
+    {
       val dict = raw"\b(" + denyList.mkString("|") + raw")\b"
       raw"""
       WITH toks AS (SELECT doc_id, text,
@@ -424,7 +424,7 @@ object CurationQueries {
         bench = docs.filter(col("source") === "src0"),
         n = 5, rateThreshold = 0.2)
     },
-    Some(raw"""
+    raw"""
       WITH th AS (SELECT doc_id,
           CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) AS sh
         FROM ${sh5Sql("documents", "source <> 'src0'")} t),
@@ -439,7 +439,7 @@ object CurationQueries {
         CAST(n_hits AS DOUBLE) / n_ngrams AS contamination_rate,
         CAST(CASE WHEN CAST(n_hits AS DOUBLE) / n_ngrams >= 0.2
                   THEN 1 ELSE 0 END AS BIGINT) AS is_contaminated
-      FROM agg"""))
+      FROM agg""")
 
   /** Token-budget mixture selection: training mixes are specified in
     * TOKENS per source, not document counts — keep each source's
@@ -448,7 +448,7 @@ object CurationQueries {
   private val tokenBudget = Q("q_mix_token_budget",
     (s, dir) => Curation.tokenBudgetMix(
       Tables.load(s, dir, "documents"), qualityCol, budgetTokens = 1500L),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, source,
           string_split_regex(lower(trim(text)), '\s+') AS t
         FROM documents),
@@ -462,7 +462,7 @@ object CurationQueries {
             AS cum_tokens
         FROM q)
       SELECT doc_id, source, n_tokens, cum_tokens, round(q, 6) AS q_r
-      FROM c WHERE cum_tokens <= 1500"""))
+      FROM c WHERE cum_tokens <= 1500""")
 
   /** Derandomized weighted reservoir sample (A-ES): top-20 per source
     * by ln(hash-uniform)/token-weight — probability-proportional-to-
@@ -472,7 +472,7 @@ object CurationQueries {
   private val weightedSample = Q("q_sample_weighted",
     (s, dir) => Curation.weightedSample(
       Tables.load(s, dir, "documents"), k = 20),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, source,
           CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT)
             AS n_tokens
@@ -487,7 +487,7 @@ object CurationQueries {
             ORDER BY key DESC, doc_id) AS BIGINT) AS rank
         FROM keyed)
       SELECT doc_id, source, n_tokens, rank, round(key, 6) AS key_r
-      FROM ranked WHERE rank <= 20"""))
+      FROM ranked WHERE rank <= 20""")
 
   /** Bloom-sketch decontamination gate (bounds-check pattern, the
     * q_sketch_mergeable rule): the exact broadcast-join profile and the
@@ -522,7 +522,7 @@ object CurationQueries {
           ((col("__nb") - col("n_contaminated")).cast("double") /
             col("n_docs") <= 0.02).as("fp_within_bound"))
     },
-    Some(raw"""
+    raw"""
       WITH th AS (SELECT doc_id,
           CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) AS sh
         FROM ${sh5Sql("documents", "source <> 'src0'")} t),
@@ -537,7 +537,7 @@ object CurationQueries {
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
         true AS no_false_negatives,
         true AS fp_within_bound
-      FROM agg"""))
+      FROM agg""")
 
   /** Shared oracle for both packing forms — exact window cumsum and the
     * scalable two-level offsets must produce identical output. */
@@ -565,23 +565,23 @@ object CurationQueries {
   private val pack = Q("q_pack_sequences",
     (s, dir) => Curation.packSequences(
       Tables.load(s, dir, "documents"), seqLen = 128),
-    Some(packSelect))
+    packSelect)
 
   private val packScalable = Q("q_pack_sequences_scalable",
     (s, dir) => Curation.packSequencesScalable(
       Tables.load(s, dir, "documents"), seqLen = 128),
-    Some(packSelect))
+    packSelect)
 
   private val packManifest = Q("q_pack_manifest",
     (s, dir) => Curation.packingManifest(
       Curation.packSequencesScalable(
         Tables.load(s, dir, "documents"), seqLen = 128),
       seqLen = 128),
-    Some(packSql + raw"""
+    packSql + raw"""
       SELECT u.seq_id, doc_id,
         least(start_offset + n_tokens, (u.seq_id + 1) * 128) -
           greatest(start_offset, u.seq_id * 128) AS tokens_in_seq
-      FROM pk, unnest(range(seq_first, seq_last + 1)) AS u(seq_id)"""))
+      FROM pk, unnest(range(seq_first, seq_last + 1)) AS u(seq_id)""")
 
   /** The full raw-corpus → training-sequences composition, hash-checked
     * end-to-end: near-dup dedup keeps one canonical doc per LSH/CC
@@ -612,7 +612,7 @@ object CurationQueries {
         .filter(col("keep"))
       Curation.packSequencesScalable(gated, seqLen = 128)
     },
-    Some(componentsCte + raw""",
+    componentsCte + raw""",
       ql AS (SELECT doc_id, $qualitySqlExpr AS q FROM toks),
       lab AS (SELECT ql.doc_id,
                 coalesce(comp.component, ql.doc_id) AS component, ql.q
@@ -664,7 +664,7 @@ object CurationQueries {
         FROM pcum)
       SELECT doc_id, n_tokens, start_offset, seq_first, seq_last,
         seq_last - seq_first + 1 AS n_seqs
-      FROM ppk"""))
+      FROM ppk""")
 
   /** The pretrain composition EXTENDED with the round-7 exact-join
     * operators — the full curation ladder a 100 TB corpus build runs.
@@ -846,7 +846,7 @@ object CurationQueries {
           AND stop_hits >= 1)""" + packTailSql("gated")
 
   private val pretrainFull = Q("q_pretrain_full",
-    pretrainBody(capped = false), Some(pretrainSql(kcomExact)))
+    pretrainBody(capped = false), pretrainSql(kcomExact))
 
   /** The capped composition twin (verdict r11 #4): identical wiring to
     * `q_pretrain_full` but stage 1 runs the adaptive-df-capped
@@ -857,7 +857,7 @@ object CurationQueries {
     * semantics — not just the uncapped ideal — are hash-checked
     * end-to-end through the five downstream stages. */
   private val pretrainCapped = Q("q_pretrain_capped",
-    pretrainBody(capped = true), Some(pretrainSql(kcomCapped)))
+    pretrainBody(capped = true), pretrainSql(kcomCapped))
 
   /** Hashed-presence + scalar-metric feature CTEs for a distill chain,
     * prefixed `p`, over the doc-id CTE `ids` — the SQL twin of
@@ -1000,14 +1000,14 @@ object CurationQueries {
     * = total cost) and the committed decade artifacts comparable. */
   private val flagshipCuration = Q("q_flagship_curation",
     (s, dir) => graft.Flagship.curationPipeline(s, dir),
-    Some(flagshipSql))
+    flagshipSql)
 
   /** Consecutive-token run collapse (repetition scrub) — removal counts,
     * ratio, and the md5 of the cleaned text are all hash-checked. */
   private val runCollapse = Q("q_text_run_collapse",
     (s, dir) => Curation.collapseTokenRuns(
       Tables.load(s, dir, "documents"), col("doc_id"), col("text")),
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
                  FROM documents),
       k AS (SELECT doc_id, toks,
@@ -1019,7 +1019,7 @@ object CurationQueries {
         round(CAST(len(toks) - len(kept) AS DOUBLE) /
           CAST(len(toks) AS DOUBLE), 6) AS removed_ratio,
         md5(array_to_string(kept, ' ')) AS clean_md5
-      FROM k"""))
+      FROM k""")
 
   /** One PageRank round in oracle SQL (see `operators/Graph.pageRank`):
     * decimal-exact inflow sums + the teleport term, all constants
@@ -1051,7 +1051,7 @@ object CurationQueries {
           damping = 0.85, iters = 3)
         .select(col("node").as("doc_id"), round(col("rank"), 9).as("rank_r"))
     },
-    Some(TextQueries.lshPairsCte + s""",
+    TextQueries.lshPairsCte + s""",
       nodes AS (SELECT doc_id AS node FROM documents),
       nn AS (SELECT CAST(count(*) AS DOUBLE) AS nv FROM nodes),
       e AS (SELECT da AS src, db AS dst FROM pairs
@@ -1063,7 +1063,7 @@ object CurationQueries {
       r1 AS ${prIter("r0")},
       r2 AS ${prIter("r1")},
       r3 AS ${prIter("r2")}
-      SELECT node AS doc_id, round(rank, 9) AS rank_r FROM r3"""))
+      SELECT node AS doc_id, round(rank, 9) AS rank_r FROM r3""")
 
   /** Per-node triangle counts over the LSH near-dup graph
     * (degree-directed wedge enumeration — O(m^{3/2}) bound, no
@@ -1076,7 +1076,7 @@ object CurationQueries {
         .select(col("da"), col("db"))
       graft.operators.Graph.triangles(pairs)
     },
-    Some(TextQueries.lshPairsCte + raw""",
+    TextQueries.lshPairsCte + raw""",
       e AS (SELECT DISTINCT least(da, db) AS a, greatest(da, db) AS b
             FROM pairs WHERE da <> db),
       deg AS (SELECT node, count(*) AS deg FROM (
@@ -1095,19 +1095,19 @@ object CurationQueries {
       tri AS (SELECT apex, u, v FROM w
               JOIN e ON least(u, v) = e.a AND greatest(u, v) = e.b),
       pn AS (SELECT unnest([apex, u, v]) AS doc_id FROM tri)
-      SELECT doc_id, count(*) AS n_triangles FROM pn GROUP BY doc_id"""))
+      SELECT doc_id, count(*) AS n_triangles FROM pn GROUP BY doc_id""")
 
   /** Per-source cap: at most 10 docs per source, longest-first with
     * doc_id tiebreak — the web-curation domain cap. */
   private val sourceCap = Q("q_source_cap",
     (s, dir) => Curation.capPerSource(
       Tables.load(s, dir, "documents"), cap = 10),
-    Some("""
+    """
       WITH r AS (SELECT doc_id, source, n_chars,
           row_number() OVER (PARTITION BY source
             ORDER BY n_chars DESC, doc_id) AS rn
         FROM documents)
-      SELECT doc_id, source, n_chars, rn FROM r WHERE rn <= 10"""))
+      SELECT doc_id, source, n_chars, rn FROM r WHERE rn <= 10""")
 
   /** One-pass table profile of orders (float column pre-cast to
     * DECIMAL so min/max strings are engine-portable). */
@@ -1118,7 +1118,7 @@ object CurationQueries {
           col("o_totalprice").cast("decimal(18,2)")),
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
         "o_totalprice")),
-    Some("""
+    """
       WITH o AS (SELECT *, CAST(o_totalprice AS DECIMAL(18,2)) AS tp
                  FROM orders)
       SELECT 'o_orderkey' AS col_name, count(*) AS n_rows,
@@ -1144,7 +1144,7 @@ object CurationQueries {
       UNION ALL
       SELECT 'o_totalprice', count(*),
         count(*) FILTER (tp IS NULL), count(DISTINCT tp),
-        CAST(min(tp) AS VARCHAR), CAST(max(tp) AS VARCHAR) FROM o"""))
+        CAST(min(tp) AS VARCHAR), CAST(max(tp) AS VARCHAR) FROM o""")
 
   /** Per-source percent-rank / cume-dist scaling of the length signal —
     * rank-normalized quality features (scale-free, outlier-immune).
@@ -1160,12 +1160,12 @@ object CurationQueries {
         .withColumn("c_dist", round(cume_dist().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
             .orderBy(col("n_chars"), col("doc_id"))), 6)),
-    Some("""
+    """
       SELECT doc_id, source, n_chars,
         round(percent_rank() OVER w, 6) AS p_rank,
         round(cume_dist() OVER w, 6) AS c_dist
       FROM documents
-      WINDOW w AS (PARTITION BY source ORDER BY n_chars, doc_id)"""))
+      WINDOW w AS (PARTITION BY source ORDER BY n_chars, doc_id)""")
 
   /** DSIR-style target-domain importance weights (Xie et al. 2023):
     * hashed-unigram log-likelihood ratio of a curated target slice
@@ -1178,7 +1178,7 @@ object CurationQueries {
     (s, dir) => Curation.dsirWeights(
       Tables.load(s, dir, "documents"),
       col("source").isin("src0", "src1", "src2"), buckets = 512),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, source IN ('src0','src1','src2') AS is_target,
           unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         FROM documents),
@@ -1199,7 +1199,7 @@ object CurationQueries {
       SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_toks,
         CAST(sum(CAST(round(c * llr, 6) AS DECIMAL(18,6))) AS DOUBLE)
           AS log_weight
-      FROM tb JOIN llr USING (b) GROUP BY doc_id"""))
+      FROM tb JOIN llr USING (b) GROUP BY doc_id""")
 
   /** Temperature-scaled mixture weights (α = 0.7): per-source sampling
     * probability p^α/Σp^α over raw token shares, plus the effective
@@ -1209,7 +1209,7 @@ object CurationQueries {
     (s, dir) => Curation.temperatureMix(
       Tables.load(s, dir, "documents"), col("source"),
       size(TextAnalysis.tokens).cast("long"), alpha = 0.7),
-    Some(raw"""
+    raw"""
       WITH counts AS (SELECT source AS stratum,
           CAST(sum(len(string_split_regex(lower(trim(text)), '\s+')))
             AS BIGINT) AS n_tokens
@@ -1229,7 +1229,7 @@ object CurationQueries {
         round(CASE WHEN p_raw > 0 AND CAST(norm AS DOUBLE) > 0
           THEN CAST(p_alpha AS DOUBLE) / CAST(norm AS DOUBLE) / p_raw
           ELSE 0.0 END, 6) AS epochs
-      FROM shares, norm"""))
+      FROM shares, norm""")
 
   val all: Seq[Q] = Seq(components, canonical, split, band, chunks, stratified,
     gopher, scrub, incremental, rebalance, tfidf, dedupPipeline,

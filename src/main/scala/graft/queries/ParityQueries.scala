@@ -32,12 +32,12 @@ object ParityQueries {
           col("o_orderpriority").isin("1-URGENT", "2-HIGH", "3-MEDIUM"))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"), col("o_orderpriority")),
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate, o_orderpriority
       FROM orders
       WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
         AND o_orderstatus <> 'P'
-        AND o_orderpriority IN ('1-URGENT','2-HIGH','3-MEDIUM')"""))
+        AND o_orderpriority IN ('1-URGENT','2-HIGH','3-MEDIUM')""")
 
   // ---------------------------------------------------------------- O2
   /** O2: deterministic bounded output (`FULL:1442` limit, `PUSH:348`
@@ -50,9 +50,9 @@ object ParityQueries {
         .orderBy(col("o_orderkey"))
         .limit(100)
         .select("o_orderkey", "o_custkey", "o_totalprice"),
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders ORDER BY o_orderkey LIMIT 100"""))
+      FROM orders ORDER BY o_orderkey LIMIT 100""")
 
   // ---------------------------------------------------------------- P1-P4/F9
   /** Projection shaping: select/rename/derive/drop + typed null literal
@@ -68,11 +68,11 @@ object ParityQueries {
         .withColumn("legacy_code", Scalars.nullString)
         .drop("c_mktsegment")
     },
-    Some("""
+    """
       SELECT c_custkey AS customer_id, c_name AS customer_name, c_acctbal,
         CASE WHEN c_acctbal < 0 THEN 'NEG' ELSE 'POS' END AS balance_flag,
         CAST(NULL AS VARCHAR) AS legacy_code
-      FROM customer"""))
+      FROM customer""")
 
   // ---------------------------------------------------------------- F1-F8
   /** Scalar string suite: concat_ws / lpad / substring / substring_index /
@@ -89,7 +89,7 @@ object ParityQueries {
         lpad(col("p_size").cast("string"), 5, "0").as("size_padded"),
         substring(trim(col("p_name")), 1, 8).as("name_head"),
         coalesce(col("p_brand"), lit("NOBRAND")).as("brand_filled")),
-    Some("""
+    """
       SELECT p_partkey,
         concat_ws('-', p_brand, p_type, CAST(p_size AS VARCHAR)) AS part_code,
         array_to_string((string_split(
@@ -98,7 +98,7 @@ object ParityQueries {
         lpad(CAST(p_size AS VARCHAR), 5, '0') AS size_padded,
         substring(trim(p_name), 1, 8) AS name_head,
         coalesce(p_brand, 'NOBRAND') AS brand_filled
-      FROM part"""))
+      FROM part""")
 
   // ---------------------------------------------------------------- F12-F16
   /** Datetime suite: the UTC→IST +19800s shift (`FULL:215-216`),
@@ -112,13 +112,13 @@ object ParityQueries {
         date_format(Scalars.istShift(col("o_orderdate")),
           "dd/MM/yyyy HH:mm:ss").as("ist_ts"),
         Scalars.ddMMyyyy(col("o_orderdate")).as("order_day")),
-    Some("""
+    """
       SELECT o_orderkey,
         CAST(epoch(date_trunc('second', o_orderdate)) AS BIGINT) AS epoch_s,
         strftime(date_trunc('second', o_orderdate) + INTERVAL 19800 SECOND,
                  '%d/%m/%Y %H:%M:%S') AS ist_ts,
         strftime(o_orderdate, '%d/%m/%Y') AS order_day
-      FROM orders"""))
+      FROM orders""")
 
   /** F19: the reference's commented-out math/regex intent (`FULL:483-484`,
     * rand/pow/replace) — pow and global regexp_replace are deterministic
@@ -131,12 +131,12 @@ object ParityQueries {
         pow(col("p_size").cast("double"), 2.0).as("size_sq"),
         sqrt(col("p_retailprice")).as("price_sqrt"),
         regexp_replace(col("p_name"), "[aeiou]", "_").as("name_devoweled")),
-    Some("""
+    """
       SELECT p_partkey,
         pow(CAST(p_size AS DOUBLE), 2.0) AS size_sq,
         sqrt(p_retailprice) AS price_sqrt,
         regexp_replace(p_name, '[aeiou]', '_', 'g') AS name_devoweled
-      FROM part"""))
+      FROM part""")
 
   // ---------------------------------------------------------------- F20
   /** Loose cross-type equality — the SURVEY §7 implicit-cast risk,
@@ -163,14 +163,14 @@ object ParityQueries {
           (col("key_str") === lit("66")).as("eq_str_66"),   // FULL:217 shape
           (col("key_str") === lit(9)).as("eq_int_9"),       // FULL:644 shape
           (col("key_str") === lit("9")).as("eq_str_9")),    // the divergence
-    Some("""
+    """
       SELECT o_orderkey,
         lpad(CAST(o_orderkey % 100 AS VARCHAR), 2, '0') AS key_str,
         lpad(CAST(o_orderkey % 100 AS VARCHAR), 2, '0') = '66' AS eq_str_66,
         CAST(lpad(CAST(o_orderkey % 100 AS VARCHAR), 2, '0') AS BIGINT) = 9
           AS eq_int_9,
         lpad(CAST(o_orderkey % 100 AS VARCHAR), 2, '0') = '9' AS eq_str_9
-      FROM orders"""))
+      FROM orders""")
 
   // ---------------------------------------------------------------- F5
   /** CASE-WHEN recode ladders — the enum-recode workhorse
@@ -184,14 +184,14 @@ object ParityQueries {
             "3-MEDIUM" -> "WEB"), lit("OTHER")).as("channel"),
         Scalars.caseLadder(col("o_orderstatus"),
           Seq("F" -> "CLOSED", "O" -> "OPEN"), lit("PENDING")).as("buy_sell")),
-    Some("""
+    """
       SELECT o_orderkey,
         CASE o_orderpriority WHEN '1-URGENT' THEN 'DIRECT'
           WHEN '2-HIGH' THEN 'DEALER' WHEN '3-MEDIUM' THEN 'WEB'
           ELSE 'OTHER' END AS channel,
         CASE o_orderstatus WHEN 'F' THEN 'CLOSED' WHEN 'O' THEN 'OPEN'
           ELSE 'PENDING' END AS buy_sell
-      FROM orders"""))
+      FROM orders""")
 
   // ---------------------------------------------------------------- J1/A4/J4
   /** The decode-join star (`FULL:331-476`): a stringmapbase-shaped dim is
@@ -255,7 +255,7 @@ object ParityQueries {
           Seq("1-URGENT" -> "DIRECT", "2-HIGH" -> "DEALER",
             "3-MEDIUM" -> "WEB"), lit("OTHER")).as("priority_class"),
         col("o_totalprice")),
-    Some(starOracle))
+    starOracle)
 
   // ---------------------------------------------------------------- J2/F4
   /** DataFrame-API equi join + coalesce default fill (`FULL:487,497-500`). */
@@ -270,21 +270,21 @@ object ParityQueries {
           coalesce(col("c_acctbal"), lit(0.0)).as("contact_balance"),
           col("o_totalprice"))
     },
-    Some("""
+    """
       SELECT o_orderkey,
         coalesce(c_name, 'UNKNOWN') AS contact_name,
         coalesce(c_acctbal, 0.0) AS contact_balance,
         o_totalprice
-      FROM orders LEFT JOIN customer ON o_custkey = c_custkey"""))
+      FROM orders LEFT JOIN customer ON o_custkey = c_custkey""")
 
   /** Typed Dataset surface: joinWith over case classes + compile-checked
     * projection (same values as the untyped join — shared oracle). */
   private val typed = Q("q_typed_joinwith",
     (s, dir) => TypedOps.enrich(s, dir).toDF(),
-    Some("""
+    """
       SELECT o_orderkey AS order_id, c_name AS customer_name,
         c_mktsegment AS segment, o_totalprice AS total
-      FROM orders JOIN customer ON o_custkey = c_custkey"""))
+      FROM orders JOIN customer ON o_custkey = c_custkey""")
 
   // ---------------------------------------------------------------- J3/J8
   private val j3Oracle = """
@@ -313,7 +313,7 @@ object ParityQueries {
         .agg(count(col("s_suppkey")).as("n_matches"),
           min(col("s_suppkey")).as("best_supp"))
     },
-    Some(j3Oracle))
+    j3Oracle)
 
   /** J3 scale rewrite: same semantics as a union of equi-joins (hash
     * joins, no nested loop) — identical oracle proves the rewrite. */
@@ -331,7 +331,7 @@ object ParityQueries {
         .agg(count(col("s_suppkey")).as("n_matches"),
           min(col("s_suppkey")).as("best_supp"))
     },
-    Some(j3Oracle))
+    j3Oracle)
 
   /** J3 exact multiset rewrite (OR-expansion by disjoint split + anti
     * chain): no key-uniqueness assumption, all hash joins — same oracle
@@ -349,7 +349,7 @@ object ParityQueries {
         .agg(count(col("s_suppkey")).as("n_matches"),
           min(col("s_suppkey")).as("best_supp"))
     },
-    Some(j3Oracle))
+    j3Oracle)
 
   /** J3 production entry: size-dispatched OR-join — broadcast BNLJ while
     * the dim fits the broadcast threshold, exact OR-expansion (all hash
@@ -368,7 +368,7 @@ object ParityQueries {
         .agg(count(col("s_suppkey")).as("n_matches"),
           min(col("s_suppkey")).as("best_supp"))
     },
-    Some(j3Oracle))
+    j3Oracle)
 
   // ---------------------------------------------------------------- J4/P7
   /** Join against a filtered, deduped dim subquery (`FULL:747-749`). */
@@ -383,13 +383,13 @@ object ParityQueries {
         .agg(count(lit(1)).as("n_items"),
           sum(col("l_quantity")).as("sum_qty"))
     },
-    Some("""
+    """
       SELECT s_nationkey, count(*) AS n_items, sum(l_quantity) AS sum_qty
       FROM lineitem
       LEFT JOIN (SELECT DISTINCT s_suppkey, s_nationkey FROM supplier
                  WHERE s_acctbal > 1000.0) d
         ON l_suppkey = d.s_suppkey
-      GROUP BY s_nationkey"""))
+      GROUP BY s_nationkey""")
 
   // ---------------------------------------------------------------- J6/A3
   /** Self-agg join: suffix ambiguous names, the modelDesc disambiguation
@@ -405,7 +405,7 @@ object ParityQueries {
             concat(col("p_name"), lit("-"), col("p_partkey").cast("string")))
             .otherwise(col("p_name")).as("model_desc"))
     },
-    Some("""
+    """
       SELECT p_partkey,
         CASE WHEN d.dup_name IS NOT NULL
           THEN p_name || '-' || CAST(p_partkey AS VARCHAR)
@@ -413,16 +413,16 @@ object ParityQueries {
       FROM part
       LEFT JOIN (SELECT p_name AS dup_name FROM part GROUP BY p_name
                  HAVING count(*) > 1) d
-        ON p_name = d.dup_name"""))
+        ON p_name = d.dup_name""")
 
   private val a3 = Q("q_a3_having_dupes",
     (s, dir) =>
       t(s, dir, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"))
         .filter(col("n_orders") > 1),
-    Some("""
+    """
       SELECT o_custkey, count(*) AS n_orders FROM orders
-      GROUP BY o_custkey HAVING count(*) > 1"""))
+      GROUP BY o_custkey HAVING count(*) > 1""")
 
   // ---------------------------------------------------------------- W1
   /** W1: global surrogate key `concat('PM', lpad(row_number(),9,'0'))`
@@ -438,7 +438,7 @@ object ParityQueries {
       TopK.surrogateKeyGlobal(
         t(s, dir, "orders").select("o_orderkey"),
         col("o_orderkey"), "PM", 9, "prospect_id"),
-    Some(w1Oracle))
+    w1Oracle)
 
   /** W1 scale form: identical ids via range partitioning + per-partition
     * ranks + offsets — no global sort, same oracle. */
@@ -447,7 +447,7 @@ object ParityQueries {
       TopK.surrogateKeyScalable(
         t(s, dir, "orders").select("o_orderkey"),
         col("o_orderkey"), "PM", 9, "prospect_id"),
-    Some(w1Oracle))
+    w1Oracle)
 
   // ---------------------------------------------------------------- W2/O3
   /** W2: top-1-per-key dedup, the reference's post-join pattern
@@ -460,14 +460,14 @@ object ParityQueries {
         Seq(col("l_orderkey")),
         Seq(col("l_shipdate").desc, col("l_linenumber").desc,
           col("l_extendedprice").desc)),
-    Some("""
+    """
       SELECT l_orderkey, l_linenumber, l_shipdate, l_extendedprice
       FROM (SELECT l_orderkey, l_linenumber, l_shipdate, l_extendedprice,
               row_number() OVER (PARTITION BY l_orderkey
                 ORDER BY l_shipdate DESC, l_linenumber DESC,
                          l_extendedprice DESC) AS rn
             FROM lineitem)
-      WHERE rn = 1"""))
+      WHERE rn = 1""")
 
   // ---------------------------------------------------------------- U1/P6
   /** U1: split / repair / union-back (the null-repair union shape,
@@ -483,12 +483,12 @@ object ParityQueries {
           lit(0.0).as("balance"))
       ok.unionByName(repaired)
     },
-    Some("""
+    """
       SELECT c_custkey, 'STD' AS tier, c_acctbal AS balance
       FROM customer WHERE c_acctbal >= 0
       UNION ALL
       SELECT c_custkey, 'REPAIRED' AS tier, 0.0 AS balance
-      FROM customer WHERE c_acctbal < 0"""))
+      FROM customer WHERE c_acctbal < 0""")
 
   // ---------------------------------------------------------------- U2/A2
   /** U2: symmetric MINUS reconciliation (`PUSH:420-449`). */
@@ -502,7 +502,7 @@ object ParityQueries {
 
   private val u2 = Q("q_u2_symmetric_minus",
     (s, dir) => Delta.symmetricMinusCounts(u2Src(s, dir), u2Tgt(s, dir)),
-    Some("""
+    """
       WITH src AS (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
                    WHERE l_linestatus = 'F'),
            tgt AS (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
@@ -512,18 +512,18 @@ object ParityQueries {
       UNION ALL
       SELECT 'tgt_minus_src',
              (SELECT count(*) FROM (SELECT * FROM tgt EXCEPT SELECT * FROM src))
-      ORDER BY direction"""))
+      ORDER BY direction""")
 
   /** INTERSECT (absent from the reference; completes the set-op family
     * with U1/U2). */
   private val u3 = Q("q_u3_intersect",
     (s, dir) => u2Src(s, dir).intersect(u2Tgt(s, dir)),
-    Some("""
+    """
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
       WHERE l_linestatus = 'F'
       INTERSECT
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
-      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'"""))
+      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'""")
 
   /** Multiset forms (exceptAll/intersectAll): duplicates COUNT — the
     * bag semantics U2/U3's distinct forms discard. lineitem rows repeat
@@ -531,21 +531,21 @@ object ParityQueries {
     * distinct twins. */
   private val u4 = Q("q_u4_except_all",
     (s, dir) => u2Src(s, dir).exceptAll(u2Tgt(s, dir)),
-    Some("""
+    """
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
       WHERE l_linestatus = 'F'
       EXCEPT ALL
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
-      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'"""))
+      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'""")
 
   private val u5 = Q("q_u5_intersect_all",
     (s, dir) => u2Src(s, dir).intersectAll(u2Tgt(s, dir)),
-    Some("""
+    """
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
       WHERE l_linestatus = 'F'
       INTERSECT ALL
       SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
-      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'"""))
+      WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'""")
 
   // ---------------------------------------------------------------- P9/J7
   /** P9/J7: "new keys only" delta via null-safe anti join — reproduces
@@ -556,11 +556,11 @@ object ParityQueries {
       val tgt = t(s, dir, "lineitem").where(col("l_linestatus") === "F")
       Delta.newKeysOnly(src, tgt, "o_orderkey", "l_orderkey", lit(-1L))
     },
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice FROM orders
       WHERE o_orderkey NOT IN
         (SELECT coalesce(l_orderkey, -1) FROM lineitem
-         WHERE l_linestatus = 'F')"""))
+         WHERE l_linestatus = 'F')""")
 
   // ---------------------------------------------------------------- ladder
   /** The cascading null-repair join ladder (`FULL:738-1057`): tight key →
@@ -587,7 +587,7 @@ object ParityQueries {
           "s_suppkey" -> lit(-1L), "s_name" -> lit("DEFAULT"),
           "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0)))
     },
-    Some("""
+    """
       WITH base AS (
         SELECT o_orderkey, o_custkey % 150 AS k1, c_nationkey
         FROM orders LEFT JOIN customer ON o_custkey = c_custkey),
@@ -618,7 +618,7 @@ object ParityQueries {
       SELECT o_orderkey, k1, c_nationkey,
         CAST(-1 AS BIGINT) AS s_suppkey, 'DEFAULT' AS s_name,
         CAST(-1 AS INTEGER) AS s_nationkey, 0.0 AS s_acctbal
-      FROM u2"""))
+      FROM u2""")
 
   // ---------------------------------------------------------------- A1/A5
   /** Stage-count checkpoints as data (`FULL:220,230,…`; `PUSH:380-390`):
@@ -636,11 +636,11 @@ object ParityQueries {
         ("lineitem_f", li.where(col("l_linestatus") === "F").count()))
         .toDF("metric", "n")
     },
-    Some("""
+    """
       SELECT 'orders_total' AS metric, count(*) AS n FROM orders
       UNION ALL SELECT 'orders_open', count(*) FROM orders WHERE o_orderstatus='O'
       UNION ALL SELECT 'lineitem_total', count(*) FROM lineitem
-      UNION ALL SELECT 'lineitem_f', count(*) FROM lineitem WHERE l_linestatus='F'"""))
+      UNION ALL SELECT 'lineitem_f', count(*) FROM lineitem WHERE l_linestatus='F'""")
 
   // ---------------------------------------------------------------- agg
   /** Pricing-summary aggregate (beyond the reference's count-only A-class;
@@ -662,7 +662,7 @@ object ParityQueries {
             .cast("double").as("sum_disc_price"),
           count(lit(1)).as("n_rows"))
         .withColumn("avg_qty", col("sum_qty") / col("n_rows")),
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus,
         sum(l_quantity) AS sum_qty,
         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
@@ -673,7 +673,7 @@ object ParityQueries {
         sum(l_quantity) / count(*) AS avg_qty
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
-      GROUP BY l_returnflag, l_linestatus"""))
+      GROUP BY l_returnflag, l_linestatus""")
 
   // ---------------------------------------------------------------- window agg
   /** Batch time-bucketing over the events table (SURVEY §2i: streaming is
@@ -686,11 +686,11 @@ object ParityQueries {
           sum(col("value").cast(DecimalType(12, 2))).cast("double").as("sum_value"))
         .select(col("window.start").as("hour_start"), col("event_type"),
           col("n"), col("sum_value")),
-    Some("""
+    """
       SELECT date_trunc('hour', ts) AS hour_start, event_type,
         count(*) AS n,
         CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2"""))
+      FROM events GROUP BY 1, 2""")
 
   // ---------------------------------------------------------------- S2/S3
   /** S2+S3: partitioned overwrite sink + stage re-read lineage cut
@@ -705,9 +705,9 @@ object ParityQueries {
         Stage.work("q_s2_sink_roundtrip", dir))
       staged.select("o_orderkey", "o_custkey", "o_totalprice")
     },
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice
-      FROM orders WHERE o_orderstatus = 'F'"""))
+      FROM orders WHERE o_orderstatus = 'F'""")
 
   // ---------------------------------------------------------------- F17/F18
   /** Nested-document assembly flattened back out (`PUSH:239-345`,
@@ -743,7 +743,7 @@ object ParityQueries {
 
   private val docFlat = Q("q_doc_assembly_flat",
     (s, dir) => flattenProspectDoc(Documents.prospectDocument(docInput(s, dir))),
-    Some(docFlatSql))
+    docFlatSql)
 
   private def docInput(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
@@ -769,7 +769,7 @@ object ParityQueries {
         .write.mode("overwrite").parquet(work)
       flattenProspectDoc(s.read.parquet(work))
     },
-    Some(docFlatSql))
+    docFlatSql)
 
   /** Array set-operation surface over real token arrays: distinct,
     * sort, intersect/union/except against a constant stopword set.
@@ -793,7 +793,7 @@ object ParityQueries {
         size(array_union(graft.text.TextAnalysis.tokens, stops))
           .cast("long").as("n_union_kinds"))
     },
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT doc_id,
           string_split_regex(lower(trim(text)), '\s+') AS tok,
           ['the', 'a', 'and', 'of', 'to', 'in', 'is'] AS stops
@@ -808,7 +808,7 @@ object ParityQueries {
           AS n_nonstop_kinds,
         CAST(len(list_distinct(list_concat(tok, stops))) AS BIGINT)
           AS n_union_kinds
-      FROM t"""))
+      FROM t""")
 
   val all: Seq[Q] = Seq(
     s1, o2Limit, pShape, fScalar, fDatetime, f5, f19, f20, fArray,

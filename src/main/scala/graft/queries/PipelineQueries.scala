@@ -23,12 +23,12 @@ object PipelineQueries {
         col("meta.origin").as("origin"),
         col("meta.format").as("format"))
     },
-    Some("""
+    """
       SELECT doc_id AS media_id,
         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         source AS origin,
         'fake/utf8' AS format
-      FROM documents"""))
+      FROM documents""")
 
   /** Partition-wise stub decode (mapPartitions over raw bytes). The mean
     * byte of ASCII text is still SQL-expressible, so even the stub's
@@ -36,7 +36,7 @@ object PipelineQueries {
   private val mmDecode = Q("q_mm_decode_features",
     (s, dir) => Multimodal.extractFeatures(
       Multimodal.asMedia(Tables.load(s, dir, "documents"))),
-    Some("""
+    """
       WITH b AS (SELECT doc_id AS media_id,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
           list_transform(string_split(text, ''), x -> ord(x)) AS cps
@@ -45,18 +45,18 @@ object PipelineQueries {
         CAST(n_bytes % 640 AS INTEGER) AS width,
         CAST((n_bytes * 7) % 480 AS INTEGER) AS height,
         CAST(list_sum(cps) AS DOUBLE) / n_bytes AS mean_byte
-      FROM b"""))
+      FROM b""")
 
   /** Structured Streaming end-to-end (file source → watermark → windowed
-    * agg → memory sink, Trigger.AvailableNow) — same oracle as the batch
-    * hourly query, proving stream/batch parity. */
+    * agg → memory sink, run to completion by `CatchUp`) — same oracle as
+    * the batch hourly query, proving stream/batch parity. */
   private val streamHourly = Q("q_stream_events_hourly",
     (s, dir) => EventsStream.hourlyAggregates(s, dir),
-    Some("""
+    """
       SELECT date_trunc('hour', ts) AS hour_start, event_type,
         count(*) AS n,
         CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2"""))
+      FROM events GROUP BY 1, 2""")
 
   /** foreachBatch streaming sink: stream → per-batch idempotent
     * partitioned parquet → read back; oracle checks the full event set
@@ -67,16 +67,16 @@ object PipelineQueries {
       .select(col("event_id"), col("event_type"), col("value"),
         // DATE dtypes diverge across engines in pandas; compare as string
         col("event_date").cast("string").as("event_date")),
-    Some("""
+    """
       SELECT event_id, event_type, value,
         strftime(ts, '%Y-%m-%d') AS event_date
-      FROM events"""))
+      FROM events""")
 
   /** Stream-stream join (watermarked both sides, time-range-bounded
     * state) — oracle is the equivalent batch join. */
   private val streamStream = Q("q_stream_stream_join",
     (s, dir) => graft.streaming.EventsStream.streamStreamJoin(s, dir),
-    Some("""
+    """
       WITH clicks AS (SELECT event_id AS click_id, user_id, ts AS click_ts
                       FROM events WHERE event_type = 'click'),
            signups AS (SELECT event_id AS signup_id, user_id, ts AS signup_ts
@@ -85,7 +85,7 @@ object PipelineQueries {
       FROM clicks c JOIN signups s
         ON c.user_id = s.user_id
        AND c.click_ts >= s.signup_ts
-       AND c.click_ts <= s.signup_ts + INTERVAL 1 HOUR"""))
+       AND c.click_ts <= s.signup_ts + INTERVAL 1 HOUR""")
 
   /** Stream-stream LEFT OUTER join — unmatched clicks null-pad once the
     * watermark proves no signup can arrive; a staged flush sentinel
@@ -94,7 +94,7 @@ object PipelineQueries {
   private val streamOuter = Q("q_stream_outer_join",
     (s, dir) => graft.streaming.EventsStream.leftOuterJoin(s, dir,
       Stage.work("q_stream_outer_join", dir)),
-    Some("""
+    """
       WITH clicks AS (SELECT event_id AS click_id, user_id, ts AS click_ts
                       FROM events WHERE event_type = 'click'),
            signups AS (SELECT event_id AS signup_id, user_id, ts AS signup_ts
@@ -104,7 +104,7 @@ object PipelineQueries {
       FROM clicks c LEFT JOIN signups s
         ON c.user_id = s.user_id
        AND c.click_ts >= s.signup_ts
-       AND c.click_ts <= s.signup_ts + INTERVAL 1 HOUR"""))
+       AND c.click_ts <= s.signup_ts + INTERVAL 1 HOUR""")
 
   /** Spark 4 transformWithState (RocksDB provider): per-user running
     * aggregate across 4 real micro-batches; converged state must equal
@@ -112,10 +112,10 @@ object PipelineQueries {
   private val streamTws = Q("q_stream_transform_state",
     (s, dir) => graft.streaming.TransformWithState.runningUserAggregates(
       s, dir, Stage.work("q_stream_transform_state", dir)),
-    Some("""
+    """
       SELECT user_id, count(*) AS n_events,
         max(epoch_us(ts)) AS last_ts_us
-      FROM events GROUP BY user_id"""))
+      FROM events GROUP BY user_id""")
 
   /** State-store reader: after the transformWithState run converges,
     * re-open its RocksDB checkpoint OFFLINE with the `statestore` batch
@@ -135,10 +135,10 @@ object PipelineQueries {
           col("value.n").as("n_events"),
           col("value.maxTs").as("last_ts_us"))
     },
-    Some("""
+    """
       SELECT user_id, count(*) AS n_events,
         max(epoch_us(ts)) AS last_ts_us
-      FROM events GROUP BY user_id"""))
+      FROM events GROUP BY user_id""")
 
   /** Streaming sessionization (flatMapGroupsWithState over a
     * time-partitioned multi-batch replay, sentinel punctuation closing
@@ -147,7 +147,7 @@ object PipelineQueries {
   private val streamSessionize = Q("q_stream_sessionize",
     (s, dir) => graft.streaming.Sessionize.sessionizeQuery(s, dir,
       Stage.work("q_stream_sessionize", dir)),
-    Some("""
+    """
       WITH l AS (
         SELECT user_id, ts, event_id,
           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
@@ -165,7 +165,7 @@ object PipelineQueries {
         FROM f)
       SELECT user_id, count(*) AS n_events,
         min(ts) AS session_start, max(ts) AS session_end
-      FROM se GROUP BY user_id, sid"""))
+      FROM se GROUP BY user_id, sid""")
 
   /** User-360 composition, hash-checked end-to-end: sessionization +
     * time-decay engagement + outlier counts joined into one per-user
@@ -212,7 +212,7 @@ object PipelineQueries {
           col("decay_score"),
           coalesce(col("n_anomalies"), lit(0L)).as("n_anomalies"))
     },
-    Some("""
+    """
       WITH l AS (
         SELECT user_id, ts, event_id,
           lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -257,7 +257,7 @@ object PipelineQueries {
       SELECT s.user_id, s.n_sessions, s.n_events, d.decay_score,
         coalesce(an.n_anomalies, 0) AS n_anomalies
       FROM sess s JOIN decay d ON s.user_id = d.user_id
-      LEFT JOIN an ON s.user_id = an.user_id"""))
+      LEFT JOIN an ON s.user_id = an.user_id""")
 
   /** Flagship pipeline, MATERIALIZED and hash-checked: run EP1, WRITE
     * the nested document parquet, read it back, flatten the
@@ -272,7 +272,7 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(work)
       flattenDoc(s.read.parquet(work))
     },
-    Some(flagshipFlatSql("")))
+    flagshipFlatSql(""))
 
   /** Flatten the flagship document to scalars: every struct field except
     * the non-deterministic audit.snapshotTs, plus the questionnaire
@@ -418,7 +418,7 @@ object PipelineQueries {
     * ladder-rung order) now fails the gate instead of passing rows-only. */
   private val flagshipFlat = Q("q_flagship_flat",
     (s, dir) => flattenDoc(graft.Flagship.prospectPipeline(s, dir)),
-    Some(flagshipFlatSql("")))
+    flagshipFlatSql(""))
 
   /** EP2's delta semantics, hash-checked: the staged outbound docs
     * (only-new anti join over the flagship, `PUSH:207-224`) flattened and
@@ -435,7 +435,7 @@ object PipelineQueries {
     * anti-pattern the round-10 verdict flagged. */
   private val outboundFlat = Q("q_outbound_flat",
     (s, dir) => flattenDoc(graft.Outbound.shared(s, dir).docs),
-    Some(flagshipFlatSql("WHERE o_orderkey % 2 = 1")))
+    flagshipFlatSql("WHERE o_orderkey % 2 = 1"))
 
   /** EP2 outbound push, MATERIALIZED and hash-checked: the shared staged
     * delta docs (see q_outbound_flat) written nested to parquet, read
@@ -449,7 +449,7 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(s"$work/docs_nested")
       flattenDoc(s.read.parquet(s"$work/docs_nested"))
     },
-    Some(flagshipFlatSql("WHERE o_orderkey % 2 = 1")))
+    flagshipFlatSql("WHERE o_orderkey % 2 = 1"))
 
   /** Frame sampling over binary payloads (video frame-sample analog):
     * fixed 64-byte frames, length + content hash per frame. md5 over
@@ -457,7 +457,7 @@ object PipelineQueries {
   private val mmFrames = Q("q_mm_frame_sample",
     (s, dir) => Multimodal.sampleFrames(
       Multimodal.asMedia(Tables.load(s, dir, "documents")), frameBytes = 64),
-    Some("""
+    """
       WITH f AS (SELECT doc_id AS media_id, text,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
         FROM documents),
@@ -467,24 +467,24 @@ object PipelineQueries {
       SELECT media_id, frame_idx,
         CAST(octet_length(encode(substr(text, CAST(frame_idx * 64 + 1 AS INTEGER), 64))) AS BIGINT) AS frame_len,
         md5(substr(text, CAST(frame_idx * 64 + 1 AS INTEGER), 64)) AS frame_md5
-      FROM idx"""))
+      FROM idx""")
 
   /** Stream-static enrichment join (stream events ⋈ static customer dim,
     * broadcast per micro-batch) — oracle is the batch equivalent. */
   private val streamEnrich = Q("q_stream_static_join",
     (s, dir) => graft.streaming.EventsStream.enrichedStream(s, dir),
-    Some("""
+    """
       SELECT event_type, coalesce(c_mktsegment, 'NONE') AS segment,
         count(*) AS n
       FROM events LEFT JOIN customer ON user_id = c_custkey
-      GROUP BY 1, 2"""))
+      GROUP BY 1, 2""")
 
   /** Resize stub: 1-in-4 byte downsample with length + content hash
     * (image-resize analog; oracle steps the string the same way). */
   private val mmResize = Q("q_mm_resize",
     (s, dir) => Multimodal.resize(
       Multimodal.asMedia(Tables.load(s, dir, "documents")), k = 4),
-    Some("""
+    """
       WITH b AS (SELECT doc_id AS media_id, text,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
         FROM documents),
@@ -495,7 +495,7 @@ object PipelineQueries {
       SELECT media_id, n_bytes,
         CAST(octet_length(encode(resized)) AS BIGINT) AS resized_len,
         md5(resized) AS resized_md5
-      FROM r"""))
+      FROM r""")
 
   /** Multimodal end-to-end curation (the media twin of the text leg's
     * `q_pretrain_full`): ingest → partition-wise stub decode → quality
@@ -510,7 +510,7 @@ object PipelineQueries {
     (s, dir) => Multimodal.curationPipeline(
       Tables.load(s, dir, "documents"), frameBytes = 64,
       minBytes = 64L, maxDupFrac = 0.5),
-    Some("""
+    """
       WITH b AS (SELECT doc_id AS media_id, text,
           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
           list_transform(string_split(text, ''), x -> ord(x)) AS cps
@@ -535,15 +535,15 @@ object PipelineQueries {
         round(CAST(coalesce(n_dup, 0) AS DOUBLE) / n_frames, 6)
           AS dup_frame_frac,
         CAST(coalesce(n_dup, 0) AS DOUBLE) / n_frames < 0.5 AS keep
-      FROM feat f JOIN nf USING (media_id) LEFT JOIN nd USING (media_id)"""))
+      FROM feat f JOIN nf USING (media_id) LEFT JOIN nd USING (media_id)""")
 
   /** Streaming dedup (dropDuplicates inside the watermark) — oracle is
     * the batch distinct count. */
   private val streamDedup = Q("q_stream_dedup",
     (s, dir) => graft.streaming.EventsStream.dedupedCounts(s, dir),
-    Some("""
+    """
       SELECT event_type, count(DISTINCT event_id) AS n_unique
-      FROM events GROUP BY event_type"""))
+      FROM events GROUP BY event_type""")
 
   /** Streaming MERGE materialization (multi-batch upsert into versioned
     * state, latest by event time) — oracle is the batch latest-per-user
@@ -551,7 +551,7 @@ object PipelineQueries {
   private val streamMerge = Q("q_stream_merge_sink",
     (s, dir) => graft.streaming.EventsStream.mergeSink(s, dir,
       Stage.work("q_stream_merge_sink", dir)),
-    Some("""
+    """
       WITH r AS (
         SELECT user_id, ts, event_id, value,
           row_number() OVER (PARTITION BY user_id
@@ -559,7 +559,7 @@ object PipelineQueries {
         FROM events)
       SELECT user_id, ts AS last_ts, event_id AS last_event_id,
         value AS last_value
-      FROM r WHERE rn = 1"""))
+      FROM r WHERE rn = 1""")
 
   val all: Seq[Q] = Seq(mmPlumbing, mmDecode, mmFrames, mmResize, mmPipeline,
     streamHourly, streamEnrich, streamDedup, streamSink, streamStream,

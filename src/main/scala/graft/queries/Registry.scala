@@ -2,15 +2,15 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One registered engine query: the Spark implementation plus (when
-  * SQL-expressible) the DuckDB oracle that must hash-match it.
+/** One registered engine query: the Spark implementation plus the
+  * DuckDB oracle that must hash-match it (every query has one).
   * Column names are aligned between both on purpose — the driver's
   * compare sorts columns by name before hashing (builder contract).
   */
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Registry {
   lazy val all: Seq[Q] =

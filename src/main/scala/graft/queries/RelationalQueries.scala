@@ -29,14 +29,14 @@ object RelationalQueries {
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       c.join(o, col("c_custkey") === col("o_custkey"), "full_outer")
     },
-    Some("""
+    """
       SELECT c_custkey, c_name, c_acctbal, o_custkey, o_orderkey,
         o_totalprice
       FROM (SELECT c_custkey, c_name, c_acctbal FROM customer
             WHERE c_acctbal > 5000) c
       FULL JOIN (SELECT o_custkey, o_orderkey, o_totalprice FROM orders
                  WHERE o_totalprice > 150000) o
-        ON c_custkey = o_custkey"""))
+        ON c_custkey = o_custkey""")
 
   /** J10: explicit left-semi / left-anti pair, surfaced as one flagged
     * relation: every customer tagged by whether they have at least one
@@ -59,13 +59,13 @@ object RelationalQueries {
         "left_anti").withColumn("has_urgent_open", lit(false))
       has.unionByName(not)
     },
-    Some("""
+    """
       SELECT c_custkey, c_mktsegment, EXISTS (
           SELECT 1 FROM orders
           WHERE o_custkey = c_custkey
             AND o_orderpriority = '1-URGENT' AND o_orderstatus = 'O')
         AS has_urgent_open
-      FROM customer"""))
+      FROM customer""")
 
   /** Correlated scalar subquery: each customer against their nation's
     * average balance. Catalyst decorrelates this into one aggregate over
@@ -82,13 +82,13 @@ object RelationalQueries {
                        WHERE c3.c_nationkey = c1.c_nationkey) AS above_avg
         FROM customer c1""")
     },
-    Some("""
+    """
       SELECT c_custkey, c_nationkey, c_acctbal,
         (SELECT round(avg(c2.c_acctbal), 6) FROM customer c2
          WHERE c2.c_nationkey = c1.c_nationkey) AS nation_avg,
         c_acctbal > (SELECT avg(c3.c_acctbal) FROM customer c3
                      WHERE c3.c_nationkey = c1.c_nationkey) AS above_avg
-      FROM customer c1"""))
+      FROM customer c1""")
 
   /** LATERAL correlated subquery with ORDER BY + LIMIT: top-2 orders per
     * customer, the per-group-top-k idiom in its SQL spelling. Spark
@@ -106,7 +106,7 @@ object RelationalQueries {
                    WHERE o_custkey = c_custkey
                    ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t""")
     },
-    Some("""
+    """
       WITH r AS (
         SELECT o_custkey, o_orderkey, o_totalprice,
           row_number() OVER (PARTITION BY o_custkey
@@ -114,7 +114,7 @@ object RelationalQueries {
         FROM orders)
       SELECT c_custkey, c_mktsegment, o_orderkey, o_totalprice
       FROM customer JOIN r ON o_custkey = c_custkey
-      WHERE rn <= 2"""))
+      WHERE rn <= 2""")
 
   /** J11: null-safe equality join (`<=>` / IS NOT DISTINCT FROM). Open
     * orders carry a NULL channel; a plain equi-join silently drops them,
@@ -132,7 +132,7 @@ object RelationalQueries {
       o.join(broadcast(dim), col("prio") <=> col("d_prio"))
         .select(col("o_orderkey"), col("prio"), col("prio_code"))
     },
-    Some("""
+    """
       WITH o AS (SELECT o_orderkey,
           CASE WHEN o_orderstatus = 'O' THEN NULL
                ELSE o_orderpriority END AS prio
@@ -140,7 +140,7 @@ object RelationalQueries {
       dim AS (SELECT DISTINCT prio,
           'P_' || coalesce(prio, 'UNSET') AS prio_code FROM o)
       SELECT o.o_orderkey, o.prio, dim.prio_code
-      FROM o JOIN dim ON o.prio IS NOT DISTINCT FROM dim.prio"""))
+      FROM o JOIN dim ON o.prio IS NOT DISTINCT FROM dim.prio""")
 
   val all: Seq[Q] = Seq(fullOuter, semiAnti, scalarCorr, lateralTopK,
     nullSafeJoin)

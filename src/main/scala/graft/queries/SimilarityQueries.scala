@@ -25,7 +25,7 @@ object SimilarityQueries {
   private val brute = Q("q_knn_brute_force",
     (s, dir) => Knn.bruteForceTopK(
       Tables.load(s, dir, "embeddings"), col("vec_id") < 5, k = 10),
-    Some(prepCte + """,
+    prepCte + """,
       q AS (SELECT vec_id AS qid, e AS qe, nrm AS qn FROM p WHERE vec_id < 5),
       c AS (SELECT vec_id AS cid, e AS ce, nrm AS cn FROM p)
       SELECT qid, cid, rank, round(cos, 6) AS cos_r FROM (
@@ -34,12 +34,12 @@ object SimilarityQueries {
           row_number() OVER (PARTITION BY qid
             ORDER BY list_inner_product(qe, ce) / (qn * cn) DESC, cid) AS rank
         FROM c, q WHERE qid <> cid)
-      WHERE rank <= 10"""))
+      WHERE rank <= 10""")
 
   private val lsh = Q("q_knn_lsh_bucketed",
     (s, dir) => Knn.lshTopK(
       Tables.load(s, dir, "embeddings"), col("vec_id") < 20, k = 5, nBits = 8),
-    Some(prepCte + s""",
+    prepCte + s""",
       pb AS (SELECT vec_id, e, nrm, ${bucketSql(8)} AS bucket FROM p),
       q AS (SELECT vec_id AS qid, e AS qe, nrm AS qn, bucket FROM pb
             WHERE vec_id < 20),
@@ -50,18 +50,18 @@ object SimilarityQueries {
           row_number() OVER (PARTITION BY qid
             ORDER BY list_inner_product(qe, ce) / (qn * cn) DESC, cid) AS rank
         FROM c JOIN q USING (bucket) WHERE qid <> cid)
-      WHERE rank <= 5"""))
+      WHERE rank <= 5""")
 
   private val pairs = Q("q_emb_similar_pairs",
     (s, dir) => Knn.similarPairs(
       Tables.load(s, dir, "embeddings"), nBits = 8, threshold = 0.30),
-    Some(prepCte + s""",
+    prepCte + s""",
       pb AS (SELECT vec_id, e, nrm, ${bucketSql(8)} AS bucket FROM p)
       SELECT va, vb, round(cos, 6) AS cos_r FROM (
         SELECT a.vec_id AS va, b.vec_id AS vb,
           list_inner_product(a.e, b.e) / (a.nrm * b.nrm) AS cos
         FROM pb a JOIN pb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-      WHERE cos >= 0.30"""))
+      WHERE cos >= 0.30""")
 
   /** Embedding-level dedup clusters: connected components over the
     * cosine similar-pairs graph — the same pair generator as
@@ -73,7 +73,7 @@ object SimilarityQueries {
             nBits = 8, threshold = 0.30)
           .select(col("va").as("da"), col("vb").as("db")))
       .withColumnRenamed("doc_id", "vec_id"),
-    Some((prepCte + s""",
+    (prepCte + s""",
       pb AS (SELECT vec_id, e, nrm, ${bucketSql(8)} AS bucket FROM p),
       epairs AS (SELECT va, vb FROM (
           SELECT a.vec_id AS va, b.vec_id AS vb,
@@ -88,13 +88,13 @@ object SimilarityQueries {
         UNION
         SELECT r.node, eg.dst FROM r JOIN eg ON r.x = eg.src)
       SELECT node AS vec_id, min(x) AS component
-      FROM r GROUP BY node""").replaceFirst("WITH ", "WITH RECURSIVE ")))
+      FROM r GROUP BY node""").replaceFirst("WITH ", "WITH RECURSIVE "))
 
   private val ivf = Q("q_knn_ivf",
     (s, dir) => Knn.ivfTopK(
       Tables.load(s, dir, "embeddings"), col("vec_id") < 5,
       k = 10, nCentroids = 16, nProbe = 2),
-    Some(prepCte + """,
+    prepCte + """,
       cents AS (SELECT vec_id AS centroid_id, e AS ce, nrm AS cn FROM p
                 WHERE vec_id < 16),
       asg AS (SELECT cid, centroid_id FROM (
@@ -120,12 +120,12 @@ object SimilarityQueries {
                      cand.cid) AS rank
         FROM cand JOIN p q ON cand.qid = q.vec_id
                   JOIN p c ON cand.cid = c.vec_id)
-      WHERE rank <= 10"""))
+      WHERE rank <= 10""")
 
   private val int8 = Q("q_emb_int8_profile",
     (s, dir) => graft.similarity.Quantize.int8Profile(
       Tables.load(s, dir, "embeddings")),
-    Some(raw"""
+    raw"""
       WITH ql AS (SELECT vec_id, embedding::DOUBLE[] AS e,
           list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS scale
         FROM embeddings),
@@ -141,7 +141,7 @@ object SimilarityQueries {
         round(list_max(list_transform(e, x -> abs(x -
           round(CASE WHEN scale = 0 THEN 0.0 ELSE x / scale * 127 END)
           * scale / 127))), 6) AS max_abs_err
-      FROM qz JOIN cs ON qz.vec_id = cs.vec_id"""))
+      FROM qz JOIN cs ON qz.vec_id = cs.vec_id""")
 
   private val signBitsSql =
     (0 until 63).map(i =>
@@ -155,13 +155,13 @@ object SimilarityQueries {
   private val signSig = Q("q_emb_sign_sig",
     (s, dir) => graft.similarity.Quantize.signSignature(
       Tables.load(s, dir, "embeddings")),
-    Some(signSigCte + "\n      SELECT vec_id, sig FROM sig"))
+    signSigCte + "\n      SELECT vec_id, sig FROM sig")
 
   private val hamming = Q("q_emb_hamming_pairs",
     (s, dir) => graft.similarity.Quantize.hammingPairs(
       graft.similarity.Quantize.signSignature(
         Tables.load(s, dir, "embeddings")), maxHamming = 18),
-    Some(signSigCte + raw""",
+    signSigCte + raw""",
       sp AS (SELECT vec_id, sig, b AS band_idx,
                (sig >> CAST(b * 9 AS INT)) % 512 AS band_val
              FROM sig, unnest(range(0, 7)) AS u(b))
@@ -170,7 +170,7 @@ object SimilarityQueries {
       FROM sp a JOIN sp b
         ON a.band_idx = b.band_idx AND a.band_val = b.band_val
        AND a.vec_id < b.vec_id
-      WHERE bit_count(xor(a.sig, b.sig)) <= 18"""))
+      WHERE bit_count(xor(a.sig, b.sig)) <= 18""")
 
   /** Higher-order array-function surface over the embedding column:
     * indexed size, lambda filter/exists, element-wise transform, ordered
@@ -199,7 +199,7 @@ object SimilarityQueries {
             .as("l1_norm"),
           round(expr("dot_f64(e, reverse(e))"), 6).as("rev_dot"))
     },
-    Some("""
+    """
       WITH p AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
       SELECT vec_id,
         CAST(len(e) AS BIGINT) AS n_dims,
@@ -209,7 +209,7 @@ object SimilarityQueries {
         round(list_reduce(list_prepend(0.0, list_transform(e, x -> abs(x))),
           (a, b) -> a + b), 6) AS l1_norm,
         round(list_inner_product(e, list_reverse(e)), 6) AS rev_dot
-      FROM p"""))
+      FROM p""")
 
   /** Shared PQ oracle head: sub-vector slices, the deterministic
     * codebook, and the per-(vector, subspace) nearest-centroid codes —
@@ -233,9 +233,9 @@ object SimilarityQueries {
   private val pqCodes = Q("q_pq_codes",
     (s, dir) => graft.similarity.Pq.encode(
       Tables.load(s, dir, "embeddings")),
-    Some(pqCte + """
+    pqCte + """
       SELECT vec_id, CAST(sum(code << (4 * s)) AS BIGINT) AS pq_code
-      FROM enc GROUP BY vec_id"""))
+      FROM enc GROUP BY vec_id""")
 
   /** PQ ADC scan: per-query LUT of query-to-centroid distances, corpus
     * ranked by summed lookups — the decompression-free approximate
@@ -244,7 +244,7 @@ object SimilarityQueries {
     (s, dir) => graft.similarity.Pq.adcTopK(
       Tables.load(s, dir, "embeddings"), s,
       queryPred = col("vec_id") < 5, k = 10),
-    Some(pqCte + """,
+    pqCte + """,
       lut AS (SELECT q.vec_id AS qid, q.s, cb.cid AS code,
           CAST(list_inner_product(q.v, q.v)
             - 2 * list_inner_product(q.v, cb.cv)
@@ -260,7 +260,7 @@ object SimilarityQueries {
           CAST(row_number() OVER (PARTITION BY qid ORDER BY adc, cid)
             AS BIGINT) AS rank
         FROM adc)
-      WHERE rank <= 10"""))
+      WHERE rank <= 10""")
 
   /** One Lloyd assignment round in oracle SQL: nearest centroid from
     * `cSrc`, ties on cid — the same expression tree as `Kmeans.assign`.
@@ -300,7 +300,7 @@ object SimilarityQueries {
           round(element_at(col("cv"), 1), 6).as("c0_r"),
           round(sqrt(expr("dot_f64(cv, cv)")), 6).as("norm_r"))
     },
-    Some(s"""
+    s"""
       WITH p AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
       c0 AS (SELECT vec_id AS cid, e AS cv FROM p WHERE vec_id < 8),
       a1 AS ${kmAssign("c0")},
@@ -309,7 +309,7 @@ object SimilarityQueries {
       c2 AS ${kmRecenter("a2")}
       SELECT cid, n_members, round(cv[1], 6) AS c0_r,
         round(sqrt(list_inner_product(cv, cv)), 6) AS norm_r
-      FROM c2"""))
+      FROM c2""")
 
   /** IVF-PQ: coarse inverted lists (full-vector L2 assignment, nProbe=2)
     * restrict the scan; ADC ranks only the probed candidates — the
@@ -318,7 +318,7 @@ object SimilarityQueries {
     (s, dir) => graft.similarity.Pq.ivfAdcTopK(
       Tables.load(s, dir, "embeddings"), s,
       queryPred = col("vec_id") < 5, k = 10),
-    Some(pqCte + """,
+    pqCte + """,
       coarse AS (SELECT vec_id AS ccid, e AS ce FROM p WHERE vec_id < 16),
       cr AS (SELECT p.vec_id, c.ccid, row_number() OVER (
                PARTITION BY p.vec_id ORDER BY
@@ -348,7 +348,7 @@ object SimilarityQueries {
           CAST(row_number() OVER (PARTITION BY qid ORDER BY adc, cid)
             AS BIGINT) AS rank
         FROM adc)
-      WHERE rank <= 10"""))
+      WHERE rank <= 10""")
 
   /** One trained-codebook Lloyd assignment round in oracle SQL: per
     * (vector, subspace) nearest centroid from `cSrc`, ties on cid. */
@@ -421,7 +421,7 @@ object SimilarityQueries {
           (col("n_hit").cast("double") / col("n_true") >= pqRecallFloor)
             .as("recall_ok"))
     },
-    Some(s"""
+    s"""
       WITH p AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
       sub AS (SELECT vec_id, s, e[s*4+1 : s*4+4] AS v
               FROM p, unnest(range(0, 16)) AS u(s)),
@@ -492,7 +492,7 @@ object SimilarityQueries {
         -- hash-MISMATCHES — recomputing the boolean here would make
         -- both engines agree on the failure and never fire the gate
         true AS recall_ok
-      FROM nt, nh"""))
+      FROM nt, nh""")
 
   /** L2 normalization — the standard pre-step before cosine ANN /
     * semantic dedup: unit-norm check plus the first normalized
@@ -510,13 +510,13 @@ object SimilarityQueries {
           .otherwise(expr("dot_f64(e, e)") / (col("nrm") * col("nrm"))), 6)
           .as("unit_check"))
     },
-    Some(prepCte + """
+    prepCte + """
       SELECT vec_id, CAST(len(e) AS BIGINT) AS dim,
         round(nrm, 6) AS l2_norm,
         round(CASE WHEN nrm = 0 THEN 0.0 ELSE e[1] / nrm END, 6) AS u0,
         round(CASE WHEN nrm = 0 THEN 0.0
           ELSE list_inner_product(e, e) / (nrm * nrm) END, 6) AS unit_check
-      FROM p"""))
+      FROM p""")
 
   /** Hybrid retrieval: Reciprocal Rank Fusion of the lexical BM25 leg
     * (documents) and the exact-cosine vector leg (embeddings) for the
@@ -537,7 +537,7 @@ object SimilarityQueries {
         .select(col("qid"), col("cid").as("id"), col("rank"))
       graft.similarity.Hybrid.rrfFuse(Seq(lex, vec), k0 = 60, topK = 10)
     },
-    Some("WITH " + TextQueries.bm25Ctes("doc_id < 5") + raw""",
+    "WITH " + TextQueries.bm25Ctes("doc_id < 5") + raw""",
       p AS (SELECT vec_id, embedding::DOUBLE[] AS e,
           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
         FROM embeddings),
@@ -569,7 +569,7 @@ object SimilarityQueries {
                 ORDER BY rrf DESC, id) AS rn2
             FROM f)
       SELECT qid, id, n_legs, CAST(rrf AS DOUBLE) AS rrf
-      FROM r WHERE rn2 <= 10"""))
+      FROM r WHERE rn2 <= 10""")
 
   /** Cross-modality dedup agreement audit: which near-dup PAIRS does
     * the lexical signal (exact Jaccard ≥ 0.5 over 3-shingles) find vs
@@ -585,7 +585,7 @@ object SimilarityQueries {
     (s, dir) => graft.similarity.Hybrid.modalityAgreement(
       Tables.load(s, dir, "documents"),
       Tables.load(s, dir, "embeddings")),
-    Some(TextQueries.shCte + s""",
+    TextQueries.shCte + s""",
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       jp AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_common
              FROM sh a JOIN sh b USING (s)
@@ -617,7 +617,7 @@ object SimilarityQueries {
         CASE WHEN tp.jaccard IS NOT NULL AND ep.cos_r IS NOT NULL THEN 'both'
              WHEN tp.jaccard IS NOT NULL THEN 'text_only'
              ELSE 'emb_only' END AS signal
-      FROM tp FULL OUTER JOIN ep ON tp.da = ep.da AND tp.db = ep.db"""))
+      FROM tp FULL OUTER JOIN ep ON tp.da = ep.da AND tp.db = ep.db""")
 
   /** SemDeDup (Abbas et al. 2023): k-means-sharded semantic dedup —
     * duplicates are near-cosine pairs WITHIN a trained cluster, keeper
@@ -629,7 +629,7 @@ object SimilarityQueries {
   private val semanticDedup = Q("q_dedup_semantic",
     (s, dir) => graft.similarity.SemDedup.semDedup(
       Tables.load(s, dir, "embeddings"), k = 8, iters = 2, tau = 0.35),
-    Some(s"""
+    s"""
       WITH p AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
       c0 AS (SELECT vec_id AS cid, e AS cv FROM p WHERE vec_id < 8),
       a1 AS ${kmAssign("c0")},
@@ -649,7 +649,7 @@ object SimilarityQueries {
       SELECT j.vec_id, j.cid, dom.kept_for,
         coalesce(dom.n_dominators, 0) AS n_dominators,
         dom.kept_for IS NULL AS keep
-      FROM j LEFT JOIN dom USING (vec_id)"""))
+      FROM j LEFT JOIN dom USING (vec_id)""")
 
   val all: Seq[Q] = Seq(brute, lsh, ivf, pairs, embClusters, int8, signSig,
     hamming, hofSuite, pqCodes, pqAdc, kmeans, pqIvf, pqRecall,

@@ -30,11 +30,11 @@ object SourceQueries {
         .select(col("event_id"), col("event_type"),
           col("p.k").as("k"),
           (col("p.k") % 10).as("k_bucket")),
-    Some("""
+    """
       SELECT event_id, event_type,
         TRY_CAST(regexp_extract(props, '[0-9]+', 0) AS INTEGER) AS k,
         TRY_CAST(regexp_extract(props, '[0-9]+', 0) AS INTEGER) % 10 AS k_bucket
-      FROM events"""))
+      FROM events""")
 
   /** S7 (file-source form): JSON-lines roundtrip — write a projection as
     * JSON, read it back with schema inference (the reference's
@@ -47,7 +47,7 @@ object SourceQueries {
         .write.mode("overwrite").json(path)
       s.read.json(path).select("event_id", "event_type", "value")
     },
-    Some("SELECT event_id, event_type, value FROM events"))
+    "SELECT event_id, event_type, value FROM events")
 
   /** S7 (pagination tail): the reference's REST pagination loop
     * (`FULL:159-183`) — a first payload yields the page cursors
@@ -97,10 +97,10 @@ object SourceQueries {
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
           col("page_cursor"))
     },
-    Some("""
+    """
       SELECT c_custkey, c_name, c_acctbal,
         CAST(c_nationkey AS BIGINT) AS page_cursor
-      FROM customer WHERE c_nationkey <> 3"""))
+      FROM customer WHERE c_nationkey <> 3""")
 
   /** S4 (staging form): CSV snapshot roundtrip — the BCP-style flat-file
     * staging leg (reference runbook `BCP:37-101`): dump to CSV with
@@ -116,7 +116,7 @@ object SourceQueries {
         .select(col("s_suppkey").cast("long"), col("s_name"),
           col("s_nationkey").cast("int"), col("s_acctbal").cast("double"))
     },
-    Some("SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"))
+    "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier")
 
   /** S4 (connector form): the real `spark.read.format("jdbc")` path
     * against embedded Derby — seed the table over JDBC, read it back with
@@ -138,7 +138,7 @@ object SourceQueries {
         .select(col("s_suppkey"), col("s_name"),
           col("s_nationkey"), col("s_acctbal"))
     },
-    Some("SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"))
+    "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier")
 
   /** S2 (full form): Hive-style partitioned overwrite via partitionBy —
     * the reference's dataset_date=/job_run_id= directory layout
@@ -153,8 +153,8 @@ object SourceQueries {
       s.read.parquet(path)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     },
-    Some("""
-      SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders"""))
+    """
+      SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders""")
 
   /** S9: catalog metadata ops — SHOW TABLES over the registered temp-view
     * catalog (the local analogue of the Glue catalog, `FULL:122-131`). */
@@ -164,9 +164,9 @@ object SourceQueries {
       s.sql("SHOW TABLES").select(col("tableName").as("table_name"))
         .filter(col("table_name").isin(Tables.names: _*))
     },
-    Some(Tables.names.sorted
+    Tables.names.sorted
       .map(n => s"SELECT '$n' AS table_name")
-      .mkString("\n      UNION ALL ")))
+      .mkString("\n      UNION ALL "))
 
   /** S9 (DDL form): external partitioned table over the Hive-style sink +
     * partition recovery + SHOW PARTITIONS — the engine-side analogue of
@@ -191,9 +191,9 @@ object SourceQueries {
       s.sql("SHOW PARTITIONS orders_by_status")
         .select(col("partition").as("partition_dir"))
     },
-    Some("""
+    """
       SELECT DISTINCT 'o_orderstatus=' || o_orderstatus AS partition_dir
-      FROM orders"""))
+      FROM orders""")
 
   /** §5: the reconciliation block (`PUSH:369-457`) as data — counts,
     * column-set equality, symmetric MINUS both ways, and the aggregate
@@ -214,7 +214,7 @@ object SourceQueries {
         .toDF("src_count", "tgt_count", "n_missing_cols", "n_extra_cols",
           "src_minus_tgt", "tgt_minus_src", "is_ok")
     },
-    Some("""
+    """
       WITH src AS (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
                    WHERE l_linestatus = 'F'),
            tgt AS (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem
@@ -229,17 +229,17 @@ object SourceQueries {
              m2.b AS tgt_minus_src,
              ((SELECT count(*) FROM src) = (SELECT count(*) FROM tgt)
               AND m1.a = 0 AND m2.b = 0) AS is_ok
-      FROM m1, m2"""))
+      FROM m1, m2""")
 
   /** Bucketed co-located join: both sides pre-bucketed on the join key →
     * shuffle-free sort-merge join (plan asserted in BucketingSpec). */
   private val bucketed = Q("q_bucketed_join",
     (s, dir) => Bucketing.coLocatedOrderJoin(s, dir),
-    Some("""
+    """
       SELECT o_orderkey, count(*) AS n_items, sum(l_quantity) AS sum_qty,
         max(o_totalprice) AS total_price
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY o_orderkey"""))
+      GROUP BY o_orderkey""")
 
   /** S10 (engine-side replacement): schema evolution on read. The
     * reference ran a crawler to reconcile drifting batch schemas; Spark
@@ -261,13 +261,13 @@ object SourceQueries {
       s.read.option("mergeSchema", "true").parquet(path)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     },
-    Some("""
+    """
       SELECT o_orderkey, o_totalprice,
         CAST(NULL AS VARCHAR) AS o_orderpriority
       FROM orders WHERE o_orderstatus = 'F' AND o_orderkey % 2 = 0
       UNION ALL
       SELECT o_orderkey, CAST(NULL AS DOUBLE), o_orderpriority
-      FROM orders WHERE o_orderstatus = 'F' AND o_orderkey % 2 = 1"""))
+      FROM orders WHERE o_orderstatus = 'F' AND o_orderkey % 2 = 1""")
 
   /** S11 (beyond-parity format): ORC sink + source roundtrip — the
     * second columnar format Spark ships natively. Types survive exactly
@@ -285,10 +285,10 @@ object SourceQueries {
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
           "o_orderpriority")
     },
-    Some("""
+    """
       SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate,
         o_orderpriority
-      FROM orders WHERE o_totalprice > 1000.0"""))
+      FROM orders WHERE o_totalprice > 1000.0""")
 
   /** S7 (path form): JSON-path extraction from an embedded JSON string
     * column — both the schemaless `get_json_object` probe and the typed
@@ -302,12 +302,12 @@ object SourceQueries {
           get_json_object(col("props"), "$.k").cast("long").as("k_num"),
           from_json(col("props"), "k BIGINT",
             Map.empty[String, String]).getField("k").as("k_typed")),
-    Some("""
+    """
       SELECT event_id,
         json_extract_string(props, '$.k') AS k_str,
         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num,
         CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_typed
-      FROM events"""))
+      FROM events""")
 
   /** S2 (size-managed form): compaction write — range-partitioned,
     * sorted, row-capped files (`Sinks.compactWrite`) read back through
@@ -321,7 +321,7 @@ object SourceQueries {
         path, col("doc_id"), nPartitions = 4, maxRecordsPerFile = 100L)
       s.read.parquet(path).select("doc_id", "source", "n_chars")
     },
-    Some("SELECT doc_id, source, n_chars FROM documents"))
+    "SELECT doc_id, source, n_chars FROM documents")
 
   /** S7 (resilience form): malformed-record-tolerant JSON ingest.
     * Every tenth line of the staged feed is truncated mid-object;
@@ -355,13 +355,13 @@ object SourceQueries {
               col("value").cast(DecimalType(14, 4))))
             .cast("double").as("sum_good_value"))
     },
-    Some("""
+    """
       SELECT
         count(*) FILTER (WHERE event_id % 10 <> 0) AS n_good,
         count(*) FILTER (WHERE event_id % 10 = 0) AS n_corrupt,
         CAST(sum(CAST(value AS DECIMAL(14,4)))
           FILTER (WHERE event_id % 10 <> 0) AS DOUBLE) AS sum_good_value
-      FROM events"""))
+      FROM events""")
 
   /** File-level data skipping over a z-ordered layout: cluster lineitem
     * by the Morton key of (partkey, suppkey), build the min/max manifest
@@ -381,9 +381,9 @@ object SourceQueries {
         .rangeScan(s, path, "l_partkey", lo = 100L, hi = 500L)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
     },
-    Some("""
+    """
       SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
-      FROM lineitem WHERE l_partkey BETWEEN 100 AND 500"""))
+      FROM lineitem WHERE l_partkey BETWEEN 100 AND 500""")
 
   /** Calendar-dimension build via a RECURSIVE CTE (new in Spark 4) —
     * the warehouse date spine generated in-engine, one row per day with
@@ -402,7 +402,7 @@ object SourceQueries {
         CAST(month(d) AS BIGINT) AS mth,
         CAST(unix_date(d) AS BIGINT) AS epoch_day
       FROM cal"""),
-    Some("""
+    """
       WITH RECURSIVE cal (d) AS (
         SELECT DATE '2024-01-01' AS d
         UNION ALL
@@ -412,7 +412,7 @@ object SourceQueries {
         ((epoch(d) // 86400 + 4) % 7) IN (0, 6) AS is_weekend,
         CAST(month(d) AS BIGINT) AS mth,
         CAST(epoch(d) // 86400 AS BIGINT) AS epoch_day
-      FROM cal"""))
+      FROM cal""")
 
   /** S13: opaque binary-object ingest via the `binaryFile` source — the
     * real multimodal on-ramp (image/audio/video blobs enter the engine
@@ -447,12 +447,12 @@ object SourceQueries {
             "part-([0-9]+)", 1).cast("long").as("file_idx"),
           col("length"))
     },
-    Some(s"""
+    s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         CAST(size AS BIGINT) AS length
       FROM read_blob(
-        '${Stage.forInput("q_s13_binary_ingest", "/root/testdata/sf0.01")}/part-*.parquet')"""))
+        '${Stage.forInput("q_s13_binary_ingest", "/root/testdata/sf0.01")}/part-*.parquet')""")
 
   /** S14: file-provenance columns (`_metadata.file_name`) — per-file row
     * counts and key ranges over a range-partitioned layout: the
@@ -474,7 +474,7 @@ object SourceQueries {
         .agg(count(lit(1)).as("n_rows"),
           min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
     },
-    Some(s"""
+    s"""
       SELECT CAST(regexp_extract(parse_filename(filename),
           'part-([0-9]+)', 1) AS BIGINT) AS file_idx,
         count(*) AS n_rows,
@@ -482,7 +482,7 @@ object SourceQueries {
       FROM read_parquet(
         '${Stage.forInput("q_s14_file_provenance", "/root/testdata/sf0.01")}/part-*.parquet',
         filename = true)
-      GROUP BY 1"""))
+      GROUP BY 1""")
 
   /** S15: semi-structured lift via the native VARIANT type (Spark 4) —
     * `parse_json` once into a binary-encoded variant column, then typed
@@ -501,13 +501,13 @@ object SourceQueries {
         .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"),
           max(col("k")).as("max_k"))
     },
-    Some("""
+    """
       SELECT event_type,
         CAST(props->>'$.k' AS BIGINT) % 10 AS k_mod,
         count(*) AS n,
         min(CAST(props->>'$.k' AS BIGINT)) AS min_k,
         max(CAST(props->>'$.k' AS BIGINT)) AS max_k
-      FROM events GROUP BY 1, 2"""))
+      FROM events GROUP BY 1, 2""")
 
   /** SQL pipe syntax (Spark 4): the pricing-summary aggregation written
     * as a `|>` pipeline — same relation, linear dataflow spelling; the
@@ -524,12 +524,12 @@ object SourceQueries {
                AS sum_price
            GROUP BY l_returnflag, l_linestatus""")
     },
-    Some("""
+    """
       SELECT l_returnflag, l_linestatus, count(*) AS n,
         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
           AS sum_price
       FROM lineitem WHERE l_quantity > 10
-      GROUP BY l_returnflag, l_linestatus"""))
+      GROUP BY l_returnflag, l_linestatus""")
 
   /** Snapshot diff: yesterday's table vs today's → the I/U/D changeset
     * (`Delta.snapshotDiff`, the inverse of the CDC apply). Snapshots
@@ -549,7 +549,7 @@ object SourceQueries {
             col("o_orderstatus"), col("o_totalprice")))
       Delta.snapshotDiff(base, curr, "o_orderkey")
     },
-    Some("""
+    """
       WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice
                     FROM orders),
       curr AS (
@@ -570,7 +570,7 @@ object SourceQueries {
           c.o_totalprice AS o_totalprice
         FROM base b FULL JOIN curr c ON b.o_orderkey = c.o_orderkey)
       SELECT o_orderkey, op, o_orderstatus, o_totalprice
-      FROM j WHERE op IS NOT NULL"""))
+      FROM j WHERE op IS NOT NULL""")
 
   /** S5 (the last locally-buildable slice, verdict r12 #2): schema
     * inference by BOUNDED SAMPLING — the Mongo sampling partitioner
@@ -597,9 +597,9 @@ object SourceQueries {
       val guarded = graft.sources.DocCollection.withLeadidGuard(read)
       guarded.select(guarded.columns.sorted.map(col).toIndexedSeq: _*)
     },
-    Some("""
+    """
       SELECT doc_id, lang, CAST(NULL AS VARCHAR) AS leadid, n_chars, source
-      FROM documents"""))
+      FROM documents""")
 
   /** S5 composed end-to-end (verdict r13 #7): the one-path outbound
     * story — sampled-schema collection read → `leadid` runtime guard
@@ -644,13 +644,13 @@ object SourceQueries {
         col("doc.doc_id").as("doc_id"), col("doc.leadid").as("leadid"),
         col("doc.lang").as("lang"), col("doc.source").as("source"))
     },
-    Some("""
+    """
       SELECT 'sampled' AS mode, doc_id,
         'L' || CAST(doc_id AS VARCHAR) AS leadid, lang, source
       FROM documents
       UNION ALL
       SELECT 'full', doc_id, 'L' || CAST(doc_id AS VARCHAR), lang, source
-      FROM documents WHERE doc_id % 5 <> 0"""))
+      FROM documents WHERE doc_id % 5 <> 0""")
 
   val all: Seq[Q] = Seq(jsonLift, jsonRoundtrip, jsonPaged, csvSnapshot,
     jdbcSnapshot, partSink, catalog, partitions, reconcile, bucketed,

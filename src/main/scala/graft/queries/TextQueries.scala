@@ -31,13 +31,13 @@ object TextQueries {
         size(TextAnalysis.tokens).cast("long").as("ws_tokens"),
         size(TextAnalysis.alnumTokens).cast("long").as("alnum_tokens"),
         col("n_chars")),
-    Some(raw"""
+    raw"""
       SELECT doc_id,
         CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS ws_tokens,
         CAST(len(list_filter(string_split_regex(lower(trim(text)), '[^a-z0-9]+'),
                              x -> x <> '')) AS BIGINT) AS alnum_tokens,
         n_chars
-      FROM documents"""))
+      FROM documents""")
 
   // ---------------------------------------------------------------- lang id
   private[queries] def hitsSql(stops: Seq[String]): String =
@@ -54,7 +54,7 @@ object TextQueries {
         TextAnalysis.stopHits(t, TextAnalysis.frStops).cast("long").as("fr_hits"),
         TextAnalysis.langIdExpr(t).as("lang_pred"))
     },
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
                     FROM documents),
       h AS (SELECT doc_id,
@@ -70,7 +70,7 @@ object TextQueries {
              WHEN de_hits = greatest(en_hits, es_hits, de_hits, fr_hits) THEN 'de'
              WHEN fr_hits = greatest(en_hits, es_hits, de_hits, fr_hits) THEN 'fr'
              ELSE 'und' END AS lang_pred
-      FROM h"""))
+      FROM h""")
 
   // ---------------------------------------------------------------- quality
   private val quality = Q("q_text_quality",
@@ -89,7 +89,7 @@ object TextQueries {
           lit(0.6) * col("distinct_ratio") +
             lit(0.4) * (lit(1.0) - col("stop_ratio")))
     },
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id, n_chars,
                       string_split_regex(lower(trim(text)), '\s+') AS t,
                       CAST(len(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) AS BIGINT) AS punct_chars
@@ -106,7 +106,7 @@ object TextQueries {
         stop_hits / token_count AS stop_ratio,
         0.6 * (distinct_tokens / token_count) +
           0.4 * (1.0 - stop_hits / token_count) AS quality_score
-      FROM m"""))
+      FROM m""")
 
   // ---------------------------------------------------------------- dedup: exact
   /** Rolling-hash fingerprints: both the order-insensitive md5
@@ -117,7 +117,7 @@ object TextQueries {
         col("doc_id"),
         TextAnalysis.fingerprint.as("bow_fp"),
         TextAnalysis.rollingHash.as("rolling_fp")),
-    Some(raw"""
+    raw"""
       SELECT doc_id,
         md5(list_aggr(list_sort(list_distinct(
           string_split_regex(lower(trim(text)), '\s+'))), 'string_agg', ' ')) AS bow_fp,
@@ -126,23 +126,23 @@ object TextQueries {
             list_transform(string_split_regex(lower(trim(text)), '\s+'),
               x -> CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) % 2147483647)),
           (acc, x) -> (acc * 31 + x) % 2147483647) AS rolling_fp
-      FROM documents"""))
+      FROM documents""")
 
   private val exact = Q("q_dedup_exact",
     (s, dir) => Dedup.exactDedup(Tables.load(s, dir, "documents")),
-    Some(raw"""
+    raw"""
       WITH fp AS (SELECT doc_id,
           md5(list_aggr(list_sort(list_distinct(
             string_split_regex(lower(trim(text)), '\s+'))), 'string_agg', ' ')) AS fp
         FROM documents)
       SELECT fp, min(doc_id) AS keep_id, count(*) AS n_dupes
-      FROM fp GROUP BY fp"""))
+      FROM fp GROUP BY fp""")
 
   // ---------------------------------------------------------------- dedup: jaccard
   private val jaccard = Q("q_dedup_ngram_jaccard",
     (s, dir) => Dedup.jaccardPairs(
       Dedup.shingles(Tables.load(s, dir, "documents")), dfCap = 10, threshold = 0.5),
-    Some(shCte + raw""",
+    shCte + raw""",
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       dfreq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
       pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_common,
@@ -153,7 +153,7 @@ object TextQueries {
         CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS jaccard
       FROM pairs JOIN sizes sa ON da = sa.doc_id JOIN sizes sb ON db = sb.doc_id
       WHERE has_rare = 1
-        AND CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.5"""))
+        AND CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.5""")
 
   // ---------------------------------------------------------------- dedup: minhash
   private val sigColsSql = Dedup.AS.indices.map(i =>
@@ -168,7 +168,7 @@ object TextQueries {
   private val minhash = Q("q_dedup_minhash_sigs",
     (s, dir) => Dedup.minhashSignatures(
       Dedup.shingles(Tables.load(s, dir, "documents"))),
-    Some(minhashSigCte + "\n      SELECT * FROM sig"))
+    minhashSigCte + "\n      SELECT * FROM sig")
 
   private val bandValSql = (0 until Dedup.K / 2).map(b =>
     s"WHEN $b THEN CAST(s${2 * b} AS VARCHAR) || '_' || CAST(s${2 * b + 1} AS VARCHAR)")
@@ -201,7 +201,7 @@ object TextQueries {
       Dedup.incrementalLshDedup(docs.where(col("doc_id") % 4 === 0),
         corpusIdx)
     },
-    Some(minhashSigCte + raw""",
+    minhashSigCte + raw""",
       bands AS (SELECT doc_id, b AS band_idx, $bandValSql AS band_val
                 FROM sig, unnest(range(0, ${Dedup.K / 2})) AS u(b)),
       nb AS (SELECT * FROM bands WHERE doc_id % 4 = 0),
@@ -213,19 +213,19 @@ object TextQueries {
                 GROUP BY 1)
       SELECT d.doc_id, (b.dup_of IS NULL) AS keep, b.dup_of
       FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
-      LEFT JOIN blame b USING (doc_id)"""))
+      LEFT JOIN blame b USING (doc_id)""")
 
   private val lsh = Q("q_dedup_minhash_lsh",
     (s, dir) => Dedup.lshCandidates(Dedup.minhashSignatures(
       Dedup.shingles(Tables.load(s, dir, "documents")))),
-    Some(minhashSigCte + raw""",
+    minhashSigCte + raw""",
       bands AS (SELECT doc_id, b AS band_idx, $bandValSql AS band_val
                 FROM sig, unnest(range(0, ${Dedup.K / 2})) AS u(b))
       SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_bands
       FROM bands a JOIN bands b
         ON a.band_idx = b.band_idx AND a.band_val = b.band_val
        AND a.doc_id < b.doc_id
-      GROUP BY 1, 2"""))
+      GROUP BY 1, 2""")
 
   // ---------------------------------------------------------------- dedup: simhash
   private val tokCte = raw"""
@@ -249,7 +249,7 @@ object TextQueries {
 
   private val simhash = Q("q_dedup_simhash",
     (s, dir) => Dedup.simhash(Tables.load(s, dir, "documents")),
-    Some(simhashCte + "\n      SELECT * FROM sim"))
+    simhashCte + "\n      SELECT * FROM sim")
 
   /** Banded radius-6 pairs as a reusable CTE (the unbounded form, the
     * bounded top-m form, and the top-m recall gate all build on it). */
@@ -270,7 +270,7 @@ object TextQueries {
   private val simhashPairs = Q("q_dedup_simhash_pairs",
     (s, dir) => Dedup.simhashPairs(
       Dedup.simhash(Tables.load(s, dir, "documents")), maxHamming = 6),
-    Some(simhashPairsCte + "\n      SELECT da, db, hamming FROM prs"))
+    simhashPairsCte + "\n      SELECT da, db, hamming FROM prs")
 
   /** Per-doc top-m view of the banded pairs (symmetrized, ranked by
     * (hamming, neighbor)) shared by the bounded query and its gate. */
@@ -293,8 +293,8 @@ object TextQueries {
     (s, dir) => Dedup.simhashTopM(
       Dedup.simhash(Tables.load(s, dir, "documents")),
       maxHamming = 6, m = 5),
-    Some(simhashTopmCte + raw"""
-      SELECT doc_id, nb, hamming, nb_rank FROM rk WHERE nb_rank <= 5"""))
+    simhashTopmCte + raw"""
+      SELECT doc_id, nb, hamming, nb_rank FROM rk WHERE nb_rank <= 5""")
 
   /** Top-m quality gate — "measure, don't guess" for the bounded
     * emission: brute-force ALL radius-6 neighbors for a deterministic
@@ -343,7 +343,7 @@ object TextQueries {
         .withColumn("recall_ok", col("n_true") === 0 ||
           col("n_hit").cast("double") / col("n_true") >= 0.9)
     },
-    Some(simhashTopmCte + raw""",
+    simhashTopmCte + raw""",
       btop AS (SELECT doc_id, nb FROM rk
                WHERE nb_rank <= 5 AND doc_id % 100 < 5),
       truth AS (SELECT a.doc_id, b.doc_id AS nb,
@@ -362,7 +362,7 @@ object TextQueries {
              round(CAST(hitc.n_hit AS DOUBLE) /
                (SELECT count(*) FROM ttop), 6) AS recall,
              true AS recall_ok
-      FROM hitc"""))
+      FROM hitc""")
 
   /** Candidate verification by exact edit distance: LSH narrows the
     * pair space, levenshtein confirms — the standard two-phase near-dup
@@ -385,13 +385,13 @@ object TextQueries {
             greatest(length(col("ta")), length(col("tb"))).cast("long"))
             .as("edit_ratio"))
     },
-    Some(lshPairsCte + raw"""
+    lshPairsCte + raw"""
       SELECT da, db,
         CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
         CAST(levenshtein(a.text, b.text) AS BIGINT)
           / CAST(greatest(len(a.text), len(b.text)) AS BIGINT) AS edit_ratio
       FROM pairs JOIN documents a ON pairs.da = a.doc_id
-                 JOIN documents b ON pairs.db = b.doc_id"""))
+                 JOIN documents b ON pairs.db = b.doc_id""")
 
   /** LSH quality diagnostic: recall of the banding candidates against
     * ground-truth Jaccard ≥ 0.5 pairs — "measure, don't guess" for the
@@ -416,7 +416,7 @@ object TextQueries {
         // hash-mismatches instead of both engines agreeing on false
         .withColumn("recall_ok", col("n_hit") / col("n_true") >= 0.9)
     },
-    Some(minhashSigCte + raw""",
+    minhashSigCte + raw""",
       bands AS (SELECT doc_id, b AS band_idx, $bandValSql AS band_val
                 FROM sig, unnest(range(0, ${Dedup.K / 2})) AS u(b)),
       cand AS (SELECT a.doc_id AS da, b.doc_id AS db
@@ -440,7 +440,7 @@ object TextQueries {
              (SELECT count(*) FROM hit) AS n_hit,
              CAST((SELECT count(*) FROM hit) AS BIGINT)
                / CAST((SELECT count(*) FROM truth) AS BIGINT) AS recall,
-             true AS recall_ok"""))
+             true AS recall_ok""")
 
   /** Corpus vocabulary statistics: document frequency + total term
     * frequency per token — the substrate for TF-IDF filtering and
@@ -453,16 +453,16 @@ object TextQueries {
         .groupBy(col("tok"))
         .agg(countDistinct(col("doc_id")).as("df"),
           count(lit(1)).as("tf")),
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
                  FROM documents)
       SELECT tok, count(DISTINCT doc_id) AS df, count(*) AS tf
-      FROM t GROUP BY tok"""))
+      FROM t GROUP BY tok""")
 
   private val lmScore = Q("q_text_lm_score",
     (s, dir) => graft.text.TextAnalysis.lmScore(
       Tables.load(s, dir, "documents")),
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
                  FROM documents),
       freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY tok),
@@ -471,7 +471,7 @@ object TextQueries {
              FROM t JOIN freq USING (tok), tot)
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
         CAST(sum(s) AS DOUBLE) / count(*) AS xent
-      FROM sc GROUP BY doc_id"""))
+      FROM sc GROUP BY doc_id""")
 
   /** Feature-hashed bag-of-words vectors (`TextAnalysis.hashingTf`,
     * dim=64): the dense array is built by the engine; the gate checks
@@ -489,7 +489,7 @@ object TextQueries {
         array_max(col("tf")).as("max_count"),
         (array_position(col("tf"), array_max(col("tf"))) - 1)
           .as("top_bucket")),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT doc_id,
               string_split_regex(lower(trim(text)), '\s+') AS t
             FROM documents),
@@ -509,7 +509,7 @@ object TextQueries {
                 AND bc.c = agg.max_count
               GROUP BY bc.doc_id)
       SELECT agg.doc_id, nnz, l1_total, checksum, max_count, top_bucket
-      FROM agg JOIN top USING (doc_id)"""))
+      FROM agg JOIN top USING (doc_id)""")
 
   /** Boilerplate fraction per document: share of distinct 3-shingles
     * whose corpus doc-frequency is ≥ 3, plus the keep decision at the
@@ -518,7 +518,7 @@ object TextQueries {
   private val boilerplate = Q("q_text_boilerplate",
     (s, dir) => graft.text.Curation.boilerplate(
       Tables.load(s, dir, "documents"), dfCap = 3, keepBelow = 0.25),
-    Some(shCte + raw""",
+    shCte + raw""",
       dfreq AS (SELECT s, count(*) AS doc_freq FROM sh GROUP BY s),
       tot AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
       hits AS (SELECT doc_id, count(*) AS hits
@@ -528,7 +528,7 @@ object TextQueries {
         coalesce(hits, 0) AS n_boiler,
         round(coalesce(hits, 0) / n_grams, 6) AS boiler_frac,
         coalesce(hits, 0) / n_grams < 0.25 AS keep
-      FROM tot t LEFT JOIN hits USING (doc_id)"""))
+      FROM tot t LEFT JOIN hits USING (doc_id)""")
 
   /** Corpus length histogram: docs bucketed by token count (width-10
     * bins, top bin open). One narrow projection + one tiny groupBy —
@@ -543,12 +543,12 @@ object TextQueries {
         .agg(count(lit(1)).as("n_docs"),
           min(col("n_tok")).as("min_tok"),
           max(col("n_tok")).as("max_tok")),
-    Some(raw"""
+    raw"""
       WITH t AS (SELECT CAST(len(string_split_regex(lower(trim(text)),
           '\s+')) AS BIGINT) AS n_tok FROM documents)
       SELECT least(CAST(floor(n_tok / 10) AS BIGINT), 19) AS bucket,
         count(*) AS n_docs, min(n_tok) AS min_tok, max(n_tok) AS max_tok
-      FROM t GROUP BY 1"""))
+      FROM t GROUP BY 1""")
 
   /** Document-level PMI of token pairs: how much more often two tokens
     * co-occur in a document than independence predicts — the collocation
@@ -560,7 +560,7 @@ object TextQueries {
     * float-output rule. */
   private val pmi = Q("q_text_pmi",
     (s, dir) => TextAnalysis.pmi(Tables.load(s, dir, "documents")),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT DISTINCT doc_id,
           unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         FROM documents),
@@ -574,7 +574,7 @@ object TextQueries {
         round(ln((df_ab * n_docs) / (fa.df * fb.df)), 6) AS pmi
       FROM p JOIN dfreq fa ON fa.tok = ta
              JOIN dfreq fb ON fb.tok = tb
-             CROSS JOIN nd"""))
+             CROSS JOIN nd""")
 
   /** The vocabulary-BOUNDED PMI mode (verdict r11 #6): uncapped PMI's
     * distinct-pair aggregation state grows ~V² while V grows with the
@@ -608,7 +608,7 @@ object TextQueries {
   private val pmiCapped = Q("q_text_pmi_capped",
     (s, dir) => TextAnalysis.pmi(Tables.load(s, dir, "documents"),
       topV = Some(16L), maxDfFrac = Some(0.8)),
-    Some(raw"""
+    raw"""
       WITH toks0 AS (SELECT DISTINCT doc_id,
           unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
         FROM documents),
@@ -631,14 +631,14 @@ object TextQueries {
         round(ln((df_ab * n_docs) / (fa.df * fb.df)), 6) AS pmi
       FROM p JOIN dfreq fa ON fa.tok = ta
              JOIN dfreq fb ON fb.tok = tb
-             CROSS JOIN nd"""))
+             CROSS JOIN nd""")
 
   /** Exact Jaccard-≥-0.5 pairs via prefix filtering — no df cap, no
     * all-pairs join; the brute-force oracle proves completeness. */
   private val prefixJaccard = Q("q_dedup_prefix_jaccard",
     (s, dir) => Dedup.prefixJaccardPairs(
       Dedup.shingles(Tables.load(s, dir, "documents")), threshold = 0.5),
-    Some(shCte + raw""",
+    shCte + raw""",
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_common
                 FROM sh a JOIN sh b USING (s)
@@ -648,7 +648,7 @@ object TextQueries {
       FROM pairs
       JOIN sizes sa ON da = sa.doc_id
       JOIN sizes sb ON db = sb.doc_id
-      WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.5"""))
+      WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.5""")
 
   /** Shared oracle CTEs for the CAPPED prefix-Jaccard pass: the exact
     * prefix postings, their own df histogram, the largest prefix-df
@@ -704,8 +704,8 @@ object TextQueries {
     (s, dir) => Dedup.prefixJaccardPairs(
       Dedup.shingles(Tables.load(s, dir, "documents")), threshold = 0.5,
       pairBudgetPerDoc = Some(16L)),
-    Some(cappedPrefixCte + raw"""
-      SELECT da, db, n_common, jaccard FROM cppairs"""))
+    cappedPrefixCte + raw"""
+      SELECT da, db, n_common, jaccard FROM cppairs""")
 
   /** Recall of the capped prefix pass against the guaranteed-complete
     * exact twin, fully mirror-computed: the oracle rebuilds BOTH pair
@@ -734,7 +734,7 @@ object TextQueries {
             col("n_hit").cast("double") / col("n_exact"))
             .otherwise(lit(1.0)), 6))
     },
-    Some(cappedPrefixCte + raw""",
+    cappedPrefixCte + raw""",
       epairs AS (SELECT p.da, p.db
                  FROM (SELECT a.doc_id AS da, b.doc_id AS db,
                          count(*) AS n_common
@@ -753,7 +753,7 @@ object TextQueries {
                THEN CAST(hitp.n_hit AS DOUBLE) /
                  (SELECT count(*) FROM epairs)
                ELSE 1.0 END, 6) AS recall
-      FROM hitp"""))
+      FROM hitp""")
 
   /** Corpus drift monitor: add-1-smoothed unigram KL divergence between
     * two corpus slices (sources src0–src9 vs src10–src19) — the
@@ -786,7 +786,7 @@ object TextQueries {
         .agg(sum(col("t_ab")).cast("double").as("kl_ab"),
           sum(col("t_ba")).cast("double").as("kl_ba"))
     },
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT
           CASE WHEN CAST(regexp_extract(source, 'src([0-9]+)', 1) AS INT)
             < 10 THEN 'a' ELSE 'b' END AS grp,
@@ -810,7 +810,7 @@ object TextQueries {
         FROM counts, totals)
       SELECT v, CAST(sum(t_ab) AS DOUBLE) AS kl_ab,
         CAST(sum(t_ba) AS DOUBLE) AS kl_ba
-      FROM terms GROUP BY v"""))
+      FROM terms GROUP BY v""")
 
   /** Shared oracle CTEs for the adaptive-capped containment candidate
     * pass: cap = max(floor 10, min(df-histogram 0.99 quantile, largest
@@ -859,8 +859,8 @@ object TextQueries {
   private val containment = Q("q_dedup_containment",
     (s, dir) => Dedup.containmentPairsCapped(
       Dedup.shingles(Tables.load(s, dir, "documents")), threshold = 0.9),
-    Some(cappedContainCte + raw"""
-      SELECT da, db, n_common, containment FROM cpairs"""))
+    cappedContainCte + raw"""
+      SELECT da, db, n_common, containment FROM cpairs""")
 
   /** Adaptive-cap quality gate — the capped variant's recall against
     * the guaranteed-complete prefix-filtered twin, one hashed row
@@ -884,7 +884,7 @@ object TextQueries {
         .withColumn("recall_ok",
           col("n_hit").cast("double") / col("n_exact") >= 0.95)
     },
-    Some(cappedContainCte + raw""",
+    cappedContainCte + raw""",
       epairs AS (SELECT e.da, e.db
                  FROM (SELECT a.doc_id AS da, b.doc_id AS db,
                          count(*) AS n_common
@@ -902,7 +902,7 @@ object TextQueries {
              round(CAST(hitc.n_hit AS DOUBLE) /
                (SELECT count(*) FROM epairs), 6) AS recall,
              true AS recall_ok
-      FROM hitc"""))
+      FROM hitc""")
 
   /** EXACT containment-≥-0.9 pairs via the asymmetric prefix filter
     * (prefix on the smaller set only, full index on the larger) — the
@@ -912,7 +912,7 @@ object TextQueries {
   private val containmentExact = Q("q_dedup_containment_exact",
     (s, dir) => Dedup.prefixContainmentPairs(
       Dedup.shingles(Tables.load(s, dir, "documents")), threshold = 0.9),
-    Some(shCte + raw""",
+    shCte + raw""",
       sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       common AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_common
                  FROM sh a JOIN sh b USING (s)
@@ -923,7 +923,7 @@ object TextQueries {
       FROM common
       JOIN sizes sa ON da = sa.doc_id
       JOIN sizes sb ON db = sb.doc_id
-      WHERE CAST(n_common AS DOUBLE) / least(sa.n, sb.n) >= 0.9"""))
+      WHERE CAST(n_common AS DOUBLE) / least(sa.n, sb.n) >= 0.9""")
 
   /** Sub-document exact dedup signal (the ExactSubstr shape): every
     * 8-token gram occurring in more than one document marks its token
@@ -932,7 +932,7 @@ object TextQueries {
   private val substring = Q("q_dedup_substring",
     (s, dir) => Dedup.repeatedSpanProfile(
       Tables.load(s, dir, "documents"), k = 8),
-    Some(raw"""
+    raw"""
       WITH tk AS (SELECT doc_id,
           string_split_regex(lower(trim(text)), '\s+') AS t
         FROM documents),
@@ -954,7 +954,7 @@ object TextQueries {
              ELSE 0.0 END AS rep_frac,
         CAST(coalesce(n_rep, 0) AS DOUBLE) >= 0.5 * n_tokens
           AS mostly_dup
-      FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id"""))
+      FROM tok LEFT JOIN agg ON tok.doc_id = agg.doc_id""")
 
   /** ExactSubstr REMOVAL (the destructive half of `q_dedup_substring`):
     * duplicated 8-grams elect a min-doc_id keeper; every other document
@@ -965,7 +965,7 @@ object TextQueries {
         Tables.load(s, dir, "documents"), k = 8)
       .select(col("doc_id"), col("n_tokens"), col("n_removed"),
         col("removed_frac"), md5(col("clean_text")).as("clean_md5")),
-    Some(raw"""
+    raw"""
       WITH tk AS (SELECT doc_id,
           string_split_regex(lower(trim(text)), '\s+') AS t
         FROM documents),
@@ -988,7 +988,7 @@ object TextQueries {
         md5(coalesce(array_to_string(list_filter(t,
           (x, i) -> NOT list_contains(coalesce(cut, []), i - 1)), ' '), ''))
           AS clean_md5
-      FROM tok LEFT JOIN cut ON tok.doc_id = cut.doc_id"""))
+      FROM tok LEFT JOIN cut ON tok.doc_id = cut.doc_id""")
 
   /** The BM25 oracle CTE chain (caller prepends `WITH ` and appends a
     * final SELECT over `rk(qid, doc_id, n_terms, s, rn)`), shared with
@@ -1044,9 +1044,9 @@ object TextQueries {
         .distinct()
       TextAnalysis.bm25TopK(docs, queries, k = 5)
     },
-    Some("WITH " + bm25Ctes("doc_id < 20") + raw"""
+    "WITH " + bm25Ctes("doc_id < 20") + raw"""
       SELECT qid, doc_id, n_terms, rn AS rank, CAST(s AS DOUBLE) AS score
-      FROM rk WHERE rn <= 5"""))
+      FROM rk WHERE rn <= 5""")
 
   /** BPE-ish tokenizer-fit statistics: the first merge iteration of
     * byte-pair encoding — frequency of adjacent character pairs inside
@@ -1065,14 +1065,14 @@ object TextQueries {
         .groupBy(col("pair")).agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("pair"))
         .limit(50),
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS w
                     FROM documents),
       pairs AS (SELECT substring(w, i, 2) AS pair
                 FROM toks, unnest(range(1, length(w))) AS r(i)
                 WHERE length(w) >= 2)
       SELECT pair, count(*) AS n FROM pairs GROUP BY pair
-      ORDER BY n DESC, pair LIMIT 50"""))
+      ORDER BY n DESC, pair LIMIT 50""")
 
   /** Cross-source contamination matrix: distinct 3-shingles shared by
     * each source pair, with the overlap coefficient — the governance
@@ -1107,7 +1107,7 @@ object TextQueries {
           round(col("n_shared").cast("double") / least(col("na"), col("nb")), 6)
             .as("overlap"))
     },
-    Some(raw"""
+    raw"""
       WITH toks AS (SELECT source, string_split_regex(lower(trim(text)), '\s+') AS t
                     FROM documents),
       sh AS (SELECT DISTINCT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
@@ -1119,7 +1119,7 @@ object TextQueries {
       FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source
       JOIN sizes sa ON sa.source = a.source
       JOIN sizes sb ON sb.source = b.source
-      GROUP BY a.source, b.source"""))
+      GROUP BY a.source, b.source""")
 
   val all: Seq[Q] = Seq(tokenCount, langId, quality, vocab, fingerprints,
     exact, jaccard, minhash, lsh, incrementalLsh, simhash, simhashPairs,

@@ -61,13 +61,6 @@ object Tables {
     * reference's dominant style, `FULL:331-476`) work unchanged. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** S1 variant: snapshot-partition scan — predicate on a partition-ish
-    * column, as in `where snapshot_dt='20231130'` (`FULL:211`). On a real
-    * Hive-partitioned layout this prunes directories for free. */
-  def snapshotScan(spark: SparkSession, dir: String, name: String,
-      snapshotCol: String, snapshotVal: String): DataFrame =
-    load(spark, dir, name).where(col(snapshotCol) === lit(snapshotVal))
 }
 
 /** Sinks: parquet overwrite with Hive-style partition dirs (S2,
@@ -94,10 +87,6 @@ object Sinks {
     df.write.mode("overwrite").parquet(stagePath)
     spark.read.parquet(stagePath)
   }
-
-  /** F16: stamp the snapshot timestamp column (`FULL:1447`). */
-  def stampSnapshot(df: DataFrame, colName: String = "snapshot_dt"): DataFrame =
-    df.withColumn(colName, current_timestamp())
 
   /** Size-managed write: range-partition on a sort key, sort within
     * partitions, and cap rows per file. This is the small-file /

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DecimalType
+
+import graft.sources.{Stage, Tables}
 
 /** Structured Streaming over the events table.
   *
@@ -11,9 +12,9 @@ import org.apache.spark.sql.types._
   * are snapshot predicates + anti-join deltas + idempotent partition
   * overwrite. This module supplies the streaming-native equivalents a
   * large-scale pipeline needs: file-source → watermark → windowed
-  * aggregation → sink. Locally a batch of parquet drives the stream to
-  * completion with Trigger.AvailableNow, which is also the 100 TB
-  * catch-up pattern (process-available-then-stop on a schedule).
+  * aggregation → sink. Each run goes through [[CatchUp]], which owns
+  * how it starts, where it checkpoints and how it stops; a run without
+  * a work dir argument checkpoints in its query's `Stage.work` dir.
   */
 object EventsStream {
 
@@ -37,13 +38,13 @@ object EventsStream {
     * the directory layout (the r8 sf1x run silently streamed zero
     * files). Branch on the on-disk layout. */
   private def eventsSource(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.Tables.path(dir, "events")
+    val path = Tables.path(dir, "events")
     val physicalSchema = spark.read.parquet(path).schema
     val reader = spark.readStream.schema(physicalSchema).format("parquet")
     val raw =
       if (new java.io.File(path).isDirectory) reader.load(path)
       else reader.option("pathGlobFilter", "events.parquet").load(dir)
-    graft.sources.Tables.normalizeTs(raw)
+    Tables.normalizeTs(raw)
   }
 
   /** Hourly per-type counts/sums as a streaming query, run to completion
@@ -58,14 +59,8 @@ object EventsStream {
         sum(col("value").cast(DecimalType(12, 2))).cast("double").as("sum_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n"), col("sum_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    CatchUp.toMemory(stream, name, "complete",
+      CatchUp.fresh(spark, Stage.work("q_stream_events_hourly", dir)))
   }
 
   /** Streaming deduplication: dropDuplicates on the event key inside the
@@ -79,14 +74,8 @@ object EventsStream {
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    CatchUp.toMemory(stream, name, "complete",
+      CatchUp.fresh(spark, Stage.work("q_stream_dedup", dir)))
   }
 
   /** Stream-stream join: clicks joined to the same user's signups within
@@ -110,14 +99,8 @@ object EventsStream {
         col("click_ts") <= col("signup_ts") + expr("INTERVAL 1 HOUR"),
       "inner")
       .select(col("click_id"), col("user_id"), col("signup_id"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    CatchUp.toMemory(joined, name, "append",
+      CatchUp.fresh(spark, Stage.work("q_stream_stream_join", dir)))
   }
 
   /** Stream-stream LEFT OUTER join: every click, matched to a same-user
@@ -138,11 +121,8 @@ object EventsStream {
   def leftOuterJoin(spark: SparkSession, dir: String,
       workPath: String): DataFrame = {
     val name = "stream_outer_out"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workPath), true)
-    val srcPath = s"$workPath/src"
-    val ev = graft.sources.Tables.load(spark, dir, "events")
+    val srcPath = s"${CatchUp.fresh(spark, workPath)}/src"
+    val ev = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     // scalar bound fetch (fenced, A5 pattern): the sentinel must outrun
     // every real event time for the final watermark to flush all state
@@ -153,21 +133,11 @@ object EventsStream {
       java.util.Arrays.asList(
         org.apache.spark.sql.Row(-1L, flushTs, -1L, "click"),
         org.apache.spark.sql.Row(-2L, flushTs, -1L, "signup")),
-      StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType))))
-    ev.unionByName(sentinels).write.parquet(srcPath)
-    val stagedSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType)))
+      ev.schema)
+    val staged = ev.unionByName(sentinels)
+    staged.write.parquet(srcPath)
     def side(eventType: String, idAs: String, tsAs: String) =
-      spark.readStream
-        .schema(stagedSchema)
-        .parquet(srcPath)
+      CatchUp.replay(staged, srcPath)
         .filter(col("event_type") === eventType)
         .select(col("event_id").as(idAs), col("user_id"), col("ts").as(tsAs))
         .withWatermark(tsAs, "2 hours")
@@ -181,45 +151,30 @@ object EventsStream {
       "left_outer")
       .select(col("click_id"), col("user_id"), col("signup_id"),
         col("signup_id").isNotNull.as("matched"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", s"$workPath/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).filter(col("user_id") >= 0)
+    CatchUp.toMemory(joined, name, "append", workPath)
+      .filter(col("user_id") >= 0)
   }
 
   /** foreachBatch sink: per-micro-batch idempotent parquet write — the
     * production pattern for sinks Structured Streaming doesn't speak
     * natively (JDBC, document stores): each batch is a normal DataFrame,
     * written with dynamic partition overwrite so replayed batches are
-    * idempotent (`FULL:72`'s overwrite semantics, streaming edition). */
+    * idempotent (`FULL:72`'s overwrite semantics, streaming edition).
+    * The sink is `<workPath>/out`, cleared with the run's scratch:
+    * partitions an earlier invocation wrote under different data (e.g.
+    * the r8 encoding bug's 1970 dates) are not in the new batches'
+    * partition set and would otherwise survive beside the fresh ones. */
   def sinkViaForeachBatch(spark: SparkSession, dir: String,
-      outPath: String): DataFrame = {
-    // fresh run: dynamic overwrite is idempotent for REPLAYED batches,
-    // but partitions a previous invocation wrote under different data
-    // (e.g. the r8 encoding bug's 1970 dates) are not in the new
-    // batch's partition set and would survive beside the fresh ones —
-    // the sink path is per-invocation scratch, so clear it
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(outPath), true)
-    val stream = eventsSource(spark, dir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("event_date", to_date(col("ts")))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("event_date")
-          .parquet(outPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      workPath: String): DataFrame = {
+    val outPath = s"${CatchUp.fresh(spark, workPath)}/out"
+    CatchUp.eachBatch(eventsSource(spark, dir), workPath) { (batch, _) =>
+      batch
+        .withColumn("event_date", to_date(col("ts")))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_date")
+        .parquet(outPath)
+    }
     spark.read.parquet(outPath)
   }
 
@@ -228,58 +183,36 @@ object EventsStream {
     * streaming materialized view a warehouse builds without a table
     * format's MERGE INTO.
     *
-    * Mechanics: the source is staged into multiple files so
-    * `maxFilesPerTrigger=1` genuinely exercises the multi-batch path;
-    * each micro-batch runs `Merge.latestBy` (latest by EVENT time, so
-    * state converges to the same answer whatever order batches replay
-    * in) against the previous state version and writes an immutable new
-    * version directory — read-then-overwrite of live parquet is a
+    * Mechanics: the source is staged by [[CatchUp.chunked]], so the run
+    * is genuinely multi-batch; each micro-batch runs `Merge.latestBy`
+    * (latest by EVENT time, so state converges to the same answer
+    * whatever order batches replay in) against the previous state
+    * version and writes an immutable new version directory — read-then-overwrite of live parquet is a
     * self-read race, versioned snapshots are the safe idempotent form
     * (and what table formats do underneath). State size is one row per
     * key; each batch's merge is one key shuffle.
     */
   def mergeSink(spark: SparkSession, dir: String, workPath: String): DataFrame = {
     import graft.operators.Merge
-    // fresh run: versioned state + checkpoint are per-invocation scratch
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workPath), true)
-    val srcPath = s"$workPath/src"
-    graft.sources.Tables.load(spark, dir, "events")
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      .withColumn("chunk", pmod(col("event_id"), lit(4)).cast("int"))
-      .repartition(col("chunk"))
-      .write.partitionBy("chunk").parquet(srcPath)
-    val stagedSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("value", DoubleType),
-      StructField("chunk", IntegerType))) // hive-style partition column
-    val stream = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcPath)
+    val stream = CatchUp.chunked(
+      Tables.load(spark, dir, "events")
+        .select(col("event_id"), col("ts"), col("user_id"), col("value")),
+      s"${CatchUp.fresh(spark, workPath)}/src")
     @volatile var latest: Option[String] = None
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val changes = batch.select(
-          col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"), col("value").as("last_value"))
-        val target = latest match {
-          case Some(p) => spark.read.parquet(p)
-          case None => changes.limit(0)
-        }
-        val next = s"$workPath/state/v$batchId"
-        Merge.latestBy(target, changes, Seq("user_id"),
-            Seq(col("last_ts").desc, col("last_event_id").desc))
-          .write.mode("overwrite").parquet(next)
-        latest = Some(next)
+    CatchUp.eachBatch(stream, workPath) { (batch, batchId) =>
+      val changes = batch.select(
+        col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"), col("value").as("last_value"))
+      val target = latest match {
+        case Some(p) => spark.read.parquet(p)
+        case None => changes.limit(0)
       }
-      .option("checkpointLocation", s"$workPath/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      val next = s"$workPath/state/v$batchId"
+      Merge.latestBy(target, changes, Seq("user_id"),
+          Seq(col("last_ts").desc, col("last_event_id").desc))
+        .write.mode("overwrite").parquet(next)
+      latest = Some(next)
+    }
     spark.read.parquet(latest.getOrElse(
       sys.error("mergeSink: stream produced no batches")))
   }
@@ -298,13 +231,7 @@ object EventsStream {
       .groupBy(col("event_type"),
         coalesce(col("c_mktsegment"), lit("NONE")).as("segment"))
       .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    CatchUp.toMemory(stream, name, "complete",
+      CatchUp.fresh(spark, Stage.work("q_stream_static_join", dir)))
   }
 }

@@ -112,12 +112,8 @@ object Sessionize {
   def sessionizeQuery(spark: SparkSession, dir: String,
       workPath: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
     val name = "stream_sessionize_out"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workPath), true)
-    val srcDir = new java.io.File(s"$workPath/src")
+    val srcDir = new java.io.File(s"${CatchUp.fresh(spark, workPath)}/src")
     srcDir.mkdirs()
     val ev = graft.sources.Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"))
@@ -149,23 +145,9 @@ object Sessionize {
       val mtime = 1000000000000L + k * 60000L
       require(dst.setLastModified(mtime) && dst.lastModified() == mtime,
         s"cannot pin mtime of ${dst.getName} — ordered replay not guaranteed")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     }
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.getAbsolutePath)
-      .as[Event]
-    val q = sessionizeStream(stream).toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", s"$workPath/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    val stream = CatchUp.replay(ev, srcDir.getAbsolutePath,
+      oneFilePerBatch = true).as[Event]
+    CatchUp.toMemory(sessionizeStream(stream).toDF(), name, "append", workPath)
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types._
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** (n_events, max_ts_us) per user — running state.
   *
@@ -62,29 +61,20 @@ object TransformWithState {
     }
   }
 
-  /** Run the stateful counter over a multi-file staging of `events`
-    * (maxFilesPerTrigger=1 → real multi-batch state maintenance on the
-    * RocksDB provider), then reduce the update stream to each user's
-    * final row. */
+  /** Run the stateful counter over [[CatchUp.chunked]]'s multi-batch
+    * staging of `events` on the RocksDB provider, through [[CatchUp]] in
+    * `workPath` (`q_stream_state_reader` reads the run's checkpoint
+    * back), then reduce the update stream to each user's final row. The
+    * provider is set for this run only and the session's own restored
+    * after it. */
   def runningUserAggregates(spark: SparkSession, dir: String,
       workPath: String): DataFrame = {
     val name = "tws_out"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(workPath), true)
-    val srcPath = s"$workPath/src"
-    graft.sources.Tables.load(spark, dir, "events")
+    val staged = graft.sources.Tables.load(spark, dir, "events")
       .select(col("event_id"),
         graft.functions.Scalars.epochMicros(col("ts")).as("ts_us"),
         col("user_id"))
-      .withColumn("chunk", pmod(col("event_id"), lit(4)).cast("int"))
-      .repartition(col("chunk"))
-      .write.partitionBy("chunk").parquet(srcPath)
-    val stagedSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts_us", LongType),
-      StructField("user_id", LongType),
-      StructField("chunk", IntegerType)))
+    val srcPath = s"${CatchUp.fresh(spark, workPath)}/src"
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProvider = spark.conf.getOption(providerKey)
     spark.conf.set(providerKey,
@@ -92,26 +82,15 @@ object TransformWithState {
     try {
       val sq = spark
       import sq.implicits._
-      val updates = spark.readStream
-        .schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcPath)
+      val updates = CatchUp.chunked(staged, srcPath)
         .select(col("user_id"), col("event_id"), col("ts_us"))
         .as[(Long, Long, Long)]
         .groupByKey(_._1)
         .mapValues(r => (r._2, r._3))
         .transformWithState(new CountProcessor,
           TimeMode.None(), OutputMode.Update(), Encoders.product[TwsUserAgg])
-      val q = updates.toDF().writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", s"$workPath/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // final row per user = the max running count (monotone per key)
-      spark.table(name)
+      CatchUp.toMemory(updates.toDF(), name, "update", workPath)
         .groupBy(col("user_id"))
         .agg(max(col("n_events")).as("n_events"),
           max(col("last_ts_us")).as("last_ts_us"))

@@ -80,8 +80,7 @@ object Dedup {
     * no exchange and no sort on this side — no broadcast memory
     * ceiling, executor-count-parallel at any corpus size.
     * Tunable for measurement via the session conf (set 0 to force the
-    * bucketed path, mapped from SPARK_GRAFT_VERIFY_BROADCAST_BYTES by
-    * GraftSession). */
+    * bucketed path). */
   private[graft] val VerifyBroadcastBytesKey = "spark.graft.verifyBroadcastBytes"
   /** The verify fence when [[VerifyBroadcastBytesKey]] is unset. */
   private[graft] val DefaultVerifyBroadcastBytes: Double = 1.5e9
@@ -720,6 +719,36 @@ object Dedup {
         (if (withSizes) Seq(col("na"), col("nb")) else Nil)): _*)
   }
 
+  /** The two span operators' shared input, both persisted since each
+    * is read twice in one plan: `toks`, `(doc_id, t, n_tokens)` (the
+    * token array and its length), by `grams` and by the per-doc join;
+    * `grams`, `(doc_id, pos, g)` (one row per k-token gram starting at
+    * token `pos`), by the gram-keyed aggregate and the join back.
+    *
+    * The gram string exists only to be grouped and joined on — its
+    * bytes never reach the output — so it is folded to a 64-bit
+    * xxhash64 BEFORE the cache and both gram-keyed exchanges (r19,
+    * guide §2.3 "shuffle keys and metadata instead of payloads"):
+    * ~8 B/row crosses the network instead of the ~40+ B joined token
+    * string, and the cached frame shrinks the same way. Cross-doc
+    * detection and keeper election on the hash equal those on the
+    * string up to the 64-bit collision bound [[hashedPostings]]
+    * documents. */
+  private def positionalGrams(docs: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val toks = graft.CacheScope.persist(
+      docs.select(col("doc_id"), TextAnalysis.tokens.as("t"))
+        .select(col("doc_id"), col("t"),
+          size(col("t")).cast("long").as("n_tokens")))
+    val grams = graft.CacheScope.persist(
+      toks.select(col("doc_id"), posexplode(expr(
+          s"""CASE WHEN size(t) >= $k THEN
+                transform(sequence(0, size(t) - $k),
+                  i -> array_join(slice(t, i + 1, $k), ' '))
+              ELSE array() END""")).as(Seq("pos", "g")))
+        .select(col("doc_id"), col("pos"), xxhash64(col("g")).as("g")))
+    (toks, grams)
+  }
+
   /** Cross-document repeated-SPAN profile — the sub-document exact
     * dedup signal (the ExactSubstr idea: dedup repeated token spans,
     * not just whole documents, because boilerplate and quotations
@@ -735,25 +764,7 @@ object Dedup {
     * then one per-doc count — no all-pairs stage, no window over the
     * corpus; at 100 TB every stage is key-partitioned and linear. */
   def repeatedSpanProfile(docs: DataFrame, k: Int = 8): DataFrame = {
-    val toks = graft.CacheScope.persist(
-      docs.select(col("doc_id"), TextAnalysis.tokens.as("t"))
-        .select(col("doc_id"), col("t"),
-          size(col("t")).cast("long").as("n_tokens")))
-    // the gram string exists only to be grouped and joined on — its
-    // bytes never reach the output — so it is folded to a 64-bit
-    // xxhash64 BEFORE the cache and both gram-keyed exchanges (r19,
-    // guide §2.3 "shuffle keys and metadata instead of payloads"):
-    // ~8 B/row crosses the network instead of the ~40+ B joined token
-    // string, and the cached frame shrinks the same way. Cross-doc
-    // detection on the hash equals detection on the string up to the
-    // same 64-bit collision bound [[hashedPostings]] documents.
-    val grams = graft.CacheScope.persist(
-      toks.select(col("doc_id"), posexplode(expr(
-          s"""CASE WHEN size(t) >= $k THEN
-                transform(sequence(0, size(t) - $k),
-                  i -> array_join(slice(t, i + 1, $k), ' '))
-              ELSE array() END""")).as(Seq("pos", "g")))
-        .select(col("doc_id"), col("pos"), xxhash64(col("g")).as("g")))
+    val (toks, grams) = positionalGrams(docs, k)
     val crossDoc = grams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") > 1)
@@ -800,22 +811,7 @@ object Dedup {
     * all-pairs stage, no corpus-wide window, every shuffle
     * key-partitioned; the shape is unchanged at 100 TB. */
   def removeRepeatedSpans(docs: DataFrame, k: Int = 8): DataFrame = {
-    val toks = graft.CacheScope.persist(
-      docs.select(col("doc_id"), TextAnalysis.tokens.as("t"))
-        .select(col("doc_id"), col("t"),
-          size(col("t")).cast("long").as("n_tokens")))
-    // hashed-gram shuffle, exactly as in [[repeatedSpanProfile]]: the
-    // gram bytes never reach the output, so 8 B of xxhash64 crosses the
-    // two gram-keyed exchanges instead of the joined token string
-    // (keeper election on the hash = election on the string up to the
-    // 64-bit collision bound [[hashedPostings]] documents).
-    val grams = graft.CacheScope.persist(
-      toks.select(col("doc_id"), posexplode(expr(
-          s"""CASE WHEN size(t) >= $k THEN
-                transform(sequence(0, size(t) - $k),
-                  i -> array_join(slice(t, i + 1, $k), ' '))
-              ELSE array() END""")).as(Seq("pos", "g")))
-        .select(col("doc_id"), col("pos"), xxhash64(col("g")).as("g")))
+    val (toks, grams) = positionalGrams(docs, k)
     val keepers = grams.groupBy(col("g"))
       .agg(countDistinct(col("doc_id")).as("nd"),
         min(col("doc_id")).as("keeper"))
