@@ -75,9 +75,7 @@ object Flagship {
       "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0))
     val salesLob = base.filter(col("channel").isin("DIRECT", "DEALER"))
     val tvLob = base.filter(!col("channel").isin("DIRECT", "DEALER"))
-    // equi form: dedup on the broadcast side, zero fact shuffles — the
-    // general theta ladder (RepairJoin.apply) stays exercised by
-    // q_repair_ladder; both produce identical output (RepairJoinSpec)
+    // dedup on the broadcast side, zero fact shuffles (RepairJoin)
     val repairedSales = RepairJoin.equiLadder(salesLob, supplier, dimCols,
       rounds = Seq(
         Seq("k1" -> "s_suppkey", "c_nationkey" -> "s_nationkey"),

@@ -321,15 +321,8 @@ object LegBench {
         if (kTrained <= flatBelow || n.toDouble * kTrained <= workBudget) tFlat
         else tTwo.getOrElse(tFlat)))
       val t3 = System.nanoTime()
-      val asg = flatAsg.join(p, "vec_id")
-      val a = asg.select(col("cid"), col("vec_id").as("va"),
-        col("e").as("qe"), col("nrm").as("qn"))
-      val b = asg.select(col("cid"), col("vec_id").as("vb"),
-        col("e").as("ce"), col("nrm").as("cn"))
-      val nPairs = a.join(b, Seq("cid"))
-        .filter(col("va") < col("vb"))
-        .filter(expr("dot_f64(qe, ce)") / (col("qn") * col("cn")) >= tau)
-        .count()
+      val nPairs = similarity.SemDedup
+        .withinClusterPairs(flatAsg.join(p, "vec_id"), tau).count()
       rep.part("pairs", (System.nanoTime() - t3) / 1e9, nPairs)
       nPairs
     }))

@@ -56,9 +56,11 @@ object Delta {
     * EXCEPT-DISTINCT row (set ops group NULLs like groupBy does, so
     * the null semantics match `except`), and the per-side row-count
     * sums are the unprojected counts (projection never changes
-    * cardinality). The previous form ran FOUR jobs — two counts plus
-    * one aggregate-and-shuffle per MINUS direction — reading each
-    * input three times. */
+    * cardinality). With no common column the grouping is a global
+    * aggregate: one group, present on a side iff that side has rows —
+    * the one zero-column row `except` would keep. The previous form ran
+    * FOUR jobs — two counts plus one aggregate-and-shuffle per MINUS
+    * direction — reading each input three times. */
   private def diffStats(s: DataFrame, t: DataFrame,
       common: Seq[String]): (Long, Long, Long, Long) = {
     val tagged = s.select(common.map(col) :+ lit(0).as("__side"): _*)
@@ -76,26 +78,13 @@ object Delta {
   }
 
   def reconcile(src: DataFrame, tgt: DataFrame): ReconcileReport = {
-    val common = src.columns.intersect(tgt.columns).toSeq
-    if (common.isEmpty)
-      // degenerate disjoint-schema case: keep the legacy per-action form
-      // (zero-column set ops have no meaningful single-pass grouping)
-      ReconcileReport(
-        srcCount = src.count(), tgtCount = tgt.count(),
-        missingCols = src.columns.diff(tgt.columns).toSeq,
-        extraCols = tgt.columns.diff(src.columns).toSeq,
-        srcMinusTgt = src.select(common.map(col): _*)
-          .except(tgt.select(common.map(col): _*)).count(),
-        tgtMinusSrc = tgt.select(common.map(col): _*)
-          .except(src.select(common.map(col): _*)).count())
-    else {
-      val (ns, nt, smt, tms) = diffStats(src, tgt, common)
-      ReconcileReport(
-        srcCount = ns, tgtCount = nt,
-        missingCols = src.columns.diff(tgt.columns).toSeq,
-        extraCols = tgt.columns.diff(src.columns).toSeq,
-        srcMinusTgt = smt, tgtMinusSrc = tms)
-    }
+    val (ns, nt, smt, tms) =
+      diffStats(src, tgt, src.columns.intersect(tgt.columns).toSeq)
+    ReconcileReport(
+      srcCount = ns, tgtCount = nt,
+      missingCols = src.columns.diff(tgt.columns).toSeq,
+      extraCols = tgt.columns.diff(src.columns).toSeq,
+      srcMinusTgt = smt, tgtMinusSrc = tms)
   }
 
   /** U2 as a DataFrame (for oracle-checked fixtures): one row per

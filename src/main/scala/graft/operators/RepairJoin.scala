@@ -12,92 +12,39 @@ import org.apache.spark.sql.functions._
   * TV in the reference); survivors get literal defaults
   * (`mulcode='9967', forcode='95'`, `FULL:905-906,1025-1026`). Every
   * round's fan-out is deduplicated top-1-per-fact-key ordered by a
-  * dim recency column (`sallivedate desc`, W2). Branches reunite by
-  * unionAll (U1) — the reference relies on identical column order; we use
-  * unionByName to be drift-proof.
-  *
-  * Scale posture: the dim is broadcast (dealer-master-sized dims are
-  * KB–MB); each round's join is then shuffle-free, and the unmatched set
-  * shrinks monotonically, so the ladder costs ~one broadcast-hash-join
-  * pass over the fact per round with no fact re-shuffle.
+  * dim recency column (`sallivedate desc`, W2), and the reference
+  * reunites the per-round branches by unionAll (U1).
   */
 object RepairJoin {
 
-  /** One rung of the ladder: a join condition over (fact-alias "b",
-    * dim-alias "d"). */
-  type Cond = (DataFrame, DataFrame) => Column
-
-  /**
-    * @param base       fact side; must contain `baseKey` (unique row key)
-    * @param dim        dimension to attach (small; broadcast)
-    * @param dimCols    dim columns to carry onto the fact
-    * @param rounds     join conditions, tightest first
-    * @param dedupOrder per-round top-1 ordering over the joined frame
-    *                   (reference: dim recency desc); all `dimCols` are
-    *                   appended (asc) as tiebreaks, so the order is total
-    *                   per key whenever any dim column combination is
-    *                   unique per dim row — `baseKey` itself is the window
-    *                   partition key and would be a no-op tiebreak
-    * @param defaults   dimCol → literal default for never-matched rows
-    */
-  def apply(base: DataFrame, baseKey: String, dim: DataFrame,
-      dimCols: Seq[String], rounds: Seq[Cond], dedupOrder: Seq[Column],
-      defaults: Map[String, Column]): DataFrame = {
-    require(rounds.nonEmpty, "repair ladder needs at least one round")
-    require(dimCols.nonEmpty, "repair ladder needs dim columns to attach")
-    require(base.columns.intersect(dimCols).isEmpty,
-      s"dim columns ${base.columns.intersect(dimCols).mkString(",")} collide with base columns")
-    require(base.columns.contains(baseKey), s"base lacks key column $baseKey")
-    val baseCols = base.columns.toSeq
-    val outCols = baseCols ++ dimCols
-    val matchProbe = dimCols.head
-
-    var current = base
-    var branches = List.empty[DataFrame]
-    rounds.foreach { cond =>
-      val b = current.alias("b")
-      val d = dim.alias("d")
-      val joined = b.join(broadcast(d), cond(b, d), "left")
-      val selected = joined.select(
-        baseCols.map(c => col(s"b.$c")) ++ dimCols.map(c => col(s"d.$c")): _*)
-      // persist: the matched/unmatched split reads this twice and the
-      // final union re-executes every branch — without it each round's
-      // join+window pipeline is recomputed ~3× (scope-managed persist).
-      // Tiebreak on the dim columns: within a window partition baseKey is
-      // constant, so only dim-side columns can break dedupOrder ties.
-      val deduped = graft.CacheScope.persist(
-        TopK.top1PerKey(selected, Seq(col(baseKey)),
-          dedupOrder ++ dimCols.map(col)))
-      branches ::= deduped.filter(col(matchProbe).isNotNull)
-      current = deduped.filter(col(matchProbe).isNull).select(baseCols.map(col): _*)
-    }
-    val defaulted = dimCols.foldLeft(current) { (df, c) =>
-      df.withColumn(c, defaults.getOrElse(c, lit(null)))
-    }.select(outCols.map(col): _*)
-    (defaulted :: branches).map(_.select(outCols.map(col): _*))
-      .reduce(_ unionByName _)
-  }
-
-  /** The ladder specialized to equi-key rounds — every rung the reference
-    * actually runs (`FULL:738-1057` joins on dealer-code/state key sets).
-    * Semantically identical to [[apply]] with the same rounds expressed
-    * as equality conditions, but with the dedup moved to the BROADCAST
-    * side: all candidate dim rows for one fact row share that row's key
-    * values, so top-1-per-fact-key over the joined frame equals joining a
-    * dim pre-deduplicated top-1 per round key set (same ordering). Each
-    * rung is then at most 1:1 and the round precedence collapses into
-    * per-column `when` chains instead of filter/union branches.
+  /** The ladder over equi-key rounds — every rung the reference runs
+    * (`FULL:738-1057` joins on dealer-code/state key sets). The dedup
+    * sits on the BROADCAST side: all candidate dim rows for one fact row
+    * share that row's key values, so top-1-per-fact-key over the joined
+    * frame equals joining a dim pre-deduplicated top-1 per round key set
+    * (same ordering). Each rung is then at most 1:1 and the round
+    * precedence collapses into per-column `when` chains instead of the
+    * reference's filter/union branches. `OperatorsSpec` keeps the
+    * branch-and-union form (a per-rung top-1 window over the joined fact,
+    * split on match, unioned) as the reference and checks this one
+    * against it, NULL keys and empty sides included.
     *
-    * Scale contrast with [[apply]]: the general form shuffles the fact
-    * once per rung (the dedup window) and persists each rung's frame;
-    * this form never shuffles, splits, or persists the fact at all — the
+    * Scale posture: the fact is never shuffled, split or persisted — the
     * only shuffles are the per-round dim windows (dimension-sized), and
-    * the fact flows through d broadcast joins inside one codegen span.
-    * At 100 TB that is the difference between d fact-wide exchanges and
-    * zero.
+    * the fact flows through one broadcast join per rung inside one
+    * codegen span. The branch-and-union form shuffles the fact once per
+    * rung; at 100 TB that is the difference between d fact-wide
+    * exchanges and zero.
     *
-    * @param rounds per rung, the equi pairs (factCol, dimCol), tightest
-    *               first; a fact row takes the first rung that matches
+    * @param dedupOrder per-round top-1 ordering over the dim rows that
+    *                   share a round key (reference: dim recency desc);
+    *                   all `dimCols` are appended (asc) as tiebreaks, so
+    *                   the order is total whenever any dim column
+    *                   combination is unique per dim row
+    * @param rounds     per rung, the equi pairs (factCol, dimCol),
+    *                   tightest first; a fact row takes the first rung
+    *                   that matches
+    * @param defaults   dimCol → literal default for never-matched rows
     */
   def equiLadder(base: DataFrame, dim: DataFrame, dimCols: Seq[String],
       rounds: Seq[Seq[(String, String)]], dedupOrder: Seq[Column],

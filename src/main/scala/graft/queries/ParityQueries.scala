@@ -564,9 +564,10 @@ object ParityQueries {
 
   // ---------------------------------------------------------------- ladder
   /** The cascading null-repair join ladder (`FULL:738-1057`): tight key →
-    * loose key → literal defaults, W2 dedup each round, branches
-    * unioned. `o_custkey % 150` leaves ~1/3 of rows unmatched by the
-    * loose key so the default rung is exercised. */
+    * loose key → literal defaults, W2 dedup each round. The oracle spells
+    * out the reference's branch-and-union form. `o_custkey % 150` leaves
+    * ~1/3 of rows unmatched by the loose key so the default rung is
+    * exercised. */
   private val ladder = Q("q_repair_ladder",
     (s, dir) => {
       val orders = t(s, dir, "orders").select("o_orderkey", "o_custkey")
@@ -577,11 +578,11 @@ object ParityQueries {
           col("c_nationkey"))
       val dim = t(s, dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-      RepairJoin(base, "o_orderkey", dim,
+      RepairJoin.equiLadder(base, dim,
         dimCols = Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
         rounds = Seq(
-          (b, d) => d("s_suppkey") === b("k1") && d("s_nationkey") === b("c_nationkey"),
-          (b, d) => d("s_suppkey") === b("k1")),
+          Seq("k1" -> "s_suppkey", "c_nationkey" -> "s_nationkey"),
+          Seq("k1" -> "s_suppkey")),
         dedupOrder = Seq(col("s_acctbal").desc, col("s_suppkey")),
         defaults = Map(
           "s_suppkey" -> lit(-1L), "s_name" -> lit("DEFAULT"),

@@ -8,20 +8,21 @@ import graft.CacheScope
 
 /** Lloyd's k-means as pure dataflow — the codebook trainer the IVF/PQ
   * docs point at (`Knn.ivfTopK`, `Pq`), kept fully deterministic so the
-  * oracle gate can check it: centroids seed from the first k vectors,
-  * the iteration count is fixed, assignment ties break on centroid id,
-  * and recentering sums run through DECIMAL(24,12) so the means are
-  * partial-agg-order-exact. Given identical inputs both engines walk
-  * identical centroid trajectories — k-means is chaotic only across
-  * SEEDS, not within one deterministic run.
+  * oracle gate can check it: centroids seed from the `vec_id < k`
+  * vectors, the iteration count is fixed, assignment ties break on
+  * centroid id, and recentering sums run through DECIMAL(24,12) so the
+  * means are partial-agg-order-exact. Given identical inputs both
+  * engines walk identical centroid trajectories — k-means is chaotic
+  * only across SEEDS, not within one deterministic run.
   *
-  * Scale posture per iteration: assign is corpus × broadcast(k
-  * centroids) + a top-1 window on vec_id (one shuffle); recenter is a
-  * posexplode to (cluster, dim) — corpus × dims rows, the same width a
-  * feature matrix already has — aggregated in one shuffle on
-  * (cluster, dim). Centroid frames are k rows: cut, broadcast,
-  * never a bottleneck. Empty clusters drop out (standard Lloyd); k can
-  * only shrink.
+  * One Lloyd round loop, [[fitGrouped]]'s; [[fit]] is its one-group
+  * case. Scale posture per iteration: assign is corpus × broadcast(k
+  * centroids) + a `min(struct(dist, cid))` arg-min on vec_id (one
+  * shuffle); recenter is a posexplode to (cluster, dim) — corpus × dims
+  * rows, the same width a feature matrix already has — aggregated in
+  * one shuffle on (cluster, dim). Centroid frames are k rows: cut,
+  * broadcast, never a bottleneck. Empty clusters drop out (standard
+  * Lloyd); k can only shrink.
   */
 object Kmeans {
 
@@ -155,32 +156,13 @@ object Kmeans {
 
   /** Run `iters` Lloyd rounds over the embedding column; returns the
     * final centroids as (cid, cv, n_members) where `n_members` counts
-    * the assignment that produced each centroid. */
-  def fit(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k > 0 && iters > 0, "k-means needs k > 0 and iters > 0")
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    val p = CacheScope.persist(
-      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
-    var cents = p.where(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("e").as("cv"),
-        lit(1L).as("n_members"))
-    for (_ <- 1 to iters) {
-      val asg = assign(p, cents.select(col("cid"), col("cv")))
-      // the next round re-reads this k-row frame: cut (CacheScope)
-      cents = CacheScope.cut(asg.join(p, "vec_id")
-        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
-          count(lit(1))).as("m"),
-          count(lit(1)).as("n"))
-        .groupBy(col("cid"))
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(pos, m))), s -> s.m)")
-          .as("cv"),
-          max(col("n")).as("n_members"))) // n identical across dims
-    }
-    cents
-  }
+    * the assignment that produced each centroid. One constant group of
+    * [[fitGrouped]], whose round loop is the only one: the same `l2sq`,
+    * (dist, cid) arg-min and decimal means as [[assign]]. */
+  def fit(emb: DataFrame, k: Int, iters: Int): DataFrame =
+    fitGrouped(emb.select(lit(0).as("g"), col("vec_id"),
+        col("embedding").as("v")), k, iters)
+      .select(col("cid"), col("cv"), col("n_members"))
 
   /** Per-group Lloyd: an independent k-means per value of `g`, trained
     * in ONE shared dataflow — each round is a single assignment shuffle
@@ -189,10 +171,10 @@ object Kmeans {
     * would scan the sub-vector corpus `nSub` times; keying every stage
     * by the group column makes the pass count independent of `nSub`,
     * which is what survives 100 TB. Input `(g, vec_id, v)`; each
-    * group's seeds are its `vec_id < k` rows; returns `(g, cid, cv)`.
-    * Same determinism contract as [[fit]] (decimal-exact means, fixed
-    * iterations, centroid-id tiebreaks), so the oracle gate can walk
-    * the identical trajectory. */
+    * group's seeds are its `vec_id < k` rows; returns
+    * `(g, cid, cv, n_members)`. Deterministic (decimal-exact means,
+    * fixed iterations, centroid-id tiebreaks), so the oracle gate can
+    * walk the identical trajectory. */
   def fitGrouped(sub: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters > 0, "k-means needs k > 0 and iters > 0")
     graft.functions.VectorExpressions.register(sub.sparkSession)
@@ -216,11 +198,13 @@ object Kmeans {
         asg.select(col("g"), col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy(col("g"), col("cid"), col("pos"))
           .agg((sum(col("x").cast("decimal(24,12)")).cast("double") /
-            count(lit(1))).as("m"))
+            count(lit(1))).as("m"),
+            count(lit(1)).as("n"))
           .groupBy(col("g"), col("cid"))
           .agg(expr(
             "transform(sort_array(collect_list(struct(pos, m))), t -> t.m)")
-            .as("cv")))
+            .as("cv"),
+            max(col("n")).as("n_members"))) // n identical across dims
     }
     cents
   }

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * deterministic equivalent, matching [[graft.text.Dedup.exactDedup]]'s
   * keeper convention so downstream stages compose).
   *
-  * Dataflow at 100 TB: [[Kmeans.fit]] is iterative
+  * Dataflow at 100 TB: [[Kmeans.fit]] (the one Lloyd round loop,
+  * shared with PQ's per-subspace codebooks) is iterative
   * broadcast-assign/recenter (centroid frames are k rows, always
   * broadcast); the final assignment runs [[Kmeans.assignTwoLevel]] —
   * exact triangle-inequality group pruning over ⌈√k⌉ super-clusters,
@@ -28,11 +29,26 @@ import org.apache.spark.sql.functions._
   * the flat pass (at most [[Kmeans.DefaultFlatBelow]] centroids take
   * the flat pass itself, which keeps the k = 8 oracle fixture
   * byte-identical);
-  * the pair stage is a self-equi-join on cid — quadratic only within a
-  * cluster, never across; the keep verdict is one groupBy on the
-  * dominated id. Nothing is all-pairs.
+  * the pair stage ([[withinClusterPairs]]) is a self-equi-join on
+  * cid — quadratic only within a cluster, never across; the keep
+  * verdict is one groupBy on the dominated id. Nothing is all-pairs.
   */
 object SemDedup {
+
+  /** The within-cluster pair stage: `(va, vb)` for every same-`cid`
+    * pair with `va < vb` and cosine ≥ `tau`, over an assignment joined
+    * to its prepared vectors (`cid`, `vec_id`, `e`, `nrm`). Shared with
+    * LegBench's `sem` family so the timed pairs are the shipped ones. */
+  private[graft] def withinClusterPairs(asg: DataFrame,
+      tau: Double): DataFrame = {
+    val a = asg.select(col("cid"), col("vec_id").as("va"),
+      col("e").as("qe"), col("nrm").as("qn"))
+    val b = asg.select(col("cid"), col("vec_id").as("vb"),
+      col("e").as("ce"), col("nrm").as("cn"))
+    a.join(b, Seq("cid"))
+      .filter(col("va") < col("vb"))
+      .filter(expr("dot_f64(qe, ce)") / (col("qn") * col("cn")) >= tau)
+  }
 
   /** Per-vector dedup verdict: (vec_id, cid, kept_for, n_dominators,
     * keep) — `kept_for` is the smallest same-cluster id within `tau`
@@ -45,13 +61,7 @@ object SemDedup {
     val p = graft.CacheScope.persist(Knn.prepared(emb))
     val asg = graft.CacheScope.persist(
       Kmeans.assignTwoLevel(p, cents).join(p, "vec_id"))
-    val a = asg.select(col("cid"), col("vec_id").as("va"),
-      col("e").as("qe"), col("nrm").as("qn"))
-    val b = asg.select(col("cid"), col("vec_id").as("vb"),
-      col("e").as("ce"), col("nrm").as("cn"))
-    val dominated = a.join(b, Seq("cid"))
-      .filter(col("va") < col("vb"))
-      .filter(expr("dot_f64(qe, ce)") / (col("qn") * col("cn")) >= tau)
+    val dominated = withinClusterPairs(asg, tau)
       .groupBy(col("vb").as("vec_id"))
       .agg(min(col("va")).as("kept_for"),
         count(lit(1)).as("n_dominators"))

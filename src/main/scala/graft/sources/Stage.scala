@@ -31,8 +31,11 @@ import org.apache.hadoop.util.ShutdownHookManager
 object Stage {
   val root: String = new File("target/stage").getAbsolutePath
 
+  /** The input dir as one path segment. A leading `_`/`.` run is dropped:
+    * Spark's file listing treats such a name as hidden and skips it. */
   private def tag(dir: String): String =
     dir.stripSuffix("/").replaceAll("[^A-Za-z0-9._-]", "_")
+      .replaceFirst("^[_.]+", "")
 
   def forInput(name: String, dir: String): String =
     s"$root/$name/${tag(dir)}"

@@ -884,7 +884,8 @@ object Dedup {
     * post-LSH candidate graphs — banding emits FAR fewer pairs than
     * documents. Below `smallGraphMaxEdges` directed edges the component
     * labels are computed by a driver-side union-find over ONE bounded
-    * collect of the (already persisted, already counted) edge frame;
+    * collect of the pair rows as given (union-find ignores orientation,
+    * so the symmetrized edge cache is built only when the loop runs);
     * above it, the distributed loop runs unchanged. Both paths emit the
     * identical (doc_id, component=min reachable) assignment — pinned
     * row-for-row by `Round10Spec`. The collect is FENCED: at most
@@ -897,6 +898,19 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
       smallGraphMaxEdges: Long = DefaultSmallGraphMaxEdges): DataFrame = {
+    val longKeyed = Seq("da", "db").forall(
+      pairs.schema(_).dataType == org.apache.spark.sql.types.LongType)
+    if (longKeyed) {
+      // clamped: a fence ≥ 2^32 must mean "always union-find", not wrap
+      // through Int to a negative bound that silently takes the loop
+      val maxPairs =
+        math.max(0L, math.min(smallGraphMaxEdges / 2, Int.MaxValue - 1L)).toInt
+      val probe = pairs.where(col("da").isNotNull && col("db").isNotNull)
+        .select(col("da"), col("db"))
+        .limit(maxPairs + 1).collect()
+      if (probe.length <= maxPairs)
+        return unionFindComponents(pairs.sparkSession, probe)
+    }
     // The symmetrized edge frame is cached hash-partitioned AND sorted on
     // `dst` — the key of BOTH the init aggregation and every round's
     // neighbor-min join — with a PINNED count (REPARTITION_BY_NUM, the
@@ -906,20 +920,6 @@ object Dedup {
     // the r18 shape re-shuffled the corpus-sized edge frame by dst in
     // EVERY round, the flagship's dominant 100 TB scale term).
     val edges = ccEdges(pairs)
-    val longKeyed = edges.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeyed) {
-      // src<=dst keeps each pair once (both orientations are present)
-      // while still carrying both endpoints and self-loop nodes
-      // clamped: a fence ≥ 2^32 must mean "always union-find", not wrap
-      // through Int to a negative bound that silently takes the loop
-      val maxPairs =
-        math.max(0L, math.min(smallGraphMaxEdges / 2, Int.MaxValue - 1L)).toInt
-      val probe = edges.where(col("src") <= col("dst"))
-        .limit(maxPairs + 1).collect()
-      if (probe.length <= maxPairs)
-        return unionFindComponents(pairs.sparkSession, probe)
-    }
     // initialization folds the first neighbor-min round in for free: one
     // groupBy instead of a join + cut round. Star-shaped clusters
     // (the common LSH case) converge one full round earlier. Keyed on

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -8,17 +9,80 @@ import graft.sources.Stage
 class OperatorsSpec extends SparkSuite {
   import spark.implicits._
 
+  // ---- reference: the branch-and-union theta ladder, verbatim (it was
+  // `RepairJoin.apply`; `equiLadder` must match it on equi rounds) ----
+
+  /** One rung of the ladder: a join condition over (fact-alias "b",
+    * dim-alias "d"). */
+  type Cond = (DataFrame, DataFrame) => Column
+
+  def thetaLadder(base: DataFrame, baseKey: String, dim: DataFrame,
+      dimCols: Seq[String], rounds: Seq[Cond], dedupOrder: Seq[Column],
+      defaults: Map[String, Column]): DataFrame = {
+    require(rounds.nonEmpty, "repair ladder needs at least one round")
+    require(dimCols.nonEmpty, "repair ladder needs dim columns to attach")
+    require(base.columns.intersect(dimCols).isEmpty,
+      s"dim columns ${base.columns.intersect(dimCols).mkString(",")} collide with base columns")
+    require(base.columns.contains(baseKey), s"base lacks key column $baseKey")
+    val baseCols = base.columns.toSeq
+    val outCols = baseCols ++ dimCols
+    val matchProbe = dimCols.head
+
+    var current = base
+    var branches = List.empty[DataFrame]
+    rounds.foreach { cond =>
+      val b = current.alias("b")
+      val d = dim.alias("d")
+      val joined = b.join(broadcast(d), cond(b, d), "left")
+      val selected = joined.select(
+        baseCols.map(c => col(s"b.$c")) ++ dimCols.map(c => col(s"d.$c")): _*)
+      // persist: the matched/unmatched split reads this twice and the
+      // final union re-executes every branch — without it each round's
+      // join+window pipeline is recomputed ~3× (scope-managed persist).
+      // Tiebreak on the dim columns: within a window partition baseKey is
+      // constant, so only dim-side columns can break dedupOrder ties.
+      val deduped = graft.CacheScope.persist(
+        TopK.top1PerKey(selected, Seq(col(baseKey)),
+          dedupOrder ++ dimCols.map(col)))
+      branches ::= deduped.filter(col(matchProbe).isNotNull)
+      current = deduped.filter(col(matchProbe).isNull).select(baseCols.map(col): _*)
+    }
+    val defaulted = dimCols.foldLeft(current) { (df, c) =>
+      df.withColumn(c, defaults.getOrElse(c, lit(null)))
+    }.select(outCols.map(col): _*)
+    (defaulted :: branches).map(_.select(outCols.map(col): _*))
+      .reduce(_ unionByName _)
+  }
+
+  private val ladderDimCols = Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+  private val ladderOrder = Seq(col("s_acctbal").desc, col("s_suppkey"))
+  private val ladderDefaults = Map("s_suppkey" -> lit(-1L),
+    "s_name" -> lit("DEFAULT"), "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0))
+
+  /** Both ladders over q_repair_ladder's two rungs, (k1, nat) then k1. */
+  private def bothLadders(base: DataFrame, dim: DataFrame): (DataFrame, DataFrame) =
+    (thetaLadder(base, "id", dim, ladderDimCols,
+      Seq((b, d) => d("s_suppkey") === b("k1") && d("s_nationkey") === b("nat"),
+        (b, d) => d("s_suppkey") === b("k1")),
+      ladderOrder, ladderDefaults),
+     RepairJoin.equiLadder(base, dim, ladderDimCols,
+      Seq(Seq("k1" -> "s_suppkey", "nat" -> "s_nationkey"), Seq("k1" -> "s_suppkey")),
+      ladderOrder, ladderDefaults))
+
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+
   test("RepairJoin: tight match wins, loose repairs, defaults fill the rest") {
     val base = Seq((1L, 10L, 1), (2L, 20L, 2), (3L, 99L, 3))
       .toDF("id", "k1", "nat")
     val dim = Seq((10L, "tight", 1, 5.0), (10L, "loose-better", 2, 9.0),
       (20L, "loose", 7, 1.0))
       .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val out = RepairJoin(base, "id", dim,
+    val out = RepairJoin.equiLadder(base, dim,
       dimCols = Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
       rounds = Seq(
-        (b, d) => d("s_suppkey") === b("k1") && d("s_nationkey") === b("nat"),
-        (b, d) => d("s_suppkey") === b("k1")),
+        Seq("k1" -> "s_suppkey", "nat" -> "s_nationkey"),
+        Seq("k1" -> "s_suppkey")),
       dedupOrder = Seq(col("s_acctbal").desc, col("s_suppkey")),
       defaults = Map("s_suppkey" -> lit(-1L), "s_name" -> lit("DEFAULT"),
         "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0)))
@@ -40,25 +104,39 @@ class OperatorsSpec extends SparkSuite {
       (10L, "loose-better", 2, 9.0), (20L, "loose", 7, 1.0),
       (20L, "loose-worse", 7, 0.5))
       .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val dimCols = Seq("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-    val rounds = Seq(
-      Seq("k1" -> "s_suppkey", "nat" -> "s_nationkey"),
-      Seq("k1" -> "s_suppkey"))
-    val order = Seq(col("s_acctbal").desc, col("s_suppkey"))
-    val defaults = Map("s_suppkey" -> lit(-1L), "s_name" -> lit("DEFAULT"),
-      "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0))
-    val general = RepairJoin(base, "id", dim, dimCols,
-      Seq((b, d) => d("s_suppkey") === b("k1") && d("s_nationkey") === b("nat"),
-        (b, d) => d("s_suppkey") === b("k1")),
-      order, defaults).collect().map(_.toSeq).sortBy(_.toString)
-    val equi = RepairJoin.equiLadder(base, dim, dimCols, rounds, order, defaults)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(general.sameElements(equi))
+    CacheScope.scoped {
+      val (general, equi) = bothLadders(base, dim)
+      assert(sortedRows(general) == sortedRows(equi))
+    }
     // and the equi plan never exchanges the fact: no shuffle reaches a
     // path that includes the base rows (dim-side windows do shuffle)
-    val plan = RepairJoin.equiLadder(base, dim, dimCols, rounds, order, defaults)
-      .queryExecution.executedPlan.toString
+    val plan = bothLadders(base, dim)._2.queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"))
+  }
+
+  test("RepairJoin.equiLadder ≡ theta ladder: NULL keys, no match, all match, empty sides") {
+    val dim = Seq((10L, "tight", 1, 5.0), (10L, "tight-dup", 1, 5.0),
+      (10L, "loose-better", 2, 9.0), (20L, "loose", 7, 1.0),
+      (20L, "loose-worse", 7, 0.5), (30L, null, 3, 2.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    def base(rows: (Long, Option[Long], Option[Int])*): DataFrame =
+      rows.toDF("id", "k1", "nat")
+    val cases = Seq(
+      "NULL fact keys" -> (base((1L, None, Some(1)), (2L, Some(10L), None),
+        (3L, None, None), (4L, Some(20L), Some(7))), dim),
+      "no match" -> (base((1L, Some(98L), Some(1)), (2L, Some(99L), None)), dim),
+      "all match tight" -> (base((1L, Some(10L), Some(1)), (2L, Some(20L), Some(7)),
+        (3L, Some(30L), Some(3))), dim),
+      "all match loose" -> (base((1L, Some(10L), Some(5)), (2L, Some(20L), Some(5)),
+        (3L, Some(30L), None)), dim),
+      "empty fact" -> (base(), dim),
+      "empty dim" -> (base((1L, Some(10L), Some(1)), (2L, None, None)), dim.limit(0)))
+    for ((name, (b, d)) <- cases) CacheScope.scoped {
+      val (general, equi) = bothLadders(b, d)
+      assert(general.schema == equi.schema, name)
+      assert(sortedRows(general) == sortedRows(equi), name)
+      assert(equi.count() == b.count(), s"$name: one row per fact row")
+    }
   }
 
   test("Quantize.int8Profile: absmax scheme on known vectors, zero-vector guard") {
@@ -131,6 +209,43 @@ class OperatorsSpec extends SparkSuite {
     val back = spark.read.parquet(out)
     assert(back.count() == df.count())
     assert(back.select("surrogate_id").distinct().count() == df.count())
+  }
+
+  // ---- reference: reconcile's per-action form for disjoint schemas,
+  // verbatim (four jobs; `diffStats` now serves zero common columns) ----
+  private def perActionReconcile(src: DataFrame,
+      tgt: DataFrame): Delta.ReconcileReport = {
+    val common = src.columns.intersect(tgt.columns).toSeq
+    Delta.ReconcileReport(
+      srcCount = src.count(), tgtCount = tgt.count(),
+      missingCols = src.columns.diff(tgt.columns).toSeq,
+      extraCols = tgt.columns.diff(src.columns).toSeq,
+      srcMinusTgt = src.select(common.map(col): _*)
+        .except(tgt.select(common.map(col): _*)).count(),
+      tgtMinusSrc = tgt.select(common.map(col): _*)
+        .except(src.select(common.map(col): _*)).count())
+  }
+
+  test("Delta.reconcile on disjoint schemas: per-action counts and columns, set-exact MINUS, each side empty or not") {
+    val src = Seq((1L, "a"), (1L, "a"), (2L, null)).toDF("k", "v")
+    val tgt = Seq((7, 1.5), (8, 2.5)).toDF("x", "y")
+    // set MINUS over the zero-column projection: a non-empty side holds
+    // the one empty tuple. Spark's own except, over a constant column.
+    def minus(a: DataFrame, b: DataFrame): Long =
+      a.select(lit(1)).except(b.select(lit(1))).count()
+    for (s <- Seq(src, src.limit(0)); t <- Seq(tgt, tgt.limit(0))) {
+      val got = Delta.reconcile(s, t)
+      val legacy = perActionReconcile(s, t)
+      val at = s"src ${s.count()} rows, tgt ${t.count()} rows"
+      assert(got.copy(srcMinusTgt = 0L, tgtMinusSrc = 0L) ==
+        legacy.copy(srcMinusTgt = 0L, tgtMinusSrc = 0L), at)
+      assert((got.srcMinusTgt, got.tgtMinusSrc) == ((minus(s, t), minus(t, s))), at)
+      assert(got.srcMinusTgt == (if (s.count() > 0 && t.count() == 0) 1L else 0L), at)
+      assert(!got.ok, at)
+      // the per-action form counted 1 both ways on every input: a
+      // zero-column DISTINCT is a global aggregate, one row even when empty
+      assert((legacy.srcMinusTgt, legacy.tgtMinusSrc) == ((1L, 1L)), at)
+    }
   }
 
   test("Delta.reconcile flags equal frames as ok and diffs as not") {

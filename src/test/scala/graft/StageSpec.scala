@@ -40,9 +40,23 @@ class StageSpec extends SparkSuite {
 
   test("Stage.root is target/stage under the working directory") {
     assert(Stage.root == new File("target/stage").getAbsolutePath)
-    assert(Stage.forInput("q", "/data/sf0.01") == s"${Stage.root}/q/_data_sf0.01")
+    assert(Stage.forInput("q", "/data/sf0.01") == s"${Stage.root}/q/data_sf0.01")
     assert(Stage.work("q", "/data/sf0.01") ==
-      s"${Stage.root}/q/_data_sf0.01_p${ProcessHandle.current().pid()}")
+      s"${Stage.root}/q/data_sf0.01_p${ProcessHandle.current().pid()}")
+  }
+
+  test("a stage dir's name never starts with _ or . (Spark lists such names as hidden)") {
+    val pid = ProcessHandle.current().pid()
+    for (dir <- Seq("/root/testdata/sf0.01", "/data/sf0.01/", "./target/sf1x",
+        "../sf10x", ".hidden/sf", "_sf", "sf0.1")) {
+      for (path <- Seq(Stage.forInput("q", dir), Stage.work("q", dir))) {
+        val name = new File(path).getName
+        assert(!name.startsWith("_") && !name.startsWith("."), s"$dir -> $path")
+        assert(new File(path).getParent == s"${Stage.root}/q", s"$dir -> $path")
+      }
+    }
+    assert(Stage.forInput("q", "/root/testdata/sf0.01").endsWith("/q/root_testdata_sf0.01"))
+    assert(Stage.work("q", "../sf10x").endsWith(s"/q/sf10x_p$pid"))
   }
 
   test("work dirs are removed by the cleanup and at JVM exit; forInput stages are kept") {
