@@ -109,7 +109,7 @@ object GenScale {
     }
     val widen = args.lift(4).map(_.toInt).getOrElse(1)
     val spark = GraftSession.local(GraftSession.envCpus)
-    def load(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def load(t: String) = graft.sources.Tables.read(spark, s"$src/$t.parquet")
     def save(t: String)(df: => DataFrame): Unit =
       if (want(t)) df.write.mode("overwrite").parquet(s"$out/$t.parquet")
 

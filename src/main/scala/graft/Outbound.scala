@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Delta
-import graft.sources.{Sinks, Stage}
+import graft.sources.{Sinks, Stage, Tables}
 
 /** EP2 — the outbound datalake → document-store job (`PUSH`, SURVEY.md §3):
   * read the structured output, select only-new documents via the
@@ -47,7 +47,7 @@ object Outbound {
     val stagePath = sharedStagePath(dir)
     val report = sharedStages.computeIfAbsent(dir,
       _ => push(spark, dir, stagePath).report)
-    PushResult(spark.read.parquet(stagePath), report)
+    PushResult(Tables.read(spark, stagePath), report)
   }
 
   def push(spark: SparkSession, dir: String,

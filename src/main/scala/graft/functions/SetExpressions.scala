@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -174,13 +175,17 @@ case class SortedIntersectCountI32(left: Expression, right: Expression)
 
 object SetExpressions {
   /** Register `intersect_count_i64` / `intersect_count_i32` for SQL +
-    * Column use in this session (idempotent). */
+    * Column use in this session, once: a later call finds them
+    * registered and leaves the registry as it is. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count_i64",
-      exprs => SortedIntersectCountI64(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count_i32",
-      exprs => SortedIntersectCountI32(exprs(0), exprs(1)), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier("intersect_count_i64"))) {
+        registry.createOrReplaceTempFunction("intersect_count_i64",
+          exprs => SortedIntersectCountI64(exprs(0), exprs(1)), "built-in")
+        registry.createOrReplaceTempFunction("intersect_count_i32",
+          exprs => SortedIntersectCountI32(exprs(0), exprs(1)), "built-in")
+      }
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,8 +68,14 @@ case class DotProductF64(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  /** Register `dot_f64` for SQL + Column use in this session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f64", exprs => DotProductF64(exprs(0), exprs(1)), "built-in")
+  /** Register `dot_f64` for SQL + Column use in this session, once: a
+    * later call finds it registered and leaves the registry as it is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier("dot_f64")))
+        registry.createOrReplaceTempFunction(
+          "dot_f64", exprs => DotProductF64(exprs(0), exprs(1)), "built-in")
+    }
+  }
 }

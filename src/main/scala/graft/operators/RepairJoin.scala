@@ -45,10 +45,21 @@ object RepairJoin {
     *                   tightest first; a fact row takes the first rung
     *                   that matches
     * @param defaults   dimCol → literal default for never-matched rows
+    * @param rungGrouped rows leave grouped by the rung that repaired
+    *                   them, defaults last, within each partition (a local
+    *                   sort, no exchange): the layout of the reference's
+    *                   per-rung union branches, in which a columnar sink
+    *                   run-length encodes the constant default columns.
+    *                   For a ladder whose output is written as it is
+    *                   (`q_repair_ladder`); where the rows are unioned
+    *                   and re-partitioned before any write (the
+    *                   flagship's two ladders) the order is lost, and the
+    *                   sort cost `outbound_push` 0.3–0.5 s a warm pass
+    *                   (perfbench etl inputs, four cores)
     */
   def equiLadder(base: DataFrame, dim: DataFrame, dimCols: Seq[String],
       rounds: Seq[Seq[(String, String)]], dedupOrder: Seq[Column],
-      defaults: Map[String, Column]): DataFrame = {
+      defaults: Map[String, Column], rungGrouped: Boolean = false): DataFrame = {
     require(rounds.nonEmpty, "repair ladder needs at least one round")
     require(dimCols.nonEmpty, "repair ladder needs dim columns to attach")
     require(rounds.forall(_.nonEmpty), "each round needs at least one equi pair")
@@ -69,6 +80,9 @@ object RepairJoin {
         when(col(s"__m$i"), col(s"__d${i}_$c")).otherwise(els)
       }.as(c)
     }
-    joined.select(base.columns.map(col) ++ repaired: _*)
+    val rung = coalesce(rounds.indices.map(i => when(col(s"__m$i"), lit(i))) :+
+      lit(rounds.size): _*)
+    (if (rungGrouped) joined.sortWithinPartitions(rung) else joined)
+      .select(base.columns.map(col) ++ repaired: _*)
   }
 }

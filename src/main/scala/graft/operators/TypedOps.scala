@@ -21,14 +21,14 @@ object TypedOps {
 
   def orders(spark: SparkSession, dir: String): Dataset[Order] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/orders.parquet")
+    graft.sources.Tables.load(spark, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       .as[Order]
   }
 
   def customers(spark: SparkSession, dir: String): Dataset[Customer] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/customer.parquet")
+    graft.sources.Tables.load(spark, dir, "customer")
       .select("c_custkey", "c_name", "c_mktsegment")
       .as[Customer]
   }

@@ -586,7 +586,8 @@ object ParityQueries {
         dedupOrder = Seq(col("s_acctbal").desc, col("s_suppkey")),
         defaults = Map(
           "s_suppkey" -> lit(-1L), "s_name" -> lit("DEFAULT"),
-          "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0)))
+          "s_nationkey" -> lit(-1), "s_acctbal" -> lit(0.0)),
+        rungGrouped = true)
     },
     """
       WITH base AS (
@@ -766,9 +767,8 @@ object ParityQueries {
   private val docNested = Q("q_doc_assembly_nested",
     (s, dir) => {
       val work = Stage.work("q_doc_assembly_nested", dir)
-      Documents.prospectDocument(docInput(s, dir))
-        .write.mode("overwrite").parquet(work)
-      flattenProspectDoc(s.read.parquet(work))
+      flattenProspectDoc(
+        Sinks.stageOut(s, Documents.prospectDocument(docInput(s, dir)), work))
     },
     docFlatSql)
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Stage, Tables}
+import graft.sources.{Sinks, Stage, Tables}
 import graft.multimodal.Multimodal
 import graft.streaming.EventsStream
 
@@ -268,9 +268,7 @@ object PipelineQueries {
   private val flagship = Q("q_flagship_pipeline",
     (s, dir) => {
       val work = Stage.work("q_flagship_pipeline", dir)
-      graft.Flagship.prospectPipeline(s, dir)
-        .write.mode("overwrite").parquet(work)
-      flattenDoc(s.read.parquet(work))
+      flattenDoc(Sinks.stageOut(s, graft.Flagship.prospectPipeline(s, dir), work))
     },
     flagshipFlatSql(""))
 
@@ -445,9 +443,8 @@ object PipelineQueries {
   private val outbound = Q("q_outbound_push",
     (s, dir) => {
       val work = Stage.work("q_outbound_push", dir)
-      graft.Outbound.shared(s, dir).docs
-        .write.mode("overwrite").parquet(s"$work/docs_nested")
-      flattenDoc(s.read.parquet(s"$work/docs_nested"))
+      flattenDoc(Sinks.stageOut(s, graft.Outbound.shared(s, dir).docs,
+        s"$work/docs_nested"))
     },
     flagshipFlatSql("WHERE o_orderkey % 2 = 1"))
 

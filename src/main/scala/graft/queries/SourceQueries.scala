@@ -150,7 +150,7 @@ object SourceQueries {
       val src = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       Sinks.writePartitioned(src, path, Seq("o_orderstatus"))
-      s.read.parquet(path)
+      Tables.readAs(s, Sinks.partitionedSchema(src.schema, Seq("o_orderstatus")), path)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     },
     """
@@ -319,7 +319,7 @@ object SourceQueries {
       Sinks.compactWrite(
         Tables.load(s, dir, "documents").select("doc_id", "source", "n_chars"),
         path, col("doc_id"), nPartitions = 4, maxRecordsPerFile = 100L)
-      s.read.parquet(path).select("doc_id", "source", "n_chars")
+      Tables.read(s, path).select("doc_id", "source", "n_chars")
     },
     "SELECT doc_id, source, n_chars FROM documents")
 
@@ -371,14 +371,14 @@ object SourceQueries {
     * is asserted in LayoutTemporalSpec. */
   private val prunedScan = Q("q_skip_pruned_scan",
     (s, dir) => {
-      val path = Stage.work("q_skip_pruned_scan", dir)
-      graft.functions.ZOrder.clusterByZ(
+      val staged = Sinks.stageOut(s,
+        graft.functions.ZOrder.clusterByZ(
           Tables.load(s, dir, "lineitem")
             .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-          col("l_partkey"), col("l_suppkey"), 16)
-        .write.mode("overwrite").parquet(path)
+          col("l_partkey"), col("l_suppkey"), 16),
+        Stage.work("q_skip_pruned_scan", dir))
       graft.sources.DataSkipping
-        .rangeScan(s, path, "l_partkey", lo = 100L, hi = 500L)
+        .rangeScan(staged, "l_partkey", lo = 100L, hi = 500L)
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
     },
     """
@@ -462,11 +462,10 @@ object SourceQueries {
   private val fileProvenance = Q("q_s14_file_provenance",
     (s, dir) => {
       val path = Stage.forInput("q_s14_file_provenance", dir)
-      Tables.load(s, dir, "documents")
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(path)
       // part ordinal, not the raw file name (per-job UUID — see S13)
-      s.read.parquet(path)
+      Sinks.stageOut(s,
+          Tables.load(s, dir, "documents").repartitionByRange(4, col("doc_id")),
+          path)
         .select(regexp_extract(col("_metadata.file_name"),
             "part-([0-9]+)", 1).cast("long").as("file_idx"),
           col("doc_id"))
@@ -639,8 +638,7 @@ object SourceQueries {
       // residual hazard — two processes on the SAME dir (campaign
       // clone + working tree) clobbering one per-dir path mid-read
       val work = Stage.work("q_s5_outbound_sampled", dir)
-      nested.write.mode("overwrite").parquet(work)
-      s.read.parquet(work).select(col("mode"),
+      Sinks.stageOut(s, nested, work).select(col("mode"),
         col("doc.doc_id").as("doc_id"), col("doc.leadid").as("leadid"),
         col("doc.lang").as("lang"), col("doc.source").as("source"))
     },

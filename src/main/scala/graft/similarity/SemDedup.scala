@@ -56,9 +56,10 @@ object SemDedup {
   def semDedup(emb: DataFrame, k: Int, iters: Int, tau: Double): DataFrame = {
     require(tau > 0 && tau <= 1, "tau in (0, 1]")
     val cents = Kmeans.fit(emb, k, iters).select(col("cid"), col("cv"))
-    // persisted: the two-level path reads the prepared frame three times
-    // (super distances, survivors, final arg-min) plus the asg join here
-    val p = graft.CacheScope.persist(Knn.prepared(emb))
+    // persisted by Knn.prepared: the two-level path reads the prepared
+    // frame three times (super distances, survivors, final arg-min) plus
+    // the asg join here
+    val p = Knn.prepared(emb)
     val asg = graft.CacheScope.persist(
       Kmeans.assignTwoLevel(p, cents).join(p, "vec_id"))
     val dominated = withinClusterPairs(asg, tau)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** File-level data skipping: a min/max stats manifest over a parquet
@@ -21,34 +21,37 @@ import org.apache.spark.sql.functions._
   */
 object DataSkipping {
 
-  /** One row per parquet file: (file, n_rows, min/max of `statCol`).
-    * `input_file_name()` is the scan-time file identity — stable for a
-    * written dataset, which is what a manifest indexes. */
-  def fileStats(spark: SparkSession, path: String, statCol: String): DataFrame =
-    spark.read.parquet(path)
+  /** One row per parquet file of `data`, a parquet scan: (file, n_rows,
+    * min/max of `statCol`). `input_file_name()` is the scan-time file
+    * identity — stable for a written dataset, which is what a manifest
+    * indexes. */
+  def fileStats(data: DataFrame, statCol: String): DataFrame =
+    data
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(statCol)).as("min_v"),
         max(col(statCol)).as("max_v"))
 
-  /** Read only the files whose [min_v, max_v] intersects [lo, hi], then
-    * re-apply the exact bounds. Returns the frame plus how many files
-    * were opened vs listed (the skip ratio a caller monitors). */
-  def prunedRead(spark: SparkSession, stats: DataFrame, statCol: String,
+  /** Read only the files of `data` whose [min_v, max_v] intersects
+    * [lo, hi], then re-apply the exact bounds. The files are read with
+    * `data`'s schema: they are part of the dataset `data` scans, so no
+    * inference job runs. Returns the frame plus how many files were
+    * opened vs listed (the skip ratio a caller monitors). */
+  def prunedRead(data: DataFrame, stats: DataFrame, statCol: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val files = stats.select(col("file"), col("min_v"), col("max_v"))
       .collect() // manifest-sized: one row per file, as any planner holds
     val keep = files.collect {
       case r if r.getLong(2) >= lo && r.getLong(1) <= hi => r.getString(0)
     }
-    val df = spark.read.parquet(keep.toSeq: _*)
+    val df = Tables.readAs(data.sparkSession, data.schema, keep.toSeq: _*)
       .where(col(statCol) >= lo && col(statCol) <= hi)
     (df, keep.length, files.length)
   }
 
-  /** Convenience: pruned range scan over a dataset with a manifest built
-    * on the fly (callers at scale persist the manifest instead). */
-  def rangeScan(spark: SparkSession, path: String, statCol: String,
+  /** Convenience: pruned range scan over `data` with a manifest built on
+    * the fly (callers at scale persist the manifest instead). */
+  def rangeScan(data: DataFrame, statCol: String,
       lo: Long, hi: Long): DataFrame =
-    prunedRead(spark, fileStats(spark, path, statCol), statCol, lo, hi)._1
+    prunedRead(data, fileStats(data, statCol), statCol, lo, hi)._1
 }

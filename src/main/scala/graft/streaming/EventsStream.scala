@@ -39,7 +39,7 @@ object EventsStream {
     * files). Branch on the on-disk layout. */
   private def eventsSource(spark: SparkSession, dir: String): DataFrame = {
     val path = Tables.path(dir, "events")
-    val physicalSchema = spark.read.parquet(path).schema
+    val physicalSchema = Tables.read(spark, path).schema
     val reader = spark.readStream.schema(physicalSchema).format("parquet")
     val raw =
       if (new java.io.File(path).isDirectory) reader.load(path)
@@ -175,7 +175,7 @@ object EventsStream {
         .partitionBy("event_date")
         .parquet(outPath)
     }
-    spark.read.parquet(outPath)
+    Tables.read(spark, outPath)
   }
 
   /** Streaming MERGE materialization: maintain a latest-state-per-user
@@ -204,7 +204,7 @@ object EventsStream {
         col("user_id"), col("ts").as("last_ts"),
         col("event_id").as("last_event_id"), col("value").as("last_value"))
       val target = latest match {
-        case Some(p) => spark.read.parquet(p)
+        case Some(p) => Tables.read(spark, p)
         case None => changes.limit(0)
       }
       val next = s"$workPath/state/v$batchId"
@@ -213,7 +213,7 @@ object EventsStream {
         .write.mode("overwrite").parquet(next)
       latest = Some(next)
     }
-    spark.read.parquet(latest.getOrElse(
+    Tables.read(spark, latest.getOrElse(
       sys.error("mergeSink: stream produced no batches")))
   }
 
@@ -224,7 +224,7 @@ object EventsStream {
     * at scale the dim is broadcast into each batch. */
   def enrichedStream(spark: SparkSession, dir: String): DataFrame = {
     val name = "stream_enriched_out"
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
+    val dim = Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val stream = eventsSource(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"), "left")

@@ -878,8 +878,8 @@ object Dedup {
     * (convergence), never row data.
     *
     * Size-adaptive dispatch (same shape as `jaccardPairs`' pair-mass
-    * dispatch): the iterative loop costs ~10 fixed job latencies (init
-    * cut + 2 cuts and a convergence probe per round) no
+    * dispatch): the iterative loop costs ~10 fixed job latencies (pair
+    * cut, init cut + 2 cuts and a convergence probe per round) no
     * matter how small the graph is, which dominates end-to-end time on
     * post-LSH candidate graphs — banding emits FAR fewer pairs than
     * documents. Below `smallGraphMaxEdges` directed edges the component
@@ -963,12 +963,16 @@ object Dedup {
   /** The CC loop's pinned co-partitioned edge cache (see the
     * [[connectedComponents]] body comment) — `private[graft]` so the
     * plan-assertion spec exercises the PRODUCTION frame, not a mirror
-    * that can drift. */
+    * that can drift. The pair rows are cut first: the cache's plan then
+    * starts at a scan of the cut, not at the pairs' own lineage (the
+    * LSH band cache of `lshCandidates`), which every round's plan would
+    * otherwise print nested inside it. */
   private[graft] def ccEdges(pairs: DataFrame): DataFrame = {
     val parts = pairs.sparkSession.sessionState.conf.numShufflePartitions
+    val p = graft.CacheScope.cut(pairs.select(col("da"), col("db")))
     graft.CacheScope.persist(
-      pairs.select(col("da").as("src"), col("db").as("dst"))
-        .union(pairs.select(col("db").as("src"), col("da").as("dst")))
+      p.select(col("da").as("src"), col("db").as("dst"))
+        .union(p.select(col("db").as("src"), col("da").as("dst")))
         .repartition(parts, col("dst"))
         .sortWithinPartitions(col("dst")))
   }

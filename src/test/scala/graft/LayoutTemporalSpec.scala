@@ -182,8 +182,9 @@ class LayoutTemporalSpec extends SparkSuite {
         (col("id") / 256).cast("long").as("y"))
     ZOrder.clusterByZ(grid, col("x"), col("y"), 16)
       .write.mode("overwrite").parquet(path)
-    val stats = DataSkipping.fileStats(spark, path, "x")
-    val (df, opened, listed) = DataSkipping.prunedRead(spark, stats, "x",
+    val data = graft.sources.Tables.read(spark, path)
+    val stats = DataSkipping.fileStats(data, "x")
+    val (df, opened, listed) = DataSkipping.prunedRead(data, stats, "x",
       lo = 10L, hi = 40L)
     // correctness: exactly the predicate's rows survive
     assert(df.count() == 31L * 256L)

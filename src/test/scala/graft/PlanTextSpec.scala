@@ -80,7 +80,7 @@ class PlanTextSpec extends SparkSuite {
       val cents = similarity.Kmeans.fit(emb, k = 100, iters = 2)
         .select(col("cid"), col("cv"))
       similarity.Kmeans.assignTwoLevel(
-        CacheScope.persist(similarity.Knn.prepared(emb)), cents, workBudget = 0.0)
+        similarity.Knn.prepared(emb), cents, workBudget = 0.0)
     })
   }
 

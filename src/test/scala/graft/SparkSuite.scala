@@ -3,10 +3,14 @@ package graft
 import java.io.File
 import java.lang.management.ManagementFactory
 import java.nio.file.Paths
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.{ListenerDrain, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (lazy; one JVM-wide session is reused across
@@ -15,6 +19,66 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   lazy val sf: String = "/root/testdata/sf0.001"
+}
+
+/** One Spark job as the listener bus saw it: `site`, the first `graft.`
+  * frame of the call site that submitted it, or else of the SQL
+  * execution it ran in (adaptive and broadcast stages are submitted from
+  * Spark's own threads), `<unknown>` if neither has one;
+  * `callSite`, the short call site Spark names the job by (`<Spark
+  * method> at <file:line>`); and whether it ran inside a SQL execution. */
+final case class LedgerJob(site: String, callSite: String, sql: Boolean) {
+  /** A parquet schema inference: Spark's footer-merge job, which a
+    * `DataFrameReader.parquet`/`load` submits while it resolves the
+    * relation, outside any SQL execution (a parquet write's jobs run
+    * inside one). */
+  def schemaInference: Boolean =
+    !sql && (callSite.startsWith("parquet at ") || callSite.startsWith("load at "))
+}
+
+/** A job ledger: the Spark jobs a block starts, each attributed to the
+  * engine code that started it — where a pass's jobs come from, and which
+  * of them are fixed per-call cost (schema inference, eager cuts). */
+object JobLedger {
+
+  /** The jobs `body` starts, in start order. */
+  def during(sc: SparkContext)(body: => Unit): Seq[LedgerJob] = {
+    // (own site, short call site, SQL execution id) per job, and each
+    // SQL execution's site
+    val jobs = new ConcurrentLinkedQueue[(Option[String], String, Option[Long])]
+    val execSites = new ConcurrentHashMap[Long, String]
+    def graftFrame(callStack: String): Option[String] =
+      callStack.linesIterator.map(_.trim).find(_.startsWith("graft."))
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        // the result stage is the job's newest; its name and details are
+        // the submitting call site's short and long forms
+        val result = e.stageInfos.maxBy(_.stageId)
+        val exec = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+        jobs.add((graftFrame(result.details), result.name, exec))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          graftFrame(s.details).foreach(execSites.put(s.executionId, _))
+        case _ =>
+      }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      ListenerDrain(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.asScala.toSeq.map { case (own, callSite, exec) =>
+      LedgerJob(own.orElse(exec.flatMap(id => Option(execSites.get(id))))
+        .getOrElse("<unknown>"), callSite, exec.nonEmpty)
+    }
+  }
+
+  /** Job counts by first `graft.` frame, largest first. */
+  def bySite(jobs: Seq[LedgerJob]): Seq[(String, Int)] =
+    jobs.groupMapReduce(_.site)(_ => 1)(_ + _).toSeq.sortBy(p => (-p._2, p._1))
 }
 
 /** Runs a main of this classpath in a fresh JVM, with the test JVM's
