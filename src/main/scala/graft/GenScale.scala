@@ -110,8 +110,12 @@ object GenScale {
     val widen = args.lift(4).map(_.toInt).getOrElse(1)
     val spark = GraftSession.local(GraftSession.envCpus)
     def load(t: String) = graft.sources.Tables.read(spark, s"$src/$t.parquet")
+    // generated inputs stay snappy like the fixtures they scale (the
+    // session writes zstd), so their bytes compare with the committed
+    // BENCH_SCALING_* runs
     def save(t: String)(df: => DataFrame): Unit =
-      if (want(t)) df.write.mode("overwrite").parquet(s"$out/$t.parquet")
+      if (want(t)) df.write.mode("overwrite")
+        .option("compression", "snappy").parquet(s"$out/$t.parquet")
 
     // dims: verbatim
     Seq("region", "nation", "supplier", "part").foreach { t =>

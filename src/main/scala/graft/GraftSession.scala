@@ -34,6 +34,43 @@ import org.apache.spark.sql.SparkSession
   *    `spark.sql.codegen.useIdInClassName=false` goes with it (see the
   *    builder): stage-numbered class names made the same plan miss the
   *    cache when AQE numbered its stages differently.
+  *  - `spark.sql.artifact.isolation.enabled=false` — Spark 4.1 runs every
+  *    SQL task of a session under that session's own executor class
+  *    loader. Janino's class-name probes while a task compiles a
+  *    generated class miss in that loader, and each miss is fetched from
+  *    the driver over RPC; the generated-class cache also keys on the
+  *    loader, so every cloned session (each stream run) compiled its
+  *    classes again. With the key off, tasks load through the
+  *    application's loader: two `q_stream_transform_state` runs in one
+  *    JVM compiled 43 then 19 classes, now 42 then 0 (sf0.001,
+  *    `CodegenCacheSpec`). The engine adds no session artifacts (jars,
+  *    files); a host that adds them per session sets the key back to
+  *    true when it builds its session (Spark reads it at session
+  *    creation only).
+  *  - `spark.sql.parquet.compression.codec=zstd` — every parquet the
+  *    engine writes (`Sinks`, the `Bucketing` stages, the stream sinks,
+  *    a host's terminal write on this session) is zstd at its default
+  *    level instead of Spark's snappy: the sink bytes are what a
+  *    deployment stores, ships and later scans. Each etl job of the
+  *    benchmark (perfbench seed 7101, one pass), output bytes snappy →
+  *    zstd:
+  *    {{{
+  *    outbound_push             497,588 → 356,742  −28.3%
+  *    q_j1_star_decode          204,037 → 144,575  −29.1%
+  *    q_repair_ladder           123,240 →  88,937  −27.8%
+  *    q_s2_partitioned_sink     192,412 → 128,444  −33.2%
+  *    q_skip_pruned_scan         89,541 →  66,579  −25.6%
+  *    q_f5_case_ladder           69,574 →  37,019  −46.8%
+  *    q_stream_transform_state    3,083 →   2,499  −18.9%
+  *    total                   1,179,475 → 824,795  −30.1%
+  *    q_flagship_curation         8,237 →   5,218  −36.7%
+  *    }}}
+  *    Stages the engine writes shrink by about the same share, and with
+  *    them Spark's size estimates for their read-backs; no join strategy
+  *    of the 204 registered queries moved at sf0.01 or sf0.1
+  *    (`plans/zstd_sinks`). A host that
+  *    needs another codec sets the key on its session, or the
+  *    `compression` option on one write; both win (`SinkCodecSpec`).
   *  - `spark.buffer.pageSize` and `spark.broadcast.blockSize`, sized by
   *    [[bufferSizes]] from the heap and the G1 region size of the JVM
   *    the builder runs in (a `local[n]` master only: there the driver
@@ -79,7 +116,8 @@ import org.apache.spark.sql.SparkSession
   * every stateful query),
   * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
   * or `spark.sql.streaming.checkpoint.fileChecksum.enabled` (durable
-  * checkpoints).
+  * checkpoints), `spark.sql.artifact.isolation.enabled` (per-session
+  * jars) or `spark.sql.parquet.compression.codec` (another codec).
   */
 object GraftSession {
 
@@ -209,6 +247,15 @@ object GraftSession {
       // Unnumbered names make identical code one class; the id stays in
       // the plan (`*(n)`) and in the generated source's comment.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // task-side compiles load through the app class loader, and every
+      // session, stream clones included, shares one generated-class
+      // cache entry per class (scaladoc above); a host that adds
+      // per-session jars sets it back to true when it builds its session
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // every parquet the engine writes is zstd at its default level,
+      // about a third fewer bytes than snappy (scaladoc above); a
+      // session key or a write's `compression` option still wins
+      .config("spark.sql.parquet.compression.codec", "zstd")
       // pages and broadcast chunks below G1's humongous threshold
       // (scaladoc above), where this JVM runs the tasks
       .config(bufferConf(master))

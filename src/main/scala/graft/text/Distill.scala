@@ -4,6 +4,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -241,6 +242,15 @@ object Distill {
     g
   }
 
+  /** One GD round's task: [[gradSums]] of each block of a partition,
+    * in block order, at the round's weights `w`. */
+  private final class GradSums(w: Array[Double])
+      extends ((TaskContext, Iterator[Block]) => Array[Array[JBigDecimal]])
+      with Serializable {
+    def apply(ctx: TaskContext, blocks: Iterator[Block]): Array[Array[JBigDecimal]] =
+      blocks.map(gradSums(_, w)).toArray
+  }
+
   /** `iters` batch-GD rounds over the feature cache; model state lives on
     * the DRIVER — the MLlib topology: the data stays distributed, the
     * ≤ dim+5-double weight array rides each round's closure, and each
@@ -248,13 +258,21 @@ object Distill {
     * result is ≤ dim+5 partial sums per partition, never row data. The
     * first job materializes the cache and returns its bucket set. A
     * bucket whose gradient is NULL (every label NULL) takes a zero step,
-    * as the oracle's `coalesce(g, 0.0)` does. */
+    * as the oracle's `coalesce(g, 0.0)` does.
+    *
+    * A round's job runs [[GradSums]] through `runJob` rather than an
+    * `rdd.map(...).collect()`: Spark's closure cleaner walks each new
+    * lambda (and `collect`'s own) with ASM on every call (19 of the 649
+    * main-thread JFR samples of one curation benchmark run), and it
+    * skips a named function class (1 sample left). The blocks' sums
+    * come back in the same partition and block order, so the
+    * driver-side reduce adds them as before. */
   private def gdTrain(cache: RDD[Block], dim: Int, ndocs: Double,
       iters: Int, lr: Double): Map[Int, Double] = {
     val slots = cache.map(blk => blk.slot.distinct).collect().flatten.distinct
     val w = new Array[Double](dim + nMetric)
     for (_ <- 1 to iters) {
-      val g = cache.map(blk => gradSums(blk, w)).collect().reduce { (a, b) =>
+      val g = cache.sparkContext.runJob(cache, new GradSums(w)).flatten.reduce { (a, b) =>
         for (i <- a.indices) a(i) = plus(a(i), b(i))
         a
       }
