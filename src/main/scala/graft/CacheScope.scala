@@ -17,10 +17,10 @@ import scala.collection.mutable.ListBuffer
   *    The frame registers with the innermost active [[scoped]] block,
   *    which unpersists it on exit; with no scope active it is a plain
   *    `persist()` the caller manages (e.g. `spark.catalog.clearCache()`).
-  *    Contract: materialize every consumer INSIDE the scope — after it
-  *    exits, re-evaluating a plan that contained a correctness-critical
-  *    persist (`TopK.surrogateKeyScalable`) may recompute
-  *    nondeterministically.
+  *    Contract: materialize every consumer INSIDE the scope; after it
+  *    exits the plan recomputes the frame. Rows whose later readers must
+  *    see one evaluation (ids tagged by `spark_partition_id()`, as in
+  *    `operators.Prefix`) are cut, not persisted.
   *  - [[cut]] a frame that later actions re-read: a seam the rest of a
   *    composition builds on, or each round of an iterative loop. Every
   *    cached `InMemoryRelation` carries (and prints) its whole cached

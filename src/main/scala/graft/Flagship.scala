@@ -15,8 +15,8 @@ import graft.operators._
   * outbound shape, `PUSH:239-345`).
   *
   * Every join is broadcast (dims are KB–MB); the fact is never shuffled
-  * except by the final surrogate-key range partitioning — the same plan
-  * shape survives a 1000-executor 100 TB run.
+  * except by the final surrogate key's range partitioning and local rank
+  * (`Prefix`) — the same plan shape survives a 1000-executor 100 TB run.
   */
 object Flagship {
 
@@ -120,8 +120,8 @@ object Flagship {
           col("prospect_type"), col("nation_name"), col("model_desc"),
           col("s_name")), 1, 2000))
 
-    // surrogate key (FULL:413) — scalable form, no global sort.
-    val keyed = TopK.surrogateKeyScalable(stage6, col("o_orderkey"),
+    // surrogate key (FULL:413) — Prefix offsets, no global sort.
+    val keyed = TopK.surrogateKey(stage6, col("o_orderkey"),
       "PM", 9, "prospect_id")
 
     // nested document (PUSH:239-345) + final select (FULL:1352-1439).
@@ -231,6 +231,6 @@ object Flagship {
     // separately
     val gated = probe("s9_distill_gate",
       corpus.join(keepIds, Seq("doc_id"), "left_semi"))
-    graft.text.Curation.packSequencesScalable(gated, seqLen = 128)
+    graft.text.Curation.packSequences(gated, seqLen = 128)
   }
 }

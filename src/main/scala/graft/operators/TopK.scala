@@ -8,10 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * W2 — top-1-per-key after fan-out joins — is the reference's canonical
   * dedup (`FULL:744-757` ×8). W1 — a global `row_number()` surrogate key
-  * (`FULL:413`) — is kept for parity but fenced: a global window is a
-  * single-partition sort, which is a non-starter at 100 TB, so the scale
-  * path is `surrogateKeyScalable` (partition-local ids + offset, the
-  * classic zipWithIndex construction — one count job, no global sort).
+  * (`FULL:413`) — runs on [[Prefix]], never as a global window: a window
+  * with no partition is a single-task sort, a non-starter at 100 TB.
   */
 object TopK {
 
@@ -35,42 +33,16 @@ object TopK {
       .drop("__rn")
   }
 
-  /** W1 (parity form): `concat('PM', lpad(row_number() over (order by key), 9, '0'))`
-    * — `FULL:413`. Correct but serializes through one partition; only for
-    * modest outputs (the reference's snapshot is ~140k rows, `CONN:80`). */
-  def surrogateKeyGlobal(df: DataFrame, orderCol: Column, prefix: String = "PM",
-      width: Int = 9, outCol: String = "surrogate_id"): DataFrame =
-    df.withColumn(outCol,
-      concat(lit(prefix),
-        lpad(row_number().over(Window.orderBy(orderCol)).cast("string"), width, "0")))
-
-  /** W1 (scale form): dense sequential ids without a global sort.
-    * Sorts within partitions only, counts rows per partition (one light
-    * job), then offsets — the standard distributed zipWithIndex. Ids are
-    * assigned in (partition, local order) order; pre-`repartitionByRange`
-    * on the order column if global order must follow `orderCol`. */
-  def surrogateKeyScalable(df: DataFrame, orderCol: Column, prefix: String = "PM",
+  /** W1: `concat('PM', lpad(row_number() over (order by key), 9, '0'))`
+    * (`FULL:413`) — the global row number is [[Prefix]]'s `start + 1`
+    * with measure 1: range partitions, local ranks and driver-side
+    * offsets, no global sort. `orderCol` must be unique for the ids to
+    * depend only on the rows (the reference orders by `leadid`). */
+  def surrogateKey(df: DataFrame, orderCol: Column, prefix: String = "PM",
       width: Int = 9, outCol: String = "surrogate_id"): DataFrame = {
-    val ranged = df.repartitionByRange(orderCol)
-      .sortWithinPartitions(orderCol)
-    // persist is load-bearing, not an optimization: offsets and the main
-    // join both consume this frame, and two independent evaluations may
-    // pick different sampled range boundaries / AQE-coalesced partition
-    // counts — inconsistent __pid spaces silently drop or duplicate rows
-    val withLocal = graft.CacheScope.persist(ranged
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__local",
-        row_number().over(Window.partitionBy(col("__pid")).orderBy(orderCol))))
-    val offsets = withLocal.groupBy(col("__pid")).count()
-      .withColumn("__offset",
-        coalesce(sum(col("count")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    withLocal.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol,
-        concat(lit(prefix),
-          lpad((col("__offset") + col("__local")).cast("string"), width, "0")))
-      .drop("__pid", "__local", "__offset")
+    val (ranked, _) = Prefix(df, Seq(orderCol), lit(1L))
+    ranked.withColumn(outCol,
+        concat(lit(prefix), lpad((col("start") + 1).cast("string"), width, "0")))
+      .drop("start")
   }
 }

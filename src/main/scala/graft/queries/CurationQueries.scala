@@ -539,8 +539,8 @@ object CurationQueries {
         true AS fp_within_bound
       FROM agg""")
 
-  /** Shared oracle for both packing forms — exact window cumsum and the
-    * scalable two-level offsets must produce identical output. */
+  /** Shared oracle for both packing names — the exact window cumsum that
+    * `Curation.packSequences`'s offsets must reproduce. */
   private val packSql = raw"""
       WITH toks AS (SELECT doc_id,
           CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT)
@@ -562,19 +562,22 @@ object CurationQueries {
         seq_last - seq_first + 1 AS n_seqs
       FROM pk"""
 
+  /** `q_pack_sequences` and `q_pack_sequences_scalable` run the one
+    * packing form (`Prefix` offsets; the window form it replaced is the
+    * reference in `PrefixSpec`); both names stay, with one oracle. */
   private val pack = Q("q_pack_sequences",
     (s, dir) => Curation.packSequences(
       Tables.load(s, dir, "documents"), seqLen = 128),
     packSelect)
 
   private val packScalable = Q("q_pack_sequences_scalable",
-    (s, dir) => Curation.packSequencesScalable(
+    (s, dir) => Curation.packSequences(
       Tables.load(s, dir, "documents"), seqLen = 128),
     packSelect)
 
   private val packManifest = Q("q_pack_manifest",
     (s, dir) => Curation.packingManifest(
-      Curation.packSequencesScalable(
+      Curation.packSequences(
         Tables.load(s, dir, "documents"), seqLen = 128),
       seqLen = 128),
     packSql + raw"""
@@ -610,7 +613,7 @@ object CurationQueries {
         .withColumn("keep", TextAnalysis.gopherMetrics(
           10, 1000, 2.0, 10.0, 0.2, 0.2).last)
         .filter(col("keep"))
-      Curation.packSequencesScalable(gated, seqLen = 128)
+      Curation.packSequences(gated, seqLen = 128)
     },
     componentsCte + raw""",
       ql AS (SELECT doc_id, $qualitySqlExpr AS q FROM toks),
@@ -708,7 +711,7 @@ object CurationQueries {
         .withColumn("keep", TextAnalysis.gopherMetrics(
           10, 1000, 2.0, 10.0, 0.2, 0.2).last)
         .filter(col("keep"))
-      Curation.packSequencesScalable(gated, seqLen = 128)
+      Curation.packSequences(gated, seqLen = 128)
   }
 
   /** kcom producers for [[pretrainSql]]: both emit (da, db, nc) over

@@ -426,7 +426,10 @@ object ParityQueries {
 
   // ---------------------------------------------------------------- W1
   /** W1: global surrogate key `concat('PM', lpad(row_number(),9,'0'))`
-    * (`FULL:413`) — parity form (single-partition window). */
+    * (`FULL:413`). `q_w1_surrogate_global` and `q_w1_surrogate_scalable`
+    * run the one form, `TopK.surrogateKey` (`Prefix` offsets, no global
+    * sort; the single-partition window it replaced is the reference in
+    * `PrefixSpec`); both names stay, with one oracle. */
   private val w1Oracle = """
       SELECT o_orderkey,
         'PM' || lpad(CAST(row_number() OVER (ORDER BY o_orderkey) AS VARCHAR),
@@ -435,16 +438,14 @@ object ParityQueries {
 
   private val w1 = Q("q_w1_surrogate_global",
     (s, dir) =>
-      TopK.surrogateKeyGlobal(
+      TopK.surrogateKey(
         t(s, dir, "orders").select("o_orderkey"),
         col("o_orderkey"), "PM", 9, "prospect_id"),
     w1Oracle)
 
-  /** W1 scale form: identical ids via range partitioning + per-partition
-    * ranks + offsets — no global sort, same oracle. */
   private val w1s = Q("q_w1_surrogate_scalable",
     (s, dir) =>
-      TopK.surrogateKeyScalable(
+      TopK.surrogateKey(
         t(s, dir, "orders").select("o_orderkey"),
         col("o_orderkey"), "PM", 9, "prospect_id"),
     w1Oracle)

@@ -307,9 +307,9 @@ object PipelineQueries {
     * in Flagship.scala). The repair ladder and model-master joins never
     * fan out on this star (s_suppkey / p_partkey are unique), so each
     * ladder collapses to per-column coalesce across its rounds'
-    * left-join results; the scalable surrogate key over unique
-    * o_orderkey equals a global row_number (the equivalence
-    * q_w1_surrogate_scalable already hash-proves). `where` lets the
+    * left-join results; the surrogate key over unique o_orderkey
+    * equals a global row_number (the equivalence q_w1_surrogate_global
+    * already hash-proves). `where` lets the
     * outbound twin filter AFTER prospect_id assignment, matching the
     * delta running over the keyed pipeline output. */
   private def flagshipFlatSql(where: String): String = s"""

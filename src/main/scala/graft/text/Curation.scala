@@ -14,9 +14,10 @@ import graft.functions.Scalars
   * re-running the pipeline — or running it on a different cluster
   * layout — assigns every document to the same split/sample, which is
   * what makes dataset versioning and incremental re-builds possible at
-  * 100 TB. All ops are narrow projections or single key-partitioned
-  * shuffles; the only global sort is the exact quantile band, which
-  * documents its approximate scale path.
+  * 100 TB. All ops are narrow projections or key-partitioned shuffles;
+  * the two that need a position in a global order (the quantile band,
+  * sequence packing) take it from `graft.operators.Prefix`, never from a
+  * global sort.
   */
 object Curation {
 
@@ -142,30 +143,18 @@ object Curation {
   }
 
   /** Keep rows whose `score` sits inside the exact [lo, hi] quantile
-    * band (rank-based: percent_rank with a unique tiebreak, so both
-    * engines compute the identical (rank-1)/(n-1) double). The window
-    * is a single global sort — the exact form, same cost as sorting the
-    * output. The 100 TB path is the same filter against thresholds from
-    * `approxQuantile` (one pass, no sort); the exact form stays the
-    * oracle-checkable fixture. */
+    * band. `q_rank` is `percent_rank` over (score, tiebreak) — with a
+    * unique tiebreak the rank is the row's position, so it is
+    * [[graft.operators.Prefix]]'s `start / (total - 1)` (0 when total ≤
+    * 1), the identical (rank-1)/(n-1) double both engines compute, with
+    * the window's NULLS FIRST order. No global sort. */
   def quantileBand(df: DataFrame, score: Column, tiebreak: Column,
       lo: Double, hi: Double): DataFrame = {
-    val w = Window.orderBy(score, tiebreak)
-    df.withColumn("q_rank", percent_rank().over(w))
+    val (ranked, n) = graft.operators.Prefix(df, Seq(score, tiebreak), lit(1L))
+    val qRank =
+      if (n > 1) col("start").cast("double") / lit((n - 1).toDouble) else lit(0.0)
+    ranked.withColumn("q_rank", qRank).drop("start")
       .filter(col("q_rank") >= lo && col("q_rank") <= hi)
-  }
-
-  /** The 100 TB path for [[quantileBand]]: band thresholds from
-    * `approxQuantile` (Greenwald-Khanna sketch — one pass, no global
-    * sort; the two threshold doubles are the only driver-side fetch),
-    * then a narrow filter. Trades the exact rank endpoints for ±relErr
-    * rank error — the right trade when the corpus doesn't fit a sort.
-    * CurationSpec pins it against the exact form: every row strictly
-    * inside the band survives in both. */
-  def quantileBandApprox(df: DataFrame, scoreCol: String,
-      lo: Double, hi: Double, relErr: Double = 0.001): DataFrame = {
-    val Array(l, h) = df.stat.approxQuantile(scoreCol, Array(lo, hi), relErr)
-    df.filter(col(scoreCol) >= l && col(scoreCol) <= h)
   }
 
   /** Fixed-size character windows with stride — sequence prep for
@@ -248,74 +237,33 @@ object Curation {
 
   // ------------------------------------------------------- sequence packing
 
-  /** Token count + deterministic shuffle key per document — the shared
-    * head of both packing forms. Hash order stands in for the "global
-    * shuffle" a training pipeline wants before packing, without rand(). */
+  /** Token count + deterministic shuffle key per document. Hash order
+    * stands in for the "global shuffle" a training pipeline wants before
+    * packing, without rand(). */
   private def packInput(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       size(TextAnalysis.tokens).cast("long").as("n_tokens"),
       Scalars.md5Long60(col("doc_id").cast("string")).as("h"))
 
-  /** Project a frame carrying (doc_id, n_tokens, start_offset) onto the
-    * packing output: which fixed-length sequences the doc occupies. */
-  private def packProject(cum: DataFrame, seqLen: Int): DataFrame = {
+  /** Concat-and-split sequence packing (the GPT-style training prep):
+    * documents are concatenated in deterministic hash order and the
+    * token stream is cut into fixed `seqLen`-token sequences. Emits
+    * each document's global token `start_offset` — [[graft.operators.Prefix]]'s
+    * `start` with measure `n_tokens`, no global sort — and the first/last
+    * sequence index it lands in. */
+  def packSequences(docs: DataFrame, seqLen: Int): DataFrame = {
+    require(seqLen > 0, "sequence length must be positive")
+    val (cum, _) = graft.operators.Prefix(packInput(docs),
+      Seq(col("h"), col("doc_id")), col("n_tokens"))
     // a zero-token doc gets a zero-width span at its offset (greatest
     // keeps the formula total; the fixtures have no empty docs)
-    cum.select(col("doc_id"), col("n_tokens"), col("start_offset"))
+    cum.select(col("doc_id"), col("n_tokens"), col("start").as("start_offset"))
       .withColumn("__last_tok",
         col("start_offset") + greatest(col("n_tokens"), lit(1L)) - 1)
       .withColumn("seq_first", expr(s"start_offset DIV $seqLen"))
       .withColumn("seq_last", expr(s"__last_tok DIV $seqLen"))
       .withColumn("n_seqs", col("seq_last") - col("seq_first") + 1)
       .drop("__last_tok")
-  }
-
-  /** Concat-and-split sequence packing (the GPT-style training prep):
-    * documents are concatenated in deterministic hash order and the
-    * token stream is cut into fixed `seqLen`-token sequences. Emits
-    * each document's global token `start_offset` and the first/last
-    * sequence index it lands in. This exact form is one global-sort
-    * window cumsum — fine to ~10^8 docs; [[packSequencesScalable]] is
-    * the 100 TB twin with identical output. */
-  def packSequences(docs: DataFrame, seqLen: Int): DataFrame = {
-    require(seqLen > 0, "sequence length must be positive")
-    val w = Window.orderBy(col("h"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    packProject(
-      packInput(docs).withColumn("start_offset",
-        coalesce(sum(col("n_tokens")).over(w), lit(0L))),
-      seqLen)
-  }
-
-  /** Scale form of [[packSequences]]: no global sort. Range-partition by
-    * the hash key, cumsum within partitions, then add broadcast
-    * per-partition prefix offsets — the same two-level technique as
-    * TopK.surrogateKeyScalable (and the same load-bearing persist: the
-    * offsets job and the main join must see one consistent partition
-    * layout). Identical ids to the exact form, proven by sharing its
-    * oracle. */
-  def packSequencesScalable(docs: DataFrame, seqLen: Int): DataFrame = {
-    require(seqLen > 0, "sequence length must be positive")
-    val ranged = packInput(docs)
-      .repartitionByRange(col("h"), col("doc_id"))
-      .sortWithinPartitions(col("h"), col("doc_id"))
-    val withLocal = graft.CacheScope.persist(ranged
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__local",
-        coalesce(sum(col("n_tokens")).over(
-          Window.partitionBy(col("__pid")).orderBy(col("h"), col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))))
-    val offsets = withLocal.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("__ptoks"))
-      .withColumn("__offset",
-        coalesce(sum(col("__ptoks")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    packProject(
-      withLocal.join(broadcast(offsets), Seq("__pid"))
-        .withColumn("start_offset", col("__offset") + col("__local")),
-      seqLen)
   }
 
   /** Packing manifest: one row per (sequence, document) occupancy with

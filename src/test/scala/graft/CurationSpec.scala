@@ -86,22 +86,6 @@ class CurationSpec extends SparkSuite {
     assert(kept.head == 6 && kept.last == 95)
   }
 
-  test("quantileBandApprox brackets the exact band within rank error") {
-    val n = 1000
-    val df = (1 to n).map(i => (i.toLong, i.toDouble)).toDF("doc_id", "sc")
-    val exact = Curation.quantileBand(df, col("sc"), col("doc_id"), 0.1, 0.9)
-      .select("doc_id").as[Long].collect().toSet
-    val approx = Curation
-      .quantileBandApprox(df, "sc", 0.1, 0.9, relErr = 0.01)
-      .select("doc_id").as[Long].collect().toSet
-    // each boundary may slide by at most relErr·n ranks
-    assert((exact diff approx).size <= 2 * (0.01 * n).toInt + 2)
-    assert((approx diff exact).size <= 2 * (0.01 * n).toInt + 2)
-    // the strict interior of the band must survive in both forms
-    val interior = (150 to 850).map(_.toLong).toSet
-    assert(interior.subsetOf(exact) && interior.subsetOf(approx))
-  }
-
   test("chunkText: stride windows cover the text, last chunk short") {
     val docs = Seq((1L, "a" * 350, 350L), (2L, "", 0L))
       .toDF("doc_id", "text", "n_chars")
@@ -225,17 +209,20 @@ class CurationSpec extends SparkSuite {
 
   test("packSequences: offsets partition the token stream; scalable twin identical") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val exact = Curation.packSequences(docs, seqLen = 64)
-    val rows = exact.select("doc_id", "n_tokens", "start_offset")
-      .as[(Long, Long, Long)].collect().sortBy(_._3)
-    // consecutive docs tile the stream with no gaps or overlaps
-    rows.sliding(2).foreach {
-      case Array(a, b) => assert(a._3 + a._2 == b._3); case _ =>
+    // the session's partitions, then three forced range partitions
+    for (confs <- Seq(Nil, PrefixSpec.threePartitions)) withConfs(confs: _*) {
+      val packed = Curation.packSequences(docs, seqLen = 64)
+      val rows = packed.select("doc_id", "n_tokens", "start_offset")
+        .as[(Long, Long, Long)].collect().sortBy(_._3)
+      // consecutive docs tile the stream with no gaps or overlaps
+      rows.sliding(2).foreach {
+        case Array(a, b) => assert(a._3 + a._2 == b._3); case _ =>
+      }
+      assert(rows.head._3 == 0L)
+      val window = PrefixSpec.packSequencesWindow(docs, seqLen = 64)
+        .collect().map(_.toSeq).sortBy(_.toString)
+      assert(packed.collect().map(_.toSeq).sortBy(_.toString).sameElements(window))
     }
-    assert(rows.head._3 == 0L)
-    val scalable = Curation.packSequencesScalable(docs, seqLen = 64)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(exact.collect().map(_.toSeq).sortBy(_.toString).sameElements(scalable))
   }
 
   test("lmScore: cross-entropy matches the closed form, rare tokens score higher") {

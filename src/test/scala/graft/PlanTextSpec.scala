@@ -15,33 +15,33 @@ import graft.text.Dedup
   * `Outbound.push`'s reconcile with a 580,532-char one (7.7 M). With the
   * seams cut (`CacheScope.cut`) and `Kmeans.fit`'s centroid rounds
   * checkpointed, each downstream plan starts at a one-line scan of the
-  * cut (40,702 and 69,160 chars at most; 2.9 M and 1.0 M of updates);
+  * cut (41,656 and 47,656 chars at most; 2.2 M and 0.8 M of updates);
   * this spec holds every execution of either composition under a fixed
   * ceiling. The same ceiling holds the pretrain twins, two-level
   * k-means, the distributed CC loop and PageRank, whose persisted rounds
   * nested each other (796,021 chars at the third round on sf0.001; cut,
-  * 29,265).
+  * 29,265), and `operators.Prefix` at 2000 shuffle partitions, whose
+  * offsets print one array entry per partition (~60,600 chars).
   */
 class PlanTextSpec extends SparkSuite {
 
-  /** Fixed per-execution ceilings on the plan description an execution
-    * starts with. The prospect build needs more room than the flagship:
-    * `surrogateKeyScalable` reads its cached frame twice within one
-    * action, so the cut of the build prints that cached plan twice. */
-  private val FlagshipCeiling = 64 * 1024
-  private val OutboundCeiling = 96 * 1024
+  /** The fixed per-execution ceiling on the plan description an
+    * execution starts with. `Outbound.push` fits it since the surrogate
+    * key cuts its ranked rows instead of persisting them (the persist's
+    * cached plan printed twice into the build's cut: 70,681 chars at
+    * most on sf0.001, now 47,656). */
+  private val Ceiling = 64 * 1024
 
-  private def assertUnderCeiling(what: String, ceiling: Int,
-      execs: Seq[SqlExecution]): Unit = {
+  private def assertUnderCeiling(what: String, execs: Seq[SqlExecution]): Unit = {
     assert(execs.nonEmpty, s"$what ran no SQL execution")
     val worst = execs.maxBy(_.startPlanChars)
     val updates = execs.map(_.updateChars.sum).sum
     info(f"$what: ${execs.size} executions, largest start plan " +
       f"${worst.startPlanChars}%,d chars (${worst.description}), " +
       f"AQE update text $updates%,d chars")
-    assert(worst.startPlanChars <= ceiling,
+    assert(worst.startPlanChars <= Ceiling,
       s"$what: '${worst.description}' started with a ${worst.startPlanChars}-char " +
-        s"plan description (ceiling $ceiling)")
+        s"plan description (ceiling $Ceiling)")
   }
 
   test("flagship curation: every execution starts with a plan under 64 KiB") {
@@ -52,7 +52,7 @@ class PlanTextSpec extends SparkSuite {
         Flagship.curationPipeline(spark, sf).write.mode("overwrite").parquet(out)
       }
     }
-    assertUnderCeiling("curationPipeline", FlagshipCeiling, execs)
+    assertUnderCeiling("curationPipeline", execs)
     assert(spark.read.parquet(out).count() > 0)
   }
 
@@ -68,14 +68,13 @@ class PlanTextSpec extends SparkSuite {
 
   for (q <- Seq("q_pretrain_full", "q_pretrain_capped", "q_graph_pagerank"))
     test(s"$q: every execution starts with a plan under 64 KiB") {
-      assertUnderCeiling(q, FlagshipCeiling,
-        written(q)(SparkEntry.queries(q)(spark, sf)))
+      assertUnderCeiling(q, written(q)(SparkEntry.queries(q)(spark, sf)))
     }
 
   test("SemDeDup k-means, two-level assignment forced: every plan under 64 KiB") {
     // k = 100 clears Kmeans.DefaultFlatBelow and workBudget = 0 forces the
     // pruned path, so the super-fit and its cuts run on sf0.001
-    assertUnderCeiling("assignTwoLevel", FlagshipCeiling, written("two_level") {
+    assertUnderCeiling("assignTwoLevel", written("two_level") {
       val emb = sources.Tables.load(spark, sf, "embeddings")
       val cents = similarity.Kmeans.fit(emb, k = 100, iters = 2)
         .select(col("cid"), col("cv"))
@@ -85,7 +84,7 @@ class PlanTextSpec extends SparkSuite {
   }
 
   test("distributed connected components: every plan under 64 KiB") {
-    assertUnderCeiling("connectedComponents", FlagshipCeiling, written("cc_loop") {
+    assertUnderCeiling("connectedComponents", written("cc_loop") {
       val docs = sources.Tables.load(spark, sf, "documents")
       Dedup.connectedComponents(Dedup.lshCandidates(Dedup.minhashSignatures(
           Dedup.shingles(docs))).select(col("da"), col("db")),
@@ -93,7 +92,21 @@ class PlanTextSpec extends SparkSuite {
     })
   }
 
-  test("outbound push: every execution starts with a plan under 96 KiB") {
+  test("Prefix at 2000 shuffle partitions: every plan under 64 KiB") {
+    // the offsets print as a literal array, one entry per range partition;
+    // a measure of 10^9 gives every offset the digits of a large run's
+    withConfs("spark.sql.shuffle.partitions" -> "2000",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val rows = spark.range(100000).toDF("k")
+      assert(rows.repartitionByRange(col("k")).rdd.getNumPartitions == 2000)
+      assertUnderCeiling("Prefix", written("prefix_2000") {
+        operators.Prefix(rows, Seq(col("k")), lit(1000000000L))._1
+          .where(col("start") % 7 === 0)
+      })
+    }
+  }
+
+  test("outbound push: every execution starts with a plan under 64 KiB") {
     spark.catalog.clearCache()
     val execs = SqlEvents.during(spark.sparkContext) {
       CacheScope.scoped {
@@ -102,6 +115,6 @@ class PlanTextSpec extends SparkSuite {
         assert(r.docs.where(col("leadid").isNotNull).count() > 0)
       }
     }
-    assertUnderCeiling("Outbound.push", OutboundCeiling, execs)
+    assertUnderCeiling("Outbound.push", execs)
   }
 }

@@ -19,6 +19,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.builder("local[4]", 4).getOrCreate()
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with the session confs set, then restore each one's
+    * previous value (or unset it). */
+  def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
 
 /** One Spark job as the listener bus saw it: `site`, the first `graft.`

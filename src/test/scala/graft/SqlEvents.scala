@@ -19,6 +19,25 @@ object SqlEvents {
 
   /** The SQL executions `body` runs, in start order. */
   def during(sc: SparkContext)(body: => Unit): Seq[SqlExecution] = {
+    val seen = events(sc)(body)
+    val updates = seen.collect { case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+      u.executionId -> u.physicalPlanDescription.length }
+      .groupMap(_._1)(_._2)
+    seen.collect { case s: SparkListenerSQLExecutionStart =>
+      SqlExecution(s.executionId, s.description, s.physicalPlanDescription.length,
+        updates.getOrElse(s.executionId, Nil))
+    }
+  }
+
+  /** Every plan description the SQL executions `body` runs rendered:
+    * each one's start plan and its AQE updates, in event order. */
+  def plansDuring(sc: SparkContext)(body: => Unit): Seq[String] =
+    events(sc)(body).collect {
+      case s: SparkListenerSQLExecutionStart => s.physicalPlanDescription
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => u.physicalPlanDescription
+    }
+
+  private def events(sc: SparkContext)(body: => Unit): Seq[SparkListenerEvent] = {
     val events = new ConcurrentLinkedQueue[SparkListenerEvent]
     val l = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -33,13 +52,6 @@ object SqlEvents {
       body
       ListenerDrain(sc)
     } finally sc.removeSparkListener(l)
-    val seen = events.asScala.toSeq
-    val updates = seen.collect { case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-      u.executionId -> u.physicalPlanDescription.length }
-      .groupMap(_._1)(_._2)
-    seen.collect { case s: SparkListenerSQLExecutionStart =>
-      SqlExecution(s.executionId, s.description, s.physicalPlanDescription.length,
-        updates.getOrElse(s.executionId, Nil))
-    }
+    events.asScala.toSeq
   }
 }
