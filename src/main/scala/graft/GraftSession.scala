@@ -199,11 +199,11 @@ object GraftSession {
       // hold exactly ONE file per bucket (repartition-before-write on
       // the bucket hash), so exposing the per-bucket sort order is
       // sound — it removes the per-join SortExec over the staged side
-      // (the verify hash-set frame, the stored band index). Spark 3+
-      // hides the order by default because multi-file buckets would
-      // need a merge-read; the legacy rule still checks
-      // one-file-per-bucket before claiming order, so multi-file
-      // bucketed tables (e.g. coLocatedOrderJoin's) keep their sorts.
+      // (the verify hash-set frame, the stored band index, both sides
+      // of coLocatedOrderJoin). Spark 3+ hides the order by default
+      // because multi-file buckets would need a merge-read; the legacy
+      // rule still checks one-file-per-bucket before claiming order, so
+      // multi-file bucketed tables keep their sorts.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // r18: without the Hadoop native lib, the stock local FS FORKS a

@@ -45,7 +45,10 @@ import graft.BenchStats.{Cell, Run}
   *    settings (`default` = [[text.Dedup.DefaultVerifyBroadcastBytes]],
   *    a number, or `0` = bucketed) CROSSED with the legs and
   *    interleaved within each rep: the same-boot A/B over
-  *    `Dedup.verifiedCommon`'s three-way dispatch. The fence is set per
+  *    `Dedup.verifiedCommon`'s three-way dispatch (whose legs give
+  *    identical pairs and keep their plan shapes in `VerifySpec`; the
+  *    fence values that select each leg come from
+  *    `Dedup.verifyEstimates`). The fence is set per
   *    cell on the session conf, which the dispatch reads at
   *    plan-construction time. The production containment leg under an
   *    event log is `SPARK_GRAFT_REPS=1 SPARK_GRAFT_LEGS=containment_capped`.

@@ -13,12 +13,12 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.sql.crossJoin.enabled`, `FULL:39`), which is O(|L|·|R|) work —
   * fine for a broadcastable dim, catastrophic if both sides are big.
   *
-  * `orEquiJoinRewrite` is the scale path: each disjunct is an equi-join
-  * (shuffle-hash/broadcast-hash, pushdown-friendly); branch matches are
-  * unioned and deduplicated on (left key, right key) so a row matched by
-  * several disjuncts appears once, exactly like the OR-join; unmatched
-  * left rows are restored with a final anti-join — semantics identical to
-  * the nested-loop LEFT OR-join, cost linear in data size.
+  * `orJoinExact` is the scale path: each disjunct is an equi-join
+  * (shuffle-hash/broadcast-hash, pushdown-friendly) over a disjoint split
+  * of the condition space, so a pair matched by several disjuncts appears
+  * once, exactly like the OR-join; unmatched left rows are restored by
+  * anti joins — semantics identical to the nested-loop LEFT OR-join,
+  * cost linear in data size, no key-uniqueness assumption.
   */
 object DisjunctiveJoin {
 
@@ -90,39 +90,5 @@ object DisjunctiveJoin {
       d.withColumn(c, lit(null).cast(right.schema(c).dataType))
     }
     matched.unionByName(padded.select(outCols.map(col): _*))
-  }
-
-  /** Scale rewrite: LEFT JOIN ON (d1 OR d2 OR ...) where each disjunct
-    * `di(l, r)` is an equi-join-able condition.
-    *
-    * @param leftKey  unique key of the left side (needed to restore
-    *                 unmatched rows and dedup multi-disjunct matches)
-    * @param rightKey unique key of the right side
-    */
-  def orEquiJoinRewrite(left: DataFrame, right: DataFrame,
-      disjuncts: Seq[(DataFrame, DataFrame) => Column],
-      leftKey: String, rightKey: String): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val rightCols = right.columns.toSeq
-    val outCols = leftCols ++ rightCols
-    // Matched pairs per disjunct (projected to plain names before the
-    // union so alias qualifiers don't leak), then set-union — dedup on
-    // the key pair: a pair matched by two disjuncts appears once, as OR.
-    val matched = disjuncts.map { d =>
-      val l = left.alias("l")
-      val r = right.alias("r")
-      l.join(r, d(l, r), "inner").select(
-        leftCols.map(c => col(s"l.$c")) ++ rightCols.map(c => col(s"r.$c")): _*)
-    }.reduce(_ unionByName _)
-    val dedup = TopK.top1PerKey(matched,
-      Seq(col(leftKey), col(rightKey)), Seq(col(leftKey)))
-    // Left rows with no match under ANY disjunct, padded with nulls.
-    val matchedKeys = dedup.select(col(leftKey).as("__mk")).distinct()
-    val unmatched = left.join(matchedKeys, col(leftKey) === col("__mk"), "left_anti")
-    val padded = rightCols.foldLeft(unmatched) { (d, c) =>
-      d.withColumn(c, lit(null).cast(right.schema(c).dataType))
-    }
-    dedup.select(outCols.map(col): _*)
-      .unionByName(padded.select(outCols.map(col): _*))
   }
 }

@@ -315,18 +315,18 @@ object ParityQueries {
     },
     j3Oracle)
 
-  /** J3 scale rewrite: same semantics as a union of equi-joins (hash
-    * joins, no nested loop) — identical oracle proves the rewrite. */
+  /** J3 scale rewrite: the OR-join as a union of equi-joins (hash
+    * joins, no nested loop, `orJoinExact`) — identical oracle proves the
+    * rewrite. */
   private val j3r = Q("q_j3_union_rewrite",
     (s, dir) => {
       val c = t(s, dir, "customer")
       val sup = t(s, dir, "supplier")
-      DisjunctiveJoin.orEquiJoinRewrite(c, sup,
+      DisjunctiveJoin.orJoinExact(c, sup,
         Seq(
           (l, r) => r("s_suppkey") === l("c_custkey") % 150,
           (l, r) => r("s_suppkey") === l("c_custkey") % 50 &&
-            r("s_nationkey") === l("c_nationkey")),
-        leftKey = "c_custkey", rightKey = "s_suppkey")
+            r("s_nationkey") === l("c_nationkey")))
         .groupBy(col("c_custkey"))
         .agg(count(col("s_suppkey")).as("n_matches"),
           min(col("s_suppkey")).as("best_supp"))

@@ -12,17 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed external table (idempotent overwrite). */
-  def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
-      path: String, buckets: Int, key: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode("overwrite")
-      .option("path", path)
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-  }
-
   private val stageSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Stage `df` as a bucketed, per-bucket-SORTED external table and
@@ -47,9 +36,9 @@ object Bucketing {
     * stage (the r13 fixed-path hazard), and repeated constructions in
     * one session never overwrite a stage an earlier plan still reads.
     * Cleanup rides [[graft.CacheScope.defer]]: inside a `scoped` block
-    * the table is dropped and its files deleted at scope exit; with no
-    * scope active the stage lives for the session (same contract as
-    * CacheScope.persist — the embedding process manages it). */
+    * the table is dropped and its files deleted at scope exit. The
+    * path is a [[Stage.work]] dir, so a stage made with no scope active
+    * lives for the session and its files are deleted at JVM exit. */
   def stageBucketed(df: DataFrame, tag: String, buckets: Int,
       keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "stageBucketed needs at least one bucket key")
@@ -58,9 +47,9 @@ object Bucketing {
     // schema separator (a tag derived from "sf0.1" would otherwise
     // resolve to schema graft_stage_..._sf0, which doesn't exist)
     val safeTag = tag.replaceAll("[^A-Za-z0-9_]", "_")
-    val id = s"${safeTag}_p${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}"
-    val table = s"graft_stage_$id"
-    val path = s"${Stage.root}/bucketed/$id"
+    val n = stageSeq.incrementAndGet()
+    val table = s"graft_stage_${safeTag}_p${ProcessHandle.current().pid()}_$n"
+    val path = Stage.work("bucketed", s"${safeTag}_$n")
     df.repartition(buckets, keys.map(col): _*)
       .write.mode("overwrite")
       .option("path", path)
@@ -77,26 +66,21 @@ object Bucketing {
     spark.table(table)
   }
 
-  /** orders ⋈ lineitem on the order key via matching bucket layouts; the
-    * sort-merge join consumes bucket-local sorted data directly (no
-    * Exchange on either side — asserted in BucketingSpec). */
-  def coLocatedOrderJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${Stage.root}/bucketed"
-    writeBucketed(spark,
-      Tables.load(spark, dir, "orders")
+  /** orders ⋈ lineitem on the order key via matching bucket layouts,
+    * both staged through [[stageBucketed]]; the sort-merge join consumes
+    * bucket-local sorted data directly (no Exchange on either side —
+    * asserted in BucketingSpec — and, one file per bucket, no Sort). */
+  def coLocatedOrderJoin(spark: SparkSession, dir: String): DataFrame =
+    stageBucketed(Tables.load(spark, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice"),
-      "b_orders", s"$base/b_orders", 8, "o_orderkey")
-    writeBucketed(spark,
-      Tables.load(spark, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice"),
-      "b_lineitem", s"$base/b_lineitem", 8, "l_orderkey")
-    spark.table("b_orders")
+      "b_orders", 8, Seq("o_orderkey"))
       .hint("merge") // force SMJ so the bucket layout (not a broadcast) carries the join
-      .join(spark.table("b_lineitem"),
+      .join(stageBucketed(Tables.load(spark, dir, "lineitem")
+          .select("l_orderkey", "l_quantity", "l_extendedprice"),
+        "b_lineitem", 8, Seq("l_orderkey")),
         col("o_orderkey") === col("l_orderkey"), "inner")
       .groupBy(col("o_orderkey"))
       .agg(count(lit(1)).as("n_items"),
         sum(col("l_quantity")).as("sum_qty"),
         max(col("o_totalprice")).as("total_price"))
-  }
 }

@@ -88,10 +88,82 @@ object Dedup {
     sh.sparkSession.conf.getOption(VerifyBroadcastBytesKey)
       .fold(DefaultVerifyBroadcastBytes)(_.toDouble)
 
-  /** The pair family's verify stage: exact per-pair intersection sizes
-    * for (da, db) candidates — `(da, db, na, nb, n_common)` with
-    * n_common the 64-bit-exact |set(da) ∩ set(db)| and na/nb the exact
-    * set sizes — dispatched ADAPTIVELY on the hash-set frame's size.
+  /** The verify dispatch's build-size estimates of a hash-set frame,
+    * `(est32, est64)`: 48 B per row plus 4 B (32-bit) or 8 B (64-bit)
+    * per posting, `postings` counting a row's. One driver aggregate. */
+  private[graft] def verifyEstimates(hs: DataFrame,
+      postings: Column = col("n")): (Long, Long) = {
+    val r = hs.agg(count(lit(1)).as("rows"),
+      coalesce(sum(postings), lit(0L)).as("postings")).head()
+    val (rows, ps) = (r.getLong(0), r.getLong(1))
+    (rows * 48L + ps * 4L, rows * 48L + ps * 8L)
+  }
+
+  /** The pair family's endpoint join: `pairs` (da, db, …) joined to the
+    * per-doc `side` once at `da` and once at `db`, carrying `cols(e)`
+    * for endpoint `e` ∈ {a, b} (hs → ha/hb, n → na/nb). */
+  private[graft] def endpointJoin(pairs: DataFrame, side: DataFrame)(
+      cols: String => Seq[Column]): DataFrame =
+    Seq("a", "b").foldLeft(pairs) { (p, e) =>
+      p.join(side.select(col("doc_id").as(s"d$e") +: cols(e): _*), Seq(s"d$e"))
+    }
+
+  /** A verified pair predicate: output column `name`, `score(c, na, nb)`
+    * from the intersection count and set sizes, MONOTONE NON-DECREASING
+    * in c (so one formula is the screen on an overcount of c, the exact
+    * filter and the output column), and the output's rounding. */
+  private[graft] final case class PairScore(name: String,
+      score: (Column, Column, Column) => Column, digits: Option[Int])
+
+  /** Containment |A∩B| / min(|A|,|B|), output rounded to 6 dp. */
+  private[graft] val Containment = PairScore("containment",
+    (c, na, nb) => c.cast("double") / least(na, nb), Some(6))
+
+  /** Jaccard |A∩B| / |A∪B| (as c grows the denominator shrinks). */
+  private[graft] val Jaccard = PairScore("jaccard",
+    (c, na, nb) => c.cast("double") / (na + nb - c), None)
+
+  /** Pairs of `common` (da, db, na, nb, n_common) scoring ≥ `threshold`:
+    * `(da, db, n_common, <p.name>)`, plus `(na, nb)` when `withSizes`
+    * (free here; lets callers pick the drop side without re-aggregating
+    * the shingle frame). */
+  private def scored(common: DataFrame, p: PairScore, threshold: Double,
+      withSizes: Boolean = false): DataFrame = {
+    val s = col(p.name)
+    common.withColumn(p.name, p.score(col("n_common"), col("na"), col("nb")))
+      .filter(s >= threshold)
+      .select((Seq(col("da"), col("db"), col("n_common"),
+          p.digits.fold(s)(d => round(s, d).as(p.name))) ++
+        (if (withSizes) Seq(col("na"), col("nb")) else Nil)): _*)
+  }
+
+  /** The exact intersection of the endpoints' 64-bit sets `ha`/`hb`:
+    * `(da, db, na, nb, n_common)`. */
+  private def exactCommon(joined: DataFrame): DataFrame =
+    joined.withColumn("n_common", expr("intersect_count_i64(ha, hb)"))
+      .select(col("da"), col("db"), col("na"), col("nb"), col("n_common"))
+
+  /** The two-phase verify: `cands` whose 32-bit merge count `c32` over
+    * `screenSide` (doc_id, hs32, n) passes `screen`, held by `pin` (ids
+    * and sizes, never arrays), re-joined to `confirmSide(survivors)`
+    * (doc_id, hs) for the exact 64-bit n_common. */
+  private def screenConfirm(cands: DataFrame, screenSide: DataFrame,
+      screen: Column, pin: DataFrame => DataFrame)(
+      confirmSide: DataFrame => DataFrame): DataFrame = {
+    val screened = pin(endpointJoin(cands, screenSide)(e =>
+        Seq(col("hs32").as(s"h${e}32"), col("n").as(s"n$e")))
+      .withColumn("c32", expr("intersect_count_i32(ha32, hb32)"))
+      .filter(screen)
+      .select(col("da"), col("db"), col("na"), col("nb")))
+    exactCommon(endpointJoin(screened, confirmSide(screened))(e =>
+      Seq(col("hs").as(s"h$e"))))
+  }
+
+  /** The pair family's verify stage: the (da, db) candidates whose exact
+    * per-pair score under `p` reaches `threshold`, in [[scored]]'s
+    * columns — n_common the 64-bit-exact |set(da) ∩ set(db)| and na/nb
+    * the exact set sizes — with the verify dispatched ADAPTIVELY on the
+    * hash-set frame's size.
     *
     * BELOW the broadcast budget (64-bit estimate) the per-doc frame
     * broadcasts and both verify joins are map-only hash joins, so the
@@ -100,9 +172,9 @@ object Dedup {
     * form's external sort writes ~36 GB of spill and pins the verify
     * stage at the box's write bandwidth — 137 s vs 85 s broadcast; at
     * 500k docs 19 s vs 10 s; outputs hash-identical. The size estimate
-    * is a fenced driver scalar (one aggregate over the persisted
-    * per-doc frame — counts, never row data), the same dispatch
-    * pattern as [[jaccardPairs]]' pair-mass budget.
+    * is a fenced driver scalar ([[verifyEstimates]] over the persisted
+    * per-doc frame), the same dispatch pattern as [[jaccardPairs]]'
+    * pair-mass budget.
     *
     * IN THE OCTAVE where the 64-bit frame exceeds the budget but its
     * 32-bit truncation fits (round 17 — at sf50x/2.5M docs the 64-bit
@@ -128,10 +200,10 @@ object Dedup {
     *  - Phase 1 (screen): the candidate joins consume the 32-bit
     *    truncations of the sorted hash arrays (`shiftright(h, 32)` —
     *    order-preserving, so the truncated array is sorted for free)
-    *    and `screen` filters on the merge-count over them, which is an
-    *    OVERCOUNT-or-equal of the true intersection (see
-    *    [[graft.functions.SortedIntersectCountI32]]) — with a monotone
-    *    score predicate the screen passes a superset of the true
+    *    and the screen is `p`'s score over the merge-count of them,
+    *    which is an OVERCOUNT-or-equal of the true intersection (see
+    *    [[graft.functions.SortedIntersectCountI32]]) — the score being
+    *    monotone, the screen passes a superset of the true
     *    qualifying pairs. The wide candidate×array intermediate — the
     *    stage's dominant shuffle, 20 GB at 500k docs / budget 16
     *    (round 15 event logs), the sf50x single-box ENOSPC risk —
@@ -148,107 +220,98 @@ object Dedup {
     * exchange on any build chain, no sort anywhere (SMJ would sort the
     * probe, and phase 1 join 2's probe IS the wide intermediate:
     * 370 s vs 30 s broadcast at 500k docs, ~60 GB transient spill at
-    * 2.5M when it re-sorted; plan-asserted in Round15/16Spec). No
+    * 2.5M when it re-sorted; plan-asserted in VerifySpec). No
     * broadcast memory ceiling, executor-count-parallel at any corpus
     * size.
     *
-    * `screen(c, na, nb)` must be a predicate MONOTONE NON-DECREASING in
-    * c (true stays true as c grows) that is exactly the caller's final
-    * score filter — callers re-apply it on the exact n_common, so the
-    * screen only prunes, never decides. */
+    * The screen only prunes, never decides: [[scored]] re-applies the
+    * same score on the exact n_common. */
   private[graft] def verifiedCommon(hp: DataFrame, cands: DataFrame,
-      screen: (Column, Column, Column) => Column): DataFrame = {
+      p: PairScore, threshold: Double,
+      withSizes: Boolean = false): DataFrame = {
     graft.functions.SetExpressions.register(hp.sparkSession)
     val hs = graft.CacheScope.persist(docHashSets(hp))
-    val r = hs.agg(count(lit(1)).as("rows"),
-      coalesce(sum(col("n")), lit(0L)).as("postings")).head()
+    val (est32, est64) = verifyEstimates(hs)
     val fence = broadcastVerifyBytes(hp)
-    val est64 = r.getLong(0) * 48L + r.getLong(1) * 8L
-    val est32 = r.getLong(0) * 48L + r.getLong(1) * 4L
-    if (est64 <= fence) {
-      val b = broadcast(hs)
-      cands
-        .join(b.select(col("doc_id").as("da"), col("hs").as("ha"),
-          col("n").as("na")), Seq("da"))
-        .join(b.select(col("doc_id").as("db"), col("hs").as("hb"),
-          col("n").as("nb")), Seq("db"))
-        .withColumn("n_common", expr("intersect_count_i64(ha, hb)"))
-        .select(col("da"), col("db"), col("na"), col("nb"), col("n_common"))
-    } else if (est32 <= fence) {
-      // two-phase ON BROADCASTS (round 17): screen against the 32-bit
-      // half-size broadcast, confirm against the 64-bit sets of
-      // SURVIVOR docs only. Survivors persist because both the
-      // doc-restriction semi-join and the confirm joins consume them;
-      // the frame holds ids and counts, never arrays.
-      val b32 = broadcast(hs.select(col("doc_id"),
-        expr("transform(hs, x -> cast(shiftright(x, 32) as int))").as("hs32"),
-        col("n")))
-      val screened = graft.CacheScope.persist(cands
-        .join(b32.select(col("doc_id").as("da"), col("hs32").as("ha32"),
-          col("n").as("na")), Seq("da"))
-        .join(b32.select(col("doc_id").as("db"), col("hs32").as("hb32"),
-          col("n").as("nb")), Seq("db"))
-        .withColumn("c32", expr("intersect_count_i32(ha32, hb32)"))
-        .filter(screen(col("c32"), col("na"), col("nb")))
-        .select(col("da"), col("db"), col("na"), col("nb")))
-      val svDocs = screened.select(col("da").as("doc_id"))
-        .union(screened.select(col("db").as("doc_id"))).distinct()
-      // survivor-doc ids are 8 B each, bounded by the corpus doc count
-      // — always broadcastable; the semi-join is map-only over hs
-      val hsSurv = graft.CacheScope.persist(
-        hs.join(broadcast(svDocs), Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("hs")))
-      val r2 = hsSurv.agg(count(lit(1)).as("rows"),
-        coalesce(sum(size(col("hs")).cast("long")), lit(0L))
-          .as("postings")).head()
-      val estSurv = r2.getLong(0) * 48L + r2.getLong(1) * 8L
-      val confirm =
-        if (estSurv <= fence) broadcast(hsSurv) else hsSurv.hint("shuffle_hash")
-      screened
-        .join(confirm.select(col("doc_id").as("da"), col("hs").as("ha")),
-          Seq("da"))
-        .join(confirm.select(col("doc_id").as("db"), col("hs").as("hb")),
-          Seq("db"))
-        .withColumn("n_common", expr("intersect_count_i64(ha, hb)"))
-        .select(col("da"), col("db"), col("na"), col("nb"), col("n_common"))
-    } else {
-      val staged = graft.sources.Bucketing.stageBucketed(
-          hs.withColumn("hs32",
-            expr("transform(hs, x -> cast(shiftright(x, 32) as int))")),
-          "vhs",
-          hp.sparkSession.sessionState.conf.numShufflePartitions,
-          Seq("doc_id"))
-        .hint("shuffle_hash")
-      val screened = cands
-        .join(staged.select(col("doc_id").as("da"), col("hs32").as("ha32"),
-          col("n").as("na")), Seq("da"))
-        .join(staged.select(col("doc_id").as("db"), col("hs32").as("hb32"),
-          col("n").as("nb")), Seq("db"))
-        .withColumn("c32", expr("intersect_count_i32(ha32, hb32)"))
-        .filter(screen(col("c32"), col("na"), col("nb")))
-        .select(col("da"), col("db"), col("na"), col("nb"))
-      screened
-        .join(staged.select(col("doc_id").as("da"), col("hs").as("ha")),
-          Seq("da"))
-        .join(staged.select(col("doc_id").as("db"), col("hs").as("hb")),
-          Seq("db"))
-        .withColumn("n_common", expr("intersect_count_i64(ha, hb)"))
-        .select(col("da"), col("db"), col("na"), col("nb"), col("n_common"))
-    }
+    val screen = p.score(col("c32"), col("na"), col("nb")) >= threshold
+    val hs32 = expr("transform(hs, x -> cast(shiftright(x, 32) as int))")
+    val common =
+      if (est64 <= fence)
+        exactCommon(endpointJoin(cands, broadcast(hs))(e =>
+          Seq(col("hs").as(s"h$e"), col("n").as(s"n$e"))))
+      else if (est32 <= fence)
+        // two-phase ON BROADCASTS (round 17): screen against the 32-bit
+        // half-size broadcast, confirm against the 64-bit sets of
+        // SURVIVOR docs only. Survivors persist because both the
+        // doc-restriction semi-join and the confirm joins consume them.
+        screenConfirm(cands,
+            broadcast(hs.select(col("doc_id"), hs32.as("hs32"), col("n"))),
+            screen, graft.CacheScope.persist(_)) { screened =>
+          val svDocs = screened.select(col("da").as("doc_id"))
+            .union(screened.select(col("db").as("doc_id"))).distinct()
+          // survivor-doc ids are 8 B each, bounded by the corpus doc
+          // count — always broadcastable; the semi-join is map-only over hs
+          val hsSurv = graft.CacheScope.persist(
+            hs.join(broadcast(svDocs), Seq("doc_id"), "left_semi")
+              .select(col("doc_id"), col("hs")))
+          if (verifyEstimates(hsSurv, size(col("hs")).cast("long"))._2 <= fence)
+            broadcast(hsSurv)
+          else hsSurv.hint("shuffle_hash")
+        }
+      else {
+        val staged = graft.sources.Bucketing.stageBucketed(
+            hs.withColumn("hs32", hs32), "vhs",
+            hp.sparkSession.sessionState.conf.numShufflePartitions,
+            Seq("doc_id"))
+          .hint("shuffle_hash")
+        screenConfirm(cands, staged, screen, identity)(_ => staged)
+      }
+    scored(common, p, threshold, withSizes)
   }
 
-  /** Containment screen/filter: |A∩B| / min(|A|,|B|) ≥ t — monotone in
-    * the count, so it serves as both [[verifiedCommon]]'s screen and
-    * the exact final filter. */
-  private def containmentGate(threshold: Double)(
-      c: Column, na: Column, nb: Column): Column =
-    c.cast("double") / least(na, nb) >= threshold
+  /** The hashed posting index `(hp, dfreq)` of [[jaccardPairs]] and
+    * [[containmentPairsCapped]], both persisted: the postings HASHED and
+    * shuffled by h exactly ONCE, and their df histogram (h, df). The
+    * cached repartition's HashPartitioning satisfies the df groupBy and
+    * BOTH sides of a posting self-join (InMemoryRelation preserves the
+    * cached plan's partitioning), so the corpus-sized frame crosses the
+    * network once as 16 B rows instead of three times as ~50 B string
+    * rows — at 2.5M docs the difference between in-flight shuffle files
+    * that exceed local disk and ones that fit with margin (PERF.md
+    * round 15). df/candidates on h equal those on s up to the 64-bit
+    * collision bound [[hashedPostings]] states; the string shingles are
+    * never cached or shuffled at all. */
+  private def postingIndex(sh: DataFrame): (DataFrame, DataFrame) = {
+    val hp = graft.CacheScope.persist(hashedPostings(sh).repartition(col("h")))
+    (hp, graft.CacheScope.persist(
+      hp.groupBy(col("h")).agg(count(lit(1)).as("df"))))
+  }
 
-  /** Jaccard screen/filter: |A∩B| / |A∪B| ≥ t. Monotone in the count
-    * (both numerator up and denominator down as c grows). */
-  private def jaccardGate(threshold: Double)(
-      c: Column, na: Column, nb: Column): Column =
-    c.cast("double") / (na + nb - c) >= threshold
+  /** Distinct candidate pairs `(da, db)`, da < db, of documents sharing
+    * a posting `h`: each posting of `a` probes the postings of `b`. */
+  private def sharedPostingPairs(a: DataFrame, b: DataFrame): DataFrame =
+    a.alias("a").join(b.alias("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+      .distinct()
+
+  /** The pair-mass cap of the df histogram `hist` (`df`, c keys) over
+    * `postings` (doc_id, …): the largest df whose cumulative pair mass
+    * Σ_{df'≤df} C(df', 2)·c ≤ `budgetPerDoc` × n_docs, as aggregate
+    * `mcap` (null if none fits), beside the `more` aggregates. Compared
+    * in double arithmetic: a slack budget × n_docs in long arithmetic
+    * overflows under ANSI mode. */
+  private def pairMassCap(hist: DataFrame, df: String, postings: DataFrame,
+      budgetPerDoc: Long, more: Column*): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val d = col(df)
+    hist.withColumn("cm", sum(col("c") * d * (d - 1) / 2)
+        .over(W.orderBy(d).rowsBetween(W.unboundedPreceding, W.currentRow)))
+      .crossJoin(broadcast(postings.agg(countDistinct(col("doc_id")).as("ndocs"))))
+      .agg(max(when(col("cm") <=
+          lit(budgetPerDoc).cast("double") * col("ndocs").cast("double"), d))
+        .as("mcap"), more: _*)
+  }
 
   val P: Long = 2147483647L // 2^31-1, Mersenne prime
   /** k=16 universal hash parameter pairs (odd multipliers). */
@@ -295,7 +358,7 @@ object Dedup {
     * full join key, so co-partitioning needs no subset-key relaxation —
     * via the bucketed sink): incremental dedup joins new batches
     * against it without ever re-shingling the corpus, and without ever
-    * shuffling the stored index (plan-asserted in Round15Spec). */
+    * shuffling the stored index (plan-asserted in TextDedupSpec). */
   def bandIndex(sigs: DataFrame): DataFrame = {
     val bands = (0 until K / 2).map { b =>
       struct(lit(b).as("band_idx"),
@@ -341,7 +404,7 @@ object Dedup {
     * .stageBucketed]]) joins with NO corpus-side exchange: only the
     * (day-sized) batch's bands shuffle to the index's bucket layout,
     * and the corpus is never scanned, shuffled, or re-hashed
-    * (plan-asserted in Round15Spec, measured in
+    * (plan-asserted in TextDedupSpec, measured in
     * BENCH_INCREMENTAL_SPLIT.json). Unioning the corpus index with the
     * batch bands BEFORE the join — the previous form — would discard
     * the stored layout, which is why the corpus and same-batch blame
@@ -408,13 +471,7 @@ object Dedup {
     * emit the identical pair set. */
   def jaccardPairs(sh0: DataFrame, dfCap: Int, threshold: Double,
       directPairBudget: Long = 32000000L): DataFrame = {
-    // hashed postings, one shuffle by h reused by the df groupBy and
-    // every posting join below — see [[hashedPostings]] and the
-    // containmentPairsCapped scaladoc for the byte arithmetic
-    val hp = graft.CacheScope.persist(
-      hashedPostings(sh0).repartition(col("h")))
-    val dfreq = graft.CacheScope.persist(
-      hp.groupBy(col("h")).agg(count(lit(1)).as("df")))
+    val (hp, dfreq) = postingIndex(sh0)
     // ADAPTIVE DISPATCH on the exact inverted-index pair mass
     // Σ C(df, 2) from the df histogram. Fenced driver-side scalar: a
     // one-row aggregate over dfreq (never row data) — the same
@@ -448,24 +505,11 @@ object Dedup {
         .groupBy(col("da"), col("db"))
         .agg(count(lit(1)).as("n_common"), max(col("rare")).as("has_rare"))
         .filter(col("has_rare") === 1)
-      pairStats
-        .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-        .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-        .withColumn("jaccard",
-          col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")))
-        .filter(col("jaccard") >= threshold)
-        .select("da", "db", "n_common", "jaccard")
+      scored(endpointJoin(pairStats, sizes)(e => Seq(col("n").as(s"n$e"))),
+        Jaccard, threshold)
     } else {
       val rare = hp.join(dfreq.filter(col("df") <= dfCap).select(col("h")), "h")
-      val cands = rare.alias("a").join(rare.alias("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-        .distinct()
-      verifiedCommon(hp, cands, jaccardGate(threshold))
-        .withColumn("jaccard",
-          col("n_common").cast("double") / (col("na") + col("nb") - col("n_common")))
-        .filter(col("jaccard") >= threshold)
-        .select("da", "db", "n_common", "jaccard")
+      verifiedCommon(hp, sharedPostingPairs(rare, rare), Jaccard, threshold)
     }
   }
 
@@ -489,8 +533,8 @@ object Dedup {
     * when set, the prefix POSTINGS are additionally filtered to the
     * largest prefix-df whose cumulative candidate-pair mass
     * Σ C(df_p, 2) stays ≤ budget × n_docs — the same linear cost bound
-    * as [[containmentPairsCapped]]'s mass knob, computed exactly from
-    * the prefix-df histogram. This trades guaranteed completeness for
+    * as [[containmentPairsCapped]]'s mass knob ([[pairMassCap]] over
+    * the prefix-df histogram). This trades guaranteed completeness for
     * a candidate join LINEAR in corpus size — the 100 TB operating
     * mode on vocabulary-saturating corpora, where the exact filter's
     * posting mass grows quadratically (measured: the sf100x leg
@@ -517,23 +561,13 @@ object Dedup {
       case None => prefixAll
       case Some(budget) =>
         // cost knob over the PREFIX postings' own df histogram: keep
-        // postings whose prefix-df ≤ the largest df with cumulative
-        // Σ C(df', 2) ≤ budget × n_docs (floor: df_p = 2, so genuine
-        // near-dup pairs sharing a globally-rare shingle always survive)
-        val W = org.apache.spark.sql.expressions.Window
+        // postings whose prefix-df is within the pair-mass cap (floor:
+        // df_p = 2, so genuine near-dup pairs sharing a globally-rare
+        // shingle always survive)
         val pdf = graft.CacheScope.persist(
           prefixAll.groupBy(col("s")).agg(count(lit(1)).as("dfp")))
-        val nd = sh.agg(countDistinct(col("doc_id")).as("ndocs"))
-        val cap = pdf.groupBy(col("dfp")).agg(count(lit(1)).as("c"))
-          .withColumn("cm", sum(col("c") * col("dfp") * (col("dfp") - 1) / 2)
-            .over(W.orderBy(col("dfp"))
-              .rowsBetween(W.unboundedPreceding, W.currentRow)))
-          .crossJoin(broadcast(nd))
-          // double-typed comparison: a slack budget × ndocs in long
-          // arithmetic overflows under ANSI mode
-          .agg(max(when(col("cm") <=
-              lit(budget).cast("double") * col("ndocs").cast("double"),
-            col("dfp"))).as("mcap"))
+        val cap = pairMassCap(
+            pdf.groupBy(col("dfp")).agg(count(lit(1)).as("c")), "dfp", sh, budget)
           .select(greatest(lit(2L), coalesce(col("mcap"), lit(2L))).as("cap"))
         prefixAll.join(pdf, "s").crossJoin(broadcast(cap))
           .filter(col("dfp") <= col("cap"))
@@ -549,23 +583,15 @@ object Dedup {
     // [[hashedPostings]] states — and the join's shuffle rows drop
     // from ~50 B to 16 B (PERF.md round 15)
     val prefH = prefix.select(col("doc_id"), xxhash64(col("s")).as("h"))
-    val cands = prefH.alias("pa").join(prefH.alias("pb"),
-        col("pa.h") === col("pb.h") && col("pa.doc_id") < col("pb.doc_id"))
-      .select(col("pa.doc_id").as("da"), col("pb.doc_id").as("db"))
-      .distinct()
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+    val cands = endpointJoin(sharedPostingPairs(prefH, prefH), sizes)(e =>
+        Seq(col("n").as(s"n$e")))
       .filter(least(col("na"), col("nb")) >=
         ceil(lit(threshold) * greatest(col("na"), col("nb"))))
     // exact verification on surviving candidates only, |cands| rows
     // (the helper re-supplies na/nb — identical values to the sizes
     // frame above: both count the doc's distinct shingles)
     verifiedCommon(hashedPostings(sh), cands.select(col("da"), col("db")),
-        jaccardGate(threshold))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("na") + col("nb") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("da"), col("db"), col("n_common"), col("jaccard"))
+      Jaccard, threshold)
   }
 
   /** ALL pairs with set containment |A∩B| / min(|A|,|B|) ≥ `threshold`,
@@ -620,16 +646,7 @@ object Dedup {
       .select(least(col("pa.doc_id"), col("fb.doc_id")).as("da"),
         greatest(col("pa.doc_id"), col("fb.doc_id")).as("db"))
       .distinct()
-    verifiedCommon(hashedPostings(sh), cands, containmentGate(threshold))
-      .withColumn("containment", col("n_common").cast("double") /
-        least(col("na"), col("nb")))
-      .filter(col("containment") >= threshold)
-      .select((Seq(col("da"), col("db"), col("n_common"),
-          round(col("containment"), 6).as("containment")) ++
-        // the exact set sizes are already joined in from the hash-set
-        // frame; exposing them is free and lets callers pick the drop
-        // side without re-aggregating the shingle frame
-        (if (withSizes) Seq(col("na"), col("nb")) else Nil)): _*)
+    verifiedCommon(hashedPostings(sh), cands, Containment, threshold, withSizes)
   }
 
   /** Recall-bounded containment pairs with a CORPUS-ADAPTIVE rarity
@@ -664,59 +681,27 @@ object Dedup {
     * surviving candidates, so emitted values are exact; only candidate
     * RECALL is bounded, and `q_dedup_containment_recall` gates it
     * against the guaranteed-complete prefix-filtered twin (measured
-    * 1.0 at sf0.001/0.01/0.1, caps 10/10/11; floor 0.95).
-    *
-    * The postings are HASHED and shuffled by h exactly ONCE — the
-    * cached repartition's HashPartitioning satisfies the df groupBy and
-    * BOTH sides of the candidate self-join (InMemoryRelation preserves
-    * the cached plan's partitioning), so the corpus-sized frame crosses
-    * the network once as 16 B rows instead of three times as ~50 B
-    * string rows — at 2.5M docs the difference between in-flight
-    * shuffle files that exceed local disk and ones that fit with
-    * margin (PERF.md round 15). df/candidates on h equal df/candidates
-    * on s up to the 64-bit collision bound [[hashedPostings]] states;
-    * the string shingles are never cached or shuffled at all. */
+    * 1.0 at sf0.001/0.01/0.1, caps 10/10/11; floor 0.95). The postings
+    * are hashed and shuffled once ([[postingIndex]]). */
   def containmentPairsCapped(sh0: DataFrame, threshold: Double,
       dfQuantile: Double = 0.99, minCap: Long = 10L,
       pairBudgetPerDoc: Long = 128L, withSizes: Boolean = false): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val hp = graft.CacheScope.persist(
-      hashedPostings(sh0).repartition(col("h")))
-    val dfreq = graft.CacheScope.persist(
-      hp.groupBy(col("h")).agg(count(lit(1)).as("df")))
-    val nd = hp.agg(countDistinct(col("doc_id")).as("ndocs"))
-    val cap = dfreq.groupBy(col("df")).agg(count(lit(1)).as("c"))
+    val (hp, dfreq) = postingIndex(sh0)
+    val hist = dfreq.groupBy(col("df")).agg(count(lit(1)).as("c"))
       .withColumn("cc", sum(col("c")).over(W.orderBy(col("df"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)))
-      .withColumn("cm", sum(col("c") * col("df") * (col("df") - 1) / 2)
-        .over(W.orderBy(col("df"))
-          .rowsBetween(W.unboundedPreceding, W.currentRow)))
       .withColumn("nsh", sum(col("c")).over(W.orderBy(col("df"))
         .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
-      .crossJoin(broadcast(nd))
-      .agg(
+    val cap = pairMassCap(hist, "df", hp, pairBudgetPerDoc,
         min(when(col("cc") >= ceil(lit(dfQuantile) * col("nsh")),
-          col("df"))).as("qcap"),
-        max(when(col("cm") <= lit(pairBudgetPerDoc) * col("ndocs"),
-          col("df"))).as("mcap"))
+          col("df"))).as("qcap"))
       .select(greatest(lit(minCap),
         least(col("qcap"), coalesce(col("mcap"), lit(minCap)))).as("cap"))
     val a = hp.join(dfreq, "h").crossJoin(broadcast(cap))
-      .filter(col("df") <= col("cap")).alias("a")
-    val cands = a.join(hp.alias("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    verifiedCommon(hp, cands, containmentGate(threshold))
-      .withColumn("containment", col("n_common").cast("double") /
-        least(col("na"), col("nb")))
-      .filter(col("containment") >= threshold)
-      .select((Seq(col("da"), col("db"), col("n_common"),
-          round(col("containment"), 6).as("containment")) ++
-        // same contract as prefixContainmentPairs: the sizes are already
-        // joined in from the hash-set frame, exposing them lets callers
-        // pick the drop side without re-aggregating the shingle frame
-        (if (withSizes) Seq(col("na"), col("nb")) else Nil)): _*)
+      .filter(col("df") <= col("cap"))
+    verifiedCommon(hp, sharedPostingPairs(a, hp), Containment, threshold,
+      withSizes)
   }
 
   /** The two span operators' shared input, both persisted since each

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Jdbc, Stage, Tables}
+import graft.sources.{Jdbc, Tables}
 
 class JdbcSpec extends SparkSuite {
 
@@ -33,7 +33,7 @@ class JdbcSpec extends SparkSuite {
     val snap = Jdbc.snapshot(spark, url, "supplier_snap",
       partitionColumn = "s_suppkey", lowerBound = 0L, upperBound = 10000L,
       numPartitions = 4,
-      stagePath = s"${Stage.root}/jdbc_spec_snapshot")
+      stagePath = scratch("jdbc_spec_snapshot"))
     // the snapshot's lineage is the parquet stage, not the JDBC relation
     assert(snap.queryExecution.optimizedPlan.toString.toLowerCase
       .contains("parquet"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.ZOrder
 import graft.operators.{Resample, Scd}
-import graft.sources.Stage
 import graft.text.Curation
 
 /** Round-5 operators: SCD2 history, dense-grid resample, Z-order layout,
@@ -156,7 +155,7 @@ class LayoutTemporalSpec extends SparkSuite {
 
   test("compactWrite caps rows per file and keeps ranges contiguous") {
     import graft.sources.Sinks
-    val path = s"${Stage.root}/test_compact_write"
+    val path = scratch("compact_write")
     Sinks.compactWrite(spark.range(500).toDF("id"), path,
       col("id"), nPartitions = 4, maxRecordsPerFile = 100L)
     val perFile = spark.read.parquet(path)
@@ -175,7 +174,7 @@ class LayoutTemporalSpec extends SparkSuite {
 
   test("z-ordered layout + manifest pruning opens a fraction of the files") {
     import graft.sources.DataSkipping
-    val path = s"${Stage.root}/test_skip_pruned"
+    val path = scratch("skip_pruned")
     // 64k rows over a 256x256 key grid, clustered on the Morton key
     val grid = spark.range(256L * 256L)
       .select(col("id"), (col("id") % 256).as("x"),

@@ -185,11 +185,10 @@ class OperatorsSpec extends SparkSuite {
         (b("s_suppkey") === a("c_custkey") % 50 && b("s_nationkey") === a("c_nationkey"))
     val verbatim = DisjunctiveJoin.orJoin(l, r, cond(l, r))
       .select(col("c_custkey"), col("s_suppkey"))
-    val rewrite = DisjunctiveJoin.orEquiJoinRewrite(l, r,
+    val rewrite = DisjunctiveJoin.orJoinExact(l, r,
       Seq((a, b) => b("s_suppkey") === a("c_custkey") % 150,
         (a, b) => b("s_suppkey") === a("c_custkey") % 50 &&
-          b("s_nationkey") === a("c_nationkey")),
-      "c_custkey", "s_suppkey")
+          b("s_nationkey") === a("c_nationkey")))
       .select(col("c_custkey"), col("s_suppkey"))
     assert(verbatim.except(rewrite).count() == 0)
     assert(rewrite.except(verbatim).count() == 0)

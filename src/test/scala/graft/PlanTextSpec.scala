@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.Stage
 import graft.text.Dedup
 
 /** Plan-text guard for the two compositions that cut lineage at seams.
@@ -46,7 +45,7 @@ class PlanTextSpec extends SparkSuite {
 
   test("flagship curation: every execution starts with a plan under 64 KiB") {
     spark.catalog.clearCache()
-    val out = s"${Stage.root}/test_plan_text_flagship"
+    val out = scratch("plan_text_flagship")
     val execs = SqlEvents.during(spark.sparkContext) {
       CacheScope.scoped {
         Flagship.curationPipeline(spark, sf).write.mode("overwrite").parquet(out)
@@ -61,7 +60,7 @@ class PlanTextSpec extends SparkSuite {
     spark.catalog.clearCache()
     SqlEvents.during(spark.sparkContext) {
       CacheScope.scoped {
-        df.write.mode("overwrite").parquet(s"${Stage.root}/test_plan_text_$name")
+        df.write.mode("overwrite").parquet(scratch(s"plan_text_$name"))
       }
     }
   }
@@ -110,7 +109,7 @@ class PlanTextSpec extends SparkSuite {
     spark.catalog.clearCache()
     val execs = SqlEvents.during(spark.sparkContext) {
       CacheScope.scoped {
-        val r = Outbound.push(spark, sf, s"${Stage.root}/test_plan_text_outbound")
+        val r = Outbound.push(spark, sf, scratch("plan_text_outbound"))
         assert(r.report.ok, s"reconcile report not clean: ${r.report}")
         assert(r.docs.where(col("leadid").isNotNull).count() > 0)
       }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Scalars
 import graft.operators.{Prefix, TopK}
-import graft.sources.Stage
 import graft.text.{Curation, TextAnalysis}
 
 /** `operators.Prefix` is the one global-offset operator: the surrogate
@@ -70,7 +69,7 @@ class PrefixSpec extends SparkSuite {
     // regression: inconsistent partition-id spaces under AQE dropped rows
     // between count and write
     val sc = TopK.surrogateKey(orders, col("o_orderkey"))
-    val out = s"${Stage.root}/surrogate_roundtrip"
+    val out = scratch("surrogate_roundtrip")
     sc.coalesce(1).write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out)
     assert(back.count() == orders.count())

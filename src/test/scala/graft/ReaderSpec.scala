@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{Sinks, Stage, Tables}
+import graft.sources.{Sinks, Tables}
 
 /** The one parquet reader (`Tables.read`, `Tables.readAs`): the schema it
   * reads with is the one Spark infers, a repeated read of an unchanged
@@ -25,7 +25,6 @@ class ReaderSpec extends SparkSuite {
 
   private def raw(paths: String*): DataFrame = spark.read.parquet(paths: _*)
 
-  private def scratch(name: String): String = s"${Stage.root}/test_reader_$name"
 
   /** Writes `rows` with parquet-mr's example writer, so the file carries
     * no Spark schema and Spark infers from the parquet types alone. */

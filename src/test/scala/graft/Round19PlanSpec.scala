@@ -35,36 +35,13 @@ import graft.text.{Dedup, Pipelines}
   */
 class Round19PlanSpec extends SparkSuite {
 
-  /** Physical-plan traversal that descends through AQE wrappers
-    * (final executed plan, query stages, reused exchanges) and, with
-    * `throughCaches`, into the plans cached frames were built from. */
-  private def allPlanNodes(p: SparkPlan,
-      throughCaches: Boolean = false): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec if throughCaches => Seq(m.relation.cachedPlan)
-      case _ => p.children
-    }
-    p +: kids.flatMap(allPlanNodes(_, throughCaches))
-  }
-
   private def shuffles(nodes: Seq[SparkPlan]): Seq[SparkPlan] =
     nodes.filter(_.isInstanceOf[ShuffleExchangeLike])
 
-  private def withProdConfs(body: => Unit): Unit = {
-    val confs = Seq(
+  private def withProdConfs(body: => Unit): Unit =
+    withConfs(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** Executed plans of every SQL execution `body` runs — the eager cuts'
     * included, whose joins exist in no plan the caller can reach. */

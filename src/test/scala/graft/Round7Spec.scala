@@ -6,7 +6,7 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Stage, Tables}
+import graft.sources.Tables
 
 /** Captures every WARN+ log line emitted while `body` runs, so tests can
   * assert on the ABSENCE of silent-degradation warnings (codegen
@@ -47,7 +47,7 @@ class Round7Spec extends SparkSuite {
 
   test("transformWithState runs with ZERO codegen interpreter fallbacks " +
       "and matches the batch aggregate") {
-    val work = s"${Stage.root}/test_tws_codegen"
+    val work = scratch("tws_codegen")
     val (result, warns) = LogCapture.warnings {
       graft.streaming.TransformWithState
         .runningUserAggregates(spark, sf, work)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Delta
-import graft.sources.{Sinks, Stage}
+import graft.sources.Sinks
 import graft.text.{Decontaminate, Dedup, Pipelines, TextAnalysis}
 
 /** The seam-cut contract: `Pipelines.lexicalClean` and `Outbound.push`
@@ -127,12 +127,33 @@ class SeamCutSpec extends SparkSuite {
       r.docs.withColumn("audit", col("audit").dropFields("snapshotTs"))
         .collect().toSeq.sortBy(_.getAs[String]("leadid"))
     CacheScope.scoped {
-      val cut = Outbound.push(spark, sf, s"${Stage.root}/test_seam_cut_push")
-      val persisted = pushPersisted(spark, sf, s"${Stage.root}/test_seam_persist_push")
+      val cut = Outbound.push(spark, sf, scratch("seam_cut_push"))
+      val persisted = pushPersisted(spark, sf, scratch("seam_persist_push"))
       assert(cut.report.ok && cut.report === persisted.report)
       val rows = staged(cut)
       assert(rows.nonEmpty)
       assert(rows === staged(persisted))
+    }
+  }
+
+  test("flagship stage probe: per-stage seams fire in order and reproduce the unprobed output") {
+    CacheScope.scoped {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      val probe: graft.text.Pipelines.StageProbe = (name, df) => {
+        seen += name
+        val p = CacheScope.persist(df)
+        p.count()
+        p
+      }
+      val probed = Flagship.curationPipeline(spark, sf, probe = probe)
+        .collect().toSet
+      val plain = Flagship.curationPipeline(spark, sf).collect().toSet
+      assert(probed == plain, "probe mode changed the composition's output")
+      assert(seen.toSeq == Seq("s1_containment_drops", "s2_span_drops",
+        "s3_lexical_survivors", "s4_cc_keepers", "s5_decontaminate_hits",
+        "s6_checkpoint_clean", "s7_semdedup_drops", "s8_checkpoint_corpus",
+        "s9_distill_gate"),
+        s"stage seams out of order: $seen")
     }
   }
 }

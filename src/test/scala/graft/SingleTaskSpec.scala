@@ -19,7 +19,7 @@ class SingleTaskSpec extends AnyFunSuite {
 
   /** file -> (hits allowed, the row bound that makes them single-task safe) */
   private val allowed = Map(
-    "Dedup.scala" -> (4, "df-histogram caps: one row per distinct df level"),
+    "Dedup.scala" -> (3, "df-histogram caps: one row per distinct df level"),
     "TextAnalysis.scala" -> (1, "df-histogram cap: one row per distinct df level"),
     "Kmeans.scala" -> (1, "ranks the centroid set: k rows"),
     "Sessionize.scala" -> (1, "one file per replay chunk, by design"),

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Bucketing, Sinks, Stage, Tables}
+import graft.sources.{Bucketing, Sinks, Tables}
 import graft.streaming.EventsStream
 
 /** Every parquet the engine writes is zstd: each write path in
@@ -21,7 +21,6 @@ import graft.streaming.EventsStream
   * either codec. */
 class SinkCodecSpec extends SparkSuite {
 
-  private def scratch(name: String): String = s"${Stage.root}/test_codec_$name"
 
   /** The codec of every column chunk of each data file `df` reads. */
   private def codecs(df: DataFrame): Map[String, Set[CompressionCodecName]] = {
@@ -66,8 +65,8 @@ class SinkCodecSpec extends SparkSuite {
     // a foreachBatch sink of a CatchUp run, and the chunked staging and
     // per-batch versions of another
     assertCodec(EventsStream.sinkViaForeachBatch(spark, sf,
-      Stage.work("test_codec_stream", sf)), ZSTD)
-    val merged = Stage.work("test_codec_merge", sf)
+      scratch("codec_stream")), ZSTD)
+    val merged = scratch("codec_merge")
     assertCodec(EventsStream.mergeSink(spark, sf, merged), ZSTD)
     assertCodec(Tables.read(spark, s"$merged/src"), ZSTD)
 

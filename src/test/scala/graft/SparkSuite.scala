@@ -9,7 +9,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{ListenerDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +31,52 @@ trait SparkSuite extends AnyFunSuite {
     try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** A path named `name` under this JVM's test scratch dir, a
+    * [[sources.Stage.work]] dir: removed when the JVM exits. */
+  def scratch(name: String): String =
+    s"${sources.Stage.work("test", "scratch")}/$name"
+
+  /** The executed plan of `build` with AQE and broadcast joins off: the
+    * static shuffle decisions EnsureRequirements makes around bucketed
+    * scans, which tiny test frames would otherwise hide behind runtime
+    * broadcasts. */
+  def staticPlan(build: => DataFrame): SparkPlan =
+    withConfs("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = build
+      df.count()
+      df.queryExecution.executedPlan
+    }
+
+  /** Every node of a physical plan, descending through AQE wrappers
+    * (final executed plan, query stages, reused exchanges) and, with
+    * `throughCaches`, into the plans cached frames were built from. */
+  def allPlanNodes(p: SparkPlan, throughCaches: Boolean = false): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec if throughCaches => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }
+    p +: kids.flatMap(allPlanNodes(_, throughCaches))
+  }
+
+  /** A join side DIRECTLY fed by a bucketed scan: an unbroken
+    * single-child chain (projections/filters/codegen shims — anything
+    * unary) from the side's root down to a bucketed FileSourceScan.
+    * Sides where the scan sits below another join/union/aggregate are
+    * not direct — their exchanges shuffle a derived intermediate, which
+    * is legitimate. */
+  def chainToBucketScan(p: SparkPlan): Option[(Seq[SparkPlan], FileSourceScanExec)] =
+    p match {
+      case f: FileSourceScanExec =>
+        if (f.bucketedScan) Some((Nil, f)) else None
+      case u if u.children.size == 1 =>
+        chainToBucketScan(u.children.head).map { case (c, f) => (u +: c, f) }
+      case _ => None
+    }
 }
 
 /** One Spark job as the listener bus saw it: `site`, the first `graft.`

@@ -30,6 +30,17 @@ object StageExitProbe {
   }
 }
 
+/** Run in a child JVM by the Bucketing staging test below: stages one
+  * bucketed table with no `CacheScope` open and prints its dir, leaving
+  * it to the JVM-exit cleanup. */
+object BucketedExitProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.builder("local[1]", 1).getOrCreate()
+    val staged = Bucketing.stageBucketed(spark.range(10).toDF(), "exit_probe", 2, Seq("id"))
+    println(s"staged ${new File(new java.net.URI(staged.inputFiles.head)).getParent}")
+  }
+}
+
 class StageSpec extends SparkSuite {
 
   /** A plain path or a `file:` URI, under the staging root. */
@@ -98,7 +109,15 @@ class StageSpec extends SparkSuite {
         spark.range(100).withColumn("k", col("id") % 7), "stage_spec", 4, Seq("k"))
       assert(staged.inputFiles.nonEmpty && staged.inputFiles.forall(under),
         staged.inputFiles.mkString(", "))
+      // a Stage.work dir: named for this process
+      val dir = new File(new java.net.URI(staged.inputFiles.head)).getParentFile
+      assert(dir.getParent == s"${Stage.root}/bucketed" &&
+        dir.getName.endsWith(s"_p${ProcessHandle.current().pid()}"), dir)
     }
+    // staged with no scope open, the dir is gone once its JVM has exited
+    val out = ChildJvm.run("graft.BucketedExitProbe", Nil)
+    val dir = out.collectFirst { case l if l.startsWith("staged ") => l.drop(7) }
+    assert(dir.exists(d => under(d) && !new File(d).exists), out.mkString("\n"))
   }
 
   test("q_s13/q_s14 oracles read the gate dir's Stage.forInput path") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.{Stage, Tables}
+import graft.sources.Tables
 import graft.streaming.EventsStream
 import graft.multimodal.Multimodal
 
@@ -25,7 +25,7 @@ class StreamingMultimodalSpec extends SparkSuite {
     import spark.implicits._
     import java.sql.Timestamp
     import org.apache.spark.sql.streaming.Trigger
-    val base = s"${Stage.root}/test_late_data"
+    val base = scratch("late_data")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true)

@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
-import graft.sources.Tables
+import graft.sources.{Bucketing, Tables}
 import graft.text.{Dedup, TextAnalysis}
 import graft.similarity.Knn
 
@@ -10,6 +13,23 @@ class TextDedupSpec extends SparkSuite {
   import spark.implicits._
 
   lazy val docs = Tables.load(spark, sf, "documents")
+
+  /** Every sort-merge-join side DIRECTLY reading a bucketed file scan
+    * must consume the bucket layout as-is: no exchange, no sort, in the
+    * chain between the join and the scan. Returns how many such sides
+    * were checked. */
+  private def assertBucketSidesClean(plan: SparkPlan): Int = {
+    val sides = plan.collect { case j: SortMergeJoinExec => j }
+      .flatMap(j => Seq(j.left, j.right))
+      .flatMap(chainToBucketScan)
+    sides.foreach { case (chain, _) =>
+      assert(!chain.exists(_.isInstanceOf[ShuffleExchangeExec]),
+        s"bucketed join side re-shuffles:\n${chain.head}")
+      assert(!chain.exists(_.isInstanceOf[SortExec]),
+        s"bucketed join side re-sorts:\n${chain.head}")
+    }
+    sides.size
+  }
 
   test("minhash signatures: k columns, deterministic across runs") {
     val sig1 = Dedup.minhashSignatures(Dedup.shingles(docs))
@@ -63,5 +83,37 @@ class TextDedupSpec extends SparkSuite {
     val emb = Tables.load(spark, sf, "embeddings")
     val n = Knn.lshTopK(emb, col("vec_id") < 5, 5, 8).count()
     assert(n >= 0) // shape check; correctness is oracle-checked
+  }
+
+  test("incremental LSH: bucketed stored index joins with no corpus-side exchange") {
+    CacheScope.scoped {
+      val corpus = docs.where(col("doc_id") % 4 =!= 0)
+      val batch = docs.where(col("doc_id") % 4 === 0)
+      // the stored layout: bucketed on the FULL corpus-leg join key
+      val storedIdx = Bucketing.stageBucketed(
+        Dedup.bandIndex(Dedup.minhashSignatures(Dedup.shingles(corpus))),
+        "text_dedup_idx", 4, Seq("band_idx", "band_val"))
+      val plan = staticPlan(Dedup.incrementalLshDedup(batch, storedIdx))
+      // exactly one SMJ side reads the bucketed index (the corpus leg);
+      // the batch-vs-batch leg joins two in-memory band frames
+      assert(assertBucketSidesClean(plan) == 1, plan.toString.take(2000))
+    }
+  }
+
+  test("incremental LSH: stored bucketed index and raw index agree row-for-row") {
+    CacheScope.scoped {
+      val corpus = docs.where(col("doc_id") % 4 =!= 0)
+      val batch = docs.where(col("doc_id") % 4 === 0)
+      val rawIdx = Dedup.bandIndex(
+        Dedup.minhashSignatures(Dedup.shingles(corpus)))
+      val viaRaw = Dedup.incrementalLshDedup(batch, rawIdx)
+        .collect().toSet
+      val storedIdx = Bucketing.stageBucketed(rawIdx, "text_dedup_eq", 4,
+        Seq("band_idx", "band_val"))
+      val viaStored = Dedup.incrementalLshDedup(batch, storedIdx)
+        .collect().toSet
+      assert(viaStored == viaRaw)
+      assert(viaRaw.nonEmpty)
+    }
   }
 }
